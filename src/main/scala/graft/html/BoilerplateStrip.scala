@@ -80,12 +80,29 @@ object BoilerplateStrip {
     "h1", "h2", "h3", "h4", "h5", "h6", "tr", "td", "table", "section",
     "article", "blockquote", "pre", "hr")
 
+  /** True when `s` at `start` spells the lowercase ASCII `name` under an
+    * ASCII-only case fold (A–Z → a–z, every other char unchanged) — the
+    * fold of the regex's CASE_INSENSITIVE without UNICODE_CASE.
+    * `regionMatches(true, …)` folds across Unicode and would accept e.g.
+    * U+0130 'İ' for 'i', U+017F 'ſ' for 's' or the Kelvin sign for 'k'. */
+  private def asciiFoldMatches(s: String, start: Int, name: String): Boolean = {
+    if (start + name.length > s.length) return false
+    var k = 0
+    while (k < name.length) {
+      val c = s.charAt(start + k)
+      val lower = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+      if (lower != name.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
   private def nameIn(set: Array[String], s: String, start: Int,
                      len: Int): String = {
     var k = 0
     while (k < set.length) {
       val cand = set(k)
-      if (cand.length == len && s.regionMatches(true, start, cand, 0, len))
+      if (cand.length == len && asciiFoldMatches(s, start, cand))
         return cand
       k += 1
     }
@@ -93,14 +110,14 @@ object BoilerplateStrip {
   }
 
   /** End index (exclusive) of the first `</name\s*>` at or after `from`
-    * (name case-insensitive, \s = [ \t\n\x0B\f\r]); -1 when none — the
-    * lazy `.*?</\1\s*>` tail of the chrome branch. */
+    * (name ASCII-case-insensitive, \s = [ \t\n\x0B\f\r]); -1 when none —
+    * the lazy `.*?</\1\s*>` tail of the chrome branch. */
   private def findClose(s: String, from: Int, name: String): Int = {
     val n = s.length
     var i = s.indexOf('<', from)
     while (i >= 0) {
       if (i + 1 < n && s.charAt(i + 1) == '/' &&
-          s.regionMatches(true, i + 2, name, 0, name.length)) {
+          asciiFoldMatches(s, i + 2, name)) {
         var j = i + 2 + name.length
         while (j < n && {
           val c = s.charAt(j); c == ' ' || (c >= '\t' && c <= '\r')

@@ -55,30 +55,19 @@ final class DeterministicDonutBackend extends DonutBackend {
 
 /** Per-JVM backend holders: initialized lazily ONCE per executor and shared
   * by every partition that executor processes — the Spark restatement of the
-  * reference's per-worker model singletons (O25). */
+  * reference's per-worker model singletons (O25). "deterministic" is the
+  * only backend; any other name is an error. */
 object Backends {
-  @transient private var ocrInstances = Map.empty[String, OcrBackend]
-  @transient private var donutInstances = Map.empty[String, DonutBackend]
+  private lazy val deterministicOcr: OcrBackend = new DeterministicOcrBackend
+  private lazy val deterministicDonut: DonutBackend = new DeterministicDonutBackend
 
-  def ocr(name: String): OcrBackend = synchronized {
-    ocrInstances.getOrElse(name, {
-      val b = name match {
-        case "deterministic" => new DeterministicOcrBackend
-        case other => throw new IllegalArgumentException(s"unknown OCR backend: $other")
-      }
-      ocrInstances += name -> b
-      b
-    })
+  def ocr(name: String = "deterministic"): OcrBackend = name match {
+    case "deterministic" => deterministicOcr
+    case other => throw new IllegalArgumentException(s"unknown OCR backend: $other")
   }
 
-  def donut(name: String): DonutBackend = synchronized {
-    donutInstances.getOrElse(name, {
-      val b = name match {
-        case "deterministic" => new DeterministicDonutBackend
-        case other => throw new IllegalArgumentException(s"unknown Donut backend: $other")
-      }
-      donutInstances += name -> b
-      b
-    })
+  def donut(name: String = "deterministic"): DonutBackend = name match {
+    case "deterministic" => deterministicDonut
+    case other => throw new IllegalArgumentException(s"unknown Donut backend: $other")
   }
 }

@@ -24,8 +24,7 @@ import graft.model.{Doc, DocResult}
   * amortizes to noise.
   */
 final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
-                             useDonut: Boolean = false,
-                             backendName: String = "deterministic") {
+                             useDonut: Boolean = false) {
   require(buckets % groups == 0, "groups must divide buckets")
   private val manifestPath = Paths.get(outDir, "_graft_manifest.txt")
   private val lineagePath = s"$outDir/lineage"
@@ -69,7 +68,7 @@ final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
           val b = math.floorMod(graft.io.Corpus.hash(d.doc_id).toInt, nBuckets)
           b >= lo && b < hi
         })
-        val results = ExtractionPipeline.run(slice, useDonut, backendName)
+        val results = ExtractionPipeline.run(slice, useDonut)
         results.write.mode(SaveMode.Overwrite).parquet(s"$resultPath/group=$g")
 
         // lineage row per bucket group (north_star metrics contract)

@@ -1,7 +1,6 @@
 package graft.pipe
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.sql.Dataset
 import graft.classify.DocTypeClassifier
 import graft.html.BoilerplateStrip
 import graft.kernel.{Backends, DonutBackend, OcrBackend}
@@ -23,24 +22,17 @@ final case class DocOcr(
     failures: Long,
     oversize: Boolean = false)
 
-/** Layout/structure parse (O3 — reference `utils/pdf_processor.py:48-62`
-  * via Docling): the reference discards the result, so the engine's
-  * surrogate returns a deterministic block-count struct; a real layout
-  * model drops in behind the same signature. */
-object LayoutParse {
-  def parse(mediaRef: String): JObj = {
-    val h = graft.io.Corpus.hash(mediaRef)
-    JObj(Vector(
-      "blocks" -> JNum((math.abs(h) % 12 + 1).toDouble),
-      "kind" -> JStr("page")))
-  }
-}
-
 /** The end-to-end extraction pipeline: a single narrow (shuffle-free) chain
   * scan → OCR kernel (mapPartitions) → extract/validate (map) → spans.
   * Span order is a row-local array property, so the plan needs NO shuffle
   * between stages — the property that makes near-linear scaling to 10^12
   * docs plausible (SURVEY.md §4).
+  *
+  * This is the only extraction path: batch (`run`), checkpointed
+  * (`CheckpointRunner`), salted (`SaltedPipeline`'s light slice, which also
+  * carries every oversize doc) and streaming (`StreamingExtraction.extract`)
+  * extraction all run `ocrStage → extractStage`. The 16 MB ingestion cap is
+  * decided only here (`oversize`); other entry points route on it.
   */
 object ExtractionPipeline {
 
@@ -63,6 +55,9 @@ object ExtractionPipeline {
     }
     n
   }
+
+  /** The one cap test: true when `doc` is over `MaxInputBytes`. */
+  def oversize(doc: Doc): Boolean = docBytes(doc) > MaxInputBytes
 
   private def oversizeOcr(doc: Doc): DocOcr =
     DocOcr(doc.doc_id, "", Vector.empty, 0.0, null, null, Vector.empty, 0L,
@@ -90,26 +85,14 @@ object ExtractionPipeline {
   def ocrDoc(doc: Doc, backend: OcrBackend): DocOcr = ocrDocFull(doc, backend)._1
 
   /** ocrDoc plus the kept per-line confidences (needed by the salted path
-    * to reassemble a bit-identical mean).
-    *
-    * `firstMediaOnly` reproduces the reference's first-page-only PDF
-    * semantics (routes.py:74, tasks.py:46 — O2 in SURVEY.md §2.1): media
-    * spans after the first are skipped entirely. Default false: the
-    * interleaved doc model treats every media span as content.
-    * `parseLayout` mirrors O3 (utils/pdf_processor.py:48-62): the reference
-    * computes a structure parse and DISCARDS the result (`_ =`); behind
-    * this flag the engine does the analogous no-op call so the behavior is
-    * available for future use without affecting output equality. */
-  def ocrDocFull(doc: Doc, backend: OcrBackend,
-                 firstMediaOnly: Boolean = false,
-                 parseLayout: Boolean = false): (DocOcr, Vector[Double]) = {
+    * to reassemble a bit-identical mean). */
+  def ocrDocFull(doc: Doc, backend: OcrBackend): (DocOcr, Vector[Double]) = {
     val lines = Vector.newBuilder[String]
     val confs = Vector.newBuilder[Double]
     val mediaRefs = Vector.newBuilder[String]
     var faceRef: String = null
     var faceB64: String = null
     var failures = 0L
-    var mediaCount = 0
 
     // spans are contiguous-by-offset in well-formed docs; sort only when not
     var sorted = true
@@ -123,13 +106,7 @@ object ExtractionPipeline {
       s.kind match {
         case "text" =>
           lines ++= BoilerplateStrip.lines(s.text)
-        case "media" if firstMediaOnly && mediaCount > 0 =>
-        // skipped: first-page-only mode (O2)
         case "media" =>
-          if (parseLayout) {
-            val _ = LayoutParse.parse(s.media_ref) // result discarded (O3)
-          }
-          mediaCount += 1
           mediaRefs += s.media_ref
           val (ls, cs, faceOpt) =
             try backend.decode(s.media_ref)
@@ -224,47 +201,21 @@ object ExtractionPipeline {
 
   /** Stage A as a Dataset transform — the mapPartitions inference kernel.
     * Backend init happens once per executor JVM (Backends holder). */
-  def ocrStage(docs: Dataset[Doc], backendName: String = "deterministic",
-               lineage: Option[CollectionAccumulator[LineageRow]] = None): Dataset[DocOcr] = {
+  def ocrStage(docs: Dataset[Doc]): Dataset[DocOcr] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.mapPartitions { it =>
-      val backend = Backends.ocr(backendName)
-      def one(d: Doc): DocOcr =
-        if (docBytes(d) > MaxInputBytes) oversizeOcr(d) else ocrDoc(d, backend)
-      lineage match {
-        case None => it.map(one)
-        case Some(acc) =>
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val t0 = System.nanoTime()
-          var docs0 = 0L; var fails = 0L; var confSum = 0.0
-          // completion-listener emission (not an iterator-concat side
-          // effect): the row is emitted even when a downstream operator
-          // short-circuits the iterator (limit/take), and accumulator
-          // updates from failed/speculative attempts are discarded by
-          // Spark's per-task accumulator semantics — no double counting.
-          tc.addTaskCompletionListener[Unit] { _ =>
-            acc.add(LineageRow("ocr", pid, docs0, 0L,
-              if (docs0 > 0) confSum / docs0 else 0.0, fails,
-              (System.nanoTime() - t0) / 1000000))
-          }
-          it.map { d =>
-            val r = one(d)
-            docs0 += 1; fails += r.failures; confSum += r.avg_conf
-            r
-          }
-      }
+      val backend = Backends.ocr()
+      it.map(d => if (oversize(d)) oversizeOcr(d) else ocrDoc(d, backend))
     }
   }
 
   /** Stage B: extraction + validation + span emission. */
-  def extractStage(ocr: Dataset[DocOcr], useDonut: Boolean = false,
-                   donutBackendName: String = "deterministic"): Dataset[DocResult] = {
+  def extractStage(ocr: Dataset[DocOcr], useDonut: Boolean = false): Dataset[DocResult] = {
     val spark = ocr.sparkSession
     import spark.implicits._
     ocr.mapPartitions { it =>
-      val donut = () => Backends.donut(donutBackendName)
+      val donut = () => Backends.donut()
       it.map(o => if (o.oversize) rejectedResult(o)
                   else extractDoc(o, useDonut, donut))
     }
@@ -272,9 +223,8 @@ object ExtractionPipeline {
 
   /** Fused end-to-end pipeline (the production path): one narrow stage,
     * whole pipeline runs scan→write with zero shuffles. */
-  def run(docs: Dataset[Doc], useDonut: Boolean = false,
-          backendName: String = "deterministic"): Dataset[DocResult] =
-    extractStage(ocrStage(docs, backendName), useDonut, backendName)
+  def run(docs: Dataset[Doc], useDonut: Boolean = false): Dataset[DocResult] =
+    extractStage(ocrStage(docs), useDonut)
 
   /** Corpus-level extraction metrics (north_star: spans/doc, OCR confidence,
     * failure counts) — a single partial+final hash aggregation. */

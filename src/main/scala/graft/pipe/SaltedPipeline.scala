@@ -2,7 +2,7 @@ package graft.pipe
 
 import org.apache.spark.sql.Dataset
 import graft.kernel.Backends
-import graft.model.{Doc, DocResult, Span}
+import graft.model.{Doc, DocResult}
 
 /** Skew handling for media-heavy documents (SURVEY.md §4 "salting").
   *
@@ -27,35 +27,29 @@ object SaltedPipeline {
       face_ref: String,
       face_b64: String,
       media_refs: Seq[String],
-      failures: Long,
-      oversize: Boolean = false)
+      failures: Long)
 
   /** Salted run: heavy docs (≥ heavyThreshold spans) are exploded into span
     * groups of `groupSize`, OCR'd in parallel, re-merged by doc_id; light
-    * docs take the fused path. */
+    * docs take the fused path. So do oversize docs, heavy or not: the fused
+    * path turns them into `Rejected` rows in its kernel, so the cap is never
+    * re-checked here. */
   def run(docs: Dataset[Doc], heavyThreshold: Int = 8, groupSize: Int = 4,
-          useDonut: Boolean = false,
-          backendName: String = "deterministic"): Dataset[DocResult] = {
+          useDonut: Boolean = false): Dataset[DocResult] = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val light = docs.filter(d => d.spans.length < heavyThreshold)
-    val heavy = docs.filter(d => d.spans.length >= heavyThreshold)
+    val isHeavy = (d: Doc) =>
+      d.spans.length >= heavyThreshold && !ExtractionPipeline.oversize(d)
+    val light = docs.filter(d => !isHeavy(d))
+    val heavy = docs.filter(isHeavy)
 
-    // explode heavy docs into salted groups of contiguous spans; oversize
-    // docs (16 MB ingestion cap) emit a single empty marker group instead —
-    // same rejection semantics as the fused path's in-kernel guard
+    // explode heavy docs into salted groups of contiguous spans
     val pieces = heavy.flatMap { d =>
-      if (ExtractionPipeline.docBytes(d) > ExtractionPipeline.MaxInputBytes)
-        Iterator((d.doc_id, Seq.empty[Span]))
-      else d.spans.sortBy(_.offset).grouped(groupSize).map(g => (d.doc_id, g))
+      d.spans.sortBy(_.offset).grouped(groupSize).map(g => (d.doc_id, g))
     }.mapPartitions { it =>
-      val backend = Backends.ocr(backendName)
+      val backend = Backends.ocr()
       it.map { case (docId, spans) =>
-        if (spans.isEmpty)
-          OcrPiece(docId, 0, Vector.empty, Vector.empty, -1, null, null,
-            Vector.empty, 0L, oversize = true)
-        else {
         val (o, confs) = ExtractionPipeline.ocrDocFull(Doc(docId, spans), backend)
         val faceOff =
           if (o.face_ref == null) -1
@@ -64,7 +58,6 @@ object SaltedPipeline {
             .map(_.offset).getOrElse(-1)
         OcrPiece(docId, spans.map(_.offset).min, o.lines, confs,
           faceOff, o.face_ref, o.face_b64, o.media_refs, o.failures)
-        }
       }
     }
 
@@ -73,23 +66,18 @@ object SaltedPipeline {
     // operation sequence as the fused single-pass — bit-identical scores.
     val heavyOcr = pieces.groupByKey(_.doc_id).mapGroups { (docId, it) =>
       val ps = it.toVector.sortBy(_.first_offset)
-      if (ps.exists(_.oversize))
-        DocOcr(docId, "", Vector.empty, 0.0, null, null, Vector.empty, 0L,
-          oversize = true)
-      else {
-        val lines = ps.flatMap(_.lines)
-        val confs = ps.flatMap(_.confs)
-        val faces = ps.filter(_.face_offset >= 0).sortBy(_.face_offset)
-        val face = faces.headOption
-        DocOcr(docId, lines.mkString(" "), lines,
-          if (confs.nonEmpty) confs.sum / confs.length else 0.0,
-          face.map(_.face_ref).orNull, face.map(_.face_b64).orNull,
-          ps.flatMap(_.media_refs), ps.map(_.failures).sum)
-      }
+      val lines = ps.flatMap(_.lines)
+      val confs = ps.flatMap(_.confs)
+      val faces = ps.filter(_.face_offset >= 0).sortBy(_.face_offset)
+      val face = faces.headOption
+      DocOcr(docId, lines.mkString(" "), lines,
+        if (confs.nonEmpty) confs.sum / confs.length else 0.0,
+        face.map(_.face_ref).orNull, face.map(_.face_b64).orNull,
+        ps.flatMap(_.media_refs), ps.map(_.failures).sum)
     }
 
-    val lightResults = ExtractionPipeline.run(light, useDonut, backendName)
-    val heavyResults = ExtractionPipeline.extractStage(heavyOcr, useDonut, backendName)
+    val lightResults = ExtractionPipeline.run(light, useDonut)
+    val heavyResults = ExtractionPipeline.extractStage(heavyOcr, useDonut)
     lightResults.union(heavyResults)
   }
 }

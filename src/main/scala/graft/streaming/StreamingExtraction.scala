@@ -2,36 +2,25 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.kernel.Backends
 import graft.model.{Doc, DocResult}
 import graft.pipe.ExtractionPipeline
 
 /** Structured Streaming surface (readStream → transforms → writeStream).
   *
-  * The extraction pipeline is per-document stateless, so the same kernel
-  * functions run unchanged on a streaming Dataset[Doc] — micro-batches are
+  * The extraction pipeline is per-document stateless, so the batch
+  * pipeline runs unchanged on a streaming Dataset[Doc] — micro-batches are
   * the streaming analogue of the reference's Celery queue (app/tasks.py):
   * arrival-ordered work units, per-worker model reuse, progress via the
   * streaming query listener instead of Redis task states.
   */
 object StreamingExtraction {
 
-  /** Streaming extraction: same map/mapPartitions chain as the batch path.
-    * Works on any streaming Dataset[Doc] (file source, Kafka-decoded,
-    * MemoryStream in tests). */
-  def extract(docs: Dataset[Doc], useDonut: Boolean = false,
-              backendName: String = "deterministic"): Dataset[DocResult] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.mapPartitions { it =>
-      val backend = Backends.ocr(backendName)
-      val donut = () => Backends.donut(backendName)
-      it.map { d =>
-        ExtractionPipeline.extractDoc(
-          ExtractionPipeline.ocrDoc(d, backend), useDonut, donut)
-      }
-    }
-  }
+  /** Streaming extraction: `ExtractionPipeline.run` on a streaming
+    * Dataset[Doc] (file source, Kafka-decoded, MemoryStream in tests), so
+    * a stream gets the same stages, the same 16 MB cap and the same bytes
+    * as a batch. */
+  def extract(docs: Dataset[Doc], useDonut: Boolean = false): Dataset[DocResult] =
+    ExtractionPipeline.run(docs, useDonut)
 
   /** Event-time windowed extraction metrics with a watermark: doc counts
     * and validity by document_type per processing window. `ts` must be an

@@ -1,12 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.{Doc, Span}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.model.{Doc, DocResult, Span}
 import graft.pipe.{ExtractionPipeline, SaltedPipeline}
+import graft.streaming.StreamingExtraction
 
 /** Ingestion cap (reference app/main.py:41, 16 MB MAX_CONTENT_LENGTH):
-  * oversize rows must be routed to Rejected on BOTH extraction paths
-  * without touching the OCR kernel. */
+  * oversize rows must be routed to Rejected on EVERY extraction path
+  * (fused, salted, streaming) without touching the OCR kernel. */
 class OversizeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -34,5 +36,28 @@ class OversizeSpec extends AnyFunSuite {
       heavyThreshold = 8).collect().map(r => r.doc_id -> r).toMap
     assert(out("bigH").document_type === "Rejected")
     assert(out("ok2").document_type === "Aadhaar Card")
+    // the salted Rejected row is the fused path's row, field for field
+    val fused = ExtractionPipeline.run(Seq(heavyBig).toDS()).collect().head
+    def fields(r: DocResult) = (r.doc_id, r.document_type, r.doc_type_dir,
+      r.is_valid, r.validation_error, r.ocr_accuracy_score, r.record_json,
+      r.spans)
+    assert(fields(out("bigH")) === fields(fused))
+  }
+
+  test("streaming path: oversize doc becomes a Rejected result") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Doc]
+    stream.addData(Seq(normal("ok3"),
+      Doc("big3", Vector(Span("text", bigText, null, 0)))))
+    val q = StreamingExtraction.extract(stream.toDS())
+      .writeStream.format("memory").queryName("oversize_stream_out")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val out = spark.table("oversize_stream_out").as[DocResult].collect()
+      .map(r => r.doc_id -> r).toMap
+    assert(out("big3").document_type === "Rejected")
+    assert(!out("big3").is_valid)
+    assert(out("big3").spans.isEmpty)
+    assert(out("ok3").document_type === "Aadhaar Card")
   }
 }

@@ -135,7 +135,11 @@ class BoilerplateStripSpec extends AnyFunSuite {
       "<SCRIPT>", "</SCRIPT >", "<Style>x</style\n>", "<scriptx>",
       "<pre>", "</pre>", "<h7>", "<h1x>", "<ph>", "<table>", "</table>",
       "<p <x>", "<noscript>", "</noscript>", "<NAV", "<!---->", "<!-->",
-      "<p\tclass=y>", "<hr/>", "<td>", "<blockquote>")
+      "<p\tclass=y>", "<hr/>", "<td>", "<blockquote>",
+      // non-ASCII close-tag names: the regex folds ASCII only, so none of
+      // these closes a chrome block (U+0130 İ, U+017F ſ, U+212A Kelvin K)
+      "<style>", "</scr\u0130pt>", "</\u017Ftyle>", "</SCR\u0130PT>",
+      "</bloc\u212Aquote>", "<bloc\u212Aquote>")
     val htmlGen = Gen.chooseNum(0, 30).flatMap(n =>
       Gen.listOfN(n, frag).map(_.mkString))
     val res = SCTest.check(SCTest.Parameters.default,
@@ -259,38 +263,6 @@ class PropertySpec extends AnyFunSuite {
       }.sortBy(t => (t._1, t._2))
       got == want
     })
-  }
-}
-
-/** O2/O3 flags: first-media-only and layout-parse-behind-flag. */
-class PipelineFlagsSpec extends AnyFunSuite {
-  import graft.model.{Doc, Span}
-  import graft.kernel.DeterministicOcrBackend
-  import graft.pipe.ExtractionPipeline
-
-  test("firstMediaOnly processes only the first media span (O2)") {
-    val d = Doc("doc-x", Seq(
-      Span("media", "", graft.io.Corpus.mediaRef("aadhaar", 0, 1L), 0),
-      Span("media", "", graft.io.Corpus.mediaRef("pan", 0, 2L), 1)))
-    val backend = new DeterministicOcrBackend
-    val all = ExtractionPipeline.ocrDocFull(d, backend)._1
-    val first = ExtractionPipeline.ocrDocFull(d, backend, firstMediaOnly = true)._1
-    val firstOnly = ExtractionPipeline.ocrDocFull(
-      Doc("doc-x", d.spans.take(1)), backend)._1
-    assert(first.lines === firstOnly.lines)
-    assert(first.media_refs.length === 1)
-    assert(all.media_refs.length === 2)
-    assert(all.lines.length > first.lines.length)
-  }
-
-  test("parseLayout flag does not change output (O3: result discarded)") {
-    val d = graft.io.Synthesizer.genDoc(42L, 7L)
-    val backend = new DeterministicOcrBackend
-    val a = ExtractionPipeline.ocrDocFull(d, backend)._1
-    val b = ExtractionPipeline.ocrDocFull(d, backend, parseLayout = true)._1
-    assert(a === b)
-    assert(graft.pipe.LayoutParse.parse("m:page:0:1").fields.map(_._1) ===
-      Vector("blocks", "kind"))
   }
 }
 

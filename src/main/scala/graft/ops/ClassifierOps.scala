@@ -36,9 +36,12 @@ object ClassifierOps {
     * at 192/500 errors, better than BOTH constant classifiers (218/282)
     * and matching the linear ceiling (a per-sample reference perceptron
     * given 50 full passes plateaus at ~199). On vocab-separated classes
-    * the same loop drives the error to 0 (spec). */
+    * the same loop drives the error to 0 (spec). `dims` ≤ 0 throws
+    * IllegalArgumentException. */
   def perceptronTrain(docs: DataFrame, epochs: Int = 5, dims: Int = 64,
                       posLang: String = "en"): DataFrame = {
+    require(dims >= 1,
+      s"ClassifierOps.perceptronTrain: dims must be >= 1 (got $dims)")
     val spark = docs.sparkSession
     import spark.implicits._
     val feats = docs.select(col("doc_id").cast("long"),
@@ -72,11 +75,11 @@ object ClassifierOps {
       val mis = scored.filter(col("margin") <= 0)
       // D-row update: posexplode the misclassified features, partial
       // aggregation makes each partition contribute ≤ D rows. n_mis
-      // rides the SAME aggregation (r6): x is a dense length-D array, so
-      // every misclassified doc contributes exactly one row to every
-      // index group — any group's count IS the misclassified-doc count,
-      // and the old separate mis.count() re-ran the whole scoring scan
-      // a second time per epoch
+      // rides the SAME aggregation (r6): x is a dense array of length
+      // D = dims ≥ 1 (the guard above), so every misclassified doc
+      // contributes exactly one row to every index group — any group's
+      // count IS the misclassified-doc count, and the old separate
+      // mis.count() re-ran the whole scoring scan a second time per epoch
       val dwRows = mis
         .select(col("y"), posexplode(col("x")).as(Seq("i", "c")))
         .groupBy(col("i")).agg(sum(col("y") * col("c")).as("dw"),

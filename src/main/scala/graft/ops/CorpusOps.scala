@@ -480,10 +480,8 @@ object CorpusOps {
     * says "exactly n docs per language", not a rate: rank docs within each
     * stratum by md5-low63(doc_id‖salt) (a deterministic, engine-independent
     * shuffle order; ties impossible since doc_id is unique per stratum) and
-    * keep rank ≤ quota. One exchange keyed by the stratum; the window is a
-    * rank, so at 10^12 rows the same result comes from a per-stratum
-    * bounded-heap top-k (`TopK`) instead of the full sort — this
-    * formulation is the exactness contract both share. */
+    * keep rank ≤ quota. One exchange keyed by the stratum, then the rank
+    * window — the same formulation as the SQL oracle. */
   def quotaSample(df: DataFrame, quotaByLang: Map[String, Int],
                   defaultQuota: Int, salt: String = "qta"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -501,51 +499,6 @@ object CorpusOps {
         Window.partitionBy(col("lang")).orderBy(col("rk_hash"), col("doc_id"))))
       .where(col("rk") <= col("quota"))
       .select(col("doc_id"), col("lang"))
-  }
-
-  /** The 10^12-row formulation of `quotaSample` — identical output (spec-
-    * pinned), different plan: instead of a full per-stratum sort under the
-    * rank window, each input partition keeps a bounded max-heap of the
-    * quota smallest hashes per stratum (map-side partial top-k: ≤ quota
-    * candidates per stratum per partition survive), then one stratum-keyed
-    * exchange merges the partial heaps. State is O(strata × quota) per
-    * task regardless of input size; ties are impossible because doc_id is
-    * unique within a stratum. */
-  def quotaSampleTopK(df: DataFrame, quotaByLang: Map[String, Int],
-                      defaultQuota: Int, salt: String = "qta"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rates = quotaByLang
-    type Heap = scala.collection.mutable.PriorityQueue[(Long, Long)]
-    def newHeap(): Heap =
-      new scala.collection.mutable.PriorityQueue[(Long, Long)]()(
-        Ordering.by(_._1)) // max-heap on hash: root = worst kept candidate
-    def offer(heap: Heap, quota: Int, h: Long, id: Long): Unit =
-      if (heap.size < quota) heap.enqueue((h, id))
-      else if (quota > 0 && h < heap.head._1) {
-        heap.dequeue(); heap.enqueue((h, id))
-      }
-    val partial = df.select(col("doc_id").cast("long"), col("lang"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.HashMap[String, Heap]()
-        it.foreach { case (id, lang) =>
-          offer(heaps.getOrElseUpdate(lang, newHeap()),
-            rates.getOrElse(lang, defaultQuota),
-            TextOps.md5Low63(id.toString + "|" + salt), id)
-        }
-        heaps.iterator.flatMap { case (lang, heap) =>
-          heap.iterator.map { case (h, id) => (lang, h, id) }
-        }
-      }
-    partial.groupByKey(_._1)
-      .flatMapGroups { (lang, it) =>
-        val heap = newHeap()
-        val quota = rates.getOrElse(lang, defaultQuota)
-        it.foreach { case (_, h, id) => offer(heap, quota, h, id) }
-        heap.iterator.map { case (_, id) => (id, lang) }.toSeq
-      }
-      .toDF("doc_id", "lang")
   }
 
   /** Deterministic stratified sampling — the corpus-mixing primitive. Keep a
@@ -570,47 +523,39 @@ object CorpusOps {
 
   /** Per-SOURCE document caps — the Common-Crawl-style "keep at most `cap`
     * docs per domain, best first" mixing rule (quality rank = longer doc
-    * wins, doc_id breaks ties). Same map-side partial-top-k shape as
-    * `quotaSampleTopK`: every input partition keeps a bounded heap of the
-    * cap best (n_chars, doc_id) candidates per source it sees, then ONE
-    * source-keyed exchange of ≤ cap rows/source/partition merges the
-    * partials — never a full per-source sort, state O(sources × cap) per
-    * task. Output (doc_id, source, n_chars, rk) with rk = 1-based quality
-    * rank inside the source; the SQL oracle is the row_number() window
-    * formulation. */
+    * wins, doc_id breaks ties). Map-side partial top-k: every input
+    * partition keeps a `TopK` buffer of the cap best (n_chars, doc_id)
+    * candidates per source it sees, then ONE source-keyed exchange of
+    * ≤ cap rows/source/partition merges the partials — never a full
+    * per-source sort, state O(sources × cap) per task. Entries are
+    * (0.0, −n_chars, doc_id), so TopK's order (a asc, then b asc) is
+    * exactly n_chars desc, doc_id asc. Output (doc_id, source, n_chars,
+    * rk) with rk = 1-based quality rank inside the source; cap ≤ 0 keeps
+    * nothing. The SQL oracle is the row_number() window formulation. */
   def domainCap(df: DataFrame, cap: Int = 10): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // "worst kept" ordering: fewer chars is worse; tie → larger doc_id worse
-    val worseFirst: Ordering[(Long, Long)] =
-      Ordering.by { case (n, id) => (-n, id) }
-    type Heap = scala.collection.mutable.PriorityQueue[(Long, Long)]
-    def newHeap(): Heap =
-      new scala.collection.mutable.PriorityQueue[(Long, Long)]()(worseFirst)
-    def offer(heap: Heap, n: Long, id: Long): Unit =
-      if (heap.size < cap) heap.enqueue((n, id))
-      else if (cap > 0 && worseFirst.lt((n, id), heap.head)) {
-        heap.dequeue(); heap.enqueue((n, id))
-      }
     val partial = df
       .select(col("doc_id").cast("long"), col("source"),
         col("n_chars").cast("long"))
       .as[(Long, String, Long)]
       .mapPartitions { it =>
-        val heaps = scala.collection.mutable.HashMap[String, Heap]()
+        val bufs = scala.collection.mutable.HashMap[String, TopK.Buf]()
         it.foreach { case (id, src, n) =>
-          offer(heaps.getOrElseUpdate(src, newHeap()), n, id)
+          bufs(src) = TopK.insert(cap, bufs.getOrElse(src, TopK.emptyBuf),
+            0.0, -n, id)
         }
-        heaps.iterator.flatMap { case (src, heap) =>
-          heap.iterator.map { case (n, id) => (src, n, id) }
+        bufs.iterator.flatMap { case (src, (_, negN, ids)) =>
+          negN.indices.iterator.map(i => (src, -negN(i), ids(i)))
         }
       }
     partial.groupByKey(_._1)
       .flatMapGroups { (src, it) =>
-        val heap = newHeap()
-        it.foreach { case (_, n, id) => offer(heap, n, id) }
-        heap.toArray.sorted(worseFirst).iterator.zipWithIndex // best first
-          .map { case ((n, id), i) => (id, src, n, (i + 1).toLong) }.toSeq
+        var buf = TopK.emptyBuf
+        it.foreach { case (_, n, id) =>
+          buf = TopK.insert(cap, buf, 0.0, -n, id)
+        }
+        buf._2.indices.map(i => (buf._3(i), src, -buf._2(i), (i + 1).toLong))
       }
       .toDF("doc_id", "source", "n_chars", "rk")
   }

@@ -889,7 +889,8 @@ object DedupOps {
     // composition is the cheaper plan. One tiny agg decides; both
     // branches are row-identical (spec-pinned), so the predicate only
     // picks the plan.
-    val cnt = stats.agg(count(lit(1)).as("d"), sum(col("csize")).as("n"))
+    val cnt = stats.agg(count(lit(1)).as("d"),
+        coalesce(sum(col("csize")), lit(0L)).as("n")) // zero rows: n = 0
       .head()
     val (dCount, nTotal) = (cnt.getLong(0), cnt.getLong(1))
     if (dCount > collapseRatio * nTotal)

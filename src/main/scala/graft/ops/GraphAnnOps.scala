@@ -421,10 +421,10 @@ object GraphAnnOps {
     SimilarityOps.rankTopK(scored, k)
   }
 
-  /** Multi-ef [[topKFromVisited]] (r6): ONE scoring pass + ONE bounded-
-    * heap aggregation over the ef-tagged visited dump, keyed by
+  /** Multi-ef [[topKFromVisited]] (r6): ONE scoring pass + ONE
+    * `TopK.TopKIds` aggregation over the ef-tagged visited dump, keyed by
     * (ef, query_id) — each ef-slice's top-k set is identical to the
-    * per-slice call (same insert comparator: score DESC, id ASC). Rank is
+    * per-slice call (same aggregator: score DESC, id ASC). Rank is
     * dropped: the recall join consumes the SET. Output
     * (ef, query_id, neighbor_id). */
   def topKFromVisitedSweep(emb: DataFrame, visited: DataFrame,
@@ -442,7 +442,8 @@ object GraphAnnOps {
         SimilarityOps.cosine(col("q_emb"), col("n_emb")).as("score"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(r => (r._1, r._2))
-      .agg(new TopK.TopKIdsTagged(k).toColumn.name("topk"))
+      .mapValues(r => (0L, r._3, r._4))
+      .agg(new TopK.TopKIds(k).toColumn.name("topk"))
       .toDF("key", "topk")
       .select(col("key._1").as("ef"), col("key._2").as("query_id"),
         explode(col("topk")).as("neighbor_id"))

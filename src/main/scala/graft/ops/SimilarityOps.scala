@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -346,34 +346,48 @@ object SimilarityOps {
     * Brute-force contract: one side must fit in a broadcast (same bound as
     * any broadcast join) — the 10^12-row path is the LSH family
     * (`embeddingNearDups`/`lshTopK`); this is the exactness baseline. The
-    * kernel is a mapPartitions over the distributed side against the
-    * broadcast side in tight primitive loops (a Catalyst nested-loop join
-    * materializing N²/2 array-pair rows through the expression evaluator
-    * measured ~50× slower), with a per-partition bounded heap so each task
-    * emits ≤ k pairs; the global merge sorts ≤ partitions × k rows.
-    * Integer-only output (rank, vec_a, vec_b); ties break by (vec_a, vec_b);
-    * dot/norm accumulate in index order so the score is bit-identical to the
-    * Catalyst/DuckDB sequential folds. */
+    * guard and the one driver collect run here, once; the collect then
+    * feeds either the identical-vector collapse ([[topPairsCollapsed]],
+    * the default) or the brute kernel ([[bruteTopPairs]]), which the
+    * collapse also falls back to below its cost rule. Both end in the
+    * same ranked tail ([[rankedPairs]]). Integer-only output
+    * (rank, vec_a, vec_b); ties break by (vec_a, vec_b); k ≤ 0 returns an
+    * empty frame of the same schema. */
   def topPairs(emb: DataFrame, k: Int = 100,
                maxBroadcastRows: Long = BruteRowLimit,
                collapseExact: Boolean = true,
                collapseFloor: Int = 16384): DataFrame = {
-    if (collapseExact)
-      return topPairsCollapsed(emb, k, maxBroadcastRows, collapseFloor)
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs = emb.select(col("vec_id").cast("long"),
-      col("embedding").cast("array<double>")).as[(Long, Array[Double])]
     guardBruteContract("topPairs", emb, maxBroadcastRows,
       "embeddingNearDups (LSH-banded near-dup pairs)")
-    val side = vecs.collect().sortBy(_._1) // broadcast side (brute contract)
+    val vecs = emb.select(col("vec_id").cast("long"),
+      col("embedding").cast("array<double>")).as[(Long, Array[Double])]
+    val all = vecs.collect().sortBy(_._1) // brute contract's one collect
+    if (collapseExact) topPairsCollapsed(vecs, all, k, collapseFloor)
+    else bruteTopPairs(vecs, all, k)
+  }
+
+  /** The brute top-pairs kernel: a mapPartitions over the distributed
+    * side against the broadcast side (`side`, sorted by id) in tight
+    * primitive loops (a Catalyst nested-loop join materializing N²/2
+    * array-pair rows through the expression evaluator measured ~50×
+    * slower), with a per-partition `TopK` buffer so each task emits ≤ k
+    * pairs; the global merge sorts ≤ partitions × k rows. Dot and norm
+    * accumulate in index order so the score is bit-identical to the
+    * Catalyst/DuckDB sequential folds. */
+  private def bruteTopPairs(vecs: Dataset[(Long, Array[Double])],
+                            side: Array[(Long, Array[Double])],
+                            k: Int): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
     val ids = side.map(_._1)
     val es = side.map(_._2)
     val norms = es.map(norm)
     val bc = spark.sparkContext.broadcast((ids, es, norms))
     val partial = vecs.mapPartitions { it =>
       val (ids, es, norms) = bc.value
-      var heap: TopK.Buf = (Array.empty, Array.empty, Array.empty)
+      var buf = TopK.emptyBuf
       it.foreach { case (aId, ae) =>
         val an = norm(ae)
         var j = 0
@@ -383,20 +397,26 @@ object SimilarityOps {
             var dot = 0.0
             var i = 0
             while (i < ae.length) { dot += ae(i) * be(i); i += 1 }
-            heap = TopK.insertPublic(k, heap, dot / (an * norms(j)), aId, ids(j))
+            buf = TopK.insert(k, buf, dot / (an * norms(j)), aId, ids(j))
           }
           j += 1
         }
       }
-      Iterator.single(heap)
+      Iterator.single(buf)
     }
-    // global merge: ≤ partitions × k candidate pairs, ranked
+    rankedPairs(partial
+      .flatMap(h => h._1.indices.map(i => (h._1(i), h._2(i), h._3(i))))
+      .toDF("score", "vec_a", "vec_b"), k)
+  }
+
+  /** The ranked tail both top-pairs kernels end in: the global
+    * (score DESC, vec_a, vec_b) sort-limit over candidate pairs, then
+    * 1-based ranks. The limit is clamped at 0, so k ≤ 0 is empty. */
+  private def rankedPairs(cand: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("score").desc, col("vec_a"), col("vec_b"))
-    partial
-      .flatMap(h => h._1.indices.map(i => (h._1(i), h._2(i), h._3(i))))
-      .toDF("score", "vec_a", "vec_b")
-      .orderBy(col("score").desc, col("vec_a"), col("vec_b")).limit(k)
+    cand.orderBy(col("score").desc, col("vec_a"), col("vec_b"))
+      .limit(math.max(k, 0))
       .select(row_number().over(w).as("rank"), col("vec_a"), col("vec_b"))
       .orderBy(col("rank"))
   }
@@ -415,46 +435,41 @@ object SimilarityOps {
     * Exact top-k selection argument: fewer than k classes can score
     * STRICTLY above the k-th member pair (each contributes ≥ 1 pair), so
     * every contributing class sits inside any partition's top-k class
-    * scores or ties the k-th — the two-pass kernel (pass 1: k-score
-    * min-heap per partition → boundary b; pass 2: emit classes with
-    * score ≥ b) therefore retains a SUPERSET of the contributing
-    * classes. Globally, score levels are kept while the cumulative
-    * member-pair mult of strictly-better levels is < k, kept classes
-    * expand to member pairs, and the final (score DESC, vec_a, vec_b)
-    * sort-limit is the ORIGINAL tail verbatim — identical selection on
+    * scores or ties the k-th — the two-pass kernel (pass 1: a `TopK`
+    * buffer of the partition's k best class scores → boundary b, the
+    * k-th score when the buffer is full, −∞ otherwise; pass 2: emit
+    * classes with score ≥ b) therefore retains a SUPERSET of the
+    * contributing classes. Globally, score levels are kept while the
+    * cumulative member-pair mult of strictly-better levels is < k, kept
+    * classes expand to member pairs, and the ranked tail is
+    * [[rankedPairs]], the brute kernel's own — identical selection on
     * identical scores. Per-class member expansion is output-tie-bounded
     * (the boundary level expands fully — the answer's own tie set).
     * Compute: O(D²) scores twice instead of O(N²) once; the broadcast
     * side shrinks to one array per distinct vector.
     *
-    * ADAPTIVE (r6): the grouping happens on the DRIVER over the single
-    * collect the brute contract already pays (content-keyed, zero extra
-    * Spark jobs), and the collapsed kernel only runs when it wins by
-    * the exact cost rule 2·D² < N² — on a dup-free corpus the original
-    * kernel runs verbatim (measured: the always-collapse form cost p12
+    * ADAPTIVE (r6): the grouping happens on the DRIVER over `all`, the
+    * single collect the brute contract already pays (content-keyed, zero
+    * extra Spark jobs), and the collapsed kernel only runs when it wins
+    * by the exact cost rule 2·D² < N² — otherwise [[bruteTopPairs]] runs
+    * over the same collect (measured: the always-collapse form cost p12
     * ~1.0 s of pure machinery at sf0.1 where D = N). Both branches are
     * bit-identical (spec-pinned), so the branch predicate only picks
     * the cheaper plan. */
-  private def topPairsCollapsed(emb: DataFrame, k: Int,
-                                maxBroadcastRows: Long,
+  private def topPairsCollapsed(vecs: Dataset[(Long, Array[Double])],
+                                all: Array[(Long, Array[Double])], k: Int,
                                 collapseFloor: Int): DataFrame = {
-    val spark = emb.sparkSession
+    val spark = vecs.sparkSession
     import spark.implicits._
-    guardBruteContract("topPairs", emb, maxBroadcastRows,
-      "embeddingNearDups (LSH-banded near-dup pairs)")
-    val vecs = emb.select(col("vec_id").cast("long"),
-      col("embedding").cast("array<double>")).as[(Long, Array[Double])]
-    val all = vecs.collect().sortBy(_._1) // brute contract's one collect
     // driver-side identical-vector grouping: ids arrive sorted, so each
     // group's first member is its min-id rep and mids stay sorted
     val groupOf = new java.util.LinkedHashMap[scala.collection.immutable.ArraySeq[Double],
       scala.collection.mutable.ArrayBuffer[Long]]()
-    val arrOf = new java.util.HashMap[Long, Array[Double]]()
     all.foreach { case (id, e) =>
       val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(e)
       var b = groupOf.get(key)
       if (b == null) { b = scala.collection.mutable.ArrayBuffer.empty[Long]
-        groupOf.put(key, b); arrOf.put(id, e) }
+        groupOf.put(key, b) }
       b += id
     }
     val nTotal = all.length.toLong
@@ -462,44 +477,10 @@ object SimilarityOps {
     // collapse only when the kernel saving clears the collapsed path's
     // fixed stage overhead (~6 extra exchanges for class selection +
     // member enumeration): below the floor the N² kernel is already
-    // sub-second and the brute plan is the cheaper one. The fallback
-    // reuses THIS collect (re-entering the public path would re-pay the
-    // guard job and the collect — measured +0.5 s at sf0.1).
+    // sub-second and the brute plan is the cheaper one
     if (nTotal < collapseFloor ||
-        2.0 * dCount * dCount >= nTotal.toDouble * nTotal) {
-      val ids0 = all.map(_._1)
-      val es0 = all.map(_._2)
-      val norms0 = es0.map(norm)
-      val bc0 = spark.sparkContext.broadcast((ids0, es0, norms0))
-      val partial = vecs.mapPartitions { it =>
-        val (ids, es, norms) = bc0.value
-        var heap: TopK.Buf = (Array.empty, Array.empty, Array.empty)
-        it.foreach { case (aId, ae) =>
-          val an = norm(ae)
-          var j = 0
-          while (j < ids.length) {
-            if (ids(j) > aId) {
-              val be = es(j)
-              var dot = 0.0
-              var i = 0
-              while (i < ae.length) { dot += ae(i) * be(i); i += 1 }
-              heap = TopK.insertPublic(k, heap, dot / (an * norms(j)),
-                aId, ids(j))
-            }
-            j += 1
-          }
-        }
-        Iterator.single(heap)
-      }
-      import org.apache.spark.sql.expressions.Window
-      val w0 = Window.orderBy(col("score").desc, col("vec_a"), col("vec_b"))
-      return partial
-        .flatMap(h => h._1.indices.map(i => (h._1(i), h._2(i), h._3(i))))
-        .toDF("score", "vec_a", "vec_b")
-        .orderBy(col("score").desc, col("vec_a"), col("vec_b")).limit(k)
-        .select(row_number().over(w0).as("rank"), col("vec_a"), col("vec_b"))
-        .orderBy(col("rank"))
-    }
+        2.0 * dCount * dCount >= nTotal.toDouble * nTotal)
+      return bruteTopPairs(vecs, all, k)
 
     val groupArr = new Array[(Long, Array[Double], Long, Array[Long])](groupOf.size)
     locally {
@@ -545,33 +526,13 @@ object SimilarityOps {
             j += 1
           }
         }
-      // pass 1: partition's k-th largest class score (size-k min-heap)
-      val heap = new Array[Double](kk)
-      var hn = 0
-      def push(s: Double): Unit =
-        if (hn < kk) {
-          heap(hn) = s; hn += 1
-          var c = hn - 1
-          while (c > 0 && heap((c - 1) / 2) > heap(c)) {
-            val p = (c - 1) / 2
-            val t = heap(c); heap(c) = heap(p); heap(p) = t
-            c = p
-          }
-        } else if (s > heap(0)) {
-          heap(0) = s
-          var c = 0
-          var done = false
-          while (!done) {
-            var m = c
-            val l = 2 * c + 1; val r = 2 * c + 2
-            if (l < kk && heap(l) < heap(m)) m = l
-            if (r < kk && heap(r) < heap(m)) m = r
-            if (m == c) done = true
-            else { val t = heap(c); heap(c) = heap(m); heap(m) = t; c = m }
-          }
-        }
-      visit((s, _, _, _) => push(s))
-      val b = if (hn < kk) Double.NegativeInfinity else heap(0)
+      // pass 1: the partition's k best class scores; the boundary is the
+      // k-th of them once k are held (k ≤ 0 holds none: −∞, and the
+      // global selection below keeps nothing)
+      var top = TopK.emptyBuf
+      visit((s, ra, rb, _) => top = TopK.insert(kk, top, s, ra, rb))
+      val b = if (kk > 0 && top._1.length == kk) top._1(kk - 1)
+              else Double.NegativeInfinity
       // pass 2: emit this partition's classes at or above the boundary
       val out = Array.newBuilder[(Double, Long, Long, Long)]
       visit((s, ra, rb, m) => if (s >= b) out += ((s, ra, rb, m)))
@@ -605,12 +566,7 @@ object SimilarityOps {
       .select(col("score"), col("x"), explode(col("ma")).as("y"))
       .where(col("x") < col("y"))
       .select(col("score"), col("x").as("vec_a"), col("y").as("vec_b"))
-    val cand = cross.unionByName(within)
-    // ORIGINAL tail verbatim: identical selection semantics
-    val w = Window.orderBy(col("score").desc, col("vec_a"), col("vec_b"))
-    cand.orderBy(col("score").desc, col("vec_a"), col("vec_b")).limit(k)
-      .select(row_number().over(w).as("rank"), col("vec_a"), col("vec_b"))
-      .orderBy(col("rank"))
+    rankedPairs(cross.unionByName(within), k)
   }
 
   /** ALL pairs with cosine ≥ minCosine — the threshold sibling of

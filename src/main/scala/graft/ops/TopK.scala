@@ -1,30 +1,42 @@
 package graft.ops
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Bounded top-k typed aggregators: partial top-k runs MAP-SIDE (partial +
-  * merge phases of the hash aggregate), so each reducer absorbs at most
-  * `numPartitions × k` candidates instead of the full scored set — the
-  * `row_number` window formulation funnels every scored row of a group into
-  * one reducer, a driver-shaped bottleneck at 10^12 rows.
+/** The one bounded top-k selection in `graft.ops`. A buffer holds at most
+  * k entries (score, a, b) as parallel arrays, best first, in the order
+  * score desc, then a asc, then b asc. k ≤ 0 keeps nothing: `insert`
+  * returns the buffer unchanged, so every caller's answer is empty — the
+  * `row_number() <= k` oracle's answer.
   *
-  * Buffers are score-descending parallel arrays of length ≤ k; insertion is
-  * O(k) worst case but O(1) (single compare against the current k-th) for
-  * the overwhelming majority of rows once the heap fills.
+  * Insertion is O(k) worst case but O(1) (a single compare against the
+  * current k-th) for the overwhelming majority of rows once the buffer
+  * fills. Callers:
+  *   - [[TopKIds]], the typed aggregator whose partial top-k runs
+  *     MAP-SIDE (partial + merge phases of the hash aggregate), so each
+  *     reducer absorbs at most `numPartitions × k` candidates instead of
+  *     the full scored set: `SimilarityOps.rankTopK` (and every op built
+  *     on it), `GraphAnnOps.topKFromVisitedSweep`, `PqOps`, and the
+  *     `SparkEntry`/`RelationalQueries` cost top-k queries;
+  *   - `SimilarityOps.topPairs`: the brute kernel's per-partition top-k
+  *     pairs, and the collapsed kernel's pass-1 class-score boundary;
+  *   - `CorpusOps.domainCap`: per-source partial and merge, with
+  *     (0.0, −n_chars, doc_id) so the order is n_chars desc, doc_id asc.
   */
 object TopK {
 
-  /** Insert (score, a, b) into the desc-sorted parallel arrays, bounded at
-    * k. Order: score desc, then a asc, then b asc. Returns the (possibly
-    * new) arrays. */
-  private def insert(k: Int, ss: Array[Double], as: Array[Long], bs: Array[Long],
-                     s: Double, a: Long, b: Long): (Array[Double], Array[Long], Array[Long]) = {
+  type Buf = (Array[Double], Array[Long], Array[Long])
+  val emptyBuf: Buf = (Array.empty, Array.empty, Array.empty)
+
+  /** Insert (s, a, b) into `buf`, bounded at k. Returns the (possibly
+    * new) buffer; `buf` itself is never modified. */
+  def insert(k: Int, buf: Buf, s: Double, a: Long, b: Long): Buf = {
+    val (ss, as, bs) = buf
     val n = ss.length
     @inline def beats(i: Int): Boolean =
       s > ss(i) || (s == ss(i) && (a < as(i) || (a == as(i) && b < bs(i))))
-    if (n >= k && !beats(n - 1)) return (ss, as, bs)
+    if (k <= 0 || (n >= k && !beats(n - 1))) return buf
     var pos = n
     while (pos > 0 && beats(pos - 1)) pos -= 1
     val m = math.min(n + 1, k)
@@ -42,19 +54,11 @@ object TopK {
     (ns, na, nb)
   }
 
-  type Buf = (Array[Double], Array[Long], Array[Long])
-  private val emptyBuf: Buf = (Array.empty, Array.empty, Array.empty)
-
-  /** Buffer-level insert for external bounded-heap kernels
-    * (SimilarityOps.topPairs). */
-  def insertPublic(k: Int, b: Buf, s: Double, a: Long, bId: Long): Buf =
-    insert(k, b._1, b._2, b._3, s, a, bId)
-
   private def mergeBufs(k: Int, x: Buf, y: Buf): Buf = {
     var acc = x
     var i = 0
     while (i < y._1.length) {
-      acc = insert(k, acc._1, acc._2, acc._3, y._1(i), y._2(i), y._3(i))
+      acc = insert(k, acc, y._1(i), y._2(i), y._3(i))
       i += 1
     }
     acc
@@ -65,37 +69,10 @@ object TopK {
   class TopKIds(k: Int) extends Aggregator[(Long, Long, Double), Buf, Seq[Long]] {
     def zero: Buf = emptyBuf
     def reduce(b: Buf, in: (Long, Long, Double)): Buf =
-      insert(k, b._1, b._2, b._3, in._3, in._2, 0L)
+      insert(k, b, in._3, in._2, 0L)
     def merge(x: Buf, y: Buf): Buf = mergeBufs(k, x, y)
     def finish(b: Buf): Seq[Long] = b._2.toSeq
     def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
     def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
-  }
-
-  /** Per-(tag, group) top-k single ids by (score desc, id asc) — the
-    * [[TopKIds]] shape for composite-keyed sweeps (r6 graph-recall fusion).
-    * Input rows: (tag, groupKey, id, score); tag and groupKey are ignored
-    * (carried by groupByKey). */
-  class TopKIdsTagged(k: Int)
-      extends Aggregator[(Long, Long, Long, Double), Buf, Seq[Long]] {
-    def zero: Buf = emptyBuf
-    def reduce(b: Buf, in: (Long, Long, Long, Double)): Buf =
-      insert(k, b._1, b._2, b._3, in._4, in._3, 0L)
-    def merge(x: Buf, y: Buf): Buf = mergeBufs(k, x, y)
-    def finish(b: Buf): Seq[Long] = b._2.toSeq
-    def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
-  }
-
-  /** Global top-k pairs by (score desc, a asc, b asc). Input rows:
-    * (a, b, score). */
-  class TopKPairs(k: Int) extends Aggregator[(Long, Long, Double), Buf, Seq[(Long, Long)]] {
-    def zero: Buf = emptyBuf
-    def reduce(b: Buf, in: (Long, Long, Double)): Buf =
-      insert(k, b._1, b._2, b._3, in._3, in._1, in._2)
-    def merge(x: Buf, y: Buf): Buf = mergeBufs(k, x, y)
-    def finish(b: Buf): Seq[(Long, Long)] = b._2.zip(b._3).toSeq
-    def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[(Long, Long)]] = ExpressionEncoder()
   }
 }

@@ -80,6 +80,15 @@ class ClassifierOpsSpec extends AnyFunSuite {
       docs.map { case (id, t, l) => (id, l, t) }, 6, 64, "en"))
   }
 
+  test("perceptron rejects dims <= 0 with a named IllegalArgumentException") {
+    val df = Seq((0L, "qqq www eee", "en")).toDF("doc_id", "text", "lang")
+    for (dims <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        ClassifierOps.perceptronTrain(df, epochs = 1, dims = dims))
+      assert(e.getMessage.contains("dims must be >= 1"), s"dims=$dims")
+    }
+  }
+
   test("Cohen's kappa: perfect agreement → 1000 milli, hand-computed " +
     "contingency matches, negative kappa floors like DuckDB //, " +
     "constant raters → 0 by convention, layout-invariant") {

@@ -679,6 +679,31 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("k <= 0: every bounded top-k op returns an empty frame with the " +
+    "k = 1 schema (the row_number() <= k oracle's answer)") {
+    // two distinct vectors, three members each: 2·D² < N², so
+    // collapseFloor = 0 really takes the collapsed branch
+    val a = Array(1f, 0f, 0f, 0f); val b = Array(0.6f, 0.8f, 0f, 0f)
+    val vecs = Seq((0L, a), (1L, a), (2L, b), (3L, a), (4L, b), (5L, b))
+      .toDF("vec_id", "embedding")
+    val docs = Seq((1L, "s1", 10L), (2L, "s1", 20L), (3L, "s2", 5L))
+      .toDF("doc_id", "source", "n_chars")
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "bruteTopK" -> (k => SimilarityOps.bruteTopK(vecs, 2, k)),
+      "topPairs collapsed" -> (k =>
+        SimilarityOps.topPairs(vecs, k, collapseFloor = 0)),
+      "topPairs brute" -> (k =>
+        SimilarityOps.topPairs(vecs, k, collapseExact = false)),
+      "domainCap" -> (k => graft.ops.CorpusOps.domainCap(docs, cap = k)))
+    for ((name, op) <- ops; k <- Seq(-1, 0)) {
+      val one = op(1)
+      assert(one.collect().nonEmpty, name)
+      val out = op(k)
+      assert(out.schema === one.schema, s"$name k=$k")
+      assert(out.collect().isEmpty, s"$name k=$k")
+    }
+  }
+
   test("brute-force baselines refuse oversized inputs: the row-count " +
     "guard trips BEFORE any driver collect, naming the scale path") {
     val vecs = (0L until 8L).map(i => (i, Array(i.toFloat, 1f, 0f, 0f)))
@@ -2147,6 +2172,19 @@ class OpsSpec extends AnyFunSuite {
     assert(DedupOps.dupClusters(empty).collect().isEmpty)
   }
 
+  test("dupClustersOverDocs on zero rows returns the empty frame " +
+    "dupClusters(minhashLsh(docs)) returns") {
+    val empty = docsDf()
+    val got = DedupOps.dupClustersOverDocs(empty)
+    val want = DedupOps.dupClusters(DedupOps.minhashLsh(empty))
+    // names and types; nullability differs between the two plans for any
+    // input, as in the row-identical test below
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    assert(cols(got) === cols(want))
+    assert(got.collect().isEmpty && want.collect().isEmpty)
+  }
+
   test("dupClustersOverDocs (rep-level CC) is row-identical to " +
     "dupClusters(minhashLsh(docs)) on a planted dup-cluster corpus") {
     // planted classes: an ISOLATED identical cluster (no cross pairs —
@@ -2352,16 +2390,11 @@ class OpsSpec extends AnyFunSuite {
     // quota larger than the stratum returns the whole stratum
     val d = graft.ops.CorpusOps.quotaSample(df, Map("en" -> 100), 100).collect()
     assert(d.length === 50)
-    // the bounded-heap (map-side partial top-k) formulation is output-
-    // identical to the rank-window formulation — on a multi-partition
-    // input, so partial heaps really merge
+    // partition-count-invariant
     val wide = df.repartition(7)
     val viaWindow = graft.ops.CorpusOps.quotaSample(wide, Map("en" -> 7), 4)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val viaHeap = graft.ops.CorpusOps.quotaSampleTopK(wide, Map("en" -> 7), 4)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(viaHeap === viaWindow)
-    assert(viaHeap === a.toSet) // and partition-count-invariant
+    assert(viaWindow === a.toSet)
   }
 
   test("preprocess plan: width-1800 resize, 50px border, every-30th frame") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Probabilistic record linkage (entity resolution) with Fellegi–Sunter
@@ -31,58 +31,95 @@ object LinkageOps {
   /** Score all blocked candidate pairs and keep links with
     * `score >= threshold`. Inputs carry columns
     * `(key, name, block, cents, seg)`; output one row per linked pair:
-    * `(a_key, b_key, lev, w_name, w_bal, w_seg, score)` ordered by keys.
+    * `(a_key, b_key, lev, w_name, w_bal, w_seg, score, is_true)` ordered
+    * by keys.
     *
     *  - name: levenshtein 0 → +24 (exact), ≤2 → +12 (typo/transposition
     *    class), else −8
     *  - cents: |Δ| ≤ `centsTol` → +10, else −6
     *  - seg: equal → +6, else −4
-    */
-  /** Attribute-identical collapse for the linkage inputs — the r5 lesson
-    * shared with `DedupOps.textGroups`/p127: every comparator is a pure
-    * function of (name, block, cents, seg), so a crawled/tiled corpus's
-    * exact-duplicate records multiply every in-block quadratic by the
-    * dup-cluster size squared for no information. Candidates are
-    * generated and scored over ONE representative per distinct attribute
-    * tuple; member pairs expand arithmetically afterwards (output-sized
-    * joins). `is_true` is the one key-DEPENDENT output column and is
-    * recomputed per expanded pair, so the expansion is output-identical
-    * (spec-pinned). */
-  private def attrGroups(df: DataFrame): (DataFrame, DataFrame) = {
-    val reps = df.groupBy(col("name"), col("block"), col("cents"),
-        col("seg"))
-      .agg(min(col("key")).as("key"))
-    val members = df.join(reps.select(col("name"), col("block"),
-        col("cents"), col("seg"), col("key").as("rep_key")),
-      Seq("name", "block", "cents", "seg"))
-      .select(col("rep_key"), col("key"))
-    (reps.select(col("key"), col("name"), col("block"), col("cents"),
-      col("seg")), members)
-  }
-
+    *
+    * `collapseExact` scores one representative per attribute tuple (see
+    * [[links]]); both settings are row-identical (spec-pinned). */
   def fellegiSunterLinks(a: DataFrame, b: DataFrame,
                          threshold: Int = 18,
                          centsTol: Int = 75,
-                         collapseExact: Boolean = true): DataFrame = {
-    if (collapseExact) {
-      val (ra, ma) = attrGroups(a)
-      val (rb, mb) = attrGroups(b)
-      val repLinks = fellegiSunterLinks(ra, rb, threshold, centsTol,
-        collapseExact = false)
-      return repLinks
-        .join(ma.select(col("rep_key").as("a_key"), col("key").as("ka")),
-          "a_key")
-        .join(mb.select(col("rep_key").as("b_key"), col("key").as("kb")),
-          "b_key")
-        .select(col("ka").as("a_key"), col("kb").as("b_key"), col("lev"),
-          col("w_name"), col("w_bal"), col("w_seg"), col("score"),
-          (col("ka") === col("kb")).cast("long").as("is_true"))
-        .orderBy(col("a_key"), col("b_key"))
+                         collapseExact: Boolean = true): DataFrame =
+    links(a, b, Seq(col("block")), threshold, centsTol, collapseExact)
+      .orderBy(col("a_key"), col("b_key"))
+
+  /** MULTI-PASS blocking — how production absorbs the single-block
+    * recall loss the `fellegiSunterLinks` spec pins (a true pair whose
+    * blocking field was corrupted never meets): a pair is a candidate
+    * when it shares ANY of several cheap blocking keys. Keys here:
+    *   1. the caller's `block` field (nation in p118);
+    *   2. cents ÷ W bands, W = 2·centsTol + 50;
+    *   3. the SAME bands offset by W/2 — the classic two-offset trick:
+    *      union-grid boundaries are W/2 apart, so any pair within
+    *      W/2 − 1 ≥ centsTol cents straddles at most ONE grid's boundary
+    *      and shares a band in the other pass — balance-compatible pairs
+    *      are GUARANTEED to meet even when their blocking field was
+    *      corrupted, for ANY centsTol (the width derives from it).
+    * Banding uses FLOOR division (pmod-adjusted: Spark's `div` truncates
+    * toward zero while DuckDB's `//` floors — q118's truncation-vs-floor
+    * pin), so arbitrarily negative balances band identically on both
+    * engines with no magic nonnegativity shift to outgrow.
+    * All three keys run through ONE collapse, join and score ([[links]]),
+    * then one row-level `distinct` and one sort. Scoring is per-pair and
+    * deterministic, so the output equals the ordered distinct union of
+    * three single-key [[fellegiSunterLinks]] runs for any input, repeated
+    * keys included (spec-pinned): every p118 row plus the recovered
+    * corrupted-block pairs. */
+  def fellegiSunterLinksMultiPass(a: DataFrame, b: DataFrame,
+                                  threshold: Int = 18,
+                                  centsTol: Int = 75): DataFrame = {
+    val width = 2 * centsTol + 50
+    val offset = width / 2
+    // floor(x / w) for any-sign x: (x − pmod(x, w)) div w — pmod is
+    // nonnegative, so the dividend is an exact multiple and trunc == floor
+    def floorBand(shift: Int) =
+      expr(s"(cents + $shift - pmod(cents + $shift, $width)) div $width")
+    links(a, b, Seq(col("block"), floorBand(0), floorBand(offset)),
+      threshold, centsTol, collapseExact = true)
+      .distinct()
+      .orderBy(col("a_key"), col("b_key"))
+  }
+
+  /** The one linkage kernel: a pair is a candidate when it agrees on any
+    * of `blockKeys` (expressions over the input columns, one per pass).
+    *
+    * Attribute-identical collapse (`collapseExact`) — the r5 lesson
+    * shared with `DedupOps.textGroups`/p127: every comparator is a pure
+    * function of (name, block, cents, seg), so a crawled/tiled corpus's
+    * exact-duplicate records multiply every in-block quadratic by the
+    * dup-cluster size squared for no information. Each side groups ONCE
+    * to one representative per distinct attribute tuple (key = min key)
+    * carrying its member keys; the reps get one (pass, bkey) row per
+    * blocking key and meet in ONE equi-join. A rep pair that agrees on
+    * several keys meets once per agreeing key, so only the meeting at the
+    * FIRST agreeing key is kept, map-side, before the comparators run.
+    * The member lists expand once at the end (output-sized); `is_true`
+    * is the one key-DEPENDENT output column and is recomputed per
+    * expanded pair, so the expansion is output-identical (spec-pinned).
+    * Output unordered. */
+  private[graft] def links(a: DataFrame, b: DataFrame,
+                           blockKeys: Seq[Column], threshold: Int,
+                           centsTol: Int, collapseExact: Boolean)
+    : DataFrame = {
+    def side(df: DataFrame, p: String): DataFrame = {
+      val reps =
+        if (collapseExact)
+          df.groupBy(col("name"), col("block"), col("cents"), col("seg"))
+            .agg(min(col("key")).as("key"),
+              collect_list(col("key")).as("members"))
+        else df.withColumn("members", array(col("key")))
+      reps.withColumn("bkeys", array(blockKeys: _*))
+        .select(col("key").as(s"${p}_key"),
+          col("members").as(s"${p}_members"), col("name").as(s"${p}_name"),
+          col("cents").as(s"${p}_cents"), col("seg").as(s"${p}_seg"),
+          col("bkeys").as(s"${p}_bkeys"),
+          posexplode(col("bkeys")).as(Seq("pass", "bkey")))
     }
-    val pa = a.select(col("key").as("a_key"), col("name").as("a_name"),
-      col("block"), col("cents").as("a_cents"), col("seg").as("a_seg"))
-    val pb = b.select(col("key").as("b_key"), col("name").as("b_name"),
-      col("block"), col("cents").as("b_cents"), col("seg").as("b_seg"))
     // Two output-identical prunings derived from the score algebra — the
     // classic ER move of letting the cheap integer comparators gate the
     // expensive string one (isolated re-probe: 29.9 s → see BASELINE.md
@@ -102,13 +139,18 @@ object LinkageOps {
     val lev =
       if (threshold >= 9) levenshtein(col("a_name"), col("b_name"), 3)
       else levenshtein(col("a_name"), col("b_name"))
-    val candidates = pa.join(pb, Seq("block"))
+    // a null key agrees with nothing, as in the equi-join
+    val firstAgreeing = array_position(
+      zip_with(col("a_bkeys"), col("b_bkeys"), _ === _), true) - 1
+    val candidates = side(a, "a").join(side(b, "b"), Seq("pass", "bkey"))
+      .filter(col("pass") === firstAgreeing)
     val gated =
       if (threshold >= 15)
         candidates.filter(
           abs(col("a_cents") - col("b_cents")) <= centsTol ||
             col("a_seg") === col("b_seg"))
       else candidates
+    val scores = Seq("lev", "w_name", "w_bal", "w_seg", "score").map(col)
     gated
       .withColumn("lev", lev.cast("long"))
       .withColumn("w_name",
@@ -122,53 +164,11 @@ object LinkageOps {
         when(col("a_seg") === col("b_seg"), 6L).otherwise(-4L))
       .withColumn("score", col("w_name") + col("w_bal") + col("w_seg"))
       .filter(col("score") >= threshold)
-      .select(col("a_key"), col("b_key"), col("lev"), col("w_name"),
-        col("w_bal"), col("w_seg"), col("score"),
-        (col("a_key") === col("b_key")).cast("long").as("is_true"))
-      .orderBy(col("a_key"), col("b_key"))
-  }
-
-  /** MULTI-PASS blocking — how production absorbs the single-block
-    * recall loss the `fellegiSunterLinks` spec pins (a true pair whose
-    * blocking field was corrupted never meets): union the candidates of
-    * several cheap blocking passes and score once. Passes here:
-    *   1. the caller's `block` field (nation in p118);
-    *   2. cents ÷ W bands, W = 2·centsTol + 50;
-    *   3. the SAME bands offset by W/2 — the classic two-offset trick:
-    *      union-grid boundaries are W/2 apart, so any pair within
-    *      W/2 − 1 ≥ centsTol cents straddles at most ONE grid's boundary
-    *      and shares a band in the other pass — balance-compatible pairs
-    *      are GUARANTEED to meet even when their blocking field was
-    *      corrupted, for ANY centsTol (the width derives from it).
-    * Banding uses FLOOR division (pmod-adjusted: Spark's `div` truncates
-    * toward zero while DuckDB's `//` floors — q118's truncation-vs-floor
-    * pin), so arbitrarily negative balances band identically on both
-    * engines with no magic nonnegativity shift to outgrow.
-    * Scoring is per-pair and deterministic, so unioning the three
-    * passes' results and deduplicating rows is equivalent to scoring
-    * the deduplicated candidate union (production dedups candidate keys
-    * pre-score to avoid the ≤3× comparator cost; at gate scale the row
-    * union keeps the code transparently equal to three single passes).
-    * Output: superset of the single-pass links — every p118 row plus
-    * the recovered corrupted-block pairs. */
-  def fellegiSunterLinksMultiPass(a: DataFrame, b: DataFrame,
-                                  threshold: Int = 18,
-                                  centsTol: Int = 75): DataFrame = {
-    val width = 2 * centsTol + 50
-    val offset = width / 2
-    def reblock(df: DataFrame, e: org.apache.spark.sql.Column) =
-      df.withColumn("block", e)
-    // floor(x / w) for any-sign x: (x − pmod(x, w)) div w — pmod is
-    // nonnegative, so the dividend is an exact multiple and trunc == floor
-    def floorBand(shift: Int) =
-      expr(s"(cents + $shift - pmod(cents + $shift, $width)) div $width")
-    val passes = Seq[DataFrame => DataFrame](
-      identity,
-      df => reblock(df, floorBand(0)),
-      df => reblock(df, floorBand(offset)))
-    passes.map(p => fellegiSunterLinks(p(a), p(b), threshold, centsTol))
-      .reduce(_.unionByName(_))
-      .distinct()
-      .orderBy(col("a_key"), col("b_key"))
+      .select(explode(col("a_members")).as("a_key") +: col("b_members") +:
+        scores: _*)
+      .select(col("a_key") +: explode(col("b_members")).as("b_key") +:
+        scores: _*)
+      .select(col("a_key") +: col("b_key") +: scores :+
+        (col("a_key") === col("b_key")).cast("long").as("is_true"): _*)
   }
 }

@@ -1797,17 +1797,21 @@ class OpsSpec extends AnyFunSuite {
     // corpus shape that multiplied the in-block quadratic by cluster²):
     // a-side keys 1,2,3 identical; b-side keys 1,11 identical — the 3×2
     // expanded pairs must carry identical scores but is_true only on
-    // (1,1); plus a singleton pair and a sub-threshold non-link
+    // (1,1); plus a singleton pair, a sub-threshold non-link, and a
+    // null-seg pair that scores 24+10−4 and must link with the collapse on
+    // exactly as with it off
     val a = Seq(
       (1L, "Customer#000000001", 10L, 1000L, "AUTO"),
       (2L, "Customer#000000001", 10L, 1000L, "AUTO"),
       (3L, "Customer#000000001", 10L, 1000L, "AUTO"),
-      (7L, "Customer#000000007", 10L, 9000L, "HOME"))
+      (7L, "Customer#000000007", 10L, 9000L, "HOME"),
+      (20L, "Customer#000000020", 10L, 2000L, null)) // null attribute
       .toDF("key", "name", "block", "cents", "seg")
     val b = Seq(
       (1L, "Customer#000000001", 10L, 1010L, "AUTO"),
       (11L, "Customer#000000001", 10L, 1010L, "AUTO"),
       (7L, "Customer#000000007", 10L, 9005L, "HOME"),
+      (20L, "Customer#000000020", 10L, 2000L, null),
       (9L, "Totally Different Name", 10L, 99999L, "MACH"))
       .toDF("key", "name", "block", "cents", "seg")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1820,9 +1824,88 @@ class OpsSpec extends AnyFunSuite {
       s(7).asInstanceOf[Long]))
     assert(pairs.count(p => p._1 <= 3 && (p._2 == 1L || p._2 == 11L)) === 6)
     assert(pairs.filter(_._3 == 1L).map(p => (p._1, p._2)).toSet ===
-      Set((1L, 1L), (7L, 7L)))
+      Set((1L, 1L), (7L, 7L), (20L, 20L)))
     val multiOn = rows(graft.ops.LinkageOps.fellegiSunterLinksMultiPass(a, b))
     assert(multiOn.toSet.intersect(on.toSet) === on.toSet)
+  }
+
+  /** The three blocking keys of `fellegiSunterLinksMultiPass` at
+    * centsTol = 75: the caller's block, then floor(cents / 200) offset by
+    * 0 and 100. */
+  private def multiPassKeys: Seq[org.apache.spark.sql.Column] = {
+    def band(shift: Int) =
+      expr(s"(cents + $shift - pmod(cents + $shift, 200)) div 200")
+    Seq(col("block"), band(0), band(100))
+  }
+
+  /** The ordered distinct union of one single-pass `fellegiSunterLinks`
+    * run per multi-pass key: what the multi-pass output must equal. */
+  private def unionOfSinglePasses(a: org.apache.spark.sql.DataFrame,
+                                  b: org.apache.spark.sql.DataFrame)
+    : Seq[Seq[Any]] =
+    multiPassKeys
+      .map(k => graft.ops.LinkageOps.fellegiSunterLinks(
+        a.withColumn("block", k), b.withColumn("block", k)))
+      .reduce(_.unionByName(_)).distinct()
+      .orderBy(col("a_key"), col("b_key"))
+      .collect().map(_.toSeq).toSeq
+
+  test("multi-pass linkage equals the ordered distinct union of three " +
+    "single-pass runs, and no (a_key, b_key) pair appears twice") {
+    // a 1/2 and b 1/11 are attribute-identical clusters, and a-side row 2
+    // is repeated verbatim; (1, 1) meets in all three passes (same block,
+    // cents 1000/1005 share both bands); entity 3 is a corrupted-block
+    // pair the bands recover; 8/9 is a near-balance pair in different
+    // blocks that only a band joins
+    val a = Seq(
+      (1L, "Customer#000000001", 10L, 1000L, "AUTO"),
+      (2L, "Customer#000000001", 10L, 1000L, "AUTO"),
+      (2L, "Customer#000000001", 10L, 1000L, "AUTO"),
+      (3L, "Customer#000000003", 20L, 5000L, "HOME"),
+      (8L, "Customer#000000008", 40L, 3090L, "MACH"),
+      (5L, "Customer#000000005", 30L, 7000L, "BLDG"))
+      .toDF("key", "name", "block", "cents", "seg")
+    val b = Seq(
+      (1L, "Customer#000000001", 10L, 1005L, "AUTO"),
+      (11L, "Customer#000000001", 10L, 1005L, "AUTO"),
+      (3L, "Customer#000000003", 99L, 5000L, "HOME"),
+      (9L, "Customer#000000008", 41L, 3110L, "MACH"),
+      (6L, "Someone Else Entirely", 30L, 7000L, "BLDG"))
+      .toDF("key", "name", "block", "cents", "seg")
+    val multi = graft.ops.LinkageOps.fellegiSunterLinksMultiPass(a, b)
+      .collect().map(_.toSeq).toSeq
+    assert(multi === unionOfSinglePasses(a, b))
+    def keys(rows: Seq[Seq[Any]]) =
+      rows.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+    assert(keys(multi).distinct === keys(multi))
+    assert(Set((1L, 1L), (1L, 11L), (2L, 1L), (2L, 11L), (3L, 3L), (8L, 9L))
+      .subsetOf(keys(multi).toSet))
+    assert(!keys(multi).exists(_._1 == 5L))
+    // the kernel itself scores a rep pair once, at its first agreeing
+    // key, however many keys it agrees on
+    val kernel = graft.ops.LinkageOps.links(a.distinct(), b, multiPassKeys,
+        threshold = 18, centsTol = 75, collapseExact = true)
+      .collect().map(_.toSeq).toSeq
+    assert(keys(kernel).distinct.sorted === keys(kernel).sorted)
+  }
+
+  test("multi-pass linkage keeps both rows of a key that carries two " +
+    "attribute tuples scoring differently") {
+    // a-side key 4 appears with two seg values: (4, 4) links once at 40
+    // (exact name, near balance, same seg) and once at 30 (other seg);
+    // both tuples meet b's key 4 under every blocking key
+    val a = Seq(
+      (4L, "Customer#000000004", 10L, 2000L, "AUTO"),
+      (4L, "Customer#000000004", 10L, 2000L, "HOME"))
+      .toDF("key", "name", "block", "cents", "seg")
+    val b = Seq((4L, "Customer#000000004", 10L, 2010L, "AUTO"))
+      .toDF("key", "name", "block", "cents", "seg")
+    val multi = graft.ops.LinkageOps.fellegiSunterLinksMultiPass(a, b)
+      .collect().map(_.toSeq).toSeq
+    assert(multi.map(r => (r(0), r(1), r(6))).sortBy(_._3.toString) ===
+      Seq((4L, 4L, 30L), (4L, 4L, 40L)))
+    assert(multi.sortBy(_(6).toString) ===
+      unionOfSinglePasses(a, b).sortBy(_(6).toString))
   }
 
   test("multi-pass linkage bands FLOOR for deep-negative balances: a " +
@@ -2126,6 +2209,20 @@ class OpsSpec extends AnyFunSuite {
       (4L, 40L, "upserted")))
   }
 
+  /** Both connected-components labellings of one pair frame — the driver
+    * union-find and the large-star/small-star loop — as sorted
+    * (doc_id, cluster_id, cluster_size) rows; asserts they are identical. */
+  private def bothLabellings(pairs: org.apache.spark.sql.DataFrame)
+    : Seq[(Long, Long, Long)] = {
+    val (edges, sig) = DedupOps.canonicalEdges(pairs)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val onDriver = rows(DedupOps.labelOnDriver(edges))
+    val byStars = rows(DedupOps.labelByStars(edges, sig, maxIterations = 25))
+    assert(onDriver === byStars)
+    onDriver
+  }
+
   test("dup clusters: chain graph collapses to one component (log rounds)") {
     // a 40-node path is the worst case for naive propagation (diameter 39);
     // large-star/small-star must still land everything on cluster 1 within
@@ -2135,6 +2232,8 @@ class OpsSpec extends AnyFunSuite {
     assert(out.length === 40)
     assert(out.forall(_.getAs[Long]("cluster_id") === 1L))
     assert(out.forall(_.getAs[Long]("cluster_size") === 40L))
+    // the driver union-find and the star loop label it identically
+    assert(bothLabellings(chain) === (1L to 40L).map(i => (i, 1L, 40L)))
   }
 
   test("dup clusters: components, keepers and sizes match a union-find " +
@@ -2165,11 +2264,16 @@ class OpsSpec extends AnyFunSuite {
     assert(got === expected)
     assert(out.map(r => r.getAs[Long]("cluster_id") -> r.getAs[Long]("cluster_size"))
       .toMap === expectedSizes.map { case (k, v) => k -> v.toLong })
+    // both labellings reproduce the union-find reference row for row
+    assert(bothLabellings(edges.toDF("doc_a", "doc_b")) ===
+      expected.toSeq.map { case (n, c) => (n, c, expectedSizes(c).toLong) }
+        .sorted)
   }
 
   test("dup clusters: empty pair set yields empty output") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(DedupOps.dupClusters(empty).collect().isEmpty)
+    assert(bothLabellings(empty).isEmpty)
   }
 
   test("dupClustersOverDocs on zero rows returns the empty frame " +
@@ -2216,6 +2320,10 @@ class OpsSpec extends AnyFunSuite {
     val c = DedupOps.dupClustersOverDocs(docs, collapseRatio = 0.0)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(c.toSeq === b.toSeq)
+    // dupClusters takes the driver branch on this small graph; the star
+    // loop labels the same pair set identically
+    assert(bothLabellings(DedupOps.minhashLsh(docs)).map(_.productIterator
+      .toSeq).sortBy(_.toString) === b.toSeq)
     // the isolated cluster is present and labeled by its min id
     val byDoc = a.map(r => r.head.asInstanceOf[Long] ->
       (r(1).asInstanceOf[Long], r(2).asInstanceOf[Long])).toMap

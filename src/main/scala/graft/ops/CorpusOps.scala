@@ -451,15 +451,10 @@ object CorpusOps {
     * Scale shape: the corpus side never shuffles its text — each doc maps
     * to distinct 8-byte gram hashes and only those flow into the overlap
     * join. Eval sets are MBs against a 100-TB corpus, so the benchmark
-    * gram set broadcasts (default) and the whole op is ONE narrow pass
-    * over the corpus plus a map-side hash probe. When the benchmark
-    * outgrows the broadcast budget (`broadcastBenchmark = false`), the
-    * overlap becomes a shuffle join keyed on the gram hash with the corpus
-    * side pre-filtered by a Bloom filter of benchmark grams
-    * (`BloomJoin.bloomReducedJoin`) — non-overlapping grams, the
-    * overwhelming majority, are dropped BEFORE the exchange. */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, w: Int = 13,
-                    broadcastBenchmark: Boolean = true): DataFrame = {
+    * gram set broadcasts and the whole op is ONE narrow pass over the
+    * corpus plus a map-side hash probe. */
+  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
+                    w: Int = 13): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     def grams(df: DataFrame): DataFrame =
@@ -469,10 +464,8 @@ object CorpusOps {
         }
         .toDF("doc_id", "h")
     val benchGrams = grams(benchmark).select(col("h")).distinct()
-    val overlapped =
-      if (broadcastBenchmark) grams(corpus).join(broadcast(benchGrams), "h")
-      else BloomJoin.bloomReducedJoin(grams(corpus), benchGrams, "h")
-    overlapped.groupBy(col("doc_id"))
+    grams(corpus).join(broadcast(benchGrams), "h")
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hit_grams"))
   }
 

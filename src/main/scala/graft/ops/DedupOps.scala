@@ -173,51 +173,44 @@ object DedupOps {
     * Jaccard 0.6 at 1-(1-0.6³)^32 ≈ 0.9996 with false-positive mass per
     * random pair ≈ s³·32 (s ≈ corpus background similarity) — chosen so the
     * LSH output equals the exact-Jaccard pair set on the verification data,
-    * which is what the DuckDB all-pairs oracle asserts. */
-  /** `broadcastVerify = true` (default) broadcasts the candidate-pair set
-    * into the verify joins so the shingle table never shuffles — right when
-    * candidates ≪ corpus (typical dedup). Set false when the candidate set
-    * outgrows the broadcast budget: the verify becomes plain shuffle joins,
-    * which are co-located (candidate-side-only shuffle) when the shingle
-    * table is stored bucketed by doc_id (TableIO.writeBucketed). */
+    * which is what the DuckDB all-pairs oracle asserts.
+    *
+    * Exact-dup collapse (r5, shared with the Jaccard family): identical
+    * texts have identical minhash signatures, so both LSH candidacy and
+    * the exact verify are text-pure — banding and verifying one rep per
+    * distinct text ([[minhashLshUncollapsed]]) then expanding member
+    * pairs arithmetically is output-identical (spec-pinned) and removes
+    * the dup-cluster quadratic from every band bucket. */
   def minhashLsh(df: DataFrame, w: Int = 3, bands: Int = 32,
-                 rowsPerBand: Int = 3, minJaccardPct: Int = 60,
-                 broadcastVerify: Boolean = true,
-                 collapseExact: Boolean = true): DataFrame = {
-    if (collapseExact) {
-      // exact-dup collapse (r5, shared with the Jaccard family):
-      // identical texts have identical minhash signatures, so both LSH
-      // candidacy and the exact verify are text-pure — banding and
-      // verifying one rep per distinct text then expanding member pairs
-      // arithmetically is output-identical (spec-pinned) and removes the
-      // dup-cluster quadratic from every band bucket
-      val (repDocs, members) = textGroups(df)
-      val repPairs = minhashLsh(repDocs, w, bands, rowsPerBand,
-        minJaccardPct, broadcastVerify, collapseExact = false)
-      val withinVals = shingleSets(repDocs, w)
-        .select(col("doc_id").as("rep_id"),
-          size(col("sh")).as("n_inter"))
-        .withColumn("n_union", col("n_inter"))
-      return expandCollapsed(repPairs, members, withinVals,
-        Seq("n_inter", "n_union"))
-    }
-    val candidates = minhashCandidates(df, w, bands, rowsPerBand)
+                 rowsPerBand: Int = 3, minJaccardPct: Int = 60): DataFrame = {
+    val (repDocs, members) = textGroups(df)
+    val repPairs = minhashLshUncollapsed(repDocs, w, bands, rowsPerBand,
+      minJaccardPct)
+    val withinVals = shingleSets(repDocs, w)
+      .select(col("doc_id").as("rep_id"),
+        size(col("sh")).as("n_inter"))
+      .withColumn("n_union", col("n_inter"))
+    expandCollapsed(repPairs, members, withinVals,
+      Seq("n_inter", "n_union"))
+  }
 
-    // exact verify: fetch shingle sets for candidates only, Jaccard as
-    // integer intersection/union sizes. The candidate side is broadcast so
-    // the (large) shingle table never shuffles — candidate pairs are a tiny
-    // fraction of the corpus on dedup workloads. When candidates outgrow the
-    // broadcast budget, drop the hint and store `shingleSets` bucketed by
-    // doc_id (TableIO.writeBucketed): then only candidates shuffle.
+  /** The per-doc LSH kernel [[minhashLsh]] runs over its representatives
+    * (and the spec reference for the collapse). Exact verify: shingle
+    * sets are fetched for candidates only, Jaccard as integer
+    * intersection/union sizes. The candidate side is broadcast so the
+    * (large) shingle table never shuffles — candidate pairs are a tiny
+    * fraction of the corpus on dedup workloads. */
+  private[graft] def minhashLshUncollapsed(df: DataFrame, w: Int,
+                                           bands: Int, rowsPerBand: Int,
+                                           minJaccardPct: Int): DataFrame = {
+    val candidates = minhashCandidates(df, w, bands, rowsPerBand)
     val sets = shingleSets(df, w)
-    val hint: DataFrame => DataFrame =
-      if (broadcastVerify) broadcast(_) else identity
     val withA = sets
       .withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a")
-      .join(hint(candidates), "doc_a") // sets streams map-side
+      .join(broadcast(candidates), "doc_a") // sets streams map-side
     sets
       .withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b")
-      .join(hint(withA), "doc_b") // sets streams map-side again
+      .join(broadcast(withA), "doc_b") // sets streams map-side again
       .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("n_union", size(array_union(col("sh_a"), col("sh_b"))))
       .where(col("n_inter") * 100 >= col("n_union") * minJaccardPct)
@@ -372,67 +365,73 @@ object DedupOps {
     * the standard, documented recall trade of a df-capped inverted index).
     * The driver query (p22) runs uncapped so the DuckDB oracle is the exact
     * pair set; OpsSpec gates the capped path. Hash = DuckDB
-    * `md5_number_lower` masked, so the oracle replicates hash-exactly. */
+    * `md5_number_lower` masked, so the oracle replicates hash-exactly.
+    *
+    * Exact-dup collapse (r5): the inverted-index self-join runs over one
+    * rep per distinct text; member pairs expand arithmetically —
+    * output-identical to [[exactJaccardPairsUncollapsed]] (spec-pinned),
+    * join cost no longer quadratic in dup-cluster size. */
   def exactJaccardPairs(df: DataFrame, w: Int = 3,
                         minJaccardPct: Int = 50,
-                        maxDf: Option[Int] = None,
-                        collapseExact: Boolean = true): DataFrame = {
-    if (collapseExact) {
-      // exact-dup collapse (r5): the inverted-index self-join runs over
-      // one rep per distinct text; member pairs expand arithmetically —
-      // output-identical (spec-pinned), join cost no longer quadratic in
-      // dup-cluster size
-      val (repDocs, members, csize) = textGroupsSized(df)
-      maxDf match {
-        case Some(cap) =>
-          // r6 fix (ADVICE #1): df counts DOCUMENTS, so under the collapse
-          // each rep's contribution to a shingle's df is its CLUSTER SIZE,
-          // and within-cluster pairs obey the capped-intersection rule
-          // like every other pair (n_inter = surviving shared shingles;
-          // n_union via the same n_a + n_b − n_inter formula the
-          // uncollapsed path and the p25 oracle apply). A cluster larger
-          // than the cap correctly drops out entirely — every shingle it
-          // carries has df ≥ cluster size.
-          val hashed = shingleHashTable(repDocs, w)
-          val rare = hashed
-            .join(csize, hashed("doc_id") === csize("rep_id"))
-            .groupBy(col("h")).agg(sum(col("csize")).as("dfw"))
-            .where(col("dfw") <= cap)
-            .select(col("h"))
-          val indexed = hashed.join(rare, Seq("h"), "left_semi")
-          val repPairs = jaccardPairsFromIndex(indexed, minJaccardPct)
-          val withinVals = indexed.groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("k"), max(col("n_sh")).as("n_sh"))
-            .select(col("doc_id").as("rep_id"),
-              col("k").cast("long").as("n_inter"),
-              (lit(2L) * col("n_sh") - col("k")).cast("long").as("n_union"))
-            .where(col("n_inter") * 100 >= col("n_union") * minJaccardPct)
-          expandCollapsed(repPairs, members, withinVals,
-            Seq("n_inter", "n_union"))
-        case None =>
-          val repPairs = exactJaccardPairs(repDocs, w, minJaccardPct, None,
-            collapseExact = false)
-          val withinVals = shingleHashTable(repDocs, w)
-            .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
-            .select(col("doc_id").as("rep_id"),
-              col("n_sh").cast("long").as("n_inter"),
-              col("n_sh").cast("long").as("n_union"))
-          expandCollapsed(repPairs, members, withinVals,
-            Seq("n_inter", "n_union"))
-      }
-    } else {
-      val hashed = shingleHashTable(df, w)
-      // df-cap: keys-only aggregation + semi-join, both keyed on `h` — the
-      // same partitioning the self-join needs, so AQE/exchange-reuse keeps
-      // the extra pass cheap relative to the fan-out it prevents.
-      val indexed = maxDf.fold(hashed) { cap =>
-        val rare = hashed.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .where(col("df") <= cap)
+                        maxDf: Option[Int] = None): DataFrame = {
+    val (repDocs, members, csize) = textGroupsSized(df)
+    maxDf match {
+      case Some(cap) =>
+        // r6 fix (ADVICE #1): df counts DOCUMENTS, so under the collapse
+        // each rep's contribution to a shingle's df is its CLUSTER SIZE,
+        // and within-cluster pairs obey the capped-intersection rule
+        // like every other pair (n_inter = surviving shared shingles;
+        // n_union via the same n_a + n_b − n_inter formula the
+        // uncollapsed path and the p25 oracle apply). A cluster larger
+        // than the cap correctly drops out entirely — every shingle it
+        // carries has df ≥ cluster size.
+        val hashed = shingleHashTable(repDocs, w)
+        val rare = hashed
+          .join(csize, hashed("doc_id") === csize("rep_id"))
+          .groupBy(col("h")).agg(sum(col("csize")).as("dfw"))
+          .where(col("dfw") <= cap)
           .select(col("h"))
-        hashed.join(rare, Seq("h"), "left_semi")
-      }
-      jaccardPairsFromIndex(indexed, minJaccardPct)
+        val indexed = hashed.join(rare, Seq("h"), "left_semi")
+        val repPairs = jaccardPairsFromIndex(indexed, minJaccardPct)
+        val withinVals = indexed.groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("k"), max(col("n_sh")).as("n_sh"))
+          .select(col("doc_id").as("rep_id"),
+            col("k").cast("long").as("n_inter"),
+            (lit(2L) * col("n_sh") - col("k")).cast("long").as("n_union"))
+          .where(col("n_inter") * 100 >= col("n_union") * minJaccardPct)
+        expandCollapsed(repPairs, members, withinVals,
+          Seq("n_inter", "n_union"))
+      case None =>
+        val repPairs = exactJaccardPairsUncollapsed(repDocs, w,
+          minJaccardPct, None)
+        val withinVals = shingleHashTable(repDocs, w)
+          .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
+          .select(col("doc_id").as("rep_id"),
+            col("n_sh").cast("long").as("n_inter"),
+            col("n_sh").cast("long").as("n_union"))
+        expandCollapsed(repPairs, members, withinVals,
+          Seq("n_inter", "n_union"))
     }
+  }
+
+  /** The per-doc inverted-index kernel [[exactJaccardPairs]] runs over its
+    * representatives when uncapped (and the spec reference for the
+    * collapse, capped or not). */
+  private[graft] def exactJaccardPairsUncollapsed(df: DataFrame, w: Int,
+                                                  minJaccardPct: Int,
+                                                  maxDf: Option[Int])
+    : DataFrame = {
+    val hashed = shingleHashTable(df, w)
+    // df-cap: keys-only aggregation + semi-join, both keyed on `h` — the
+    // same partitioning the self-join needs, so AQE/exchange-reuse keeps
+    // the extra pass cheap relative to the fan-out it prevents.
+    val indexed = maxDf.fold(hashed) { cap =>
+      val rare = hashed.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .where(col("df") <= cap)
+        .select(col("h"))
+      hashed.join(rare, Seq("h"), "left_semi")
+    }
+    jaccardPairsFromIndex(indexed, minJaccardPct)
   }
 
   /** Inverted-index self-join tail shared by the capped/uncapped and
@@ -518,28 +517,34 @@ object DedupOps {
     * wide set rows never cross an exchange for the non-candidate bulk.
     * `materialize` localCheckpoints the postings — they feed the df
     * count, the prefix join and the verify sets, and exchange reuse does
-    * not fire across the typed flatMap subtree. */
+    * not fire across the typed flatMap subtree.
+    *
+    * Exact-dup collapse (r5): without it, every member of a
+    * byte-identical cluster shares its full prefix with every other — the
+    * sf10 probe (dup clusters of 100) spilled 50+ GB and exhausted the
+    * disk on exactly this join; the reps-only prefix join
+    * ([[prefixFilteredJaccardPairsUncollapsed]]) + arithmetic expansion is
+    * output-identical (spec-pinned). */
   def prefixFilteredJaccardPairs(df: DataFrame, w: Int = 3,
                                  minJaccardPct: Int = 50,
-                                 materialize: Boolean = false,
-                                 collapseExact: Boolean = true): DataFrame = {
-    if (collapseExact) {
-      // exact-dup collapse (r5): without it, every member of a
-      // byte-identical cluster shares its full prefix with every other —
-      // the sf10 probe (dup clusters of 100) spilled 50+ GB and
-      // exhausted the disk on exactly this join; reps-only prefix join +
-      // arithmetic expansion is output-identical (spec-pinned)
-      val (repDocs, members) = textGroups(df)
-      val repPairs = prefixFilteredJaccardPairs(repDocs, w, minJaccardPct,
-        materialize, collapseExact = false)
-      val withinVals = shingleHashTable(repDocs, w)
-        .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
-        .select(col("doc_id").as("rep_id"),
-          col("n_sh").cast("long").as("n_inter"),
-          col("n_sh").cast("long").as("n_union"))
-      return expandCollapsed(repPairs, members, withinVals,
-        Seq("n_inter", "n_union"))
-    }
+                                 materialize: Boolean = false): DataFrame = {
+    val (repDocs, members) = textGroups(df)
+    val repPairs = prefixFilteredJaccardPairsUncollapsed(repDocs, w,
+      minJaccardPct, materialize)
+    val withinVals = shingleHashTable(repDocs, w)
+      .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
+      .select(col("doc_id").as("rep_id"),
+        col("n_sh").cast("long").as("n_inter"),
+        col("n_sh").cast("long").as("n_union"))
+    expandCollapsed(repPairs, members, withinVals,
+      Seq("n_inter", "n_union"))
+  }
+
+  /** The per-doc prefix-filter kernel [[prefixFilteredJaccardPairs]] runs
+    * over its representatives (and the spec reference for the collapse). */
+  private[graft] def prefixFilteredJaccardPairsUncollapsed(
+      df: DataFrame, w: Int, minJaccardPct: Int,
+      materialize: Boolean): DataFrame = {
     val hashedRaw = shingleHashTable(df, w)
     val hashed = if (materialize) hashedRaw.localCheckpoint(false) else hashedRaw
     val cands = prefixJaccardCandidates(hashed, minJaccardPct)
@@ -573,59 +578,66 @@ object DedupOps {
     * wsum_b − Σmin. `maxDf` is the p25-style production cap: postings on
     * shingles carried by more than `maxDf` docs (boilerplate) are dropped
     * before the join; wsum stays uncapped so w_union is exact and only
-    * w_inter can undercount. */
+    * w_inter can undercount.
+    *
+    * Exact-dup collapse (r5): identical texts have identical shingle
+    * BAGS, so the weighted score is text-pure too — reps-only posting
+    * join, arithmetic expansion, within pairs at w_inter = w_union = wsum
+    * (output-identical to [[weightedJaccardPairsUncollapsed]],
+    * spec-pinned). */
   def weightedJaccardPairs(df: DataFrame, w: Int = 3, minPct: Int = 50,
-                           maxDf: Option[Int] = None,
-                           collapseExact: Boolean = true): DataFrame = {
-    if (collapseExact) {
-      // exact-dup collapse (r5): identical texts have identical shingle
-      // BAGS, so the weighted score is text-pure too — reps-only posting
-      // join, arithmetic expansion, within pairs at w_inter = w_union =
-      // wsum (output-identical, spec-pinned)
-      val (repDocs, members, csize) = textGroupsSized(df)
-      maxDf match {
-        case Some(cap) =>
-          // r6 fix (ADVICE #1), same rule as the exact path: df counts
-          // DOCUMENTS (rep weight = cluster size) and within-cluster
-          // pairs take the capped w_inter = Σ tf over SURVIVING postings
-          // with the uncollapsed w_union formula ws_a + ws_b − w_inter.
-          val posts = weightedPostings(df.sparkSession, repDocs, w)
-          val rare = posts
-            .join(csize, posts("doc_id") === csize("rep_id"))
-            .groupBy(col("h")).agg(sum(col("csize")).as("dfw"))
-            .where(col("dfw") <= cap)
-            .select(col("h"))
-          val indexed = posts.join(rare, Seq("h"), "left_semi")
-          val repPairs = weightedPairsFromIndex(indexed, minPct)
-          val withinVals = indexed.groupBy(col("doc_id"))
-            .agg(sum(col("tf")).as("k"), max(col("wsum")).as("wsum"))
-            .select(col("doc_id").as("rep_id"),
-              col("k").cast("long").as("w_inter"),
-              (lit(2L) * col("wsum") - col("k")).cast("long").as("w_union"))
-            .where(col("w_inter") * 100 >= col("w_union") * minPct)
-          expandCollapsed(repPairs, members, withinVals,
-            Seq("w_inter", "w_union"))
-        case None =>
-          val repPairs = weightedJaccardPairs(repDocs, w, minPct, None,
-            collapseExact = false)
-          // wsum mirror of the posting flatMap: toks < w → 1 whole-text
-          // shingle, else toks − w + 1 sliding shingles (with multiplicity)
-          val withinVals = repDocs.select(col("doc_id").as("rep_id"),
-            greatest(size(split(trim(col("text")), "\\s+")) - (w - 1), lit(1))
-              .cast("long").as("w_inter"))
-            .withColumn("w_union", col("w_inter"))
-          expandCollapsed(repPairs, members, withinVals,
-            Seq("w_inter", "w_union"))
-      }
-    } else {
-      val postings = weightedPostings(df.sparkSession, df, w)
-      val indexed = maxDf.fold(postings) { cap =>
-        val rare = postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .where(col("df") <= cap).select(col("h"))
-        postings.join(rare, Seq("h"), "left_semi")
-      }
-      weightedPairsFromIndex(indexed, minPct)
+                           maxDf: Option[Int] = None): DataFrame = {
+    val (repDocs, members, csize) = textGroupsSized(df)
+    maxDf match {
+      case Some(cap) =>
+        // r6 fix (ADVICE #1), same rule as the exact path: df counts
+        // DOCUMENTS (rep weight = cluster size) and within-cluster
+        // pairs take the capped w_inter = Σ tf over SURVIVING postings
+        // with the uncollapsed w_union formula ws_a + ws_b − w_inter.
+        val posts = weightedPostings(df.sparkSession, repDocs, w)
+        val rare = posts
+          .join(csize, posts("doc_id") === csize("rep_id"))
+          .groupBy(col("h")).agg(sum(col("csize")).as("dfw"))
+          .where(col("dfw") <= cap)
+          .select(col("h"))
+        val indexed = posts.join(rare, Seq("h"), "left_semi")
+        val repPairs = weightedPairsFromIndex(indexed, minPct)
+        val withinVals = indexed.groupBy(col("doc_id"))
+          .agg(sum(col("tf")).as("k"), max(col("wsum")).as("wsum"))
+          .select(col("doc_id").as("rep_id"),
+            col("k").cast("long").as("w_inter"),
+            (lit(2L) * col("wsum") - col("k")).cast("long").as("w_union"))
+          .where(col("w_inter") * 100 >= col("w_union") * minPct)
+        expandCollapsed(repPairs, members, withinVals,
+          Seq("w_inter", "w_union"))
+      case None =>
+        val repPairs = weightedJaccardPairsUncollapsed(repDocs, w, minPct,
+          None)
+        // wsum mirror of the posting flatMap: toks < w → 1 whole-text
+        // shingle, else toks − w + 1 sliding shingles (with multiplicity)
+        val withinVals = repDocs.select(col("doc_id").as("rep_id"),
+          greatest(size(split(trim(col("text")), "\\s+")) - (w - 1), lit(1))
+            .cast("long").as("w_inter"))
+          .withColumn("w_union", col("w_inter"))
+        expandCollapsed(repPairs, members, withinVals,
+          Seq("w_inter", "w_union"))
     }
+  }
+
+  /** The per-doc posting kernel [[weightedJaccardPairs]] runs over its
+    * representatives when uncapped (and the spec reference for the
+    * collapse, capped or not). */
+  private[graft] def weightedJaccardPairsUncollapsed(df: DataFrame, w: Int,
+                                                     minPct: Int,
+                                                     maxDf: Option[Int])
+    : DataFrame = {
+    val postings = weightedPostings(df.sparkSession, df, w)
+    val indexed = maxDf.fold(postings) { cap =>
+      val rare = postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .where(col("df") <= cap).select(col("h"))
+      postings.join(rare, Seq("h"), "left_semi")
+    }
+    weightedPairsFromIndex(indexed, minPct)
   }
 
   /** Per-doc shingle-bag postings (doc_id, h, tf, wsum) — one typed pass,
@@ -936,6 +948,11 @@ object DedupOps {
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
   }
 
+  /** Distinct-text share of the docs above which [[dupClustersOverDocs]]
+    * runs the classic `dupClusters(minhashLsh(df))` composition instead
+    * of rep-level CC. */
+  private[graft] val DupClustersCollapseRatio: Double = 0.7
+
   /** Duplicate clusters straight from DOCS with the exact-dup collapse
     * carried through the CC itself (r6): [[dupClusters]] composed over
     * [[minhashLsh]] first EXPANDS identical-text member pairs
@@ -957,11 +974,12 @@ object DedupOps {
     * Output-identical to dupClusters(minhashLsh(df)) (spec-pinned), and
     * the CC edge set now tracks DISTINCT content: the sf10 probe (dup
     * clusters of 100) measured 21.8 s for the composed form vs the
-    * collapse's ~25 M expanded in-cluster edges never being built here. */
+    * collapse's ~25 M expanded in-cluster edges never being built here.
+    * On a dup-light corpus (more than [[DupClustersCollapseRatio]] of the
+    * docs are distinct texts) it runs that classic composition instead. */
   def dupClustersOverDocs(df: DataFrame, w: Int = 3, bands: Int = 32,
                           rowsPerBand: Int = 3, minJaccardPct: Int = 60,
-                          maxIterations: Int = 25,
-                          collapseRatio: Double = 0.7): DataFrame = {
+                          maxIterations: Int = 25): DataFrame = {
     val (repDocs, members, stats) = textGroupsSized(df)
     // ADAPTIVE (r6, the topPairs lesson): the rep-level path adds ~4
     // exchanges of label-expansion machinery, which only pays for itself
@@ -973,11 +991,11 @@ object DedupOps {
         coalesce(sum(col("csize")), lit(0L)).as("n")) // zero rows: n = 0
       .head()
     val (dCount, nTotal) = (cnt.getLong(0), cnt.getLong(1))
-    if (dCount > collapseRatio * nTotal)
+    if (dCount > DupClustersCollapseRatio * nTotal)
       return dupClusters(minhashLsh(df, w, bands, rowsPerBand,
         minJaccardPct), maxIterations)
-    val repPairs = minhashLsh(repDocs, w, bands, rowsPerBand, minJaccardPct,
-      collapseExact = false)
+    val repPairs = minhashLshUncollapsed(repDocs, w, bands, rowsPerBand,
+      minJaccardPct)
     val inPairs = dupClusters(repPairs, maxIterations)
       .select(col("doc_id").as("rep_id"), col("cluster_id"))
     val lonelyDupGroups = stats.where(col("csize") >= 2L)
@@ -1081,8 +1099,9 @@ object DedupOps {
 
   /** SimHash near-dup pairs: docs sharing any 16-bit band (≤3 differing
     * bands ⇐ hamming ≤ 3 guaranteed candidates), verified by exact hamming
-    * distance ≤ maxHamming. */
-  /** r5: the p127/textGroups collapse applied to SimHash — the banded
+    * distance ≤ maxHamming.
+    *
+    * r5: the p127/textGroups collapse applied to SimHash — the banded
     * self-join runs over ONE representative per distinct 64-bit
     * SIGNATURE (stronger than text collapse: any signature-identical
     * docs collapse), signature-identical pairs come from an output-sized
@@ -1090,50 +1109,50 @@ object DedupOps {
     * qualifying cross-signature pairs expand back to members — the sf10
     * probe measured this op's pre-collapse band join filling the disk on
     * dup clusters of 100 exactly like p113's. `maxBandBucket` is the
-    * p127-style hot-bucket recall cap over distinct signatures. */
+    * p127-style hot-bucket recall cap over distinct signatures. Below
+    * that cap the output equals [[simhashPairsUncollapsed]]'s
+    * (spec-pinned). */
   def simhashPairs(df: DataFrame, maxHamming: Int = 3,
-                   collapseExact: Boolean = true,
                    maxBandBucket: Int = 4096): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sh = df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .map { case (id, text) => (id, simhashSig(text)) }
-      .toDF("doc_id", "simhash")
-    def bandsOf(c: org.apache.spark.sql.Column) = (0 to 3).map(i =>
-      shiftrightunsigned(c, i * 16).bitwiseAND(lit(0xffffL)))
-    if (collapseExact) {
-      val same = sh.as("x").join(sh.as("y"),
-          col("x.simhash") === col("y.simhash") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(0).as("hamming"))
-      val reps = sh.groupBy(col("simhash")).agg(min(col("doc_id")))
-        .select(col("simhash"))
-      val banded = reps.select(col("simhash"),
-        posexplode(array(bandsOf(col("simhash")): _*))
-          .as(Seq("band_id", "band_key")))
-      val okBuckets = banded.groupBy(col("band_id"), col("band_key"))
-        .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBandBucket)
-        .select(col("band_id"), col("band_key"))
-      val pruned = banded.join(okBuckets, Seq("band_id", "band_key"))
-      val sigPairs = pruned.as("l").join(pruned.as("r"),
-          col("l.band_id") === col("r.band_id") &&
-            col("l.band_key") === col("r.band_key") &&
-            col("l.simhash") < col("r.simhash"))
-        .select(col("l.simhash").as("sa"), col("r.simhash").as("sb"))
-        .distinct()
-        .withColumn("hamming",
-          bit_count(col("sa").bitwiseXOR(col("sb"))))
-        .where(col("hamming") <= maxHamming)
-      val cross = sigPairs
-        .join(sh.select(col("simhash").as("sa"), col("doc_id").as("da")),
-          "sa")
-        .join(sh.select(col("simhash").as("sb"), col("doc_id").as("db")),
-          "sb")
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-      return same.unionByName(cross)
-    }
+    val sh = simhashTable(df)
+    val same = sh.as("x").join(sh.as("y"),
+        col("x.simhash") === col("y.simhash") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        lit(0).as("hamming"))
+    val reps = sh.groupBy(col("simhash")).agg(min(col("doc_id")))
+      .select(col("simhash"))
+    val banded = reps.select(col("simhash"),
+      posexplode(array(bandsOf(col("simhash")): _*))
+        .as(Seq("band_id", "band_key")))
+    val okBuckets = banded.groupBy(col("band_id"), col("band_key"))
+      .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBandBucket)
+      .select(col("band_id"), col("band_key"))
+    val pruned = banded.join(okBuckets, Seq("band_id", "band_key"))
+    val sigPairs = pruned.as("l").join(pruned.as("r"),
+        col("l.band_id") === col("r.band_id") &&
+          col("l.band_key") === col("r.band_key") &&
+          col("l.simhash") < col("r.simhash"))
+      .select(col("l.simhash").as("sa"), col("r.simhash").as("sb"))
+      .distinct()
+      .withColumn("hamming",
+        bit_count(col("sa").bitwiseXOR(col("sb"))))
+      .where(col("hamming") <= maxHamming)
+    val cross = sigPairs
+      .join(sh.select(col("simhash").as("sa"), col("doc_id").as("da")),
+        "sa")
+      .join(sh.select(col("simhash").as("sb"), col("doc_id").as("db")),
+        "sb")
+      .select(least(col("da"), col("db")).as("doc_a"),
+        greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
+    same.unionByName(cross)
+  }
+
+  /** The per-doc banded self-join — the spec reference for
+    * [[simhashPairs]]'s signature collapse. */
+  private[graft] def simhashPairsUncollapsed(df: DataFrame,
+                                             maxHamming: Int): DataFrame = {
+    val sh = simhashTable(df)
     val exploded = sh.select(col("doc_id"), col("simhash"),
       posexplode(array(bandsOf(col("simhash")): _*))
         .as(Seq("band_id", "band_key")))
@@ -1146,6 +1165,19 @@ object DedupOps {
       .dropDuplicates("doc_a", "doc_b")
       .where(col("hamming") <= maxHamming)
   }
+
+  /** (doc_id, simhash) — one typed pass over the text. */
+  private def simhashTable(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .map { case (id, text) => (id, simhashSig(text)) }
+      .toDF("doc_id", "simhash")
+  }
+
+  /** The four 16-bit bands of a 64-bit simhash column. */
+  private def bandsOf(c: Column): Seq[Column] = (0 to 3).map(i =>
+    shiftrightunsigned(c, i * 16).bitwiseAND(lit(0xffffL)))
 
   /** CCNet-style line-level exact-dedup stats: each doc is cut into
     * fixed-`blockLen`-token blocks (the corpus has no newlines, so the

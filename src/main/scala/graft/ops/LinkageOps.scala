@@ -39,13 +39,13 @@ object LinkageOps {
     *  - cents: |Δ| ≤ `centsTol` → +10, else −6
     *  - seg: equal → +6, else −4
     *
-    * `collapseExact` scores one representative per attribute tuple (see
-    * [[links]]); both settings are row-identical (spec-pinned). */
+    * One representative per attribute tuple is scored (see [[links]]);
+    * the output equals the uncollapsed kernel's row for row
+    * (spec-pinned). */
   def fellegiSunterLinks(a: DataFrame, b: DataFrame,
                          threshold: Int = 18,
-                         centsTol: Int = 75,
-                         collapseExact: Boolean = true): DataFrame =
-    links(a, b, Seq(col("block")), threshold, centsTol, collapseExact)
+                         centsTol: Int = 75): DataFrame =
+    links(a, b, Seq(col("block")), threshold, centsTol, collapseExact = true)
       .orderBy(col("a_key"), col("b_key"))
 
   /** MULTI-PASS blocking — how production absorbs the single-block

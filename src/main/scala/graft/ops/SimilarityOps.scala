@@ -102,55 +102,63 @@ object SimilarityOps {
     * is a semantic duplicate iff some SMALLER vec_id in its cell is
     * ≥ `tau` cosine-similar; `canonical_id` reports the smallest such
     * witness. Output = the dropped rows (what a curation pass deletes).
+    *
+    * r5 identical-vector collapse, min-witness form: if y < x witnesses
+    * x, then rep(group(y)) ≤ y also witnesses x (same vector), so the
+    * minimum witness is ALWAYS a group rep — the in-cell pair scan runs
+    * over reps only and each member takes min(qualifying rep < vec_id).
+    * Group key is (cell, v): identical vectors under a caller-supplied
+    * assignment that split cells stay separate groups, so the collapse is
+    * correct for ANY assignment. Self-similarity uses the same cosine
+    * expression (≥ tau is the caller's rule even for cos(v, v) ≈ 1.0 ±
+    * ulp). Output-identical to [[semDedupUncollapsed]] (spec-pinned).
     */
   def semDedupFrom(emb: DataFrame, assigned: DataFrame,
-                   tau: Double, collapseExact: Boolean = true): DataFrame = {
-    val vecs = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .join(assigned, "vec_id")
-    if (collapseExact) {
-      // r5 identical-vector collapse, min-witness form: if y < x
-      // witnesses x, then rep(group(y)) ≤ y also witnesses x (same
-      // vector), so the minimum witness is ALWAYS a group rep — the
-      // in-cell pair scan runs over reps only and each member takes
-      // min(qualifying rep < vec_id). Group key is (cell, v): identical
-      // vectors under a caller-supplied assignment that split cells stay
-      // separate groups, so the collapse is correct for ANY assignment.
-      // Self-similarity uses the same cosine expression (≥ tau is the
-      // caller's rule even for cos(v, v) ≈ 1.0 ± ulp).
-      val reps = vecs.groupBy(col("cell"), col("v"))
-        .agg(min(col("vec_id")).as("rep_id"))
-      val members = vecs.join(reps, Seq("cell", "v"))
-        .select(col("rep_id"), col("vec_id"), col("cell"))
-      val l = reps.select(col("cell"), col("rep_id").as("w_rep"),
-        col("v").as("va"))
-      val r = reps.select(col("cell"), col("rep_id"), col("v").as("vb"))
-      // qualifying witness-reps per group: every rep in the cell (itself
-      // included) whose cosine clears tau — direction-free, the member
-      // filter below applies the < ordering
-      val qualifying = l.join(r, "cell")
-        .where(cosine(col("va"), col("vb")) >= lit(tau))
-        .select(col("rep_id"), col("w_rep"))
-      members
-        .join(qualifying, "rep_id")
-        .where(col("w_rep") < col("vec_id"))
-        .groupBy(col("cell"), col("vec_id"))
-        .agg(min(col("w_rep")).as("canonical_id"))
-        .select(col("vec_id"), col("cell"), col("canonical_id"))
-        .orderBy(col("vec_id"))
-    } else {
-      val l = vecs.select(col("cell"), col("vec_id").as("witness_id"),
-        col("v").as("va"))
-      val r = vecs.select(col("cell"), col("vec_id"), col("v").as("vb"))
-      l.join(r, "cell")
-        .where(col("witness_id") < col("vec_id") &&
-          cosine(col("va"), col("vb")) >= lit(tau))
-        .groupBy(col("cell"), col("vec_id"))
-        .agg(min(col("witness_id")).as("canonical_id"))
-        .select(col("vec_id"), col("cell"), col("canonical_id"))
-        .orderBy(col("vec_id"))
-    }
+                   tau: Double): DataFrame = {
+    val vecs = cellVecs(emb, assigned)
+    val reps = vecs.groupBy(col("cell"), col("v"))
+      .agg(min(col("vec_id")).as("rep_id"))
+    val members = vecs.join(reps, Seq("cell", "v"))
+      .select(col("rep_id"), col("vec_id"), col("cell"))
+    val l = reps.select(col("cell"), col("rep_id").as("w_rep"),
+      col("v").as("va"))
+    val r = reps.select(col("cell"), col("rep_id"), col("v").as("vb"))
+    // qualifying witness-reps per group: every rep in the cell (itself
+    // included) whose cosine clears tau — direction-free, the member
+    // filter below applies the < ordering
+    val qualifying = l.join(r, "cell")
+      .where(cosine(col("va"), col("vb")) >= lit(tau))
+      .select(col("rep_id"), col("w_rep"))
+    members
+      .join(qualifying, "rep_id")
+      .where(col("w_rep") < col("vec_id"))
+      .groupBy(col("cell"), col("vec_id"))
+      .agg(min(col("w_rep")).as("canonical_id"))
+      .select(col("vec_id"), col("cell"), col("canonical_id"))
+      .orderBy(col("vec_id"))
   }
+
+  /** The per-vector in-cell pair scan — the spec reference for
+    * [[semDedupFrom]]'s identical-vector collapse. */
+  private[graft] def semDedupUncollapsed(emb: DataFrame, assigned: DataFrame,
+                                         tau: Double): DataFrame = {
+    val vecs = cellVecs(emb, assigned)
+    val l = vecs.select(col("cell"), col("vec_id").as("witness_id"),
+      col("v").as("va"))
+    val r = vecs.select(col("cell"), col("vec_id"), col("v").as("vb"))
+    l.join(r, "cell")
+      .where(col("witness_id") < col("vec_id") &&
+        cosine(col("va"), col("vb")) >= lit(tau))
+      .groupBy(col("cell"), col("vec_id"))
+      .agg(min(col("witness_id")).as("canonical_id"))
+      .select(col("vec_id"), col("cell"), col("canonical_id"))
+      .orderBy(col("vec_id"))
+  }
+
+  /** (vec_id, v: array<double>, cell) — the SemDeDup input rows. */
+  private def cellVecs(emb: DataFrame, assigned: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .join(assigned, "vec_id")
 
   /** Cosine similarity between two array<double> columns: the codegen'd
     * CosineSimilarity expression (one fused pass — Catalyst higher-order
@@ -347,16 +355,28 @@ object SimilarityOps {
     * any broadcast join) — the 10^12-row path is the LSH family
     * (`embeddingNearDups`/`lshTopK`); this is the exactness baseline. The
     * guard and the one driver collect run here, once; the collect then
-    * feeds either the identical-vector collapse ([[topPairsCollapsed]],
-    * the default) or the brute kernel ([[bruteTopPairs]]), which the
-    * collapse also falls back to below its cost rule. Both end in the
-    * same ranked tail ([[rankedPairs]]). Integer-only output
-    * (rank, vec_a, vec_b); ties break by (vec_a, vec_b); k ≤ 0 returns an
-    * empty frame of the same schema. */
+    * feeds the identical-vector collapse ([[topPairsCollapsed]]), which
+    * runs the brute kernel ([[bruteTopPairs]]) below
+    * [[TopPairsCollapseFloor]] rows or when its cost rule says the
+    * collapse does not pay. Both end in the same ranked tail
+    * ([[rankedPairs]]). Integer-only output (rank, vec_a, vec_b); ties
+    * break by (vec_a, vec_b); k ≤ 0 returns an empty frame of the same
+    * schema. */
   def topPairs(emb: DataFrame, k: Int = 100,
-               maxBroadcastRows: Long = BruteRowLimit,
-               collapseExact: Boolean = true,
-               collapseFloor: Int = 16384): DataFrame = {
+               maxBroadcastRows: Long = BruteRowLimit): DataFrame =
+    topPairsWithFloor(emb, k, maxBroadcastRows, TopPairsCollapseFloor)
+
+  /** Row count below which [[topPairs]] skips the collapse: under it the
+    * N² kernel is already sub-second and the brute plan is the cheaper
+    * one. */
+  private[graft] val TopPairsCollapseFloor: Int = 16384
+
+  /** [[topPairs]] at an explicit collapse floor — the spec entry for both
+    * branches: `0` takes the collapse whenever 2·D² < N², `Int.MaxValue`
+    * always runs the brute kernel. */
+  private[graft] def topPairsWithFloor(emb: DataFrame, k: Int,
+                                       maxBroadcastRows: Long,
+                                       collapseFloor: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     guardBruteContract("topPairs", emb, maxBroadcastRows,
@@ -364,8 +384,7 @@ object SimilarityOps {
     val vecs = emb.select(col("vec_id").cast("long"),
       col("embedding").cast("array<double>")).as[(Long, Array[Double])]
     val all = vecs.collect().sortBy(_._1) // brute contract's one collect
-    if (collapseExact) topPairsCollapsed(vecs, all, k, collapseFloor)
-    else bruteTopPairs(vecs, all, k)
+    topPairsCollapsed(vecs, all, k, collapseFloor)
   }
 
   /** The brute top-pairs kernel: a mapPartitions over the distributed
@@ -646,60 +665,60 @@ object SimilarityOps {
     * pair with its own cosine; also the natural shape when buckets are a
     * persisted index (see `StreamingExtraction.nearDupStream`).
     *
-    * CONTRACT (r6, ADVICE): with `collapseExact = true` (the default),
-    * `buckets` must cover EVERY vec_id of `emb` — the collapse pairs all
-    * identical-vector members of `emb` within a group and probes cross
-    * candidates through the group's min-id rep, so a PARTIAL bucket table
-    * (an index covering only a subset of emb) diverges from the
-    * uncollapsed path: un-bucketed members would within-pair, and a group
-    * whose rep is missing from `buckets` loses its cross-pair candidacy.
-    * Pass `collapseExact = false` when probing a partial/persisted index
-    * that does not cover all of `emb`. */
+    * r5 identical-VECTOR collapse (the DedupOps.textGroups lesson on the
+    * embedding side — the sf10 probe measured the uncollapsed bucket
+    * self-join exhausting the disk on dup clusters of 100): bucket keys
+    * and cosine are pure functions of the vector, so the candidate join
+    * runs over one representative per distinct array and member pairs
+    * expand arithmetically. Within-group scores are computed with the
+    * SAME cosine expression (cosine(v, v) is ~1.0 only up to the sqrt ulp
+    * — copying the expression keeps the collapse bit-identical to
+    * [[bucketPairsVerify]], spec-pinned).
+    *
+    * CONTRACT: `buckets` must cover EVERY vec_id of `emb`. The collapse
+    * pairs all identical-vector members of `emb` within a group and
+    * probes cross candidates through the group's min-id rep, so a
+    * PARTIAL bucket table (an index covering only a subset of `emb`)
+    * gives a different answer: un-bucketed members still within-pair,
+    * and a group whose rep is missing from `buckets` loses its cross-pair
+    * candidacy. To probe a partial index, restrict `emb` to the vec_ids
+    * it covers first. */
   def embeddingNearDupsFrom(emb: DataFrame, buckets: DataFrame,
-                            minCosine: Double = 0.9,
-                            collapseExact: Boolean = true): DataFrame = {
+                            minCosine: Double = 0.9): DataFrame = {
     val vecs = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("e"))
-    if (collapseExact) {
-      // r5 identical-VECTOR collapse (the DedupOps.textGroups lesson on
-      // the embedding side — the sf10 probe measured the uncollapsed
-      // bucket self-join exhausting the disk on dup clusters of 100):
-      // bucket keys and cosine are pure functions of the vector, so the
-      // candidate join runs over one representative per distinct array
-      // and member pairs expand arithmetically. Within-group scores are
-      // computed with the SAME cosine expression (cosine(v, v) is ~1.0
-      // only up to the sqrt ulp — copying the expression keeps the
-      // collapse bit-identical to the uncollapsed path).
-      val reps = vecs.groupBy(col("e")).agg(min(col("vec_id")).as("rep_id"))
-      val members = vecs.join(reps, Seq("e"))
-        .select(col("rep_id"), col("vec_id"))
-      val repBuckets = buckets.join(
-        reps.select(col("rep_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      val repPairs = bucketPairsVerify(repBuckets, vecs, minCosine)
-      val within = members.as("x").join(members.as("y"),
-          col("x.rep_id") === col("y.rep_id") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.rep_id").as("rep_id"), col("x.vec_id").as("vec_a"),
-          col("y.vec_id").as("vec_b"))
-        .join(reps.select(col("rep_id"), col("e")), "rep_id")
-        .select(col("vec_a"), col("vec_b"),
-          cosine(col("e"), col("e")).as("score"))
-        .where(col("score") >= minCosine)
-      val cross = repPairs
-        .join(members.select(col("rep_id").as("vec_a"),
-          col("vec_id").as("ma")), "vec_a")
-        .join(members.select(col("rep_id").as("vec_b"),
-          col("vec_id").as("mb")), "vec_b")
-        .select(least(col("ma"), col("mb")).as("vec_a"),
-          greatest(col("ma"), col("mb")).as("vec_b"), col("score"))
-      within.unionByName(cross)
-    } else bucketPairsVerify(buckets, vecs, minCosine)
+    val reps = vecs.groupBy(col("e")).agg(min(col("vec_id")).as("rep_id"))
+    val members = vecs.join(reps, Seq("e"))
+      .select(col("rep_id"), col("vec_id"))
+    val repBuckets = buckets.join(
+      reps.select(col("rep_id").as("vec_id")), Seq("vec_id"), "left_semi")
+    val repPairs = bucketPairsVerify(repBuckets, emb, minCosine)
+    val within = members.as("x").join(members.as("y"),
+        col("x.rep_id") === col("y.rep_id") &&
+          col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.rep_id").as("rep_id"), col("x.vec_id").as("vec_a"),
+        col("y.vec_id").as("vec_b"))
+      .join(reps.select(col("rep_id"), col("e")), "rep_id")
+      .select(col("vec_a"), col("vec_b"),
+        cosine(col("e"), col("e")).as("score"))
+      .where(col("score") >= minCosine)
+    val cross = repPairs
+      .join(members.select(col("rep_id").as("vec_a"),
+        col("vec_id").as("ma")), "vec_a")
+      .join(members.select(col("rep_id").as("vec_b"),
+        col("vec_id").as("mb")), "vec_b")
+      .select(least(col("ma"), col("mb")).as("vec_a"),
+        greatest(col("ma"), col("mb")).as("vec_b"), col("score"))
+    within.unionByName(cross)
   }
 
-  /** The uncollapsed band-join + exact-verify kernel (shared by both
-    * [[embeddingNearDupsFrom]] paths). */
-  private def bucketPairsVerify(buckets: DataFrame, vecs: DataFrame,
-                                minCosine: Double): DataFrame = {
+  /** The uncollapsed band-join + exact-verify kernel: what
+    * [[embeddingNearDupsFrom]] runs over its representatives, and the spec
+    * reference for the collapse. */
+  private[graft] def bucketPairsVerify(buckets: DataFrame, emb: DataFrame,
+                                       minCosine: Double): DataFrame = {
+    val vecs = emb.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("e"))
     val candidates = buckets.as("l").join(buckets.as("r"),
         col("l.table_id") === col("r.table_id") &&
         col("l.bucket") === col("r.bucket") &&
@@ -729,18 +748,24 @@ object SimilarityOps {
     * iterate-with-tiny-driver-state contract as IVF Lloyd (IvfOps); k is
     * a constant (single-digit), never data-sized. Output: one row per
     * round (iter, vec_id, min_d2 = the selected point's distance to the
-    * previously-selected set; 0 for the seed). */
+    * previously-selected set; 0 for the seed). Zero rows or k ≤ 0 select
+    * nothing: an empty frame of the same schema. */
   def kcenterCoreset(emb: DataFrame, k: Int = 4): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    def out = spark.createDataFrame(rows.toSeq).toDF("iter", "vec_id", "min_d2")
+    if (k <= 0) return out
     val q = emb.select(col("vec_id").cast("long"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000)" +
           " AS BIGINT))").as("v"))
       .as[(Long, Seq[Long])].cache()
-    val seedId = q.map(_._1).reduce(math.min)
+    val seed = q.select(min(col("vec_id"))).head()
+    if (seed.isNullAt(0)) { q.unpersist(); return out }
+    val seedId = seed.getLong(0)
     val seedVec = q.filter(_._1 == seedId).head()._2
     var selVecs = List(seedVec)
-    val rows = scala.collection.mutable.ArrayBuffer((1L, seedId, 0L))
+    rows += ((1L, seedId, 0L))
     var it = 2
     while (it <= k) {
       val sel = selVecs
@@ -761,6 +786,6 @@ object SimilarityOps {
       it += 1
     }
     q.unpersist()
-    spark.createDataFrame(rows.toSeq).toDF("iter", "vec_id", "min_d2")
+    out
   }
 }

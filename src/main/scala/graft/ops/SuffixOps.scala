@@ -96,27 +96,25 @@ object SuffixOps {
     * strings share a rank — exactly `dense_rank() OVER (ORDER BY
     * suffix) - 1`).
     *
-    * @param forcePairwise test hook: pretend (n+1)^2 overflows so the
-    *   huge-n two-column doubling path runs (the path a 10^14-suffix
-    *   corpus takes, where no packing fits 63 bits).
-    * @param collapseExact run the doubling rounds over one rep per
-    *   distinct capped text and copy rep rows to members (dense ranks are
-    *   ranks over DISTINCT suffixes — see [[collapse]]); `false` keeps the
-    *   per-doc path for the equality spec. */
-  def suffixRanks(docs: DataFrame, maxLen: Int = 192,
-                  forcePairwise: Boolean = false,
-                  collapseExact: Boolean = true): DataFrame =
-    if (!collapseExact) ranksCore(docs, maxLen, forcePairwise)
-    else {
-      val (reps, members, _) = collapse(docs, maxLen)
-      ranksCore(reps, maxLen, forcePairwise).as("r")
-        .join(members.as("m"), col("r.doc_id") === col("m.rep_id"))
-        .select(col("m.doc_id").as("doc_id"), col("r.pos").as("pos"),
-          col("r.rnk").as("rnk"))
-    }
+    * The doubling rounds ([[ranksCore]]) run over one rep per distinct
+    * capped text and rep rows are copied to members (dense ranks are
+    * ranks over DISTINCT suffixes — see [[collapse]]). */
+  def suffixRanks(docs: DataFrame, maxLen: Int = 192): DataFrame = {
+    val (reps, members, _) = collapse(docs, maxLen)
+    ranksCore(reps, maxLen).as("r")
+      .join(members.as("m"), col("r.doc_id") === col("m.rep_id"))
+      .select(col("m.doc_id").as("doc_id"), col("r.pos").as("pos"),
+        col("r.rnk").as("rnk"))
+  }
 
-  private def ranksCore(docs: DataFrame, maxLen: Int,
-                        forcePairwise: Boolean = false): DataFrame = {
+  /** The per-doc prefix-doubling kernel: ranks every suffix of every row
+    * of `docs` (the spec reference for the collapse).
+    *
+    * @param forcePairwise pretend (n+1)^2 overflows so the huge-n
+    *   two-column doubling path runs (the path a 10^14-suffix corpus
+    *   takes, where no packing fits 63 bits). */
+  private[graft] def ranksCore(docs: DataFrame, maxLen: Int,
+                               forcePairwise: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -317,18 +315,22 @@ object SuffixOps {
     * [[graft.functions.CommonPrefixLen]] (ASCII contract shared with the
     * base-129 init ranks). `chk_rnk` binds every pair's LCP to its rank so
     * a census row can't be right by accident.
+    *
+    * The census is a pure function of the DISTINCT-rank structure — rank
+    * classes, adjacency and windows are identical with or without
+    * duplicate docs — so the whole chain runs over one rep per distinct
+    * capped text with NO member expansion at all.
     */
   def lcpCensus(docs: DataFrame, maxLen: Int = 192,
-                window: Int = 64, collapseExact: Boolean = true)
-    : DataFrame = {
-    // census output is a pure function of the DISTINCT-rank structure —
-    // rank classes, adjacency and windows are identical with or without
-    // duplicate docs — so the collapsed path needs NO member expansion
-    // at all: run the whole chain over one rep per distinct capped text
-    val src = if (collapseExact) collapse(docs, maxLen)._1 else docs
-    // window text comes from the ORIGINAL docs table (cheaper than
-    // re-evaluating the collapse): the doc_id-keyed join below selects
-    // rep rows only, and a rep's capped text is its own text
+                window: Int = 64): DataFrame =
+    lcpCensusOf(collapse(docs, maxLen)._1, docs, maxLen, window)
+
+  /** [[lcpCensus]] over the suffixes of `src` (the spec reference passes
+    * `src = docs`). Window text comes from the ORIGINAL `docs` table
+    * (cheaper than re-evaluating the collapse): the doc_id-keyed join
+    * selects `src` rows only, and a rep's capped text is its own text. */
+  private[graft] def lcpCensusOf(src: DataFrame, docs: DataFrame,
+                                 maxLen: Int, window: Int): DataFrame = {
     val d = docs.select(col("doc_id").cast("long").as("doc_id"),
       substring(col("text"), 1, maxLen).as("t"))
     val reps = ranksCore(src, maxLen)
@@ -370,17 +372,24 @@ object SuffixOps {
     * same islands rule the oracle's running-max window computes. Output:
     * one row per flagged doc with raw/merged span counts, flagged byte
     * total, and a Σ start·len checksum binding interval placement.
+    *
+    * Exact-dup collapse (r6): the whole chain — classes, neighbor LCPs,
+    * spans, interval union — is a pure function of the capped text, so it
+    * runs once per distinct text; the per-doc summary rows are then
+    * COPIED to members (output-sized join, no suffix work per dup). The
+    * one member-sensitive input is n_members (the duplicate-class term
+    * fires when a suffix string occurs ≥ 2 times corpus-wide), which the
+    * rep path recovers exactly as Σ cluster sizes over the class's reps.
     */
   def repeatSpans(docs: DataFrame, maxLen: Int = 128, window: Int = 64,
-                  minLen: Int = 20, collapseExact: Boolean = true)
-    : DataFrame = {
-    // collapsed path (r6): the whole chain — classes, neighbor LCPs,
-    // spans, interval union — is a pure function of the capped text, so
-    // it runs once per distinct text; the per-doc summary rows are then
-    // COPIED to members (output-sized join, no suffix work per dup). The
-    // one member-sensitive input is n_members (the duplicate-class term
-    // fires when a suffix string occurs ≥ 2 times corpus-wide), which the
-    // rep path recovers exactly as Σ cluster sizes over the class's reps.
+                  minLen: Int = 20): DataFrame =
+    repeatSpansKernel(docs, maxLen, window, minLen, collapseExact = true)
+
+  /** [[repeatSpans]] with the collapse on or off (`false` is the per-doc
+    * spec reference). */
+  private[graft] def repeatSpansKernel(docs: DataFrame, maxLen: Int,
+                                       window: Int, minLen: Int,
+                                       collapseExact: Boolean): DataFrame = {
     val (src, membersOpt) =
       if (collapseExact) {
         val (reps, members, stats) = collapse(docs, maxLen)
@@ -489,34 +498,38 @@ object SuffixOps {
     * suffix/distinct counts plus two product checksums that bind every
     * rank to its (doc, pos) — any single wrong rank moves a shard or
     * breaks a checksum. Integer-exact: rnk < n and the factors are < 2^10,
-    * so shard sums stay far below 2^63. */
+    * so shard sums stay far below 2^63.
+    *
+    * Rep-arithmetic form (r6): member rows of a text cluster are the
+    * rep's rows with substituted doc_ids, so every census sum is a
+    * csize/dsum-weighted sum over rep rows — the member table is never
+    * materialized (count → Σ csize, Σ pos → Σ pos·csize,
+    * Σ rnk·(doc%997+1) → Σ rnk·dsum); distinct ranks are unweighted. */
   def suffixCensus(docs: DataFrame, maxLen: Int = 192,
-                   shardShift: Int = 9,
-                   collapseExact: Boolean = true): DataFrame =
-    if (collapseExact) {
-      // rep-arithmetic form (r6): member rows of a text cluster are the
-      // rep's rows with substituted doc_ids, so every census sum is a
-      // csize/dsum-weighted sum over rep rows — the member table is never
-      // materialized (count → Σ csize, Σ pos → Σ pos·csize,
-      // Σ rnk·(doc%997+1) → Σ rnk·dsum); distinct ranks are unweighted
-      val (reps, _, stats) = collapse(docs, maxLen)
-      ranksCore(reps, maxLen)
-        .join(stats, "doc_id")
-        .groupBy(shiftright(col("rnk"), shardShift).as("shard"))
-        .agg(sum(col("csize")).as("n_suffixes"),
-          countDistinct(col("rnk")).as("n_distinct"),
-          sum(col("pos").cast("long") * col("csize")).as("sum_pos"),
-          sum(col("rnk") * (col("pos").cast("long") + 1L) * col("csize"))
-            .as("chk_pos"),
-          sum(col("rnk") * col("dsum")).as("chk_doc"))
-        .orderBy(col("shard"))
-    } else
-      ranksCore(docs, maxLen)
-        .groupBy(shiftright(col("rnk"), shardShift).as("shard"))
-        .agg(count(lit(1)).as("n_suffixes"),
-          countDistinct(col("rnk")).as("n_distinct"),
-          sum(col("pos").cast("long")).as("sum_pos"),
-          sum(col("rnk") * (col("pos").cast("long") + 1L)).as("chk_pos"),
-          sum(col("rnk") * (col("doc_id") % 997L + 1L)).as("chk_doc"))
+                   shardShift: Int = 9): DataFrame = {
+    val (reps, _, stats) = collapse(docs, maxLen)
+    ranksCore(reps, maxLen)
+      .join(stats, "doc_id")
+      .groupBy(shiftright(col("rnk"), shardShift).as("shard"))
+      .agg(sum(col("csize")).as("n_suffixes"),
+        countDistinct(col("rnk")).as("n_distinct"),
+        sum(col("pos").cast("long") * col("csize")).as("sum_pos"),
+        sum(col("rnk") * (col("pos").cast("long") + 1L) * col("csize"))
+          .as("chk_pos"),
+        sum(col("rnk") * col("dsum")).as("chk_doc"))
+      .orderBy(col("shard"))
+  }
+
+  /** The per-doc census — the spec reference for [[suffixCensus]]'s
+    * rep arithmetic. */
+  private[graft] def suffixCensusUncollapsed(docs: DataFrame, maxLen: Int,
+                                             shardShift: Int): DataFrame =
+    ranksCore(docs, maxLen)
+      .groupBy(shiftright(col("rnk"), shardShift).as("shard"))
+      .agg(count(lit(1)).as("n_suffixes"),
+        countDistinct(col("rnk")).as("n_distinct"),
+        sum(col("pos").cast("long")).as("sum_pos"),
+        sum(col("rnk") * (col("pos").cast("long") + 1L)).as("chk_pos"),
+        sum(col("rnk") * (col("doc_id") % 997L + 1L)).as("chk_doc"))
       .orderBy(col("shard"))
 }

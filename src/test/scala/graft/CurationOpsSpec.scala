@@ -425,6 +425,22 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(got === Seq((1L, 0L, 0L), (2L, 2L, 62500L), (3L, 1L, 10000L)))
   }
 
+  test("kcenterCoreset is total: zero rows or k <= 0 select nothing " +
+    "(the oracle's empty answer), with the k = 1 schema") {
+    import spark.implicits._
+    val emb = Seq((0L, Array(0.0f)), (1L, Array(0.1f)))
+      .toDF("vec_id", "embedding")
+    val one = graft.ops.SimilarityOps.kcenterCoreset(emb, k = 1)
+    assert(one.as[(Long, Long, Long)].collect().toSeq === Seq((1L, 0L, 0L)))
+    val cases = Seq(("zero rows", emb.limit(0), 4), ("k = 0", emb, 0),
+      ("k = -1", emb, -1))
+    for ((name, df, k) <- cases) {
+      val out = graft.ops.SimilarityOps.kcenterCoreset(df, k)
+      assert(out.schema === one.schema, name)
+      assert(out.collect().isEmpty, name)
+    }
+  }
+
   test("sourceEntropy: integer bitlen identity on a hand corpus") {
     import spark.implicits._
     val docs = Seq((0L, "a a b", "s1"), (1L, "c c c c", "s2"))

@@ -11,6 +11,14 @@ class OpsSpec extends AnyFunSuite {
 
   private def docsDf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
+  /** The degenerate corpora every exact-dup collapse equality spec also
+    * runs: zero rows, one row, and two identical rows. */
+  private def degenerateDocs: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val text = (1 to 12).map(i => s"deg$i").mkString(" ")
+    Seq("zero rows" -> docsDf(), "one row" -> docsDf(5L -> text),
+      "two identical rows" -> docsDf(5L -> text, 9L -> text))
+  }
+
   test("exact dedup groups identical texts under min keeper id") {
     val df = docsDf(1L -> "alpha beta gamma", 2L -> "alpha beta gamma",
       3L -> "different text entirely")
@@ -25,14 +33,12 @@ class OpsSpec extends AnyFunSuite {
     val nearDup = (1 to 40).map(i => if (i == 7) "CHANGED" else s"token$i").mkString(" ")
     val other = (100 to 140).map(i => s"word$i").mkString(" ")
     val df = docsDf(1L -> base, 2L -> nearDup, 3L -> other)
-    Seq(true, false).foreach { bcast => // broadcast and shuffle-join verify
-      val out = DedupOps.minhashLsh(df, broadcastVerify = bcast).collect()
-      assert(out.length === 1)
-      assert(out(0).getAs[Long]("doc_a") === 1L)
-      assert(out(0).getAs[Long]("doc_b") === 2L)
-      // exact jaccard verified: changing 1 of 40 tokens kills 3 of 38 shingles
-      assert(out(0).getAs[Int]("n_inter") > 30)
-    }
+    val out = DedupOps.minhashLsh(df).collect()
+    assert(out.length === 1)
+    assert(out(0).getAs[Long]("doc_a") === 1L)
+    assert(out(0).getAs[Long]("doc_b") === 2L)
+    // exact jaccard verified: changing 1 of 40 tokens kills 3 of 38 shingles
+    assert(out(0).getAs[Int]("n_inter") > 30)
   }
 
   test("edit-distance near-dups: deletion-neighborhood blocking finds " +
@@ -668,21 +674,33 @@ class OpsSpec extends AnyFunSuite {
       (0 until c).map { _ => id += 7; (id, v, 0) }
     }
     val df = rows.toDF("vec_id", "embedding", "label")
+    // floor 0 forces the collapsed branch despite tiny N; Int.MaxValue
+    // is the brute kernel
+    def both(src: org.apache.spark.sql.DataFrame, k: Int) = (
+      SimilarityOps.topPairsWithFloor(src, k, SimilarityOps.BruteRowLimit, 0)
+        .collect().map(_.toSeq).toSeq,
+      SimilarityOps.topPairsWithFloor(src, k, SimilarityOps.BruteRowLimit,
+        Int.MaxValue).collect().map(_.toSeq).toSeq)
     for (k <- Seq(1, 3, 10, 40, 200); parts <- Seq(1, 5)) {
       val src = if (parts == 1) df else df.repartition(parts)
-      val a = SimilarityOps.topPairs(src, k, collapseExact = true,
-          collapseFloor = 0) // force the collapsed branch despite tiny N
-        .collect().map(_.toSeq)
-      val b = SimilarityOps.topPairs(src, k, collapseExact = false)
-        .collect().map(_.toSeq)
-      assert(a.nonEmpty && a.toSeq === b.toSeq, s"k=$k parts=$parts")
+      val (a, b) = both(src, k)
+      assert(a.nonEmpty && a === b, s"k=$k parts=$parts")
+    }
+    // degenerate inputs: zero rows, one row, two identical rows
+    val v = distinct.head
+    for ((name, rows, pairs) <- Seq(("zero rows", Seq.empty[(Long, Array[Float], Int)], 0),
+        ("one row", Seq((5L, v, 0)), 0),
+        ("two identical rows", Seq((5L, v, 0), (9L, v, 0)), 1))) {
+      val (a, b) = both(rows.toDF("vec_id", "embedding", "label"), 10)
+      assert(a === b, name)
+      assert(a.length === pairs, name)
     }
   }
 
   test("k <= 0: every bounded top-k op returns an empty frame with the " +
     "k = 1 schema (the row_number() <= k oracle's answer)") {
     // two distinct vectors, three members each: 2·D² < N², so
-    // collapseFloor = 0 really takes the collapsed branch
+    // a collapse floor of 0 really takes the collapsed branch
     val a = Array(1f, 0f, 0f, 0f); val b = Array(0.6f, 0.8f, 0f, 0f)
     val vecs = Seq((0L, a), (1L, a), (2L, b), (3L, a), (4L, b), (5L, b))
       .toDF("vec_id", "embedding")
@@ -690,10 +708,10 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "n_chars")
     val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
       "bruteTopK" -> (k => SimilarityOps.bruteTopK(vecs, 2, k)),
-      "topPairs collapsed" -> (k =>
-        SimilarityOps.topPairs(vecs, k, collapseFloor = 0)),
-      "topPairs brute" -> (k =>
-        SimilarityOps.topPairs(vecs, k, collapseExact = false)),
+      "topPairs collapsed" -> (k => SimilarityOps.topPairsWithFloor(vecs, k,
+        SimilarityOps.BruteRowLimit, 0)),
+      "topPairs brute" -> (k => SimilarityOps.topPairsWithFloor(vecs, k,
+        SimilarityOps.BruteRowLimit, Int.MaxValue)),
       "domainCap" -> (k => graft.ops.CorpusOps.domainCap(docs, cap = k)))
     for ((name, op) <- ops; k <- Seq(-1, 0)) {
       val one = op(1)
@@ -1425,10 +1443,11 @@ class OpsSpec extends AnyFunSuite {
     // the r5 sf10 lesson: dup clusters of 100 made the per-doc joins
     // quadratic (p113 spilled 50+ GB); the collapse runs the joins over
     // one rep per distinct text and expands arithmetically. Pin: for
-    // exact/prefix/weighted Jaccard and minhashLsh, collapse=true equals
-    // collapse=false row-for-row on a corpus where dup clusters, a near
-    // pair, and singletons all coexist (incl. a near pair BETWEEN
-    // clusters, which must score once per member combination).
+    // exact/prefix/weighted Jaccard, minhashLsh and simhash, each op
+    // equals its uncollapsed kernel row-for-row on a corpus where dup
+    // clusters, a near pair, and singletons all coexist (incl. a near
+    // pair BETWEEN clusters, which must score once per member
+    // combination), and on the degenerate corpora.
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val near = (1 to 40).map(i => if (i == 5) "CHANGED" else s"tok$i")
       .mkString(" ")
@@ -1439,20 +1458,28 @@ class OpsSpec extends AnyFunSuite {
           21L -> (1 to 30).map(i => s"other$i").mkString(" "))): _*)
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.collect().map(_.toSeq).toSet
-    val cases = Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
-      "exact" -> (c => graft.ops.DedupOps.exactJaccardPairs(docs,
-        collapseExact = c)),
-      "prefix" -> (c => graft.ops.DedupOps.prefixFilteredJaccardPairs(docs,
-        collapseExact = c)),
-      "weighted" -> (c => graft.ops.DedupOps.weightedJaccardPairs(docs,
-        collapseExact = c)),
-      "minhash" -> (c => graft.ops.DedupOps.minhashLsh(docs,
-        collapseExact = c)),
-      "simhash" -> (c => graft.ops.DedupOps.simhashPairs(docs,
-        collapseExact = c)))
-    cases.foreach { case (name, f) =>
-      val on = rows(f(true))
-      val off = rows(f(false))
+    type Op = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    val cases = Seq[(String, Op, Op)](
+      ("exact", d => DedupOps.exactJaccardPairs(d),
+        d => DedupOps.exactJaccardPairsUncollapsed(d, 3, 50, None)),
+      ("prefix", d => DedupOps.prefixFilteredJaccardPairs(d),
+        d => DedupOps.prefixFilteredJaccardPairsUncollapsed(d, 3, 50, false)),
+      ("weighted", d => DedupOps.weightedJaccardPairs(d),
+        d => DedupOps.weightedJaccardPairsUncollapsed(d, 3, 50, None)),
+      ("minhash", d => DedupOps.minhashLsh(d),
+        d => DedupOps.minhashLshUncollapsed(d, 3, 32, 3, 60)),
+      ("simhash", d => DedupOps.simhashPairs(d),
+        d => DedupOps.simhashPairsUncollapsed(d, 3)))
+    cases.foreach { case (name, collapsed, uncollapsed) =>
+      degenerateDocs.foreach { case (corpus, d) =>
+        val on = rows(collapsed(d))
+        assert(on === rows(uncollapsed(d)), s"$name on $corpus")
+        // two identical rows pair with each other, at most one row never
+        assert(on.size === (if (corpus == "two identical rows") 1 else 0),
+          s"$name on $corpus")
+      }
+      val on = rows(collapsed(docs))
+      val off = rows(uncollapsed(docs))
       assert(on === off, s"$name collapse changed the output")
       val ids = on.map(s => (s(0).asInstanceOf[Long], s(1).asInstanceOf[Long]))
       // the in-cluster pairs per C(n,2): 6 + 3 — the quadratic OUTPUT
@@ -1501,15 +1528,23 @@ class OpsSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.collect().map(_.toSeq).toSet
     for (cap <- Seq(1, 2, 3, 4, 5, 6, 100)) {
-      val exOn = rows(graft.ops.DedupOps.exactJaccardPairs(docs,
-        maxDf = Some(cap), collapseExact = true))
-      val exOff = rows(graft.ops.DedupOps.exactJaccardPairs(docs,
-        maxDf = Some(cap), collapseExact = false))
+      // the degenerate corpora: cap 1 cuts the identical pair's shingles
+      // (df 2 > 1), caps from 2 keep them
+      degenerateDocs.foreach { case (corpus, d) =>
+        assert(rows(DedupOps.exactJaccardPairs(d, maxDf = Some(cap))) ===
+          rows(DedupOps.exactJaccardPairsUncollapsed(d, 3, 50, Some(cap))),
+          s"exact maxDf=$cap on $corpus")
+        assert(rows(DedupOps.weightedJaccardPairs(d, maxDf = Some(cap))) ===
+          rows(DedupOps.weightedJaccardPairsUncollapsed(d, 3, 50, Some(cap))),
+          s"weighted maxDf=$cap on $corpus")
+      }
+      val exOn = rows(DedupOps.exactJaccardPairs(docs, maxDf = Some(cap)))
+      val exOff = rows(DedupOps.exactJaccardPairsUncollapsed(docs, 3, 50,
+        Some(cap)))
       assert(exOn === exOff, s"exact maxDf=$cap collapse changed output")
-      val wOn = rows(graft.ops.DedupOps.weightedJaccardPairs(docs,
-        maxDf = Some(cap), collapseExact = true))
-      val wOff = rows(graft.ops.DedupOps.weightedJaccardPairs(docs,
-        maxDf = Some(cap), collapseExact = false))
+      val wOn = rows(DedupOps.weightedJaccardPairs(docs, maxDf = Some(cap)))
+      val wOff = rows(DedupOps.weightedJaccardPairsUncollapsed(docs, 3, 50,
+        Some(cap)))
       assert(wOn === wOff, s"weighted maxDf=$cap collapse changed output")
       val ids = exOn.map(s => (s(0).asInstanceOf[Long], s(1).asInstanceOf[Long]))
       if (cap < 4) // cluster A larger than the cap: no pair may survive
@@ -1723,15 +1758,24 @@ class OpsSpec extends AnyFunSuite {
       10L -> v(0, 0.4f),                  // near the cluster
       20L -> v(32))                       // far
       .toDF("vec_id", "embedding")
-    val buckets = graft.ops.SimilarityOps
-      .lshBucketsMulti(vecs, bits = 4, tables = 8)
-    def rows(c: Boolean) = graft.ops.SimilarityOps
-      .embeddingNearDupsFrom(vecs, buckets, minCosine = 0.45,
-        collapseExact = c)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val on = rows(true)
-    val off = rows(false)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet
+    def both(vecs: org.apache.spark.sql.DataFrame) = {
+      val buckets = SimilarityOps.lshBucketsMulti(vecs, bits = 4, tables = 8)
+      (rows(SimilarityOps.embeddingNearDupsFrom(vecs, buckets,
+        minCosine = 0.45)),
+       rows(SimilarityOps.bucketPairsVerify(buckets, vecs, 0.45)))
+    }
+    // degenerate inputs: zero rows, one row, two identical rows
+    for ((name, n, pairs) <- Seq(("zero rows", 0, 0), ("one row", 1, 0),
+        ("two identical rows", 2, 1))) {
+      val (on, off) = both(Seq(5L -> v(3), 9L -> v(3)).take(n)
+        .toDF("vec_id", "embedding"))
+      assert(on === off, name)
+      assert(on.size === pairs, name)
+    }
+    val (on, off) = both(vecs)
     assert(on === off) // bit-identical, scores included
     val ids = on.map(p => (p._1, p._2))
     assert(Set((1L, 2L), (1L, 3L), (2L, 3L)).subsetOf(ids))
@@ -1754,10 +1798,20 @@ class OpsSpec extends AnyFunSuite {
       10L -> v(0, 0.3f),                  // near the cluster
       20L -> v(4), 21L -> v(4))           // identical pair, other axis
       .toDF("vec_id", "embedding")
-    def rows(assigned: org.apache.spark.sql.DataFrame, c: Boolean) =
-      graft.ops.SimilarityOps.semDedupFrom(vecs, assigned, tau = 0.8,
-          collapseExact = c)
+    def rows(assigned: org.apache.spark.sql.DataFrame, collapsed: Boolean,
+             emb: org.apache.spark.sql.DataFrame = vecs) =
+      (if (collapsed) SimilarityOps.semDedupFrom(emb, assigned, tau = 0.8)
+       else SimilarityOps.semDedupUncollapsed(emb, assigned, tau = 0.8))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    // degenerate inputs: zero rows, one row, two identical rows (the
+    // larger id drops onto the smaller)
+    for ((name, n, dropped) <- Seq(("zero rows", 0, Seq()),
+        ("one row", 1, Seq()), ("two identical rows", 2, Seq((9L, 0, 5L))))) {
+      val emb = Seq(5L -> v(2), 9L -> v(2)).take(n).toDF("vec_id", "embedding")
+      val cell = emb.select(col("vec_id"), lit(0).as("cell"))
+      assert(rows(cell, true, emb) === rows(cell, false, emb), name)
+      assert(rows(cell, true, emb) === dropped, name)
+    }
     // one cell: cluster members 2, 3 drop with canonical 1; 21 → 20; the
     // near vector 10 also collapses onto 1 at tau=0.8
     val oneCell = vecs.select(col("vec_id"), lit(0).as("cell"))
@@ -1816,9 +1870,24 @@ class OpsSpec extends AnyFunSuite {
       .toDF("key", "name", "block", "cents", "seg")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
+    def uncollapsed(a: org.apache.spark.sql.DataFrame,
+                    b: org.apache.spark.sql.DataFrame) =
+      rows(graft.ops.LinkageOps.links(a, b, Seq(col("block")),
+          threshold = 18, centsTol = 75, collapseExact = false)
+        .orderBy(col("a_key"), col("b_key")))
+    // degenerate inputs on both sides: zero rows, one row, two identical
+    // records (the pair links 1×2 times)
+    for ((name, n, links) <- Seq(("zero rows", 0, 0), ("one row", 1, 1),
+        ("two identical rows", 2, 4))) {
+      val side = Seq((5L, "Customer#000000005", 10L, 1000L, "AUTO"),
+          (9L, "Customer#000000005", 10L, 1000L, "AUTO")).take(n)
+        .toDF("key", "name", "block", "cents", "seg")
+      val got = rows(graft.ops.LinkageOps.fellegiSunterLinks(side, side))
+      assert(got === uncollapsed(side, side), name)
+      assert(got.length === links, name)
+    }
     val on = rows(graft.ops.LinkageOps.fellegiSunterLinks(a, b))
-    val off = rows(graft.ops.LinkageOps.fellegiSunterLinks(a, b,
-      collapseExact = false))
+    val off = uncollapsed(a, b)
     assert(on === off) // ordered comparison: orderBy contract kept too
     val pairs = on.map(s => (s(0).asInstanceOf[Long], s(1).asInstanceOf[Long],
       s(7).asInstanceOf[Long]))
@@ -2314,12 +2383,9 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).sortBy(_.toString)
     val b = DedupOps.dupClusters(DedupOps.minhashLsh(docs))
       .collect().map(_.toSeq).sortBy(_.toString)
+    // `b` is also the adaptive fallback branch (dup-light → classic
+    // composition) verbatim
     assert(a.nonEmpty && a.toSeq === b.toSeq)
-    // the adaptive fallback branch (dup-light → classic composition) is
-    // row-identical too: ratio 0 forces it on this corpus
-    val c = DedupOps.dupClustersOverDocs(docs, collapseRatio = 0.0)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(c.toSeq === b.toSeq)
     // dupClusters takes the driver branch on this small graph; the star
     // loop labels the same pair set identically
     assert(bothLabellings(DedupOps.minhashLsh(docs)).map(_.productIterator
@@ -2418,8 +2484,7 @@ class OpsSpec extends AnyFunSuite {
       Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)))
   }
 
-  test("decontaminate flags docs sharing a w-gram with the benchmark; " +
-       "broadcast and bloom paths agree") {
+  test("decontaminate flags docs sharing a w-gram with the benchmark") {
     // doc 1 embeds a verbatim 5-token benchmark span, doc 2 is clean,
     // doc 3 shares a 4-token run only (below w=5)
     val benchSpan = "the quick brown fox jumps"
@@ -2428,12 +2493,10 @@ class OpsSpec extends AnyFunSuite {
       2L -> "completely unrelated content with no overlap at all",
       3L -> "the quick brown fox sits still today ok")
     val bench = docsDf(100L -> s"eval question about $benchSpan over lazy dogs")
-    Seq(true, false).foreach { bcast =>
-      val out = graft.ops.CorpusOps.decontaminate(corpus, bench, w = 5,
-        broadcastBenchmark = bcast).collect()
-      assert(out.map(r => (r.getLong(0), r.getAs[Long]("n_hit_grams"))).toSet
-        === Set((1L, 1L))) // exactly the one shared 5-gram, doc 1 only
-    }
+    val out = graft.ops.CorpusOps.decontaminate(corpus, bench, w = 5)
+      .collect()
+    assert(out.map(r => (r.getLong(0), r.getAs[Long]("n_hit_grams"))).toSet
+      === Set((1L, 1L))) // exactly the one shared 5-gram, doc 1 only
   }
 
   test("threshold pairs: planted near-identical vectors found, others not; " +

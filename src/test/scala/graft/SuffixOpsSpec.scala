@@ -68,7 +68,7 @@ class SuffixOpsSpec extends AnyFunSuite {
       .suffixRanks(docs.toDF("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     val pairwise = graft.ops.SuffixOps
-      .suffixRanks(docs.toDF("doc_id", "text"), forcePairwise = true)
+      .ranksCore(docs.toDF("doc_id", "text"), 192, forcePairwise = true)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(packed === pairwise)
     assert(packed === brute(docs))
@@ -221,41 +221,43 @@ class SuffixOpsSpec extends AnyFunSuite {
       "per-doc path on a planted dup-cluster corpus") {
     // maxLen=30 makes docs 30/22 identical within the cap (their full
     // texts differ) — the collapse must group on the CAPPED text
+    import graft.ops.SuffixOps
+    def rows(df: org.apache.spark.sql.DataFrame, sorted: Boolean = false) = {
+      val r = df.collect().map(_.toSeq).toSeq
+      if (sorted) r.sortBy(_.toString) else r
+    }
+    // (ranks, census, lcp, spans), each collapsed and per-doc
+    def both(df: org.apache.spark.sql.DataFrame, maxLen: Int)
+      : Seq[(String, Seq[Seq[Any]], Seq[Seq[Any]])] = Seq(
+      ("ranks", rows(SuffixOps.suffixRanks(df, maxLen), sorted = true),
+        rows(SuffixOps.ranksCore(df, maxLen), sorted = true)),
+      ("census", rows(SuffixOps.suffixCensus(df, maxLen, shardShift = 4)),
+        rows(SuffixOps.suffixCensusUncollapsed(df, maxLen, shardShift = 4))),
+      ("lcp", rows(SuffixOps.lcpCensus(df, maxLen, window = 16)),
+        rows(SuffixOps.lcpCensusOf(df, df, maxLen, window = 16))),
+      ("spans", rows(SuffixOps.repeatSpans(df, maxLen, window = 24,
+          minLen = 10)),
+        rows(SuffixOps.repeatSpansKernel(df, maxLen, window = 24,
+          minLen = 10, collapseExact = false))))
+    // degenerate inputs: zero rows, one row, two identical rows (the
+    // identical pair flags its whole 12-char text as a verbatim repeat)
+    val deg = "repeat me ok"
+    for ((name, n) <- Seq(("zero rows", 0), ("one row", 1),
+        ("two identical rows", 2))) {
+      val df = Seq(5L -> deg, 9L -> deg).take(n).toDF("doc_id", "text")
+      both(df, 96).foreach { case (op, c, u) =>
+        assert(c === u, s"$op on $name")
+        assert(c.isEmpty === (n == 0 || op == "spans" && n == 1),
+          s"$op on $name")
+      }
+    }
     val df = dupCorpus.toDF("doc_id", "text")
     for (maxLen <- Seq(30, 96)) {
-      val rc = graft.ops.SuffixOps
-        .suffixRanks(df, maxLen, collapseExact = true)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      val ru = graft.ops.SuffixOps
-        .suffixRanks(df, maxLen, collapseExact = false)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      assert(rc.nonEmpty && rc.toSeq === ru.toSeq, s"ranks maxLen=$maxLen")
-
-      val cc = graft.ops.SuffixOps
-        .suffixCensus(df, maxLen, shardShift = 4, collapseExact = true)
-        .collect().map(_.toSeq)
-      val cu = graft.ops.SuffixOps
-        .suffixCensus(df, maxLen, shardShift = 4, collapseExact = false)
-        .collect().map(_.toSeq)
-      assert(cc.nonEmpty && cc.toSeq === cu.toSeq, s"census maxLen=$maxLen")
-
-      val lc = graft.ops.SuffixOps
-        .lcpCensus(df, maxLen, window = 16, collapseExact = true)
-        .collect().map(_.toSeq)
-      val lu = graft.ops.SuffixOps
-        .lcpCensus(df, maxLen, window = 16, collapseExact = false)
-        .collect().map(_.toSeq)
-      assert(lc.nonEmpty && lc.toSeq === lu.toSeq, s"lcp maxLen=$maxLen")
-
-      val sc = graft.ops.SuffixOps
-        .repeatSpans(df, maxLen, window = 24, minLen = 10,
-          collapseExact = true)
-        .collect().map(_.toSeq)
-      val su = graft.ops.SuffixOps
-        .repeatSpans(df, maxLen, window = 24, minLen = 10,
-          collapseExact = false)
-        .collect().map(_.toSeq)
-      assert(sc.nonEmpty && sc.toSeq === su.toSeq, s"spans maxLen=$maxLen")
+      val ops = both(df, maxLen)
+      ops.foreach { case (op, c, u) =>
+        assert(c.nonEmpty && c === u, s"$op maxLen=$maxLen")
+      }
+      val sc = ops.last._2
       // every member of the size-4 cluster got its (identical) span row:
       // duplicate-class suffixes of a 4-cluster all reach the threshold
       val spanIds = sc.map(_.head.asInstanceOf[Long]).toSet

@@ -4,7 +4,8 @@ output dirs (e.g. produced at different SPARK_GRAFT_CPUS, hence different
 partitioning and task interleavings). Every query's result must be
 IDENTICAL after the driver's own normalization (columns sorted by name,
 rows sorted by all columns) — any drift means an operator leaks partition
-order or nondeterminism into values.
+order or nondeterminism into values. A query present in only one of the
+two dirs counts as a difference.
 
 Usage: python3 tools/diff_runs.py /tmp/verify_a /tmp/verify_b
 """
@@ -24,12 +25,20 @@ def load(d):
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def query_names(d):
+    return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
+
 def main():
     a_dir, b_dir = sys.argv[1], sys.argv[2]
-    names = sorted(n for n in os.listdir(a_dir)
-                   if os.path.isdir(os.path.join(a_dir, n)))
+    a_names, b_names = query_names(a_dir), query_names(b_dir)
     n_pass = n_fail = 0
-    for q in names:
+    for q in sorted(a_names | b_names):
+        if q not in a_names or q not in b_names:
+            side = a_dir if q in a_names else b_dir
+            print(f"DIFF {q}: present only in {side}")
+            n_fail += 1
+            continue
         a, b = load(os.path.join(a_dir, q)), load(os.path.join(b_dir, q))
         if a is None or b is None:
             print(f"DIFF {q}: missing output ({a is None} / {b is None})")

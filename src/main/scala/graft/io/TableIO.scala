@@ -24,9 +24,6 @@ object TableIO {
       .format("parquet")
       .saveAsTable(table)
 
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Equi-join two tables bucketed on the same key — planner elides the
     * shuffle on both sides. */
   def bucketedJoin(spark: SparkSession, left: String, right: String,

@@ -134,7 +134,6 @@ final class PyDict {
   def apply(k: String): Any = m(k)
   def get(k: String): Option[Any] = m.get(k)
   def contains(k: String): Boolean = m.contains(k)
-  def getOrNull(k: String): Any = m.getOrElse(k, null)
   def keys: Iterable[String] = m.keys
   def isEmpty: Boolean = m.isEmpty
   /** Python `d.get(k)` truthiness test helper. */

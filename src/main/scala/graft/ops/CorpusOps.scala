@@ -13,6 +13,22 @@ import org.apache.spark.sql.functions._
 object CorpusOps {
   private val wsPat = Pattern.compile("\\s+")
 
+  /** HyperLogLog precision of `hllRegisters`, `hllValidate` and
+    * `hllIntersect`: 2^6 = 64 registers. */
+  private val HllP = 6
+
+  /** Count-min sketch shape (rows × buckets) shared by `countMinSketch`
+    * and `cmsValidate`. */
+  private val CmsDepth = 4
+  private val CmsWidth = 256
+
+  /** The value of a one-row `sum` aggregate; 0 when it summed no rows
+    * (SQL's sum of nothing is null). */
+  private def sumOrZero(agg: DataFrame): Long = {
+    val r = agg.collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
   /** Vocabulary stats: per token, the number of documents containing it
     * (doc_freq — the IDF numerator) and its total term frequency. One
     * typed pass per doc (per-doc counts in a hash map), then one keyed
@@ -51,15 +67,16 @@ object CorpusOps {
     * through the compare) plus the match counts. Pure codegen'd column
     * expressions — regexp_replace/regexp_count run inside whole-stage
     * codegen, no UDF. */
-  def piiScrub(df: DataFrame, textCol: Column = col("text")): DataFrame =
+  def piiScrub(df: DataFrame): DataFrame =
     df.select(
       col("doc_id"),
-      size(regexp_extract_all(textCol, lit(emailPat), lit(0))).as("n_emails"),
+      size(regexp_extract_all(col("text"), lit(emailPat), lit(0)))
+        .as("n_emails"),
       size(regexp_extract_all(
-        regexp_replace(textCol, emailPat, "<EMAIL>"),
+        regexp_replace(col("text"), emailPat, "<EMAIL>"),
         lit(longDigitPat), lit(0))).as("n_phones"),
       md5(regexp_replace(
-        regexp_replace(textCol, emailPat, "<EMAIL>"),
+        regexp_replace(col("text"), emailPat, "<EMAIL>"),
         longDigitPat, "<PHONE>").cast("binary")).as("scrubbed_md5"))
 
   /** Repetition/diversity quality signals (Gopher-style filters): token
@@ -105,7 +122,8 @@ object CorpusOps {
     * size. Row hashes are salted md5-low63 (= DuckDB `md5_number_lower`
     * masked), so the cell table is exactly replicable in SQL. Output:
     * nonzero cells (row, bucket, count). */
-  def countMinSketch(df: DataFrame, depth: Int = 4, width: Int = 256): DataFrame = {
+  def countMinSketch(df: DataFrame, depth: Int = CmsDepth,
+                     width: Int = CmsWidth): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("text")).as[String]
@@ -131,19 +149,20 @@ object CorpusOps {
   }
 
   /** HyperLogLog registers (Flajolet et al. '07) over the token vocabulary:
-    * 2^p registers, each holding max(rho) where rho = 1 + leading-zero count
-    * of the hash suffix. Like the count-min sketch, the register table is
-    * THE mergeable cardinality summary: per-partition sub-sketches merge by
-    * register-wise max (here: the same partial+final max aggregation), so
-    * the shuffle is 2^p rows per partition regardless of corpus size — the
-    * scalable alternative to count(DISTINCT token) when the vocabulary
-    * outgrows memory. Hash is md5-low63 (= DuckDB `md5_number_lower`
-    * masked), so the register table is exactly replicable in SQL
-    * (rho via 58 - length(bin(v)) — bin() prints no leading zeros).
+    * 2^p registers (p = `HllP`), each holding max(rho) where rho = 1 +
+    * leading-zero count of the hash suffix. Like the count-min sketch, the
+    * register table is THE mergeable cardinality summary: per-partition
+    * sub-sketches merge by register-wise max (here: the same partial+final max
+    * aggregation), so the shuffle is 2^p rows per partition regardless of
+    * corpus size — the scalable alternative to count(DISTINCT token) when the
+    * vocabulary outgrows memory. Hash is md5-low63 (= DuckDB
+    * `md5_number_lower` masked), so the register table is exactly replicable
+    * in SQL (rho via 58 - length(bin(v)) — bin() prints no leading zeros).
     * Output: nonzero registers (bucket, max_rho). */
-  def hllRegisters(df: DataFrame, p: Int = 6): DataFrame = {
+  def hllRegisters(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val p = HllP
     val m = 1 << p
     val w = 63 - p // hash-suffix width in bits (the md5-low hash is masked to 63)
     df.select(col("text")).as[String]
@@ -176,9 +195,11 @@ object CorpusOps {
     * Output: nonzero 32-bit words (word_idx, bits) — 32-bit chunks keep
     * every value positive-int64 so the DuckDB replica (sum of 1<<(bit%32)
     * over distinct set bits) is overflow-free. */
-  def bloomFilter(df: DataFrame, mBits: Int = 2048, k: Int = 3): DataFrame = {
+  def bloomFilter(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val mBits = 2048 // filter size in bits (a multiple of 64)
+    val k = 3        // salted hashes per token
     import org.apache.spark.sql.{Encoder, Encoders}
     val agg = new org.apache.spark.sql.expressions.Aggregator[String, Array[Long], Array[Long]] {
       def zero: Array[Long] = new Array[Long](mBits / 64)
@@ -212,7 +233,7 @@ object CorpusOps {
 
   /** TF-IDF text similarity search: top-k most similar documents per query
     * doc (the text counterpart of the embedding ANN family). Integer-exact
-    * across engines: idf = (N·idfScale) div df (integer division — no log,
+    * across engines: idf = (N·100) div df (integer division — no log,
     * whose last-ulp could diverge between JVMs/engines), weight = tf·idf,
     * score = dot product accumulated ONLY over shared tokens via the token
     * inverted index — never a dense doc×doc product. Top-k via the
@@ -220,13 +241,12 @@ object CorpusOps {
     * inverted index is additionally df-capped (stop-tokens pair everything
     * with everything and carry no signal); uncapped here because the DuckDB
     * oracle replicates the exact uncapped ranking. */
-  def tfidfTopK(df: DataFrame, numQueries: Int = 10, k: Int = 10,
-                idfScale: Long = 100L): DataFrame = {
+  def tfidfTopK(df: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
     val n = df.count() // one cheap metadata-ish pass; a known table stat at scale
     val tf = tokenTf(df)
     val idf = tf.groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
-      .select(col("token"), expr(s"(${n}L * ${idfScale}L) div df").as("idf"))
+      .select(col("token"), expr(s"(${n}L * 100L) div df").as("idf"))
     // vocabulary is ≪ corpus: broadcast the idf table into the weight join
     val w = tf.join(broadcast(idf), "token")
       .select(col("doc_id"), col("token"), (col("tf") * col("idf")).as("wt"))
@@ -243,7 +263,7 @@ object CorpusOps {
   /** tokenTf plus the document's total token count on every row — len is
     * row-local (computed in the same typed pass), so BM25's length
     * normalization needs no doc-length join. */
-  def tokenTfWithLen(df: DataFrame): DataFrame = {
+  private def tokenTfWithLen(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -278,7 +298,9 @@ object CorpusOps {
   def bm25TopK(df: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
     val n = df.count()
     val tf = tokenTfWithLen(df)
-    val bigL = tf.agg(sum(col("tf"))).collect()(0).getLong(0)
+    // an empty corpus sums to L = 0, and the division below then raised
+    // DIVIDE_BY_ZERO; any non-empty corpus has L >= 1 already
+    val bigL = math.max(sumOrZero(tf.agg(sum(col("tf")))), 1L)
     val idf = tf.groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
       // L-suffixed literals: under ANSI mode a bare interpolated count
@@ -301,25 +323,25 @@ object CorpusOps {
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09) — the standard
     * hybrid-retrieval combiner: each input ranking contributes
-    * `scale div (rrfK + rank)` per (query, neighbor) and candidates are
-    * re-ranked by the summed contribution. Integer contributions (scale
-    * = 10^6, the classic k = 60) make the fused score engine-exact — no
-    * float reciprocals whose last ulp could reorder a tie. Inputs are
-    * (query_id, rank, neighbor_id) rankings from ANY retrievers (BM25,
-    * TF-IDF, ANN); a candidate absent from one list simply lacks that
-    * term, exactly the RRF contract. Scale shape: the fused state is
-    * |queries|·k·|rankings| rows — trivially small next to the retrieval
-    * passes that produced it; one keyed aggregation + the bounded-heap
-    * top-k, no raw text or vectors anywhere. */
-  def rrfFuse(rankings: Seq[DataFrame], k: Int = 10, rrfK: Long = 60L,
-              scale: Long = 1000000L): DataFrame = {
+    * `scale div (rrfK + rank)` per (query, neighbor), candidates are
+    * re-ranked by the summed contribution, and the top 10 per query are
+    * kept. Integer contributions (scale = 10^6, the classic rrfK = 60)
+    * make the fused score engine-exact — no float reciprocals whose last
+    * ulp could reorder a tie. Inputs are (query_id, rank, neighbor_id)
+    * rankings from ANY retrievers (BM25, TF-IDF, ANN); a candidate absent
+    * from one list simply lacks that term, exactly the RRF contract. Scale
+    * shape: the fused state is |queries|·k·|rankings| rows — trivially
+    * small next to the retrieval passes that produced it; one keyed
+    * aggregation + the bounded-heap top-k, no raw text or vectors
+    * anywhere. */
+  def rrfFuse(rankings: Seq[DataFrame]): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
     val contrib = rankings.map(_.select(col("query_id"), col("neighbor_id"),
-        expr(s"$scale div ($rrfK + rank)").as("score")))
+        expr("1000000 div (60 + rank)").as("score")))
       .reduce(_ unionAll _)
     val fused = contrib.groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("score")).cast("double").as("score")) // ≤ |rankings|·scale: exact
-    SimilarityOps.rankTopK(fused, k)
+    SimilarityOps.rankTopK(fused, 10)
   }
 
   /** Corpus DRIFT monitor between two snapshots — the
@@ -333,14 +355,15 @@ object CorpusOps {
     * side collapses to a vocab-sized count table before the one
     * full-outer token join; totals are two scalar aggregates (catalog
     * stats at 10^12 rows); raw text never shuffles. */
-  def tokenDrift(oldSnap: DataFrame, newSnap: DataFrame, k: Int = 100,
-                 scale: Long = 1000000L): DataFrame = {
+  def tokenDrift(oldSnap: DataFrame, newSnap: DataFrame,
+                 k: Int = 100): DataFrame = {
+    val scale = 1000000L // rates in parts per million
     def counts(df: DataFrame) =
       tokenTf(df).groupBy(col("token")).agg(sum(col("tf")).as("c"))
     val o = counts(oldSnap)
     val n = counts(newSnap)
-    val totO = math.max(o.agg(sum(col("c"))).collect()(0).getLong(0), 1L)
-    val totN = math.max(n.agg(sum(col("c"))).collect()(0).getLong(0), 1L)
+    val totO = math.max(sumOrZero(o.agg(sum(col("c")))), 1L)
+    val totN = math.max(sumOrZero(n.agg(sum(col("c")))), 1L)
     o.as("o").join(n.as("n"), col("o.token") === col("n.token"),
         "full_outer")
       .select(coalesce(col("o.token"), col("n.token")).as("token"),
@@ -390,7 +413,7 @@ object CorpusOps {
     * corpus documents by how target-like their token distribution is. The
     * per-token importance ratio is Laplace-smoothed target-vs-corpus
     * unigram frequency on a fixed integer grid
-    *   w(t) = ((tc(t) + 1) · scale) div (cc(t) + 1)
+    *   w(t) = ((tc(t) + 1) · 10^4) div (cc(t) + 1)
     * and each doc scores the length-normalized weighted sum
     *   score = (Σ tf·w) div len
     * — all integer, so the selection order is engine-exact (the published
@@ -400,15 +423,14 @@ object CorpusOps {
     * aggregation keyed on doc_id — raw text tokenizes once
     * (`tokenTfWithLen`) and never shuffles; the target set is exemplar-
     * sized (MBs against 100 TB) by construction. */
-  def dsirScores(corpus: DataFrame, target: DataFrame,
-                 scale: Long = 10000L): DataFrame = {
+  def dsirScores(corpus: DataFrame, target: DataFrame): DataFrame = {
     val tf = tokenTfWithLen(corpus)
     val cc = tf.groupBy(col("token")).agg(sum(col("tf")).as("cc"))
     val tc = tokenTf(target).groupBy(col("token"))
       .agg(sum(col("tf")).as("tc"))
     val w = cc.join(tc, Seq("token"), "left")
       .select(col("token"),
-        expr(s"((coalesce(tc, 0) + 1) * $scale) div (cc + 1)").as("w"))
+        expr("((coalesce(tc, 0) + 1) * 10000) div (cc + 1)").as("w"))
     tf.join(broadcast(w), "token")
       .groupBy(col("doc_id"))
       .agg(max(col("len")).as("len"), // row-constant per doc
@@ -562,10 +584,12 @@ object CorpusOps {
     * oracle agree bit-for-bit — no float summation-order hazard. Register
     * build is the same one-pass pre-aggregated kernel as `hllRegisters`;
     * only m register rows and one count cross the wire. Output one row:
-    * (m, n_exact, est_int, err_permille). */
-  def hllValidate(df: DataFrame, p: Int = 6): DataFrame = {
+    * (m, n_exact, est_int, err_permille); on an empty input n_exact is 0
+    * and err_permille is null (the oracle's `// 0`). */
+  def hllValidate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val p = HllP
     val m = 1 << p
     val w = 63 - p
     val regRows = df.select(col("doc_id").cast("long"), col("text"))
@@ -594,9 +618,10 @@ object CorpusOps {
     val est = 709L * m * m * (1L << 30) / denom / 1000L
     val nExact = df.select(col("text")).as[String]
       .map(t => wsPat.split(t.trim).toSet.size.toLong)
-      .reduce(_ + _) // per-doc distinct tokens; key carries doc_id, so
-                     // the global distinct count is their plain sum
-    val errPm = math.abs(est - nExact) * 1000L / nExact
+      .rdd.fold(0L)(_ + _) // per-doc distinct tokens; key carries doc_id,
+                           // so the global distinct count is their plain sum
+    val errPm =
+      if (nExact == 0L) None else Some(math.abs(est - nExact) * 1000L / nExact)
     Seq((m.toLong, nExact, est, errPm))
       .toDF("m", "n_exact", "est_int", "err_permille")
   }
@@ -613,14 +638,13 @@ object CorpusOps {
     * intersection is a keys-only distinct-token join (per-doc hash-map
     * tokenize, never a raw-text explode). All arithmetic integer — the
     * oracle replicates bit-for-bit. */
-  def hllIntersect(df: DataFrame, langA: String, langB: String,
-                   p: Int = 6): DataFrame = {
+  def hllIntersect(df: DataFrame, langA: String, langB: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val m = 1 << p
+    val m = 1 << HllP
     def regsOf(lang: String): Array[Int] = {
       val out = new Array[Int](m)
-      hllRegisters(df.where(col("lang") === lang), p)
+      hllRegisters(df.where(col("lang") === lang))
         .as[(Int, Int)].collect() // ≤ m rows — the sketch, not the data
         .foreach { case (b, r) => out(b) = r }
       out
@@ -644,13 +668,13 @@ object CorpusOps {
 
   /** Cross-document REPEATED-PASSAGE coverage (RefinedWeb-style signal):
     * for each doc, how many of its distinct word w-grams also occur in at
-    * least `minDf − 1` other documents. High coverage = boilerplate /
+    * least one other document. High coverage = boilerplate /
     * template page → downweight or drop before training. Raw text never
     * shuffles: docs reduce to 8-byte masked-md5 gram hashes
     * (`DedupOps.gramHashes`, the p27 kernel), the repeated-gram set is one
     * hash-keyed agg, and the coverage count is a keys-only join back.
     * Output (doc_id, n_grams, n_repeated_grams). */
-  def repeatedGramStats(df: DataFrame, w: Int = 4, minDf: Int = 2): DataFrame = {
+  def repeatedGramStats(df: DataFrame, w: Int = 4): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val g = df.select(col("doc_id").cast("long"), col("text"))
@@ -663,7 +687,7 @@ object CorpusOps {
       .agg(count(lit(1)).as("n_grams"))
     val repeated = g.groupBy(col("h"))
       .agg(count(lit(1)).as("df"))
-      .where(col("df") >= minDf).select(col("h"))
+      .where(col("df") >= 2).select(col("h")) // in two or more docs
     val hits = g.join(repeated, "h")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_rep"))
     totals.join(hits, Seq("doc_id"), "left")
@@ -681,11 +705,10 @@ object CorpusOps {
     * contract; the corpus-side work is the same one-pass pre-aggregated
     * cell build as `countMinSketch` plus one token-keyed agg. Output per
     * top token: (token, exact_count, est_count, overshoot ≥ 0). */
-  def cmsValidate(df: DataFrame, depth: Int = 4, width: Int = 256,
-                  topK: Int = 20): DataFrame = {
+  def cmsValidate(df: DataFrame, topK: Int = 20): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = countMinSketch(df, depth, width)
+    val cells = countMinSketch(df)
       .as[(Int, Int, Long)].collect()
       .map { case (r, b, n) => ((r, b), n) }.toMap
     val top = tokenTf(df).groupBy(col("token"))
@@ -696,8 +719,8 @@ object CorpusOps {
     val rows = top.map { case (t, exact) =>
       var est = Long.MaxValue
       var r = 0
-      while (r < depth) {
-        val b = (TextOps.md5Low63(t + "#" + r) % width).toInt
+      while (r < CmsDepth) {
+        val b = (TextOps.md5Low63(t + "#" + r) % CmsWidth).toInt
         est = math.min(est, cells.getOrElse((r, b), 0L))
         r += 1
       }
@@ -769,20 +792,18 @@ object CorpusOps {
   }
 
   /** Deterministic epoch shuffle-sharding — the data-ordering primitive
-    * for multi-epoch training: shard(doc, epoch) = md5-low63("id:epoch")
-    * mod nShards, a re-runnable engine-independent permutation per epoch
-    * with no global sort and no materialized order (each epoch's reader
+    * for multi-epoch training: shard(doc, epoch) = md5-low63("id:epoch") mod
+    * 16 for epochs 0 and 1, a re-runnable engine-independent permutation per
+    * epoch with no global sort and no materialized order (each epoch's reader
     * just filters its shard — a pure row-local predicate at 10^12 rows).
-    * Output is the per-(epoch, shard) census proving balance +
-    * membership. */
-  def epochShards(df: DataFrame, epochs: Int = 2,
-                  nShards: Int = 16): DataFrame = {
+    * Output is the per-(epoch, shard) census proving balance + membership. */
+  def epochShards(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long")).as[Long]
       .flatMap { id =>
-        Iterator.tabulate(epochs) { e =>
-          (e.toLong, TextOps.md5Low63(id.toString + ":" + e) % nShards, id)
+        Iterator.tabulate(2) { e =>
+          (e.toLong, TextOps.md5Low63(id.toString + ":" + e) % 16, id)
         }
       }
       .toDF("epoch", "shard", "doc_id")
@@ -835,13 +856,13 @@ object CorpusOps {
     * it is scan-bandwidth-bound. Output is hash+length per doc so the
     * driver compare stays compact while pinning the exact normalized
     * bytes. */
-  def normalizeText(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val norm = trim(regexp_replace(regexp_replace(col(textCol),
+  def normalizeText(df: DataFrame): DataFrame = {
+    val norm = trim(regexp_replace(regexp_replace(col("text"),
       "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""), "\\s+", " "))
     df.select(col("doc_id"),
       md5(norm.cast("binary")).as("norm_hash"),
       length(norm).cast("long").as("norm_len"),
-      (length(col(textCol)) - length(norm)).cast("long").as("n_removed"))
+      (length(col("text")) - length(norm)).cast("long").as("n_removed"))
   }
 
   /** Confusable characters the skeleton folds to ASCII (Unicode TR39
@@ -862,10 +883,10 @@ object CorpusOps {
     * n_raw=1 and are excluded — they belong to p01). Pure codegen
     * translate/lower/md5 chain: the skeleton never leaves the scan stage,
     * only (16-byte hash) rows reach the one keyed aggregation. */
-  def homoglyphDedup(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val skeleton = lower(translate(col(textCol), confusableFrom, confusableTo))
+  def homoglyphDedup(df: DataFrame): DataFrame = {
+    val skeleton = lower(translate(col("text"), confusableFrom, confusableTo))
     df.select(col("doc_id"), md5(skeleton.cast("binary")).as("skeleton_md5"),
-        md5(col(textCol).cast("binary")).as("raw_md5"))
+        md5(col("text").cast("binary")).as("raw_md5"))
       .groupBy(col("skeleton_md5"))
       .agg(count(lit(1)).as("n_docs"),
            countDistinct(col("raw_md5")).as("n_raw"),
@@ -876,8 +897,8 @@ object CorpusOps {
 
   /** Merkle-style replica diff — anti-entropy for 10^12-row table copies:
     * comparing two replicas row-by-row costs a full-table join, but drift
-    * is rare, so each side first folds to per-block fingerprints
-    * (bit_xor of per-doc md5-low63 — order-independent, overflow-free;
+    * is rare, so each side first folds to per-block fingerprints (256
+    * consecutive doc_ids a block; bit_xor of per-doc md5-low63 — order-independent, overflow-free;
     * the p88 etag algebra) and ONLY rows of blocks whose (fingerprint,
     * count) disagree are re-read and row-diffed. The differing-block set
     * is tiny by construction (drift is the exception), so the drill-down
@@ -886,13 +907,12 @@ object CorpusOps {
     * direct full-outer row diff — (doc_id, status ∈ changed /
     * missing_left / missing_right) — which is what the oracle computes
     * WITHOUT the Merkle pruning, so losslessness is driver-checked. */
-  def merkleDiff(left: DataFrame, right: DataFrame,
-                 blockBits: Int = 8): DataFrame = {
+  def merkleDiff(left: DataFrame, right: DataFrame): DataFrame = {
     def rows(df: DataFrame): DataFrame = {
       val spark = df.sparkSession
       import spark.implicits._
       df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .map { case (id, t) => (id, id >> blockBits, TextOps.md5Low63(t)) }
+        .map { case (id, t) => (id, id >> 8, TextOps.md5Low63(t)) }
         .toDF("doc_id", "blk", "h")
     }
     def fp(t: DataFrame, side: String): DataFrame =
@@ -920,25 +940,23 @@ object CorpusOps {
   /** Source-mixture token-budget planner (p50) — the data-MIXING step a
     * pretraining corpus build runs after per-source accounting (the
     * SlimPajama/Dolma-style weighting pass): given md5-derived per-source
-    * target weights and a global token budget (`budgetPct` of supply),
+    * target weights in 1..5 and a global token budget (`budgetPct` of supply),
     * compute each source's target allocation, sampling rate (permille),
     * planned yield and deficit in pure integer arithmetic. The corpus-wide
     * work is ONE partial+final aggregate keyed by source; everything after
     * runs on the tiny per-source rollup (a 1-row totals cross join that
     * Catalyst broadcasts). The oracle rebuilds weights and every division
     * from the same md5 + floor-div rules bit-for-bit. */
-  def mixturePlan(df: DataFrame, budgetPct: Int = 60,
-                  weightBuckets: Int = 5): DataFrame = {
+  def mixturePlan(df: DataFrame, budgetPct: Int = 60): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val wb = weightBuckets
     val per = df.select(col("source"),
         size(TextOps.wsTokens(col("text"))).cast("long").as("tk"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tk")).as("n_tokens"))
       .as[(String, Long, Long)]
       .map { case (src, nd, nt) =>
-        (src, nd, nt, TextOps.md5Low63(src + "|mix") % wb + 1)
+        (src, nd, nt, TextOps.md5Low63(src + "|mix") % 5 + 1)
       }.toDF("source", "n_docs", "n_tokens", "weight")
     val tot = per.agg(sum(col("n_tokens")).as("t_tokens"),
       sum(col("weight")).as("t_weight"))
@@ -993,10 +1011,10 @@ object CorpusOps {
     * ties. All arithmetic is integer (rank = (q·n + 99) div 100,
     * err_permille = |est − exact|·1000 div exact) so DuckDB replicates the
     * output bit-for-bit. */
-  def quantileValidate(df: DataFrame, k: Int = 256,
-                       qs: Seq[Int] = Seq(25, 50, 75, 90)): DataFrame = {
+  def quantileValidate(df: DataFrame, k: Int = 256): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val qs = Seq(25, 50, 75, 90) // the reported percentiles
     import org.apache.spark.sql.expressions.Window
     val v = df.select(col("doc_id").cast("long").as("id"),
       col("n_chars").cast("long").as("value"))
@@ -1249,10 +1267,9 @@ object CorpusOps {
     * The drift monitor a crawl pipeline runs between snapshots. (The
     * scaled sup needs n_a·n_b < 2^63: exact below ~3e9 rows per slice;
     * beyond that pre-aggregate counts to ppm before the sweep.) */
-  def ksDrift(a: DataFrame, b: DataFrame,
-              valueCol: String = "n_chars"): DataFrame = {
+  def ksDrift(a: DataFrame, b: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = col(valueCol).cast("long").as("v")
+    val v = col("n_chars").cast("long").as("v")
     val both = a.select(v, lit(1L).as("ia"), lit(0L).as("ib"))
       .unionByName(b.select(v, lit(0L).as("ia"), lit(1L).as("ib")))
     val byVal = both.groupBy(col("v"))
@@ -1272,7 +1289,7 @@ object CorpusOps {
   }
 
   /** Feature-hashing doc vectors (the hashing trick, Weinberger et al.
-    * 2009): each token occurrence lands in one of `d` signed buckets via
+    * 2009): each token occurrence lands in one of d = 64 signed buckets via
     * two salted md5-low63 hashes (bucket + sign) — the cheap fixed-width
     * document representation classifiers/cluster-prep consume when
     * embeddings are too expensive. One explode-free typed pass builds the
@@ -1281,10 +1298,10 @@ object CorpusOps {
     * shuffles and the op is embarrassingly parallel. The md5-low63 hashes
     * are shared with DuckDB's `md5_number_lower`, so the oracle rebuilds
     * the identical vectors from the raw corpus. */
-  def hashVectorStats(df: DataFrame, d: Int = 64): DataFrame = {
+  def hashVectorStats(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val dim = d
+    val dim = 64
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val v = new Array[Long](dim)
@@ -1389,10 +1406,12 @@ object CorpusOps {
     * that point swap the BIGINT product for the decimal form in both
     * engines. Reference analogue: none (engine addition, corpus-stats
     * family alongside tokenDf/bigram surprisal). */
-  def pmiPairs(df: DataFrame, window: Int = 5, minCo: Int = 2,
-               topK: Int = 50): DataFrame = {
+  def pmiPairs(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val window = 5 // tokens per sliding window
+    val minCo = 2  // co-occurrence floor applied before the marginal join
+    val topK = 50
     val toks = df.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
     val pairs = toks.flatMap { case (_, text) =>
@@ -1462,19 +1481,18 @@ object CorpusOps {
   }
 
   /** k-ANONYMITY census over quasi-identifiers — the privacy-risk rollup a
-    * release pipeline runs before publishing corpus metadata: documents
-    * whose (source, lang, size-bucket) combination is shared by fewer than
+    * release pipeline runs before publishing corpus metadata: documents whose
+    * (source, lang, 256-char size bucket) combination is shared by fewer than
     * k documents are re-identifiable from metadata alone. Emits the full
     * group-size histogram (size → number of groups, number of docs) plus a
-    * cumulative below-k doc count per size, so every k threshold is
-    * readable from one result. Scale shape: one keyed agg over the
-    * quasi-identifier (partial map-side), then a tiny size histogram — the
-    * expensive part is exactly one shuffle of (source, lang, bucket) keys,
-    * never text. */
-  def kAnonymity(df: DataFrame, bucketChars: Int = 256): DataFrame = {
+    * cumulative below-k doc count per size, so every k threshold is readable
+    * from one result. Scale shape: one keyed agg over the quasi-identifier
+    * (partial map-side), then a tiny size histogram — the expensive part is
+    * exactly one shuffle of (source, lang, bucket) keys, never text. */
+  def kAnonymity(df: DataFrame): DataFrame = {
     val groups = df
       .groupBy(col("source"), col("lang"),
-        expr(s"n_chars div $bucketChars").as("size_bucket"))
+        expr("n_chars div 256").as("size_bucket"))
       .agg(count(lit(1)).as("group_size"))
     groups.groupBy(col("group_size"))
       .agg(count(lit(1)).as("n_groups"))

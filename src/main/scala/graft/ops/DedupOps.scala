@@ -13,6 +13,22 @@ import java.util.regex.Pattern
   */
 object DedupOps {
 
+  /** Word-shingle width of the near-dup family. */
+  private val ShingleW = 3
+
+  /** MinHash LSH banding: 32 bands × 3 rows = 96 hashes, and the verified
+    * Jaccard floor in percent (see [[minhashLsh]] for the recall math). */
+  private val LshBands = 32
+  private val LshRowsPerBand = 3
+  private val LshMinJaccardPct = 60
+
+  /** Jaccard floor in percent of the exact, prefix-filtered and weighted
+    * pair ops. */
+  private val PairMinPct = 50
+
+  /** Round cap of the large-star/small-star loop ([[labelByStars]]). */
+  private val MaxStarRounds = 25
+
   /** NFC-canonical duplicate clusters: exact dedup (p01) keyed on
     * `md5(NFC(text))` instead of `md5(text)`, unifying composed and
     * decomposed Unicode twins ('é' = U+00E9 vs 'e'+U+0301) that byte-hash
@@ -46,9 +62,10 @@ object DedupOps {
   /** Distinct word w-shingle count per doc — typed map: the Column
     * formulation re-inlines the tokenizer per array element (O(tokens²),
     * measured 30×+ slowdowns). */
-  def shingleCounts(df: DataFrame, w: Int = 3): DataFrame = {
+  def shingleCounts(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val w = ShingleW
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val toks = wsPat.split(text.trim)
@@ -59,14 +76,6 @@ object DedupOps {
         (id, n)
       }
       .toDF("doc_id", "n_shingles")
-  }
-
-  /** Word w-shingles of the text as an array column. */
-  def shingles(text: Column, w: Int = 3): Column = {
-    val toks = split(trim(text), "\\s+")
-    when(size(toks) < w, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(0), size(toks) - w),
-        i => concat_ws(" ", slice(toks, i + 1, lit(w)))))
   }
 
   /** splitmix64 finalizer — cheap per-seed derived hashes so each shingle
@@ -96,7 +105,7 @@ object DedupOps {
   /** Per-doc distinct shingle sets: (doc_id, sh). At 100 TB this table is
     * written bucketed by doc_id (TableIO.writeBucketed) so the verify joins
     * below are shuffle-free on the big side. */
-  def shingleSets(df: DataFrame, w: Int = 3): DataFrame = {
+  private def shingleSets(df: DataFrame, w: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -108,8 +117,8 @@ object DedupOps {
     * ONLY — no shingle payload. A pure-Catalyst formulation re-inlines the
     * per-lane min expression into every band key (measured 30× blowup), so
     * the per-row loop runs as a typed map: O(shingles × numHashes) once. */
-  def minhashBands(df: DataFrame, w: Int, bands: Int,
-                   rowsPerBand: Int): DataFrame = {
+  private def minhashBands(df: DataFrame, w: Int, bands: Int,
+                           rowsPerBand: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -146,8 +155,9 @@ object DedupOps {
   /** LSH candidate pairs only (no verification) — the banded self-join
     * shared by `minhashLsh` and the recall-measurement query (p46).
     * Shuffle payload is the 24-byte (doc_id, band_id, band_key) row. */
-  def minhashCandidates(df: DataFrame, w: Int = 3, bands: Int = 32,
-                        rowsPerBand: Int = 3): DataFrame = {
+  def minhashCandidates(df: DataFrame, w: Int = ShingleW,
+                        bands: Int = LshBands,
+                        rowsPerBand: Int = LshRowsPerBand): DataFrame = {
     val banded = minhashBands(df, w, bands, rowsPerBand)
       .select(col("doc_id"),
         posexplode(col("band_keys")).as(Seq("band_id", "band_key")))
@@ -169,7 +179,7 @@ object DedupOps {
     * fetched for the (tiny) candidate set afterwards via two doc_id-keyed
     * joins against `shingleSets`, co-located when that table is bucketed.
     *
-    * Defaults (32 bands × 3 rows = 96 hashes) put candidate-recall at
+    * The banding (32 bands × 3 rows = 96 hashes) puts candidate-recall at
     * Jaccard 0.6 at 1-(1-0.6³)^32 ≈ 0.9996 with false-positive mass per
     * random pair ≈ s³·32 (s ≈ corpus background similarity) — chosen so the
     * LSH output equals the exact-Jaccard pair set on the verification data,
@@ -181,12 +191,11 @@ object DedupOps {
     * distinct text ([[minhashLshUncollapsed]]) then expanding member
     * pairs arithmetically is output-identical (spec-pinned) and removes
     * the dup-cluster quadratic from every band bucket. */
-  def minhashLsh(df: DataFrame, w: Int = 3, bands: Int = 32,
-                 rowsPerBand: Int = 3, minJaccardPct: Int = 60): DataFrame = {
+  def minhashLsh(df: DataFrame): DataFrame = {
     val (repDocs, members) = textGroups(df)
-    val repPairs = minhashLshUncollapsed(repDocs, w, bands, rowsPerBand,
-      minJaccardPct)
-    val withinVals = shingleSets(repDocs, w)
+    val repPairs = minhashLshUncollapsed(repDocs, ShingleW, LshBands,
+      LshRowsPerBand, LshMinJaccardPct)
+    val withinVals = shingleSets(repDocs, ShingleW)
       .select(col("doc_id").as("rep_id"),
         size(col("sh")).as("n_inter"))
       .withColumn("n_union", col("n_inter"))
@@ -227,13 +236,12 @@ object DedupOps {
     * the self-join path, so any pair the full run finds between the two
     * sets, this finds. Emits (doc_a ∈ delta, doc_b ∈ index) with the
     * exact-Jaccard verify counts. */
-  def minhashIncremental(index: DataFrame, delta: DataFrame, w: Int = 3,
-                         bands: Int = 32, rowsPerBand: Int = 3,
-                         minJaccardPct: Int = 60): DataFrame = {
-    val bi = minhashBands(index, w, bands, rowsPerBand)
+  def minhashIncremental(index: DataFrame, delta: DataFrame): DataFrame = {
+    val w = ShingleW
+    val bi = minhashBands(index, w, LshBands, LshRowsPerBand)
       .select(col("doc_id").as("doc_b"),
         posexplode(col("band_keys")).as(Seq("band_id", "band_key")))
-    val bd = minhashBands(delta, w, bands, rowsPerBand)
+    val bd = minhashBands(delta, w, LshBands, LshRowsPerBand)
       .select(col("doc_id").as("doc_a"),
         posexplode(col("band_keys")).as(Seq("band_id", "band_key")))
     val cand = bd.join(bi, Seq("band_id", "band_key"))
@@ -248,7 +256,7 @@ object DedupOps {
       .join(broadcast(withA), "doc_b")
       .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("n_union", size(array_union(col("sh_a"), col("sh_b"))))
-      .where(col("n_inter") * 100 >= col("n_union") * minJaccardPct)
+      .where(col("n_inter") * 100 >= col("n_union") * LshMinJaccardPct)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
   }
 
@@ -273,7 +281,7 @@ object DedupOps {
       .toDF("doc_id", "band0", "band1", "band2", "band3")
   }
 
-  def simhashSig(text: String): Long = {
+  private def simhashSig(text: String): Long = {
     val votes = new Array[Int](64)
     wsPat.split(text.trim).foreach { tok =>
       val h = Corpus64.md5Low64(tok)
@@ -371,8 +379,8 @@ object DedupOps {
     * rep per distinct text; member pairs expand arithmetically —
     * output-identical to [[exactJaccardPairsUncollapsed]] (spec-pinned),
     * join cost no longer quadratic in dup-cluster size. */
-  def exactJaccardPairs(df: DataFrame, w: Int = 3,
-                        minJaccardPct: Int = 50,
+  def exactJaccardPairs(df: DataFrame, w: Int = ShingleW,
+                        minJaccardPct: Int = PairMinPct,
                         maxDf: Option[Int] = None): DataFrame = {
     val (repDocs, members, csize) = textGroupsSized(df)
     maxDf match {
@@ -504,8 +512,8 @@ object DedupOps {
 
   /** Docs-level wrapper over the candidate generator (spec/audit entry:
     * candidate counts are the observable the prefix filter exists to cut). */
-  def prefixJaccardCandidates(df: DataFrame, w: Int,
-                              minJaccardPct: Int): DataFrame =
+  private[graft] def prefixJaccardCandidates(df: DataFrame, w: Int,
+                                            minJaccardPct: Int): DataFrame =
     prefixJaccardCandidates(shingleHashTable(df, w), minJaccardPct)
 
   /** Exact Jaccard pairs via prefix filtering — bit-identical output to
@@ -525,13 +533,12 @@ object DedupOps {
     * disk on exactly this join; the reps-only prefix join
     * ([[prefixFilteredJaccardPairsUncollapsed]]) + arithmetic expansion is
     * output-identical (spec-pinned). */
-  def prefixFilteredJaccardPairs(df: DataFrame, w: Int = 3,
-                                 minJaccardPct: Int = 50,
+  def prefixFilteredJaccardPairs(df: DataFrame,
                                  materialize: Boolean = false): DataFrame = {
     val (repDocs, members) = textGroups(df)
-    val repPairs = prefixFilteredJaccardPairsUncollapsed(repDocs, w,
-      minJaccardPct, materialize)
-    val withinVals = shingleHashTable(repDocs, w)
+    val repPairs = prefixFilteredJaccardPairsUncollapsed(repDocs, ShingleW,
+      PairMinPct, materialize)
+    val withinVals = shingleHashTable(repDocs, ShingleW)
       .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
       .select(col("doc_id").as("rep_id"),
         col("n_sh").cast("long").as("n_inter"),
@@ -585,8 +592,10 @@ object DedupOps {
     * join, arithmetic expansion, within pairs at w_inter = w_union = wsum
     * (output-identical to [[weightedJaccardPairsUncollapsed]],
     * spec-pinned). */
-  def weightedJaccardPairs(df: DataFrame, w: Int = 3, minPct: Int = 50,
+  def weightedJaccardPairs(df: DataFrame,
                            maxDf: Option[Int] = None): DataFrame = {
+    val w = ShingleW
+    val minPct = PairMinPct
     val (repDocs, members, csize) = textGroupsSized(df)
     maxDf match {
       case Some(cap) =>
@@ -686,9 +695,10 @@ object DedupOps {
     * has tiny Jaccard (union is dominated by the long doc) but containment
     * |fp(A) ∩ fp(B)| / |fp(A)| ≈ 1. Runs over winnowing fingerprints
     * (`TextOps.fingerprints`, Schleimer et al. SIGMOD'03) with LONG grams
-    * (k=12 chars) so cross-doc collisions mean real shared substrings,
-    * not common words. Emits BOTH directions of each overlapping pair
-    * (containment is directional; exact dups score 100 both ways).
+    * (k = 12 chars, winnowing window 8) so cross-doc collisions mean real
+    * shared substrings, not common words. Emits BOTH directions of each
+    * overlapping pair (containment is directional; exact dups score 100
+    * both ways).
     * Integer-only output: containment_pct = (n_shared·100) div n_fp.
     *
     * Scale shape = `exactJaccardPairs`: only (doc_id, 8-byte fp) rows
@@ -698,15 +708,14 @@ object DedupOps {
     * grams pair everything with everything). n_fp comes from the
     * UNCAPPED set, so the cap can only undercount n_shared — the same
     * documented recall trade as the capped Jaccard path. */
-  def containmentPairs(df: DataFrame, minPct: Int = 50, k: Int = 12,
-                       window: Int = 8,
+  def containmentPairs(df: DataFrame, minPct: Int = 50,
                        maxDf: Option[Int] = None,
                        materialize: Boolean = false): DataFrame = {
     // the fingerprint table feeds sizes AND both self-join sides; exchange
     // reuse does not fire across the typed flatMap, so without
     // `materialize` the corpus re-fingerprints three times (measured
     // 13.4 s → 3.5 s at sf0.1 with the checkpoint + df cap)
-    val fpsRaw = TextOps.fingerprints(df, k, window) // distinct (doc_id, fp)
+    val fpsRaw = TextOps.fingerprints(df, 12, 8) // distinct (doc_id, fp)
     val fps = if (materialize) fpsRaw.localCheckpoint(false) else fpsRaw
     val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val indexed = maxDf.fold(fps) { cap =>
@@ -800,14 +809,14 @@ object DedupOps {
     *    job-count-bound, not data-bound: each loop round costs jobs and
     *    exchanges that the edges never repay (p26 at sf0.01: 42 → 18
     *    jobs, 39 → 13 exchanges). This branch always returns the
-    *    converged labelling, whatever `maxIterations`.
+    *    converged labelling.
     *  - above it: alternating large-star / small-star ([[labelByStars]]),
     *    which returns the same labelling whenever it converges within
-    *    `maxIterations` rounds. */
-  def dupClusters(pairs: DataFrame, maxIterations: Int = 25): DataFrame = {
+    *    [[MaxStarRounds]] rounds. */
+  def dupClusters(pairs: DataFrame): DataFrame = {
     val (edges, sig) = canonicalEdges(pairs)
     if (sig._1 <= DriverCcEdgeLimit) labelOnDriver(edges)
-    else labelByStars(edges, sig, maxIterations)
+    else labelByStars(edges, sig, MaxStarRounds)
   }
 
   /** Edge count up to which [[dupClusters]] labels on the driver. Speed
@@ -977,9 +986,7 @@ object DedupOps {
     * collapse's ~25 M expanded in-cluster edges never being built here.
     * On a dup-light corpus (more than [[DupClustersCollapseRatio]] of the
     * docs are distinct texts) it runs that classic composition instead. */
-  def dupClustersOverDocs(df: DataFrame, w: Int = 3, bands: Int = 32,
-                          rowsPerBand: Int = 3, minJaccardPct: Int = 60,
-                          maxIterations: Int = 25): DataFrame = {
+  def dupClustersOverDocs(df: DataFrame): DataFrame = {
     val (repDocs, members, stats) = textGroupsSized(df)
     // ADAPTIVE (r6, the topPairs lesson): the rep-level path adds ~4
     // exchanges of label-expansion machinery, which only pays for itself
@@ -992,11 +999,10 @@ object DedupOps {
       .head()
     val (dCount, nTotal) = (cnt.getLong(0), cnt.getLong(1))
     if (dCount > DupClustersCollapseRatio * nTotal)
-      return dupClusters(minhashLsh(df, w, bands, rowsPerBand,
-        minJaccardPct), maxIterations)
-    val repPairs = minhashLshUncollapsed(repDocs, w, bands, rowsPerBand,
-      minJaccardPct)
-    val inPairs = dupClusters(repPairs, maxIterations)
+      return dupClusters(minhashLsh(df))
+    val repPairs = minhashLshUncollapsed(repDocs, ShingleW, LshBands,
+      LshRowsPerBand, LshMinJaccardPct)
+    val inPairs = dupClusters(repPairs)
       .select(col("doc_id").as("rep_id"), col("cluster_id"))
     val lonelyDupGroups = stats.where(col("csize") >= 2L)
       .select(col("rep_id"))
@@ -1028,8 +1034,8 @@ object DedupOps {
     * so the output is row-identical to a from-scratch [[dupClusters]]
     * over base ∪ delta, which is exactly what the driver oracle
     * recomputes (gate-the-theorem, as in p122/p131). */
-  def dupClustersIncremental(baseLabels: DataFrame, deltaPairs: DataFrame,
-                             maxIterations: Int = 25): DataFrame = {
+  def dupClustersIncremental(baseLabels: DataFrame,
+                             deltaPairs: DataFrame): DataFrame = {
     val base = baseLabels.select(col("doc_id").cast("long").as("doc_id"),
       col("cluster_id").cast("long").as("lbl"))
     val delta = deltaPairs
@@ -1046,7 +1052,7 @@ object DedupOps {
     val labelEdges = delta.join(la, Seq("doc_a")).join(lb, Seq("doc_b"))
       .select(col("la").as("doc_a"), col("lb").as("doc_b"))
       .where(col("doc_a") =!= col("doc_b"))
-    val remap = dupClusters(labelEdges, maxIterations)
+    val remap = dupClusters(labelEdges)
       .select(col("doc_id").as("lbl"), col("cluster_id").as("new_lbl"))
     val relabeled = members.join(broadcast(remap), Seq("lbl"), "left")
       .select(col("doc_id"),
@@ -1108,12 +1114,11 @@ object DedupOps {
     * equi-join on the full hash (hamming 0 always qualifies), and
     * qualifying cross-signature pairs expand back to members — the sf10
     * probe measured this op's pre-collapse band join filling the disk on
-    * dup clusters of 100 exactly like p113's. `maxBandBucket` is the
-    * p127-style hot-bucket recall cap over distinct signatures. Below
-    * that cap the output equals [[simhashPairsUncollapsed]]'s
-    * (spec-pinned). */
-  def simhashPairs(df: DataFrame, maxHamming: Int = 3,
-                   maxBandBucket: Int = 4096): DataFrame = {
+    * dup clusters of 100 exactly like p113's. Band buckets holding more
+    * than 4096 distinct signatures are dropped: the p127-style hot-bucket
+    * recall cap. Below that cap the output equals
+    * [[simhashPairsUncollapsed]]'s (spec-pinned). */
+  def simhashPairs(df: DataFrame, maxHamming: Int = 3): DataFrame = {
     val sh = simhashTable(df)
     val same = sh.as("x").join(sh.as("y"),
         col("x.simhash") === col("y.simhash") &&
@@ -1126,7 +1131,7 @@ object DedupOps {
       posexplode(array(bandsOf(col("simhash")): _*))
         .as(Seq("band_id", "band_key")))
     val okBuckets = banded.groupBy(col("band_id"), col("band_key"))
-      .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBandBucket)
+      .agg(count(lit(1)).as("bn")).where(col("bn") <= 4096)
       .select(col("band_id"), col("band_key"))
     val pruned = banded.join(okBuckets, Seq("band_id", "band_key"))
     val sigPairs = pruned.as("l").join(pruned.as("r"),
@@ -1201,10 +1206,11 @@ object DedupOps {
     * corpus scan. Output is identical either way (spec-pinned). Raw text
     * never crosses an exchange. Heavy boilerplate hashes skew the join
     * key — AQE skew-join splits those partitions at scale. */
-  def lineDedupStats(df: DataFrame, blockLen: Int = 8,
-                     minOcc: Int = 2, materialize: Boolean = false): DataFrame = {
+  def lineDedupStats(df: DataFrame, materialize: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val blockLen = 8 // tokens per block
+    val minOcc = 2   // a block seen twice corpus-wide is a duplicate
     val blocks = df.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
@@ -1245,9 +1251,11 @@ object DedupOps {
     * one doc-keyed window over duplicated positions only — text never
     * crosses an exchange. Reference analogue: none (engine addition,
     * SURVEY §2.3 dedup family). */
-  def dupSpans(df: DataFrame, w: Int = 4, minDf: Int = 2): DataFrame = {
+  def dupSpans(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val w = 4     // gram width in words
+    val minDf = 2 // occurrences that make a gram duplicated
     val g = df.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
@@ -1280,7 +1288,7 @@ object DedupOps {
   }
 
   /** Character-level near-duplicate pairs (Levenshtein distance ≤ 1) over
-    * a short key column, via SymmetricDelete deletion-neighborhood
+    * the short `title` column, via SymmetricDelete deletion-neighborhood
     * blocking: every key generates itself plus its L single-character
     * deletions, and any two strings within edit distance 1 necessarily
     * share at least one neighborhood entry (equal → the string itself;
@@ -1292,9 +1300,9 @@ object DedupOps {
     * prefixes) can be df-capped exactly like the shingle path (p25).
     * Engine addition (no reference analogue): short-field entity
     * resolution — titles, URLs, product names. */
-  def editDistanceNearDups(df: DataFrame, idCol: String = "doc_id",
-                           keyCol: String = "title"): DataFrame = {
-    val t0 = df.select(col(idCol).cast("long").as("id"), col(keyCol).as("t"))
+  def editDistanceNearDups(df: DataFrame): DataFrame = {
+    val t0 = df.select(col("doc_id").cast("long").as("id"),
+      col("title").as("t"))
     val dels = transform(sequence(lit(1), length(col("t"))),
       i => concat(col("t").substr(lit(1), i - 1),
                   col("t").substr(i + 1, length(col("t")) - i)))
@@ -1321,9 +1329,10 @@ object DedupOps {
     * hash join on the first-`keyLen`-chars blocking key, then an exact
     * startsWith verify inside codegen. Docs shorter than `keyLen` cannot
     * form a blocking key and are out of contract (documented, not silent:
-    * the caller picks keyLen below the truncation threshold). */
-  def prefixDups(df: DataFrame, keyLen: Int = 64,
-                 maxPrefixLen: Int = 150): DataFrame = {
+    * keyLen sits below the truncation threshold). */
+  def prefixDups(df: DataFrame): DataFrame = {
+    val keyLen = 64        // blocking-key length in chars
+    val maxPrefixLen = 150 // longest doc taken as a truncated prefix
     val t = df.select(col("doc_id").cast("long").as("doc_id"), col("text"),
       length(col("text")).as("len"),
       col("text").substr(1, keyLen).as("k"))

@@ -65,7 +65,7 @@ object EventOps {
   }
 
   /** Ordered 3-step funnel (view → click → purchase, each step within
-    * `windowUs` of the previous) per user via the secondary-sort pattern:
+    * 24 h of the previous) per user via the secondary-sort pattern:
     * one hash repartition on user_id, an in-partition sort on (user, k),
     * then a single-pass state machine — no window function, no per-step
     * self-joins. `k = rel_us * 10^6 + event_id` is a strictly-ordered
@@ -74,11 +74,10 @@ object EventOps {
     * the conversion window is measured in the same composite-key space on
     * both engine and oracle, so the event_id low bits can never disagree.
     * Emits one row per user with the stage reached + step keys. */
-  def funnel(events: DataFrame,
-             windowUs: Long = 86400000000L): DataFrame = {
+  def funnel(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val winK = windowUs * 1000000L
+    val winK = 86400000000L * 1000000L // the 24 h window in µs, in k units
     val ev = withUs(events)
     val minUs = ev.agg(min(col("us")).as("m"))
     val keyed = ev.crossJoin(broadcast(minUs))
@@ -176,7 +175,7 @@ object EventOps {
   }
 
   /** Bidirectional nearest-event join (sensor-alignment shape): each
-    * `leftType` event matches the temporally NEAREST `rightType` event of
+    * click event matches the temporally NEAREST purchase event of
     * the same user, in either direction — the generalization of the
     * backward-only as-of join (q20). Formulated as one sorted sweep over
     * the union: last-right-before and first-right-after come from two
@@ -185,8 +184,9 @@ object EventOps {
     * equal distance resolve to the earlier right event; same-timestamp
     * rows order by event_id — fully deterministic. Unmatched left events
     * (users with no right event) keep null matches. */
-  def nearestEventJoin(events: DataFrame, leftType: String = "click",
-                       rightType: String = "purchase"): DataFrame = {
+  def nearestEventJoin(events: DataFrame): DataFrame = {
+    val leftType = "click"
+    val rightType = "purchase"
     val tagged = events
       .where(col("event_type").isin(leftType, rightType))
       .select(col("user_id").cast("long").as("user_id"),
@@ -239,7 +239,7 @@ object EventOps {
     * of q78's exact 3-day rolling MAU: per-day registers (the p20/p35
     * convention: p=6, m=64, rho = 58 − bitlen(h≫6), h = masked md5-low63
     * of the user id string) are built once, then each register row lands
-    * in the ≤`windowDays` trailing windows it contributes to (an explode
+    * in the ≤ windowDays = 3 trailing windows it contributes to (an explode
     * by constant ≤3 — the q55 sliding-window Expand pattern) and the
     * window sketch is a cellwise MAX — union without rescanning any day.
     * At scale this replaces q78's |distinct(user,day)|×3 band-join shuffle
@@ -248,9 +248,10 @@ object EventOps {
     * side by side with err_permille — the accuracy evidence that justifies
     * swapping the exact op out. Windows are keyed by their END day and
     * only actual event days emit. */
-  def hllSlidingUnion(events: DataFrame, windowDays: Int = 3): DataFrame = {
+  def hllSlidingUnion(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
+    val windowDays = 3
     val m = 64
     val wBits = 57
     val ud = withUs(events)
@@ -309,15 +310,15 @@ object EventOps {
     *
     * Recurrence, exact integer form (every engine replays the trajectory
     * bit-identically): s₁ = x₁;  sₜ = (aNum·xₜ + (aDen−aNum)·sₜ₋₁) div aDen
-    * over cents, ordered by (ts, event_id). Values must be ≥ 0 (cents
-    * here): Spark's `div`/Java floorDiv and SQL `//` agree on the
-    * non-negative domain, which the events table satisfies.
+    * with decay aNum/aDen = 1/8, over cents, ordered by (ts, event_id). Values
+    * must be ≥ 0 (cents here): Spark's `div`/Java floorDiv and SQL `//` agree
+    * on the non-negative domain, which the events table satisfies.
     * Output: one row per key (user_id, n_events, last_ewma_cents). */
-  def ewmaScan(events: DataFrame, aNum: Long = 1L,
-               aDen: Long = 8L): DataFrame = {
+  def ewmaScan(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    require(aNum > 0 && aDen > aNum, s"need 0 < aNum < aDen, got $aNum/$aDen")
+    val aNum = 1L
+    val aDen = 8L
     val ev = withUs(events)
       .select(col("user_id").cast("long").as("_1"), col("us").as("_2"),
         col("event_id").cast("long").as("_3"),

@@ -258,8 +258,9 @@ object GraphAnnOps {
     * q_emb) and entry node — the form the INSERT path uses, where the
     * queries are the new vectors (not yet in the graph) and the entry
     * must be a node the graph actually contains. */
-  def beamVisitedFor(emb: DataFrame, graph: DataFrame, queries: DataFrame,
-                     ef: Int, hops: Int, entry: Long): DataFrame =
+  private def beamVisitedFor(emb: DataFrame, graph: DataFrame,
+                             queries: DataFrame, ef: Int, hops: Int,
+                             entry: Long): DataFrame =
     beamVisitedSweepFor(emb, graph, queries, Seq(ef), hops, entry)
       .select(col("query_id"), col("node_id"))
       .orderBy(col("query_id"), col("node_id"))
@@ -273,9 +274,9 @@ object GraphAnnOps {
     * `emb` stay in the visited dump but never enter the beam (score NULL,
     * filtered before ranking) — exactly the r5 inner-join-scored
     * semantics. */
-  def beamVisitedSweepFor(emb: DataFrame, graph: DataFrame,
-                          queries: DataFrame, efs: Seq[Int], hops: Int,
-                          entry: Long): DataFrame = {
+  private def beamVisitedSweepFor(emb: DataFrame, graph: DataFrame,
+                                  queries: DataFrame, efs: Seq[Int], hops: Int,
+                                  entry: Long): DataFrame = {
     val adj = graph.select(col("node_id"), col("neighbor_id"))
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))

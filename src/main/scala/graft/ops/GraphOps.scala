@@ -29,7 +29,7 @@ object GraphOps {
 
   /** Deterministic out-edges, exactly [[Fanout]] per node (duplicates kept:
     * PageRank mass splits by out-slot, not by distinct target). */
-  def linkEdges(docs: DataFrame, n: Long): DataFrame = {
+  private[graft] def linkEdges(docs: DataFrame, n: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id").cast("long")).as[Long]
@@ -41,18 +41,18 @@ object GraphOps {
       .toDF("src", "dst")
   }
 
-  /** Integer-arithmetic PageRank, `iters` Pregel-style rounds: rank starts
+  /** Integer-arithmetic PageRank, 3 Pregel-style rounds: rank starts
     * at 10^9 per node; each round every node emits `rank div 4` along each
     * out-edge and collects `0.15 * 10^9 + (85 * sum(in)) div 100`. Each
     * round is one join (edges × ranks on src) + one keyed aggregation on
     * dst — the canonical iterative shape, with lineage truncated per round
     * (eager localCheckpoint) so the plan doesn't nest across iterations. */
-  def pagerank(docs: DataFrame, iters: Int = 3): DataFrame = {
+  def pagerank(docs: DataFrame): DataFrame = {
     val n = docs.count() // metadata-only count; keys the modular edge space
     val edges = linkEdges(docs, n).localCheckpoint(false)
     val nodes = docs.select(col("doc_id").cast("long").as("node"))
     var ranks = nodes.select(col("node"), lit(1000000000L).as("pr"))
-    (1 to iters).foreach { _ =>
+    (1 to 3).foreach { _ =>
       val sums = edges.join(ranks, edges("src") === ranks("node"))
         .select(col("dst"), expr("pr div 4").as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("in_sum"))

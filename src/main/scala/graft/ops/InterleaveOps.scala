@@ -172,17 +172,17 @@ object InterleaveOps {
   }
 
   /** Per-doc MULTIMODAL packing cost: whitespace tokens of the text spans
-    * plus `mediaTokens` per media span (a vision encoder emits a fixed
+    * plus 64 tokens per media span (a vision encoder emits a fixed
     * patch-token budget per image — 64 here). One typed pass; feeds
     * `PackingOps.packChunksCost`. */
-  def mmCosts(docs: Dataset[Doc], mediaTokens: Int = 64): DataFrame = {
+  def mmCosts(docs: Dataset[Doc]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val wsPat = "\\s+"
     docs.map { d =>
       var cost = 0L
       d.spans.foreach { s =>
-        if (s.kind == "media") cost += mediaTokens
+        if (s.kind == "media") cost += 64
         else {
           val t = s.text.trim
           cost += (if (t.isEmpty) 1 else t.split(wsPat).length)

@@ -142,14 +142,15 @@ object IvfOps {
     * (no retrain per ingest batch — `assign` is the whole insert path,
     * which is what makes IVF the cheapest index to maintain), and
     * retraining happens when this table says so, not as a reflex. Per
-    * cell: base/delta/total counts, total share in ppm, and the retrain
-    * trigger bit — total > `retrainFactorPct`% of the ideal N/k (a hot
+    * cell: base/delta/total counts, total share in ppm (null when both
+    * tables are empty), and the retrain trigger bit — total > 200 % of
+    * the ideal N/k (a hot
     * cell degrades recall at fixed nprobe because candidates concentrate
     * where the quantizer stopped separating them). All-integer; every
     * cell 0..k−1 is present even when empty (a STARVED cell is the other
     * retrain signal). The tiny window runs over exactly k rows. */
   def cellCensus(baseAssigned: DataFrame, deltaAssigned: DataFrame,
-                 k: Int, retrainFactorPct: Int = 200): DataFrame = {
+                 k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = baseAssigned.sparkSession
     val b = baseAssigned.groupBy(col("cell")).agg(count(lit(1)).as("n_base"))
@@ -164,18 +165,20 @@ object IvfOps {
       .withColumn("n_total", col("n_base") + col("n_delta"))
       .withColumn("grand", sum(col("n_total")).over(w))
       .withColumn("share_ppm",
-        expr("n_total * 1000000L div grand"))
+        expr("n_total * 1000000L div nullif(grand, 0)")) // no rows: null
       .withColumn("retrain_bit",
-        (col("n_total") * k * 100 > col("grand") * retrainFactorPct)
+        (col("n_total") * k * 100 > col("grand") * 200)
           .cast("long"))
       .drop("grand")
       .orderBy(col("cell"))
   }
 
-  /** End-to-end IVF ANN: train → assign → probe → rank. */
-  def ivfTopK(emb: DataFrame, numQueries: Int = 10, topK: Int = 10,
-              k: Int = 16, nprobe: Int = 2, iters: Int = 5): DataFrame = {
-    val centroids = train(emb, k, iters)
+  /** End-to-end IVF ANN: train → assign → probe → rank. Specs run it
+    * whole; the queries call the steps one by one. */
+  private[graft] def ivfTopK(emb: DataFrame, numQueries: Int = 10,
+                             topK: Int = 10, k: Int = 16,
+                             nprobe: Int = 2): DataFrame = {
+    val centroids = train(emb, k)
     topKFrom(emb, assign(emb, centroids),
       probes(emb, centroids, numQueries, nprobe), numQueries, topK)
   }

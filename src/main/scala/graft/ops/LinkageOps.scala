@@ -28,24 +28,26 @@ import org.apache.spark.sql.functions._
   */
 object LinkageOps {
 
+  /** Score threshold and balance tolerance (cents) of the public ops. */
+  private val Threshold = 18
+  private val CentsTol = 75
+
   /** Score all blocked candidate pairs and keep links with
-    * `score >= threshold`. Inputs carry columns
+    * `score >= Threshold`. Inputs carry columns
     * `(key, name, block, cents, seg)`; output one row per linked pair:
     * `(a_key, b_key, lev, w_name, w_bal, w_seg, score, is_true)` ordered
     * by keys.
     *
     *  - name: levenshtein 0 → +24 (exact), ≤2 → +12 (typo/transposition
     *    class), else −8
-    *  - cents: |Δ| ≤ `centsTol` → +10, else −6
+    *  - cents: |Δ| ≤ `CentsTol` → +10, else −6
     *  - seg: equal → +6, else −4
     *
     * One representative per attribute tuple is scored (see [[links]]);
     * the output equals the uncollapsed kernel's row for row
     * (spec-pinned). */
-  def fellegiSunterLinks(a: DataFrame, b: DataFrame,
-                         threshold: Int = 18,
-                         centsTol: Int = 75): DataFrame =
-    links(a, b, Seq(col("block")), threshold, centsTol, collapseExact = true)
+  def fellegiSunterLinks(a: DataFrame, b: DataFrame): DataFrame =
+    links(a, b, Seq(col("block")), Threshold, CentsTol, collapseExact = true)
       .orderBy(col("a_key"), col("b_key"))
 
   /** MULTI-PASS blocking — how production absorbs the single-block
@@ -53,13 +55,13 @@ object LinkageOps {
     * blocking field was corrupted never meets): a pair is a candidate
     * when it shares ANY of several cheap blocking keys. Keys here:
     *   1. the caller's `block` field (nation in p118);
-    *   2. cents ÷ W bands, W = 2·centsTol + 50;
+    *   2. cents ÷ W bands, W = 2·CentsTol + 50;
     *   3. the SAME bands offset by W/2 — the classic two-offset trick:
     *      union-grid boundaries are W/2 apart, so any pair within
-    *      W/2 − 1 ≥ centsTol cents straddles at most ONE grid's boundary
+    *      W/2 − 1 ≥ CentsTol cents straddles at most ONE grid's boundary
     *      and shares a band in the other pass — balance-compatible pairs
     *      are GUARANTEED to meet even when their blocking field was
-    *      corrupted, for ANY centsTol (the width derives from it).
+    *      corrupted, for ANY CentsTol (the width derives from it).
     * Banding uses FLOOR division (pmod-adjusted: Spark's `div` truncates
     * toward zero while DuckDB's `//` floors — q118's truncation-vs-floor
     * pin), so arbitrarily negative balances band identically on both
@@ -70,17 +72,15 @@ object LinkageOps {
     * three single-key [[fellegiSunterLinks]] runs for any input, repeated
     * keys included (spec-pinned): every p118 row plus the recovered
     * corrupted-block pairs. */
-  def fellegiSunterLinksMultiPass(a: DataFrame, b: DataFrame,
-                                  threshold: Int = 18,
-                                  centsTol: Int = 75): DataFrame = {
-    val width = 2 * centsTol + 50
+  def fellegiSunterLinksMultiPass(a: DataFrame, b: DataFrame): DataFrame = {
+    val width = 2 * CentsTol + 50
     val offset = width / 2
     // floor(x / w) for any-sign x: (x − pmod(x, w)) div w — pmod is
     // nonnegative, so the dividend is an exact multiple and trunc == floor
     def floorBand(shift: Int) =
       expr(s"(cents + $shift - pmod(cents + $shift, $width)) div $width")
     links(a, b, Seq(col("block"), floorBand(0), floorBand(offset)),
-      threshold, centsTol, collapseExact = true)
+      Threshold, CentsTol, collapseExact = true)
       .distinct()
       .orderBy(col("a_key"), col("b_key"))
   }

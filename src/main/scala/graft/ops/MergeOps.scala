@@ -77,13 +77,12 @@ object MergeOps {
     * is the operator that pays it down. */
   def mergeOnRead(base: DataFrame, eqDeletes: DataFrame,
                   posDeletes: DataFrame, inserts: DataFrame,
-                  key: String, fileCol: String = "file_id",
-                  posCol: String = "pos"): DataFrame = {
+                  key: String): DataFrame = {
     require(inserts.columns.sameElements(base.columns),
       "insert files must carry the base schema")
     base
-      .join(broadcast(posDeletes.select(fileCol, posCol)),
-        Seq(fileCol, posCol), "left_anti")
+      .join(broadcast(posDeletes.select("file_id", "pos")),
+        Seq("file_id", "pos"), "left_anti")
       .join(broadcast(eqDeletes.select(key)), Seq(key), "left_anti")
       .select(base.columns.map(col): _*) // restore base column order
       .unionAll(inserts)
@@ -117,8 +116,9 @@ object MergeOps {
 
   /** The rewrite half of [[cascadeDelete]]: the table minus the keyed
     * rows, via the same broadcast left-anti probe. */
-  def deleteFrom(df: DataFrame, key: String, deleteKeys: DataFrame,
-                 keyCol: String): DataFrame =
+  private[graft] def deleteFrom(df: DataFrame, key: String,
+                                deleteKeys: DataFrame,
+                                keyCol: String): DataFrame =
     df.join(
       broadcast(deleteKeys.select(col(keyCol).as("__del_key")).distinct()),
       df(key) === col("__del_key"), "left_anti")

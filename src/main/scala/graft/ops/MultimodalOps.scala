@@ -26,7 +26,8 @@ object MultimodalOps {
   /** SURROGATE for the real decoder (cv2.imread/resize in the reference,
     * preprocess.py:51-87): metadata and a feature vector derived
     * deterministically from the bytes. Replace with a codec call in prod. */
-  def fakeDecode(ref: String, bytes: Array[Byte]): (Int, Int, String, Int, Array[Float]) = {
+  private[graft] def fakeDecode(ref: String, bytes: Array[Byte])
+    : (Int, Int, String, Int, Array[Float]) = {
     val h = graft.io.Corpus.hash(ref)
     val width = 640 + (math.abs(h) % 1280).toInt
     val height = 480 + (math.abs(h >> 16) % 960).toInt
@@ -37,16 +38,16 @@ object MultimodalOps {
   }
 
   /** Extract every media span as (doc_id, media_ref, content: binary), then
-    * decode in a mapPartitions kernel batched `batchSize` at a time (the
+    * decode in a mapPartitions kernel batched 64 at a time (the
     * shape a GPU/codec batch API needs). */
-  def mediaTable(docs: Dataset[Doc], batchSize: Int = 64): Dataset[MediaMeta] = {
+  def mediaTable(docs: Dataset[Doc]): Dataset[MediaMeta] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap(d => d.spans.filter(_.kind == "media")
         .map(s => (d.doc_id, s.media_ref,
           s.media_ref.getBytes("UTF-8")))) // binary payload surrogate
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
+        it.grouped(64).flatMap { batch =>
           // batch boundary = where a real codec/model call would go
           batch.iterator.map { case (docId, ref, bytes) =>
             val (w, h, fmt, nf, feat) = fakeDecode(ref, bytes)
@@ -58,8 +59,8 @@ object MultimodalOps {
 
   /** Frame-sampling PLAN for video media — the decode pre-flight: before
     * any codec runs, emit exactly which frames each clip contributes at a
-    * uniform budget of `maxSamples` frames/clip, with NTSC-rational
-    * timestamps (`fps = fpsNum/fpsDen`, default 24000/1001) kept in exact
+    * uniform budget of maxSamples = 8 frames/clip, with NTSC-rational
+    * timestamps (`fps = fpsNum/fpsDen` = 24000/1001) kept in exact
     * integer arithmetic (`ts_ms = idx·1000·fpsDen DIV fpsNum`) so the
     * schedule is bit-reproducible — float fps drifts one frame every few
     * minutes and desyncs re-extraction. The selector
@@ -70,10 +71,8 @@ object MultimodalOps {
     * Scale shape: one codegen HOF chain (`sequence → transform`) and an
     * explode per media row — narrow, no shuffle, no UDF; the output IS the
     * work manifest a 10^12-doc frame-extraction stage shards by. */
-  def frameSampleSchedule(media: DataFrame, maxSamples: Int = 8,
-                          fpsNum: Long = 24000L,
-                          fpsDen: Long = 1001L): DataFrame = {
-    val k = least(lit(maxSamples.toLong), col("n_frames").cast("long"))
+  def frameSampleSchedule(media: DataFrame): DataFrame = {
+    val k = least(lit(8L), col("n_frames").cast("long"))
     media
       .select(col("doc_id"), col("media_ref"),
         col("n_frames").cast("long").as("n_frames"), k.as("sample_k"))
@@ -81,14 +80,10 @@ object MultimodalOps {
       .withColumn("frame_idx",
         expr("CAST(j * n_frames DIV sample_k AS BIGINT)"))
       .withColumn("ts_ms",
-        expr(s"CAST(frame_idx * 1000 * $fpsDen DIV $fpsNum AS BIGINT)"))
+        expr("CAST(frame_idx * 1000 * 1001 DIV 24000 AS BIGINT)"))
       .drop("j")
       .orderBy(col("doc_id"), col("media_ref"), col("frame_idx"))
   }
-
-  /** Per-format media statistics over the decoded metadata. */
-  def mediaStats(docs: Dataset[Doc]): DataFrame =
-    statsOver(mediaTable(docs).toDF())
 
   private def statsOver(media: DataFrame): DataFrame =
     media.groupBy(col("format"))
@@ -98,8 +93,9 @@ object MultimodalOps {
            max(col("height")).as("max_height"))
       .orderBy(col("format"))
 
-  /** mediaStats with the decoded media table materialized to `dumpPath`
-    * first, then aggregated from the dump — the dump is what gives the
+  /** Per-format media statistics over the decoded metadata, with the
+    * decoded media table materialized to `dumpPath` first, then
+    * aggregated from the dump — the dump is what gives the
     * driver's DuckDB oracle a table to aggregate over (the media table
     * itself is Scala-synthesized, so SQL can't rebuild it from parquet). */
   def mediaStatsDumped(docs: Dataset[Doc], dumpPath: String): DataFrame = {
@@ -194,8 +190,10 @@ object MultimodalOps {
     * sampling for video-style media. Pure integer/codegen math so the plan
     * is oracle-checkable over the dumped media table; the actual pixel
     * resample happens in the batched decode kernel at execution time. */
-  def preprocessPlan(media: DataFrame, targetWidth: Int = 1800,
-                     border: Int = 50, frameStep: Int = 30): DataFrame =
+  def preprocessPlan(media: DataFrame): DataFrame = {
+    val targetWidth = 1800
+    val border = 50
+    val frameStep = 30
     media.select(
       col("doc_id"), col("media_ref"), col("width"), col("height"),
       lit(targetWidth).as("new_width"),
@@ -209,4 +207,5 @@ object MultimodalOps {
       // double→int cast rounds half-even while Spark's truncates
       floor((col("n_frames") + frameStep - 1) / frameStep).cast("int")
         .as("n_sampled_frames"))
+  }
 }

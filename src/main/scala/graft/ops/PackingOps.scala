@@ -92,7 +92,8 @@ object PackingOps {
   /** Reference formulation (exactness contract for the spec): the
     * un-partitioned running-sum window. Correct, but plans a
     * SinglePartition exchange — test-only. */
-  def packChunksWindow(df: DataFrame, capacity: Int = 256): DataFrame = {
+  private[graft] def packChunksWindow(df: DataFrame,
+                                      capacity: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cap = capacity.toLong
     val base = df.select(col("doc_id").cast("long").as("doc_id"),
@@ -107,7 +108,7 @@ object PackingOps {
   }
 
   /** Rendezvous (highest-random-weight) shard assignment + the rebalance
-    * census for growing `oldShards` → `oldShards`+1: each key's shard is
+    * census for growing 16 → 17 shards: each key's shard is
     * the argmax over shards of md5(key ":" shard), so adding a shard moves
     * ONLY the keys the new shard now wins — ~1/(S+1) of the table, every
     * one of them INTO the new shard (the HRW minimal-disruption
@@ -118,7 +119,8 @@ object PackingOps {
     * is a codegen'd higher-order-function chain per row (transform →
     * struct array_max) + one keyed aggregate: a 10^12-key reshard PLAN
     * costs one narrow pass, no shuffle of the payload. */
-  def rendezvousShards(df: DataFrame, oldShards: Int = 16): DataFrame = {
+  def rendezvousShards(df: DataFrame): DataFrame = {
+    val oldShards = 16
     def weight(s: Column): Column =
       substring(md5(concat(col("doc_id").cast("string"), lit(":"),
         s.cast("string")).cast("binary")), 17, 16)

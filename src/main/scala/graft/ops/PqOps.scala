@@ -27,7 +27,7 @@ object PqOps {
   type LVec = Array[Long]
 
   /** Integer-quantized vectors: (vec_id, floor(x*1000) per dim). */
-  def quantized(emb: DataFrame): Dataset[(Long, LVec)] = {
+  private def quantized(emb: DataFrame): Dataset[(Long, LVec)] = {
     val spark = emb.sparkSession
     import spark.implicits._
     emb.select(col("vec_id").cast("long").as("_1"),

@@ -170,7 +170,7 @@ object SimilarityOps {
 
   /** The zip_with/aggregate formulation — retained as the executable spec
     * the native expression is equality-tested against. */
-  def cosineHof(a: Column, b: Column): Column = {
+  private[graft] def cosineHof(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     val na = sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
     val nb = sqrt(aggregate(b, lit(0.0), (acc, x) => acc + x * x))
@@ -257,7 +257,7 @@ object SimilarityOps {
     * (`dimensionStats`); the d scales (a few hundred bytes) ride into a
     * single codegen'd `transform` over the column — the quantization
     * itself never shuffles. */
-  def quantizeEmbeddings(emb: DataFrame): DataFrame = {
+  private[graft] def quantizeEmbeddings(emb: DataFrame): DataFrame = {
     val scales = dimensionStats(emb)
       .select(col("dim"), col("min_q"), col("max_q")).collect()
       .sortBy(_.getInt(0))
@@ -279,7 +279,7 @@ object SimilarityOps {
     * cosine ranking against the exact float ranking, per query — the
     * check a pipeline runs before switching its ANN fleet to compressed
     * vectors. Both rankings are the brute exactness baseline (the
-    * compressed scale path is quantize → `lshTopK`/IVF, same as the
+    * compressed scale path is quantize → `lshTopKFrom`/IVF, same as the
     * float family); quantized dots/norms are sums of |q|≤127 integer
     * products (≪ 2^53), so the cosine of quantized vectors is
     * bit-deterministic in BOTH engines despite the float division.
@@ -311,31 +311,29 @@ object SimilarityOps {
   }
 
   /** Sign-random-projection bucket id per vector (the IVF/LSH scale path):
-    * vectors in the same bucket are ANN candidates; search cost drops from
-    * O(N) to O(N / 2^bits) per query at the cost of recall. All bits are
-    * computed by the codegen'd SignLshBucket expression in one pass (the
-    * per-bit zip_with formulation ran `bits` interpreted array traversals
-    * per row); bit-identical per ExpressionSpec. */
-  def lshBuckets(emb: DataFrame, bits: Int = 8): DataFrame = {
-    val planes = hyperplanes(64, bits)
+    * vectors in the same bucket are ANN candidates; with 8 hyperplanes,
+    * search cost drops from O(N) to O(N / 2^8) per query at the cost of
+    * recall. All bits are computed by the codegen'd SignLshBucket
+    * expression in one pass (the per-bit zip_with formulation ran one
+    * interpreted array traversal per bit per row); bit-identical per
+    * ExpressionSpec. */
+  def lshBuckets(emb: DataFrame): DataFrame = {
+    val planes = hyperplanes(64, 8)
     emb.select(col("vec_id"),
       graft.functions.functions.sign_lsh_bucket(
         col("embedding").cast("array<double>"), planes).as("bucket"))
   }
 
-  /** Bucketed ANN top-k: same ranking as bruteTopK but candidates are
-    * restricted to the query's LSH bucket (candidate set ~N/2^bits). */
-  def lshTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 10,
-              bits: Int = 8): DataFrame =
-    lshTopKFrom(emb, lshBuckets(emb, bits), numQueries, k)
-
-  /** lshTopK over a provided (vec_id, bucket) assignment — lets the driver
-    * query materialize the (engine-hash-derived) buckets to parquet so the
-    * DuckDB oracle can recompute the bucket-restricted ranking exactly. */
-  def lshTopKFrom(emb: DataFrame, buckets: DataFrame, numQueries: Int = 10,
-                  k: Int = 10): DataFrame = {
+  /** Bucketed ANN top-k: same ranking as bruteTopK (the first 10 vec_ids
+    * as queries, 10 neighbors each) but candidates are restricted to the
+    * query's bucket in a provided (vec_id, bucket) assignment, such as
+    * [[lshBuckets]]' (candidate set ~N/2^8). Taking the assignment as
+    * input lets the driver query materialize the (engine-hash-derived)
+    * buckets to parquet so the DuckDB oracle can recompute the
+    * bucket-restricted ranking exactly. */
+  def lshTopKFrom(emb: DataFrame, buckets: DataFrame): DataFrame = {
     val withBucket = emb.join(buckets, "vec_id")
-    val queries = withBucket.orderBy(col("vec_id")).limit(numQueries)
+    val queries = withBucket.orderBy(col("vec_id")).limit(10)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("q_emb"),
         col("bucket").as("q_bucket"))
@@ -346,22 +344,21 @@ object SimilarityOps {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("score"))
-    rankTopK(scored, k)
+    rankTopK(scored, 10)
   }
 
   /** Exact global top-k most-similar pairs (vec_a < vec_b) by cosine.
     *
-    * Brute-force contract: one side must fit in a broadcast (same bound as
-    * any broadcast join) — the 10^12-row path is the LSH family
-    * (`embeddingNearDups`/`lshTopK`); this is the exactness baseline. The
-    * guard and the one driver collect run here, once; the collect then
-    * feeds the identical-vector collapse ([[topPairsCollapsed]]), which
-    * runs the brute kernel ([[bruteTopPairs]]) below
-    * [[TopPairsCollapseFloor]] rows or when its cost rule says the
-    * collapse does not pay. Both end in the same ranked tail
-    * ([[rankedPairs]]). Integer-only output (rank, vec_a, vec_b); ties
-    * break by (vec_a, vec_b); k ≤ 0 returns an empty frame of the same
-    * schema. */
+    * Brute-force contract: one side must fit in a broadcast (same bound as any
+    * broadcast join) — the 10^12-row path is the LSH family
+    * (`embeddingNearDupsFrom`/`lshTopKFrom`); this is the exactness baseline.
+    * The guard and the one driver collect run here, once; the collect then
+    * feeds the identical-vector collapse ([[topPairsCollapsed]]), which runs
+    * the brute kernel ([[bruteTopPairs]]) below [[TopPairsCollapseFloor]] rows
+    * or when its cost rule says the collapse does not pay. Both end in the
+    * same ranked tail ([[rankedPairs]]). Integer-only output (rank, vec_a,
+    * vec_b); ties break by (vec_a, vec_b); k ≤ 0 returns an empty frame of the
+    * same schema. */
   def topPairs(emb: DataFrame, k: Int = 100,
                maxBroadcastRows: Long = BruteRowLimit): DataFrame =
     topPairsWithFloor(emb, k, maxBroadcastRows, TopPairsCollapseFloor)
@@ -595,8 +592,9 @@ object SimilarityOps {
     * ready for `DedupOps.dupClusters`. Dot and norm accumulate in index
     * order, so the score — and therefore the ≥ decision at the threshold
     * boundary — is bit-identical to the Catalyst/DuckDB sequential folds. */
-  def thresholdPairs(emb: DataFrame, minCosine: Double = 0.9,
-                     maxBroadcastRows: Long = BruteRowLimit): DataFrame = {
+  private[graft] def thresholdPairs(emb: DataFrame, minCosine: Double = 0.9,
+                                    maxBroadcastRows: Long = BruteRowLimit)
+    : DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val vecs = emb.select(col("vec_id").cast("long"),
@@ -655,8 +653,9 @@ object SimilarityOps {
     * The bucket join shuffles only (vec_id, table_id, bucket); embeddings
     * (fixed-width) are fetched for candidates via vec_id-keyed joins —
     * bucketed-by-vec_id storage makes those co-located at scale. */
-  def embeddingNearDups(emb: DataFrame, bits: Int = 8, tables: Int = 4,
-                        minCosine: Double = 0.9): DataFrame =
+  private[graft] def embeddingNearDups(emb: DataFrame, bits: Int = 8,
+                                       tables: Int = 4,
+                                       minCosine: Double = 0.9): DataFrame =
     embeddingNearDupsFrom(emb, lshBucketsMulti(emb, bits, tables), minCosine)
 
   /** Same, from an already-materialized bucket table — the driver query

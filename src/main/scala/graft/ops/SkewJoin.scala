@@ -29,8 +29,8 @@ object SkewJoin {
     * 100/minSharePct entries, so the `isin` literal stays small no matter
     * how large the input. This is the derivation pass `saltedJoin`'s
     * heavyKeys parameter documents. */
-  def heavyKeys(df: DataFrame, key: String,
-                minSharePct: Double = 1.0): Seq[Any] = {
+  private[graft] def heavyKeys(df: DataFrame, key: String,
+                               minSharePct: Double = 1.0): Seq[Any] = {
     val counts = df.groupBy(col(key)).agg(count(lit(1)).as("__n"))
     val total = counts.agg(sum(col("__n"))).head().getLong(0)
     counts.where(col("__n") * 100 >= lit(total * minSharePct))
@@ -48,9 +48,10 @@ object SkewJoin {
 
   /** @param saltSource a probe-side column with per-row variation (an id,
     *                   an offset — anything; only its hash is used). */
-  def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
-                 saltSource: Column, heavyKeys: Seq[Any],
-                 salts: Int = 8): DataFrame = {
+  private[graft] def saltedJoin(probe: DataFrame, build: DataFrame,
+                                key: String, saltSource: Column,
+                                heavyKeys: Seq[Any],
+                                salts: Int = 8): DataFrame = {
     val heavy = col(key).isin(heavyKeys: _*)
     val probeSalted = probe.withColumn("__salt",
       when(heavy, pmod(xxhash64(saltSource), lit(salts)).cast("int"))

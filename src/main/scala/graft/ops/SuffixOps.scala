@@ -99,7 +99,8 @@ object SuffixOps {
     * The doubling rounds ([[ranksCore]]) run over one rep per distinct
     * capped text and rep rows are copied to members (dense ranks are
     * ranks over DISTINCT suffixes — see [[collapse]]). */
-  def suffixRanks(docs: DataFrame, maxLen: Int = 192): DataFrame = {
+  private[graft] def suffixRanks(docs: DataFrame,
+                                 maxLen: Int = 192): DataFrame = {
     val (reps, members, _) = collapse(docs, maxLen)
     ranksCore(reps, maxLen).as("r")
       .join(members.as("m"), col("r.doc_id") === col("m.rep_id"))

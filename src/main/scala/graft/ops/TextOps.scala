@@ -16,7 +16,7 @@ object TextOps {
   def wsTokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** BPE-ish subword unit count: alpha runs, digit runs, single symbols. */
-  def bpeishCount(text: Column): Column =
+  private def bpeishCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
   def tokenCounts(df: DataFrame): DataFrame =
@@ -126,17 +126,14 @@ object TextOps {
   /** Composite document-quality FILTER — the Gopher/C4-style keep-or-drop
     * decision (Rae et al. 2021 appendix A1.1, re-expressed as integer
     * arithmetic so the decision is float-free and the SQL oracle replicates
-    * it bit-for-bit): token count in [minTokens, maxTokens], mean token
-    * length in [minMeanLen, maxMeanLen] (as sum-vs-n·bound products),
-    * ≥ minAlphaPct% tokens containing a letter, ≥ minStopHits stopword
-    * occurrences, and top-bigram repetition ≤ maxBigramPct% of bigrams.
+    * it bit-for-bit): token count in [30, 100000], mean token length in
+    * [3, 10] (as sum-vs-n·bound products), ≥ 80% tokens containing a
+    * letter, ≥ 2 stopword occurrences, and top-bigram repetition ≤ 20% of
+    * bigrams.
     * One typed pass per doc (tokenize once, all counters fill in one scan —
     * same rationale as `langId`); emits every signal plus keep ∈ {0,1} so
     * downstream mixing can re-threshold without recomputing. */
-  def qualityFilter(df: DataFrame, minTokens: Int = 30, maxTokens: Int = 100000,
-                    minMeanLen: Int = 3, maxMeanLen: Int = 10,
-                    minAlphaPct: Int = 80, minStopHits: Int = 2,
-                    maxBigramPct: Int = 20): DataFrame = {
+  def qualityFilter(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val stops = stopwords.toSet
@@ -168,11 +165,11 @@ object TextOps {
         }
         val topBigram = if (bigrams.isEmpty) 0L else bigrams.values.max.toLong
         val keep =
-          n >= minTokens && n <= maxTokens &&
-          sumChars >= minMeanLen.toLong * n && sumChars <= maxMeanLen.toLong * n &&
-          100L * alpha >= minAlphaPct.toLong * n &&
-          stop >= minStopHits &&
-          100L * topBigram <= maxBigramPct.toLong * math.max(n - 1, 1)
+          n >= 30 && n <= 100000 &&
+          sumChars >= 3L * n && sumChars <= 10L * n &&
+          100L * alpha >= 80L * n &&
+          stop >= 2 &&
+          100L * topBigram <= 20L * math.max(n - 1, 1)
         (id, n.toLong, sumChars, alpha, stop, topBigram, if (keep) 1L else 0L)
       }
       .toDF("doc_id", "n_tokens", "sum_token_chars", "n_alpha_tokens",
@@ -244,27 +241,24 @@ object TextOps {
       .toDF("doc_id", "fp")
   }
 
-  /** md5-low64 (= DuckDB `md5_number_lower`) masked to 63 bits so both
-    * engines stay in signed int64. */
   /** Context-window CHUNKING with stride overlap: split each doc's token
-    * stream into windows of `chunkSize` tokens starting every `stride`
+    * stream into windows of chunkSize = 64 tokens starting every stride = 48
     * tokens (overlap = chunkSize - stride), the standard shape for
     * training-sequence preparation. Typed flatMap, not Column HOFs — a
-    * `transform(starts, s => slice(split(text), ...))` formulation
-    * re-inlines the tokenizer per chunk (the measured O(tokens²) trap from
-    * shingleCounts), while this tokenizes once per doc. Emits
-    * (doc_id, chunk_idx, n_chunk_tokens, chunk_md5); chunk text itself
-    * stays out of the shuffle — downstream joins re-fetch it by
-    * (doc_id, chunk_idx) when needed. */
-  def chunkDocs(df: DataFrame, chunkSize: Int = 64,
-                stride: Int = 48): DataFrame = {
+    * `transform(starts, s => slice(split(text), ...))` formulation re-inlines
+    * the tokenizer per chunk (the measured O(tokens²) trap from
+    * shingleCounts), while this tokenizes once per doc. Emits (doc_id,
+    * chunk_idx, n_chunk_tokens, chunk_md5); chunk text itself stays out of the
+    * shuffle — downstream joins re-fetch it by (doc_id, chunk_idx) when
+    * needed. */
+  def chunkDocs(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
         val toks = wsPat.split(text.trim)
-        (0 until toks.length by stride).zipWithIndex.map { case (st, idx) =>
-          val chunk = toks.slice(st, math.min(st + chunkSize, toks.length))
+        (0 until toks.length by 48).zipWithIndex.map { case (st, idx) =>
+          val chunk = toks.slice(st, math.min(st + 64, toks.length))
           (id, idx, chunk.length, md5Hex(chunk.mkString(" ")))
         }
       }
@@ -278,7 +272,7 @@ object TextOps {
 
   /** Lowercase-hex md5 of a string — matches DuckDB's `md5()` (and Spark
     * SQL's `md5`) so chunk hashes oracle-compare exactly. */
-  def md5Hex(s: String): String = {
+  private[graft] def md5Hex(s: String): String = {
     val d = md5Digest.get()
     d.reset()
     val out = d.digest(s.getBytes("UTF-8"))
@@ -292,6 +286,8 @@ object TextOps {
     sb.toString
   }
 
+  /** md5-low64 (= DuckDB `md5_number_lower`) masked to 63 bits so both
+    * engines stay in signed int64. */
   def md5Low63(s: String): Long = Corpus64.md5Low64(s) & Long.MaxValue
 
   /** One UTF-8 encode per doc; each k-gram hashes a window of the shared
@@ -311,7 +307,7 @@ object TextOps {
 
   /** Minimum of each length-`window` sliding window via a monotonic deque —
     * O(n) total, no per-position buffer allocation. */
-  def slidingMins(hs: Array[Long], window: Int): Array[Long] = {
+  private[graft] def slidingMins(hs: Array[Long], window: Int): Array[Long] = {
     val out = new Array[Long](hs.length - window + 1)
     val deque = new Array[Int](hs.length) // indices, increasing hs values
     var head = 0
@@ -322,24 +318,6 @@ object TextOps {
       deque(tail) = i; tail += 1
       if (deque(head) <= i - window) head += 1
       if (i >= window - 1) out(i - window + 1) = hs(deque(head))
-      i += 1
-    }
-    out
-  }
-
-  def rollingHashes(text: String, k: Int): Array[Long] = {
-    val s = text
-    if (s.length < k) return Array.empty
-    val B = 1000003L
-    var pow = 1L
-    (1 until k).foreach(_ => pow *= B)
-    var h = 0L
-    val out = new Array[Long](s.length - k + 1)
-    var i = 0
-    while (i < s.length) {
-      h = h * B + s.charAt(i)
-      if (i >= k) h -= pow * B * s.charAt(i - k)
-      if (i >= k - 1) out(i - k + 1) = h
       i += 1
     }
     out

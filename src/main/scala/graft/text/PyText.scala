@@ -89,9 +89,6 @@ object PyText {
     if (m.lookingAt()) Some(m) else None
   }
 
-  def reSearchGroup(p: Pattern, s: String, g: Int = 1): Option[String] =
-    reSearch(p, s).map(_.group(g))
-
   def reTest(p: Pattern, s: String): Boolean = p.matcher(s).find()
 
   /** Python `re.sub(pat, repl, s)` with a literal replacement. */

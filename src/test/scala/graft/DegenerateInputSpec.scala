@@ -1,0 +1,188 @@
+package graft
+
+import java.sql.Timestamp
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.ops._
+
+/** Degenerate inputs: the ops whose options became constants, run on
+  * zero-row and one-row `documents`/`events`-shaped tables. Each must
+  * finish without an exception and keep the output columns (names and
+  * types) it has on a 200-row input. */
+class DegenerateInputSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  import spark.implicits._
+
+  private lazy val docs200: DataFrame = {
+    val rng = new scala.util.Random(11)
+    (0 until 200).map { i =>
+      val words = 1 + rng.nextInt(60)
+      val text = (0 until words)
+        .map(j => s"w${(i * 31 + j * 7) % 90}").mkString(" ")
+      (i.toLong, text, Seq("en", "fr", "de")(i % 3), s"src${i % 5}",
+        text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+  }
+
+  private lazy val events200: DataFrame = {
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    (0 until 200).map { i =>
+      (i.toLong, new Timestamp(t0 + i * 3600000L), (i % 17).toLong,
+        Seq("view", "click", "purchase", "signup")(i % 4), 1.5 * (i % 40),
+        "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+  }
+
+  private lazy val emb200: DataFrame = {
+    val rng = new scala.util.Random(5)
+    (0 until 200).map { i =>
+      (i.toLong, Array.fill(64)(rng.nextFloat() * 2 - 1), i % 4)
+    }.toDF("vec_id", "embedding", "label")
+  }
+
+  private def evenOdd(d: DataFrame) =
+    (d.where(col("doc_id") % 2 === 0), d.where(col("doc_id") % 2 === 1))
+
+  private def pairs(d: DataFrame) =
+    DedupOps.minhashLsh(d).select("doc_a", "doc_b")
+
+  /** The p120 merge-on-read inputs, derived from documents. */
+  private def mergeOnRead(d: DataFrame) = {
+    val base = d.select(col("doc_id"), expr("doc_id DIV 100").as("file_id"),
+      (col("doc_id") % 100).as("pos"), col("n_chars"))
+    MergeOps.mergeOnRead(base,
+      base.where(col("doc_id") % 37 === 0).select("doc_id"),
+      base.where(col("doc_id") % 41 === 0).select("file_id", "pos"),
+      base.where(col("doc_id") % 53 === 0), "doc_id")
+  }
+
+  /** p118-shaped linkage records, derived from documents. */
+  private def records(d: DataFrame) =
+    d.select(col("doc_id").as("key"), substring(col("text"), 1, 24).as("name"),
+      (col("doc_id") % 5).as("block"), col("n_chars").as("cents"),
+      col("lang").as("seg"))
+
+  /** Synthesized `Doc`s with as many rows as `d`. */
+  private def docsLike(d: DataFrame) =
+    graft.io.Synthesizer.docs(spark, d.count(), seed = 42L)
+
+  private def mediaOf(d: DataFrame) =
+    MultimodalOps.mediaTable(docsLike(d)).toDF()
+
+  private val docOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "CorpusOps.piiScrub" -> (d => CorpusOps.piiScrub(d)),
+    "CorpusOps.hllRegisters" -> (d => CorpusOps.hllRegisters(d)),
+    "CorpusOps.bloomFilter" -> (d => CorpusOps.bloomFilter(d)),
+    "CorpusOps.tfidfTopK" -> (d => CorpusOps.tfidfTopK(d)),
+    "CorpusOps.rrfFuse" -> (d =>
+      CorpusOps.rrfFuse(Seq(CorpusOps.bm25TopK(d), CorpusOps.tfidfTopK(d)))),
+    "CorpusOps.tokenDrift" -> { d => val (a, b) = evenOdd(d)
+      CorpusOps.tokenDrift(a, b) },
+    "CorpusOps.dsirScores" -> { d => val (a, b) = evenOdd(d)
+      CorpusOps.dsirScores(a, b) },
+    "CorpusOps.hllValidate" -> (d => CorpusOps.hllValidate(d)),
+    "CorpusOps.hllIntersect" -> (d => CorpusOps.hllIntersect(d, "en", "fr")),
+    "CorpusOps.repeatedGramStats" -> (d => CorpusOps.repeatedGramStats(d)),
+    "CorpusOps.cmsValidate" -> (d => CorpusOps.cmsValidate(d)),
+    "CorpusOps.epochShards" -> (d => CorpusOps.epochShards(d)),
+    "CorpusOps.normalizeText" -> (d => CorpusOps.normalizeText(d)),
+    "CorpusOps.homoglyphDedup" -> (d => CorpusOps.homoglyphDedup(d)),
+    "CorpusOps.merkleDiff" -> (d =>
+      CorpusOps.merkleDiff(d, d.where(col("doc_id") % 7 =!= 3))),
+    "CorpusOps.mixturePlan" -> (d => CorpusOps.mixturePlan(d)),
+    "CorpusOps.quantileValidate" -> (d => CorpusOps.quantileValidate(d)),
+    "CorpusOps.ksDrift" -> { d => val (a, b) = evenOdd(d)
+      CorpusOps.ksDrift(a, b) },
+    "CorpusOps.hashVectorStats" -> (d => CorpusOps.hashVectorStats(d)),
+    "CorpusOps.pmiPairs" -> (d => CorpusOps.pmiPairs(d)),
+    "CorpusOps.kAnonymity" -> (d => CorpusOps.kAnonymity(d)),
+    "DedupOps.shingleCounts" -> (d => DedupOps.shingleCounts(d)),
+    "DedupOps.minhashLsh" -> (d => DedupOps.minhashLsh(d)),
+    "DedupOps.minhashIncremental" -> (d => DedupOps.minhashIncremental(
+      d.where(col("doc_id") % 10 =!= 0), d.where(col("doc_id") % 10 === 0))),
+    "DedupOps.prefixFilteredJaccardPairs" -> (d =>
+      DedupOps.prefixFilteredJaccardPairs(d)),
+    "DedupOps.weightedJaccardPairs" -> (d => DedupOps.weightedJaccardPairs(d)),
+    "DedupOps.containmentPairs" -> (d => DedupOps.containmentPairs(d)),
+    "DedupOps.dupClusters" -> (d => DedupOps.dupClusters(pairs(d))),
+    "DedupOps.dupClustersOverDocs" -> (d => DedupOps.dupClustersOverDocs(d)),
+    "DedupOps.dupClustersIncremental" -> (d => DedupOps.dupClustersIncremental(
+      DedupOps.dupClusters(pairs(d.where(col("doc_id") % 3 =!= 0))),
+      pairs(d))),
+    "DedupOps.simhashPairs" -> (d => DedupOps.simhashPairs(d)),
+    "DedupOps.lineDedupStats" -> (d => DedupOps.lineDedupStats(d)),
+    "DedupOps.dupSpans" -> (d => DedupOps.dupSpans(d)),
+    "DedupOps.editDistanceNearDups" -> (d => DedupOps.editDistanceNearDups(
+      d.select(col("doc_id"), substring(col("text"), 1, 40).as("title")))),
+    "DedupOps.prefixDups" -> (d => DedupOps.prefixDups(d)),
+    "GraphOps.pagerank" -> (d => GraphOps.pagerank(d)),
+    "LinkageOps.fellegiSunterLinks" -> (d =>
+      LinkageOps.fellegiSunterLinks(records(d), records(d))),
+    "LinkageOps.fellegiSunterLinksMultiPass" -> (d =>
+      LinkageOps.fellegiSunterLinksMultiPass(records(d), records(d))),
+    "MergeOps.mergeOnRead" -> (d => mergeOnRead(d)),
+    "PackingOps.rendezvousShards" -> (d => PackingOps.rendezvousShards(d)),
+    "TextOps.qualityFilter" -> (d => TextOps.qualityFilter(d)),
+    "TextOps.chunkDocs" -> (d => TextOps.chunkDocs(d)),
+    "InterleaveOps.mmCosts" -> (d => InterleaveOps.mmCosts(docsLike(d))),
+    "MultimodalOps.mediaTable" -> (d => mediaOf(d)),
+    "MultimodalOps.frameSampleSchedule" -> (d =>
+      MultimodalOps.frameSampleSchedule(mediaOf(d))),
+    "MultimodalOps.preprocessPlan" -> (d =>
+      MultimodalOps.preprocessPlan(mediaOf(d))),
+  )
+
+  private val eventOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "EventOps.funnel" -> (e => EventOps.funnel(e)),
+    "EventOps.nearestEventJoin" -> (e => EventOps.nearestEventJoin(e)),
+    "EventOps.hllSlidingUnion" -> (e => EventOps.hllSlidingUnion(e)),
+    "EventOps.ewmaScan" -> (e => EventOps.ewmaScan(e)),
+  )
+
+  private val embOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "SimilarityOps.lshBuckets" -> (e => SimilarityOps.lshBuckets(e)),
+    "SimilarityOps.lshTopKFrom" -> (e =>
+      SimilarityOps.lshTopKFrom(e, SimilarityOps.lshBuckets(e))),
+    "IvfOps.ivfTopK" -> (e => IvfOps.ivfTopK(e)),
+    "IvfOps.cellCensus" -> { e =>
+      val c = IvfOps.train(e)
+      IvfOps.cellCensus(IvfOps.assign(e, c),
+        IvfOps.assign(e.where(col("vec_id") % 7 === 3), c), k = 16)
+    },
+  )
+
+  private def columns(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  test("hllValidate on zero rows returns the oracle's one row: m 64, " +
+    "n_exact 0, est_int 45, err_permille null") {
+    val rows = CorpusOps.hllValidate(docs200.limit(0)).collect()
+    assert(rows.length === 1)
+    val r = rows.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((64L, 0L, 45L)))
+    assert(r.isNullAt(3))
+  }
+
+  test("every op with options made constant runs on zero-row and one-row " +
+    "documents/events inputs and keeps its 200-row output columns") {
+    val failures = for {
+      (ops, full) <- Seq((docOps, docs200), (eventOps, events200),
+        (embOps, emb200))
+      (name, op) <- ops
+      n <- Seq(0, 1)
+      problem <- {
+        val want = columns(op(full))
+        scala.util.Try {
+          val out = op(full.limit(n))
+          out.collect()
+          columns(out)
+        } match {
+          case scala.util.Success(got) if got == want => None
+          case scala.util.Success(got) => Some(s"columns $got, want $want")
+          case scala.util.Failure(e) => Some(e.toString.take(300))
+        }
+      }
+    } yield s"$name on $n rows: $problem"
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+}

@@ -1725,10 +1725,10 @@ object RelationalQueries {
       val d = t(s, dir, "documents")
         .select(when(col("doc_id") % 7 === 0, lit(null))
           .otherwise(col("source")).as("src_key"), col("n_chars"))
-      val dim = d.select(col("src_key")).distinct()
+      val dim = d.select(col("src_key").as("dim_key")).distinct()
         .withColumn("bucket",
-          when(col("src_key").isNull, "missing").otherwise("present"))
-      d.join(broadcast(dim), d("src_key") <=> dim("src_key"))
+          when(col("dim_key").isNull, "missing").otherwise("present"))
+      d.join(broadcast(dim), col("src_key") <=> col("dim_key"))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("sum_chars"))

@@ -45,7 +45,7 @@ object DocTypeClassifier {
   private val passX7Pat = Pattern.compile("x[0-9]{7}")
   private val passPltPat = Pattern.compile("\\bp<")
 
-  def isDrivingLicense(textLower: String): Boolean =
+  private def isDrivingLicense(textLower: String): Boolean =
     (textLower.contains("dl") && reTest(dlNoPat, textLower)) ||
     (textLower.contains("driving") &&
       (reTest(dlLicencePat, textLower) || reTest(dlLicensePat, textLower))) ||
@@ -61,7 +61,7 @@ object DocTypeClassifier {
     (t.contains("x") && reTest(passX7Pat, t)) ||
     (t.contains("p<") && reTest(passPltPat, t))
 
-  def isPassport(textLower: String): Boolean =
+  private def isPassport(textLower: String): Boolean =
     passportHit(textLower) || passportHit(textLower.replace(" ", ""))
 
   // NOTE (r6): a fused one-pass bitmask over `upper` for the ten trigger
@@ -72,7 +72,7 @@ object DocTypeClassifier {
   // on the intrinsic path.
 
   /** Primary chain — cleaner.py:404-424. */
-  def extractDocument(rawText: String, lines: Seq[String]): PyDict = {
+  private def extractDocument(rawText: String, lines: Seq[String]): PyDict = {
     val upper = rawText.toUpperCase
     var baseData = new PyDict
 

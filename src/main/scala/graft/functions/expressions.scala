@@ -93,8 +93,8 @@ case class PyRound2(child: Expression) extends UnaryExpression {
   * bridging goes through GraftColumnBridge). */
 object functions {
   import org.apache.spark.sql.GraftColumnBridge._
-  def py_title(c: Column): Column = column(PyTitle(expression(c)))
-  def py_round2(c: Column): Column = column(PyRound2(expression(c)))
+  private[graft] def py_title(c: Column): Column = column(PyTitle(expression(c)))
+  private[graft] def py_round2(c: Column): Column = column(PyRound2(expression(c)))
   def cosine_sim(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
   def sign_lsh_bucket(c: Column, planes: Array[Array[Double]]): Column =
@@ -104,9 +104,9 @@ object functions {
   def common_prefix_len(a: Column, b: Column): Column =
     column(CommonPrefixLen(expression(a), expression(b)))
   def d_hash64(c: Column): Column = column(DHash64(expression(c)))
-  def dot_long(a: Column, b: Column): Column =
+  private[graft] def dot_long(a: Column, b: Column): Column =
     column(DotLong(expression(a), expression(b)))
-  def bloom_might_contain(c: Column,
+  private[graft] def bloom_might_contain(c: Column,
       f: org.apache.spark.util.sketch.BloomFilter): Column =
     column(BloomMightContain(expression(c), f))
 }
@@ -214,8 +214,9 @@ object GraftExtensions {
     nfcNormalizeDesc, deflateLenDesc, commonPrefixLenDesc, dHash64Desc,
     signLshBucketDesc, dotLongDesc, bloomMightContainDesc)
 
-  /** Register into an already-running session (tests / REPL). */
-  def registerInto(spark: SparkSession): Unit = {
+  /** Register into an already-running session (the specs; a SQL user's
+    * session gets them through `spark.sql.extensions`). */
+  private[graft] def registerInto(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     descs.foreach(d => reg.registerFunction(d._1, d._2, d._3))
   }

@@ -38,9 +38,13 @@ object Corpus {
     def digits(n: Int): String = (1 to n).map(_ => ('0' + nextInt(10)).toChar).mkString
   }
 
+  /** FNV-1a over the string's UTF-16 chars: the stable 64-bit hash that
+    * seeds every synthesized doc and media payload, and the minhash lanes
+    * of `graft.ops.DedupOps` (String.hashCode is 32-bit and JVM-pinned). */
   def hash(s: String): Long = {
     var h = 0xcbf29ce484222325L
-    s.foreach { c => h ^= c; h *= 0x100000001b3L }
+    var i = 0
+    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
     h
   }
 
@@ -76,7 +80,7 @@ object Corpus {
   def mediaRef(family: String, variant: Int, n: Long): String = s"m:$family:$variant:$n"
 
   final case class RefParts(family: String, variant: Int, n: Long)
-  def parseRef(ref: String): RefParts = {
+  private def parseRef(ref: String): RefParts = {
     val p = ref.split(":")
     RefParts(p(1), p(2).toInt, p(3).toLong)
   }

@@ -20,7 +20,7 @@ object Synthesizer {
     "dls" -> 10, "passport" -> 12, "voter" -> 8, "web" -> 19, "heavy" -> 1)
   private val totalWeight = families.map(_._2).sum
 
-  def familyFor(r: Int): String = {
+  private def familyFor(r: Int): String = {
     var acc = 0
     var res: String = null
     families.foreach { case (f, w) =>
@@ -32,7 +32,7 @@ object Synthesizer {
 
   /** A small HTML page whose main content is `contentLines`; nav/footer/
     * script chrome is stripped by BoilerplateStrip. */
-  def htmlPage(rng: Rng, contentLines: Seq[String]): String = {
+  private def htmlPage(rng: Rng, contentLines: Seq[String]): String = {
     val navLinks = (1 to 3).map(_ => s"""<a href="#">${rng.pick(Corpus.noiseWords)}</a>""").mkString(" ")
     val paras = contentLines.map(l => s"<p>$l</p>").mkString("")
     s"""<html><head><title>${rng.pick(Corpus.noiseWords)}</title>""" +
@@ -42,7 +42,7 @@ object Synthesizer {
       s"""<script>var t=1;</script></body></html>"""
   }
 
-  def noiseLine(rng: Rng): String =
+  private def noiseLine(rng: Rng): String =
     (1 to (3 + rng.nextInt(5))).map(_ => rng.pick(Corpus.noiseWords)).mkString(" ")
 
   /** Pure (seed, n) → Doc. */

@@ -16,19 +16,19 @@ object TableIO {
 
   /** Write `df` as a managed bucketed table (bucketBy doc_id, sorted within
     * buckets). */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int = 32,
-                    key: String = "doc_id"): Unit =
+  private[graft] def writeBucketed(df: DataFrame, table: String,
+                                   buckets: Int = 32): Unit =
     df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
+      .bucketBy(buckets, "doc_id")
+      .sortBy("doc_id")
       .format("parquet")
       .saveAsTable(table)
 
-  /** Equi-join two tables bucketed on the same key — planner elides the
+  /** Equi-join two tables bucketed on doc_id — planner elides the
     * shuffle on both sides. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-                   key: String = "doc_id"): DataFrame =
-    spark.table(left).join(spark.table(right), key)
+  private[graft] def bucketedJoin(spark: SparkSession, left: String,
+                                  right: String): DataFrame =
+    spark.table(left).join(spark.table(right), "doc_id")
 
   // ------------------------------------------------------------------
   // Data layout for scan pruning. At 100 TB the fastest scan is the one
@@ -99,19 +99,19 @@ object TableIO {
   // parquet stays the internal format). Schemas are ALWAYS explicit:
   // inferSchema costs a full extra scan — at 100 TB that is a second job.
 
-  def writeCsv(df: DataFrame, path: String): Unit =
+  private[graft] def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  def readCsv(spark: SparkSession, path: String,
-              schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private[graft] def readCsv(spark: SparkSession, path: String,
+                             schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
   /** ORC — the other columnar interchange format warehouse drops arrive
     * in; same predicate-pushdown/column-pruning behavior as parquet. */
-  def writeOrc(df: DataFrame, path: String): Unit =
+  private[graft] def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
 
-  def readOrc(spark: SparkSession, path: String): DataFrame =
+  private[graft] def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
   /** Schema-EVOLUTION read across heterogeneous parquet drops: merge the
@@ -120,15 +120,16 @@ object TableIO {
     * 10^12-row table pin the evolved schema explicitly with
     * `.schema(...)` instead; this is the ingest-time form for bounded
     * heterogeneous batches. */
-  def readParquetMerged(spark: SparkSession, paths: String*): DataFrame =
+  private[graft] def readParquetMerged(spark: SparkSession,
+                                       paths: String*): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
   /** JSON-lines (one object per line — splittable, unlike a JSON array). */
-  def writeJsonl(df: DataFrame, path: String): Unit =
+  private[graft] def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
 
-  def readJsonl(spark: SparkSession, path: String,
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private[graft] def readJsonl(spark: SparkSession, path: String,
+                               schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
   /** JSONL ingest with corrupt-record ROUTING — at 10^12 rows malformed
@@ -140,8 +141,8 @@ object TableIO {
     * query referencing ONLY the corrupt column is disallowed over the raw
     * relation — always keep at least one data column in the projection
     * (or route via a partitioned sink). */
-  def readJsonlFlagged(spark: SparkSession, path: String,
-                       schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private[graft] def readJsonlFlagged(spark: SparkSession, path: String,
+                                      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read
       .schema(if (schema.fieldNames.contains("_corrupt_record")) schema
               else schema.add("_corrupt_record",
@@ -161,8 +162,8 @@ object TableIO {
     * corruption. Persist/cache the full frame BEFORE filtering on
     * `_corrupt_record` (Spark's own documented contract for this
     * column). */
-  def readCsvFlagged(spark: SparkSession, path: String,
-                     schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private[graft] def readCsvFlagged(spark: SparkSession, path: String,
+                                    schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read
       .schema(if (schema.fieldNames.contains("_corrupt_record")) schema
               else schema.add("_corrupt_record",

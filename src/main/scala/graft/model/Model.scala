@@ -10,10 +10,6 @@ final case class Span(kind: String, text: String, media_ref: String, offset: Int
 
 final case class Doc(doc_id: String, spans: Seq[Span])
 
-/** OCR IR — reference returns (raw_text, lines, avg_confidence)
-  * (ref: pipeline/ocr_engine.py:32-74). */
-final case class OcrResult(raw_text: String, lines: Seq[String], avg_conf: Double)
-
 /** Final per-document pipeline result. `spans` is the equality-bearing
   * output sequence (kind, text, media_ref, offset) per SURVEY.md §7.2. */
 final case class DocResult(

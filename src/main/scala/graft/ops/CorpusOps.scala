@@ -251,10 +251,10 @@ object CorpusOps {
     val w = tf.join(broadcast(idf), "token")
       .select(col("doc_id"), col("token"), (col("tf") * col("idf")).as("wt"))
     val qw = w.where(col("doc_id") < numQueries)
-      .select(col("doc_id").as("query_id"), col("token"),
+      .select(col("doc_id").as("query_id"), col("token").as("q_token"),
         col("wt").as("q_wt"))
     val scored = w.join(broadcast(qw),
-        w("token") === qw("token") && col("doc_id") =!= col("query_id"))
+        col("token") === col("q_token") && col("doc_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
       .agg(sum(col("wt") * col("q_wt")).cast("double").as("score")) // dots ≪ 2^53: exact
     SimilarityOps.rankTopK(scored, k)
@@ -1573,6 +1573,73 @@ object CorpusOps {
       .orderBy(col("source"))
   }
 
+  /** The BPE merge loop that [[bpeTrain]] and [[bpeEncodeCensus]] share:
+    * the one-time (word, freq) vocabulary scan, then up to `steps` rounds
+    * of argmax-then-replace over the separator-bracketed symbol strings
+    * `s` (see [[bpeTrain]] for the encoding and the tie-break). After each
+    * merge, `onMerge(step, l, r, n_pair, next)` sees the merged vocabulary
+    * `next` (persisted, not yet materialized). `finish` gets the final
+    * (w, s, freq) vocabulary and must run any action that reads it; the
+    * loop's cached generations are released after it returns.
+    *
+    * Unpersist is deferred one round (r6, one driver action per round
+    * instead of two): the NEXT round's argmax is the job that
+    * materializes this round's persist — no dedicated count() — so the
+    * parent generation must stay cached until that argmax has run
+    * (unpersisting it earlier would force the un-materialized child to
+    * recompute its whole replace lineage from the corpus scan). */
+  private def bpeMergeLoop[A](df: DataFrame, steps: Int, maxWordLen: Int)(
+      onMerge: (Int, String, String, Long, DataFrame) => Unit)(
+      finish: DataFrame => A): A = {
+    val SEP = "\u001f"
+    val SEP2 = SEP + SEP
+    var vocab = df
+      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
+      .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
+        !col("w").contains(SEP))
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+      .select(col("w"),
+        regexp_replace(col("w"), "(.)", s"$SEP$$1$SEP").as("s"),
+        col("freq"))
+      .persist()
+    vocab.count()
+    var step = 1
+    var exhausted = false
+    var prev: Option[DataFrame] = None
+    while (step <= steps && !exhausted) {
+      val best = vocab.select(col("freq"),
+          split(expr("substring(s, 2, length(s) - 2)"), SEP2).as("sy"))
+        .filter(size(col("sy")) >= 2)
+        .select(col("freq"), expr(
+          "explode(transform(sequence(0, size(sy) - 2), " +
+            "i -> struct(sy[i] AS l, sy[i + 1] AS r)))").as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum(col("freq")).as("n"))
+        .orderBy(col("n").desc, col("l"), col("r"))
+        .limit(1).collect()
+      prev.foreach(_.unpersist())
+      prev = None
+      if (best.isEmpty) exhausted = true
+      else {
+        val (l, r, n) =
+          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        val next = vocab.select(col("w"),
+          call_function("replace", col("s"),
+            lit(SEP + l + SEP2 + r + SEP), lit(SEP + l + r + SEP)).as("s"),
+          col("freq")).persist()
+        onMerge(step, l, r, n, next)
+        prev = Some(vocab)
+        vocab = next
+        step += 1
+      }
+    }
+    try finish(vocab)
+    finally {
+      prev.foreach(_.unpersist())
+      vocab.unpersist()
+    }
+  }
+
   /** BPE merge TRAINING — the iterative loop `bpePairCounts` is round 0
     * of (Sennrich et al. 2016, learn_bpe): K rounds of (count symbol
     * pairs weighted by word frequency → argmax with deterministic
@@ -1604,6 +1671,40 @@ object CorpusOps {
     * tok_total, vocab_syms). `maxWordLen` caps pathological tokens
     * (URLs, base64 runs) — the production guard that keeps per-word
     * state O(1). */
+  def bpeTrain(df: DataFrame, steps: Int = 8, maxWordLen: Int = 32)
+    : DataFrame = {
+    val spark = df.sparkSession
+    val SEP2 = "\u001f\u001f"
+    val out = scala.collection.mutable
+      .ArrayBuffer.empty[(Long, String, String, Long, Long, Long)]
+    bpeMergeLoop(df, steps, maxWordLen) { (step, l, r, n, next) =>
+      // fused census (r6: ONE action per round instead of three — it
+      // doubles as the persist materializer, so the count() is gone
+      // too): explode the symbol array once, charge freq·|syms| only
+      // at the first position (every word has ≥ 1 symbol, so position
+      // 0 always exists) and count distinct symbols in the same agg.
+      // freq·|syms| == the old freq·k — k counted the ␟ pairs, which
+      // is exactly size(sy).
+      // two-level agg (per-symbol, then global) rather than
+      // sum + countDistinct in one — the mixed form plans through an
+      // Expand that doubles every exploded row
+      val cen = next.select(
+          split(expr("substring(s, 2, length(s) - 2)"), SEP2).as("sy"),
+          col("freq"))
+        .select((col("freq") * size(col("sy")).cast("long")).as("fk"),
+          posexplode(col("sy")).as(Seq("i", "sym")))
+        .groupBy(col("sym"))
+        .agg(sum(when(col("i") === 0, col("fk"))).as("tokpart"))
+        .agg(sum(col("tokpart")).as("tok"), count(lit(1)).as("nsym"))
+        .collect()(0)
+      out += ((step.toLong, l, r, n, cen.getLong(0), cen.getLong(1)))
+    }(_ => ())
+    import spark.implicits._
+    out.toSeq
+      .toDF("step", "lsym", "rsym", "n_pair", "tok_total", "vocab_syms")
+      .orderBy(col("step"))
+  }
+
   /** BPE ENCODE + fertility census — the apply half of [[bpeTrain]]:
     * run the same merge loop (identical argmax/tie-break, so the learned
     * merges are the p126-gated ones), then encode the WHOLE corpus by
@@ -1617,144 +1718,28 @@ object CorpusOps {
   def bpeEncodeCensus(df: DataFrame, steps: Int = 8, maxWordLen: Int = 32)
     : DataFrame = {
     val SEP = "\u001f"
-    val SEP2 = SEP + SEP
-    var vocab = df
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
-        !col("w").contains(SEP))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(col("w"),
-        regexp_replace(col("w"), "(.)", s"$SEP$$1$SEP").as("s"),
-        col("freq"))
-      .persist()
-    vocab.count()
-    var step = 1
-    var exhausted = false
-    // deferred unpersist (r6, one driver action per round instead of
-    // two): the NEXT round's argmax is the job that materializes this
-    // round's persist — no dedicated count() — so the parent generation
-    // must stay cached until that argmax has run (unpersisting it
-    // earlier would force the un-materialized child to recompute its
-    // whole replace lineage from the corpus scan)
-    var prev: Option[DataFrame] = None
-    while (step <= steps && !exhausted) {
-      val best = vocab.select(col("freq"),
-          split(expr("substring(s, 2, length(s) - 2)"), SEP2).as("sy"))
-        .filter(size(col("sy")) >= 2)
-        .select(col("freq"), expr(
-          "explode(transform(sequence(0, size(sy) - 2), " +
-            "i -> struct(sy[i] AS l, sy[i + 1] AS r)))").as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      prev.foreach(_.unpersist())
-      prev = None
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r) = (best(0).getString(0), best(0).getString(1))
-        val next = vocab.select(col("w"),
-          call_function("replace", col("s"),
-            lit(SEP + l + SEP2 + r + SEP), lit(SEP + l + r + SEP)).as("s"),
-          col("freq")).persist()
-        prev = Some(vocab)
-        vocab = next
-        step += 1
-      }
+    bpeMergeLoop(df, steps, maxWordLen)((_, _, _, _, _) => ()) { vocab =>
+      val enc = vocab.select(col("w"),
+        ((length(col("s")) -
+          length(call_function("replace", col("s"), lit(SEP), lit(""))))
+          .cast("long") / lit(2L)).cast("long").as("k"))
+      val occ = df
+        .select(col("source"), explode(split(trim(col("text")), "\\s+"))
+          .as("w"))
+        .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
+          !col("w").contains(SEP))
+        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("occ"))
+      val out = occ.join(enc, "w")
+        .groupBy(col("source"))
+        .agg(sum(col("occ")).as("n_words"),
+          sum(col("occ") * col("k")).as("n_tokens"),
+          sum(col("occ") * length(col("w"))).cast("long").as("n_chars"))
+        .withColumn("fertility_millis",
+          expr("n_tokens * 1000 div n_words"))
+        .orderBy(col("source"))
+      out.persist()
+      out.count() // materialize the tiny census before the vocab unpersists
+      out
     }
-    val enc = vocab.select(col("w"),
-      ((length(col("s")) -
-        length(call_function("replace", col("s"), lit(SEP), lit(""))))
-        .cast("long") / lit(2L)).cast("long").as("k"))
-    val occ = df
-      .select(col("source"), explode(split(trim(col("text")), "\\s+"))
-        .as("w"))
-      .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
-        !col("w").contains(SEP))
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("occ"))
-    val out = occ.join(enc, "w")
-      .groupBy(col("source"))
-      .agg(sum(col("occ")).as("n_words"),
-        sum(col("occ") * col("k")).as("n_tokens"),
-        sum(col("occ") * length(col("w"))).cast("long").as("n_chars"))
-      .withColumn("fertility_millis",
-        expr("n_tokens * 1000 div n_words"))
-      .orderBy(col("source"))
-    out.persist()
-    out.count() // materialize the tiny census before the vocab unpersists
-    prev.foreach(_.unpersist())
-    vocab.unpersist()
-    out
-  }
-
-  def bpeTrain(df: DataFrame, steps: Int = 8, maxWordLen: Int = 32)
-    : DataFrame = {
-    val spark = df.sparkSession
-    val SEP = "\u001f"
-    val SEP2 = SEP + SEP
-    var vocab = df
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
-        !col("w").contains(SEP))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(regexp_replace(col("w"), "(.)", s"$SEP$$1$SEP").as("s"),
-        col("freq"))
-      .persist()
-    vocab.count()
-
-    val out = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, String, String, Long, Long, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= steps && !exhausted) {
-      val syms = vocab.select(col("freq"),
-        split(expr("substring(s, 2, length(s) - 2)"), SEP2).as("sy"))
-      val best = syms
-        .filter(size(col("sy")) >= 2)
-        .select(col("freq"), expr(
-          "explode(transform(sequence(0, size(sy) - 2), " +
-            "i -> struct(sy[i] AS l, sy[i + 1] AS r)))").as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, n) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        val next = vocab.select(
-          call_function("replace", col("s"),
-            lit(SEP + l + SEP2 + r + SEP), lit(SEP + l + r + SEP)).as("s"),
-          col("freq")).persist()
-        // fused census (r6: ONE action per round instead of three — it
-        // doubles as the persist materializer, so the count() is gone
-        // too): explode the symbol array once, charge freq·|syms| only
-        // at the first position (every word has ≥ 1 symbol, so position
-        // 0 always exists) and count distinct symbols in the same agg.
-        // freq·|syms| == the old freq·k — k counted the ␟ pairs, which
-        // is exactly size(sy).
-        // two-level agg (per-symbol, then global) rather than
-        // sum + countDistinct in one — the mixed form plans through an
-        // Expand that doubles every exploded row
-        val cen = next.select(
-            split(expr("substring(s, 2, length(s) - 2)"), SEP2).as("sy"),
-            col("freq"))
-          .select((col("freq") * size(col("sy")).cast("long")).as("fk"),
-            posexplode(col("sy")).as(Seq("i", "sym")))
-          .groupBy(col("sym"))
-          .agg(sum(when(col("i") === 0, col("fk"))).as("tokpart"))
-          .agg(sum(col("tokpart")).as("tok"), count(lit(1)).as("nsym"))
-          .collect()(0)
-        vocab.unpersist() // next is materialized by the census action
-        vocab = next
-        out += ((step.toLong, l, r, n, cen.getLong(0), cen.getLong(1)))
-        step += 1
-      }
-    }
-    vocab.unpersist()
-    import spark.implicits._
-    out.toSeq
-      .toDF("step", "lsym", "rsym", "n_pair", "tok_total", "vocab_syms")
-      .orderBy(col("step"))
   }
 }

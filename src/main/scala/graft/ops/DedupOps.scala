@@ -14,13 +14,13 @@ import java.util.regex.Pattern
 object DedupOps {
 
   /** Word-shingle width of the near-dup family. */
-  private val ShingleW = 3
+  private[graft] val ShingleW = 3
 
   /** MinHash LSH banding: 32 bands × 3 rows = 96 hashes, and the verified
     * Jaccard floor in percent (see [[minhashLsh]] for the recall math). */
-  private val LshBands = 32
-  private val LshRowsPerBand = 3
-  private val LshMinJaccardPct = 60
+  private[graft] val LshBands = 32
+  private[graft] val LshRowsPerBand = 3
+  private[graft] val LshMinJaccardPct = 60
 
   /** Jaccard floor in percent of the exact, prefix-filtered and weighted
     * pair ops. */
@@ -136,7 +136,7 @@ object DedupOps {
     val sh = shingleArr(text, w)
     val sig = Array.fill(numHashes)(Long.MaxValue)
     sh.foreach { s =>
-      val base = Corpus64.hash(s)
+      val base = graft.io.Corpus.hash(s)
       var i = 0
       while (i < numHashes) {
         val h = mix64(base ^ (i * 0x632be59bd9b4e019L))
@@ -1350,19 +1350,23 @@ object DedupOps {
 }
 
 /** Stable 64-bit string hashes (String.hashCode is 32-bit and JVM-pinned).
-  * `hash` = FNV-1a (fast; minhash lanes). `md5Low64` = DuckDB
-  * `md5_number_lower` (slower; used where a SQL oracle must replicate it). */
+  * `md5Low64` = DuckDB `md5_number_lower` (used where a SQL oracle must
+  * replicate it). The fast FNV-1a hash of the minhash lanes is
+  * `graft.io.Corpus.hash`. */
 object Corpus64 {
-  def hash(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-    h
-  }
-
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** MD5 of a byte slice through the thread's one digest: a ThreadLocal
+    * digest avoids the per-call provider lookup (~3× on the fingerprint
+    * hot path). len = -1 means "to the end". */
+  private[graft] def md5Digest(bytes: Array[Byte], off: Int, len: Int): Array[Byte] = {
+    val d = md5.get()
+    d.reset()
+    d.update(bytes, off, if (len < 0) bytes.length - off else len)
+    d.digest()
   }
 
   def md5Low64(s: String): Long =
@@ -1370,13 +1374,9 @@ object Corpus64 {
 
   /** md5-low64 over a byte slice — lets k-gram loops hash windows of one
     * shared byte array instead of allocating a String + byte[] per gram.
-    * A ThreadLocal digest avoids the per-call provider lookup (~3× on the
-    * fingerprint hot path). len = -1 means "to the end". */
+    * len = -1 means "to the end". */
   def md5Low64(bytes: Array[Byte], off: Int, len: Int): Long = {
-    val d = md5.get()
-    d.reset()
-    d.update(bytes, off, if (len < 0) bytes.length - off else len)
-    val out = d.digest()
+    val out = md5Digest(bytes, off, len)
     var h = 0L
     var i = 7
     while (i >= 0) { h = (h << 8) | (out(8 + i) & 0xffL); i -= 1 }

@@ -265,17 +265,10 @@ object TextOps {
       .toDF("doc_id", "chunk_idx", "n_chunk_tokens", "chunk_md5")
   }
 
-  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Lowercase-hex md5 of a string — matches DuckDB's `md5()` (and Spark
     * SQL's `md5`) so chunk hashes oracle-compare exactly. */
   private[graft] def md5Hex(s: String): String = {
-    val d = md5Digest.get()
-    d.reset()
-    val out = d.digest(s.getBytes("UTF-8"))
+    val out = Corpus64.md5Digest(s.getBytes("UTF-8"), 0, -1)
     val sb = new java.lang.StringBuilder(32)
     var i = 0
     while (i < out.length) {

@@ -30,9 +30,10 @@ final case class DocOcr(
   *
   * This is the only extraction path: batch (`run`), checkpointed
   * (`CheckpointRunner`), salted (`SaltedPipeline`'s light slice, which also
-  * carries every oversize doc) and streaming (`StreamingExtraction.extract`)
-  * extraction all run `ocrStage → extractStage`. The 16 MB ingestion cap is
-  * decided only here (`oversize`); other entry points route on it.
+  * carries every oversize doc) and streaming (`run` on a streaming
+  * Dataset) extraction all run `ocrStage → extractStage`. The 16 MB
+  * ingestion cap is decided only here (`oversize`); other entry points
+  * route on it.
   */
 object ExtractionPipeline {
 
@@ -47,7 +48,7 @@ object ExtractionPipeline {
   /** Payload size of a doc: text chars + media-ref bytes (the synthesized
     * media payload is keyed by its ref; a real binary column would sum the
     * binary lengths here). */
-  def docBytes(doc: Doc): Long = {
+  private def docBytes(doc: Doc): Long = {
     var n = 0L
     doc.spans.foreach { s =>
       if (s.text != null) n += s.text.length
@@ -225,16 +226,4 @@ object ExtractionPipeline {
     * whole pipeline runs scan→write with zero shuffles. */
   def run(docs: Dataset[Doc], useDonut: Boolean = false): Dataset[DocResult] =
     extractStage(ocrStage(docs), useDonut)
-
-  /** Corpus-level extraction metrics (north_star: spans/doc, OCR confidence,
-    * failure counts) — a single partial+final hash aggregation. */
-  def metrics(results: Dataset[DocResult]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    results.groupBy(col("document_type"), col("is_valid"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        avg(col("ocr_accuracy_score")).as("avg_ocr_score"),
-        avg(size(col("spans"))).as("avg_spans_per_doc"),
-        sum(when(col("validation_error") =!= "", 1L).otherwise(0L)).as("validation_failures"))
-  }
 }

@@ -29,13 +29,16 @@ object SaltedPipeline {
       media_refs: Seq[String],
       failures: Long)
 
+  /** Spans per salted group of a heavy doc. */
+  private val GroupSize = 4
+
   /** Salted run: heavy docs (≥ heavyThreshold spans) are exploded into span
-    * groups of `groupSize`, OCR'd in parallel, re-merged by doc_id; light
+    * groups of `GroupSize`, OCR'd in parallel, re-merged by doc_id; light
     * docs take the fused path. So do oversize docs, heavy or not: the fused
     * path turns them into `Rejected` rows in its kernel, so the cap is never
-    * re-checked here. */
-  def run(docs: Dataset[Doc], heavyThreshold: Int = 8, groupSize: Int = 4,
-          useDonut: Boolean = false): Dataset[DocResult] = {
+    * re-checked here. Like the fused path's default, it runs without the
+    * Donut fallback. */
+  def run(docs: Dataset[Doc], heavyThreshold: Int = 8): Dataset[DocResult] = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -46,7 +49,7 @@ object SaltedPipeline {
 
     // explode heavy docs into salted groups of contiguous spans
     val pieces = heavy.flatMap { d =>
-      d.spans.sortBy(_.offset).grouped(groupSize).map(g => (d.doc_id, g))
+      d.spans.sortBy(_.offset).grouped(GroupSize).map(g => (d.doc_id, g))
     }.mapPartitions { it =>
       val backend = Backends.ocr()
       it.map { case (docId, spans) =>
@@ -76,8 +79,8 @@ object SaltedPipeline {
         ps.flatMap(_.media_refs), ps.map(_.failures).sum)
     }
 
-    val lightResults = ExtractionPipeline.run(light, useDonut)
-    val heavyResults = ExtractionPipeline.extractStage(heavyOcr, useDonut)
+    val lightResults = ExtractionPipeline.run(light)
+    val heavyResults = ExtractionPipeline.extractStage(heavyOcr)
     lightResults.union(heavyResults)
   }
 }

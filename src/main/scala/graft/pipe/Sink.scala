@@ -10,12 +10,11 @@ import graft.model.DocResult
   * `{image, ground_truth, validation_error?}` becomes the `record_json` +
   * `validation_error` columns, the copied image becomes the face/media
   * span refs already inside `spans`, and the uuid filename becomes the
-  * deterministic `doc_id`. */
+  * deterministic `doc_id`. A write replaces whatever `path` held. */
 object Sink {
-  def write(results: Dataset[DocResult], path: String,
-            mode: SaveMode = SaveMode.Overwrite): Unit =
+  def write(results: Dataset[DocResult], path: String): Unit =
     results.toDF()
-      .write.mode(mode)
+      .write.mode(SaveMode.Overwrite)
       .partitionBy("doc_type_dir", "is_valid")
       .parquet(path)
 }

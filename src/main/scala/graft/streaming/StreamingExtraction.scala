@@ -2,35 +2,37 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.model.{Doc, DocResult}
-import graft.pipe.ExtractionPipeline
 
 /** Structured Streaming surface (readStream → transforms → writeStream).
   *
   * The extraction pipeline is per-document stateless, so the batch
-  * pipeline runs unchanged on a streaming Dataset[Doc] — micro-batches are
-  * the streaming analogue of the reference's Celery queue (app/tasks.py):
-  * arrival-ordered work units, per-worker model reuse, progress via the
-  * streaming query listener instead of Redis task states.
+  * pipeline runs unchanged on a streaming Dataset[Doc]: streaming
+  * extraction is `ExtractionPipeline.run` on a streaming source (file,
+  * Kafka-decoded, MemoryStream in tests), with the same stages, the same
+  * 16 MB cap and the same bytes as a batch. Micro-batches are the streaming
+  * analogue of the reference's Celery queue (app/tasks.py): arrival-ordered
+  * work units, per-worker model reuse, progress via the streaming query
+  * listener instead of Redis task states.
+  *
+  * The windowed, session and watermark-dedup streams read event time from
+  * a `ts` column and hold late rows for a 10-minute watermark.
   */
 object StreamingExtraction {
 
-  /** Streaming extraction: `ExtractionPipeline.run` on a streaming
-    * Dataset[Doc] (file source, Kafka-decoded, MemoryStream in tests), so
-    * a stream gets the same stages, the same 16 MB cap and the same bytes
-    * as a batch. */
-  def extract(docs: Dataset[Doc], useDonut: Boolean = false): Dataset[DocResult] =
-    ExtractionPipeline.run(docs, useDonut)
+  /** Event-time column of the windowed, session and watermark-dedup
+    * streams. */
+  private val Ts = "ts"
+
+  /** Their watermark delay. */
+  private val Watermark = "10 minutes"
 
   /** Event-time windowed extraction metrics with a watermark: doc counts
-    * and validity by document_type per processing window. `ts` must be an
-    * event-time column on the input. */
-  def windowedMetrics(results: DataFrame, tsCol: String = "ts",
-                      watermark: String = "10 minutes",
-                      windowLen: String = "5 minutes"): DataFrame =
+    * and validity by document_type per 5-minute processing window. `ts`
+    * must be an event-time column on the input. */
+  private[graft] def windowedMetrics(results: DataFrame): DataFrame =
     results
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen), col("document_type"))
+      .withWatermark(Ts, Watermark)
+      .groupBy(window(col(Ts), "5 minutes"), col("document_type"))
       .agg(count(lit(1)).as("doc_count"),
         sum(when(col("is_valid"), 1L).otherwise(0L)).as("valid_count"))
 
@@ -41,16 +43,14 @@ object StreamingExtraction {
     * finalizes + evicts them, so state is bounded by concurrently-active
     * keys, not history. Append mode emits each session exactly once, when
     * the watermark passes its close — the right contract for downstream
-    * sinks that must never see a session twice. */
-  def sessionMetrics(events: DataFrame, tsCol: String = "ts",
-                     keyCol: String = "user_id",
-                     watermark: String = "10 minutes",
-                     gap: String = "5 minutes"): DataFrame =
+    * sinks that must never see a session twice. Sessions are keyed by
+    * `user_id`. */
+  def sessionMetrics(events: DataFrame, gap: String = "5 minutes"): DataFrame =
     events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
+      .withWatermark(Ts, Watermark)
+      .groupBy(session_window(col(Ts), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-      .select(col(keyCol),
+      .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
@@ -63,12 +63,10 @@ object StreamingExtraction {
     * duplicate arriving after its original's state expired is re-emitted
     * (spec-pinned) — which is the right trade for re-crawl dedup, where
     * duplicates cluster in time and exact history lives in the batch
-    * layer (p01/p26). */
-  def dedupWithinWatermark(docs: DataFrame, tsCol: String = "ts",
-                           keyCols: Seq[String] = Seq("content_hash"),
-                           delay: String = "10 minutes"): DataFrame =
-    docs.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols)
+    * layer (p01/p26). Rows are keyed by `content_hash`. */
+  private[graft] def dedupWithinWatermark(docs: DataFrame): DataFrame =
+    docs.withWatermark(Ts, Watermark)
+      .dropDuplicatesWithinWatermark(Seq("content_hash"))
 
   /** Streaming benchmark decontamination — the continuous-ingestion form
     * of `CorpusOps.decontaminate`: the static eval set's gram hashes (MBs
@@ -109,11 +107,16 @@ object StreamingExtraction {
     * hundreds of millions of corpus docs per executor-GB). Past that, the
     * same band keys become a stream-static equi-join on (band_id,
     * band_key) against the parquet-backed `minhashBands` table — identical
-    * semantics, one stream-side shuffle per micro-batch. */
-  def nearDupStream(docs: Dataset[(Long, String)], staticCorpus: DataFrame,
-                    w: Int = 3, bands: Int = 32, rowsPerBand: Int = 3,
-                    minJaccardPct: Int = 60): Dataset[(Long, Long, Int, Int)] = {
+    * semantics, one stream-side shuffle per micro-batch.
+    *
+    * Shingle width, banding and the Jaccard cut are `DedupOps`' batch LSH
+    * policy, so a stream and the batch near-dup ops agree on what a
+    * near-dup is. */
+  private[graft] def nearDupStream(docs: Dataset[(Long, String)],
+                                   staticCorpus: DataFrame)
+      : Dataset[(Long, Long, Int, Int)] = {
     import graft.ops.DedupOps
+    import DedupOps.{LshBands, LshMinJaccardPct, LshRowsPerBand, ShingleW}
     val spark = docs.sparkSession
     import spark.implicits._
     val corpus = staticCorpus
@@ -121,29 +124,29 @@ object StreamingExtraction {
       .collect()
     val index = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
     corpus.foreach { case (id, text) =>
-      DedupOps.bandKeysFor(text, w, bands, rowsPerBand).foreach { k =>
+      DedupOps.bandKeysFor(text, ShingleW, LshBands, LshRowsPerBand).foreach { k =>
         index.computeIfAbsent(k, _ => new java.util.ArrayList[Long]()).add(id)
       }
     }
     val sets: Map[Long, Array[Long]] = corpus.map { case (id, text) =>
-      id -> DedupOps.gramHashes(text, w).sorted
+      id -> DedupOps.gramHashes(text, ShingleW).sorted
     }.toMap
     val bcIndex = spark.sparkContext.broadcast(index)
     val bcSets = spark.sparkContext.broadcast(sets)
     docs.flatMap { case (id, text) =>
       val idx = bcIndex.value
       val cands = scala.collection.mutable.SortedSet[Long]()
-      DedupOps.bandKeysFor(text, w, bands, rowsPerBand).foreach { k =>
+      DedupOps.bandKeysFor(text, ShingleW, LshBands, LshRowsPerBand).foreach { k =>
         val hit = idx.get(k)
         if (hit != null) hit.forEach(c => cands += c)
       }
-      val mine = DedupOps.gramHashes(text, w).toSet
+      val mine = DedupOps.gramHashes(text, ShingleW).toSet
       cands.iterator.flatMap { c =>
         val other = bcSets.value(c)
         var inter = 0
         other.foreach(h => if (mine.contains(h)) inter += 1)
         val union = mine.size + other.length - inter
-        if (inter * 100 >= union * minJaccardPct) Some((id, c, inter, union))
+        if (inter * 100 >= union * LshMinJaccardPct) Some((id, c, inter, union))
         else None
       }.toSeq
     }
@@ -188,7 +191,7 @@ object StreamingExtraction {
     * window, never by corpus history. Rows older than the watermark are
     * dropped by the engine before the stateful operator, so the timeout
     * timestamp is always ahead of the watermark. */
-  def dedupStreamTtl(docs: Dataset[(Long, String, java.sql.Timestamp)],
+  private[graft] def dedupStreamTtl(docs: Dataset[(Long, String, java.sql.Timestamp)],
                      watermarkDelay: String = "10 minutes",
                      ttlMs: Long = 30L * 60 * 1000)
       : Dataset[(Long, String)] = {
@@ -250,7 +253,7 @@ object StreamingExtraction {
     * may be redelivered — so sink idempotence is exactly what upgrades
     * the end-to-end pipeline to exactly-once snapshots. Asserted by
     * StreamingSpec's replay test. */
-  def applyUpsertBatch(batch: DataFrame, snapshotPath: String): Unit = {
+  private[graft] def applyUpsertBatch(batch: DataFrame, snapshotPath: String): Unit = {
     val spark = batch.sparkSession
     val delta = batch.groupBy(col("doc_id"))
       .agg(max_by(struct(col("text"), col("is_delete")), col("seq"))

@@ -117,7 +117,7 @@ object Validator {
   val BaseDocumentSchema: Schema = Schema("BaseDocumentSchema", base)
 
   /** Dispatch on document_type — validator.py:26-41. */
-  def schemaFor(docType: String): Schema = docType match {
+  private def schemaFor(docType: String): Schema = docType match {
     case "Aadhaar Card"            => AadhaarSchema
     case "PAN Card"                => PANSchema
     case "Driving License"         => DLSchema

@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** Degenerate inputs: the ops whose options became constants, run on
-  * zero-row and one-row `documents`/`events`-shaped tables. Each must
-  * finish without an exception and keep the output columns (names and
-  * types) it has on a 200-row input. */
+/** Degenerate inputs: the ops whose options became constants or whose
+  * signature changed, run on zero-row and one-row `documents`/`events`-
+  * shaped tables. Each must finish without an exception and keep the
+  * output columns (names and types) it has on a 200-row input. */
 class DegenerateInputSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -152,22 +152,123 @@ class DegenerateInputSpec extends AnyFunSuite {
     },
   )
 
-  private def columns(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-degenerate").toString
 
-  test("hllValidate on zero rows returns the oracle's one row: m 64, " +
-    "n_exact 0, est_int 45, err_permille null") {
-    val rows = CorpusOps.hllValidate(docs200.limit(0)).collect()
-    assert(rows.length === 1)
-    val r = rows.head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((64L, 0L, 45L)))
-    assert(r.isNullAt(3))
+  private val tableIds = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A managed table name, cleared of what an earlier run left under it. */
+  private def freshTable(prefix: String): String = {
+    val t = s"$prefix${tableIds.incrementAndGet()}"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    new scala.reflect.io.Directory(new java.io.File(s"spark-warehouse/$t"))
+      .deleteRecursively()
+    t
   }
 
-  test("every op with options made constant runs on zero-row and one-row " +
-    "documents/events inputs and keeps its 200-row output columns") {
-    val failures = for {
-      (ops, full) <- Seq((docOps, docs200), (eventOps, events200),
-        (embOps, emb200))
+  private def texts(d: DataFrame) =
+    d.select(col("doc_id"), col("text")).as[(Long, String)]
+
+  /** A change batch of p120's streaming upsert, derived from documents. */
+  private def changes(d: DataFrame) =
+    d.select(col("doc_id"), col("text"), col("n_chars").as("seq"),
+      (col("doc_id") % 9 === 0).as("is_delete"))
+
+  /** Streaming ops, run on batch frames (the operators are the same;
+    * `dedupWithinWatermark` exists only on streams and has its own test). */
+  private val streamOps: Seq[(String, DataFrame => DataFrame)] = {
+    import graft.streaming.StreamingExtraction._
+    Seq(
+      "StreamingExtraction.windowedMetrics" -> (e => windowedMetrics(
+        e.select(col("ts"), col("event_type").as("document_type"),
+          (col("user_id") % 2 === 0).as("is_valid")))),
+      "StreamingExtraction.sessionMetrics" -> (e => sessionMetrics(e)),
+      "StreamingExtraction.dedupStreamTtl" -> (e => dedupStreamTtl(
+        e.select(col("event_id"), col("event_type"), col("ts"))
+          .as[(Long, String, Timestamp)]).toDF()),
+    )
+  }
+
+  /** Streaming ops over documents, each input degenerate on its own. */
+  private def streamDocOps(full: DataFrame): Seq[(String, DataFrame => DataFrame)] = {
+    import graft.streaming.StreamingExtraction._
+    Seq(
+      "StreamingExtraction.nearDupStream (stream)" -> (d =>
+        nearDupStream(texts(d), full).toDF()),
+      "StreamingExtraction.nearDupStream (static corpus)" -> (d =>
+        nearDupStream(texts(full), d).toDF()),
+      "StreamingExtraction.decontaminateStream (stream)" -> (d =>
+        decontaminateStream(texts(d), full, w = 4).toDF()),
+      "StreamingExtraction.decontaminateStream (benchmark)" -> (d =>
+        decontaminateStream(texts(full), d, w = 4).toDF()),
+      "StreamingExtraction.applyUpsertBatch" -> { d =>
+        val path = tmpDir() + "/snap"
+        applyUpsertBatch(changes(d), path)
+        spark.read.parquet(path)
+      },
+    )
+  }
+
+  /** Extraction paths, on as many synthesized `Doc`s as the input has rows. */
+  private val pipeOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "ExtractionPipeline.run" -> (d =>
+      graft.pipe.ExtractionPipeline.run(docsLike(d)).toDF()),
+    "SaltedPipeline.run" -> (d =>
+      graft.pipe.SaltedPipeline.run(docsLike(d)).toDF()),
+  )
+
+  /** TableIO writers, each read back by its reader. */
+  private val ioOps: Seq[(String, DataFrame => DataFrame)] = {
+    import graft.io.TableIO
+    Seq(
+      "TableIO.writeBucketed + bucketedJoin" -> { d =>
+        val (a, b) = (freshTable("t_degen_a"), freshTable("t_degen_b"))
+        TableIO.writeBucketed(d, a, buckets = 4)
+        TableIO.writeBucketed(d.select(col("doc_id"), col("lang").as("lang_b")),
+          b, buckets = 4)
+        TableIO.bucketedJoin(spark, a, b)
+      },
+      "TableIO.writeCsv + readCsv" -> { d =>
+        val p = tmpDir() + "/csv"
+        TableIO.writeCsv(d, p)
+        TableIO.readCsv(spark, p, d.schema)
+      },
+      "TableIO.writeOrc + readOrc" -> { d =>
+        val p = tmpDir() + "/orc"
+        TableIO.writeOrc(d, p)
+        TableIO.readOrc(spark, p)
+      },
+      "TableIO.readParquetMerged" -> { d =>
+        val (a, b) = (tmpDir() + "/a", tmpDir() + "/b")
+        d.drop("n_chars").write.parquet(a)
+        d.write.parquet(b)
+        TableIO.readParquetMerged(spark, a, b)
+      },
+      "TableIO.writeJsonl + readJsonl" -> { d =>
+        val p = tmpDir() + "/jsonl"
+        TableIO.writeJsonl(d, p)
+        TableIO.readJsonl(spark, p, d.schema)
+      },
+      "TableIO.readJsonlFlagged" -> { d =>
+        val p = tmpDir() + "/jsonl"
+        TableIO.writeJsonl(d, p)
+        TableIO.readJsonlFlagged(spark, p, d.schema).cache()
+      },
+      "TableIO.readCsvFlagged" -> { d =>
+        val p = tmpDir() + "/csv"
+        d.write.csv(p)
+        TableIO.readCsvFlagged(spark, p, d.schema).cache()
+      },
+    )
+  }
+
+  private def columns(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  /** One line per (op, row count) that throws or changes its columns. */
+  private def degenerate(cases: Seq[(Seq[(String, DataFrame => DataFrame)],
+                                     DataFrame)]): Seq[String] =
+    for {
+      (ops, full) <- cases
       (name, op) <- ops
       n <- Seq(0, 1)
       problem <- {
@@ -183,6 +284,67 @@ class DegenerateInputSpec extends AnyFunSuite {
         }
       }
     } yield s"$name on $n rows: $problem"
+
+  test("hllValidate on zero rows returns the oracle's one row: m 64, " +
+    "n_exact 0, est_int 45, err_permille null") {
+    val rows = CorpusOps.hllValidate(docs200.limit(0)).collect()
+    assert(rows.length === 1)
+    val r = rows.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((64L, 0L, 45L)))
+    assert(r.isNullAt(3))
+  }
+
+  test("every op with options made constant runs on zero-row and one-row " +
+    "documents/events inputs and keeps its 200-row output columns") {
+    val failures = degenerate(Seq((docOps, docs200), (eventOps, events200),
+      (embOps, emb200)))
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  test("every streaming, pipe and io op whose signature changed runs on " +
+    "zero-row and one-row inputs and keeps its 200-row output columns") {
+    val failures = degenerate(Seq((streamOps, events200),
+      (streamDocOps(docs200), docs200), (pipeOps, docs200), (ioOps, docs200)))
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  test("Sink.write of zero rows and one row finishes; each reads back " +
+    "with the results schema") {
+    val results = graft.pipe.ExtractionPipeline
+      .run(graft.io.Synthesizer.docs(spark, 1, seed = 42L))
+    for (n <- Seq(0, 1)) {
+      val dir = tmpDir() + "/sink"
+      graft.pipe.Sink.write(results.limit(n), dir)
+      assert(spark.read.schema(results.schema).parquet(dir).count() === n)
+    }
+  }
+
+  test("dedupWithinWatermark on a stream of zero rows and of one row keeps " +
+    "the stream's columns") {
+    implicit val sqlCtx = spark.sqlContext
+    for (n <- Seq(0, 1)) {
+      val stream = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Timestamp, Long, Long)]
+      val in = stream.toDS().toDF("ts", "content_hash", "doc_id")
+      val name = s"degenerate_wmdedup_$n"
+      val q = graft.streaming.StreamingExtraction.dedupWithinWatermark(in)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      stream.addData(
+        Seq((Timestamp.valueOf("2024-01-01 00:00:00"), 7L, 1L)).take(n))
+      try q.processAllAvailable() finally q.stop()
+      val out = spark.table(name)
+      assert(columns(out) === columns(in))
+      assert(out.count() === n)
+    }
+  }
+
+  test("applyUpsertBatch with an empty batch leaves the snapshot as it was") {
+    val path = tmpDir() + "/snap"
+    val d = changes(docs200.limit(5))
+    graft.streaming.StreamingExtraction.applyUpsertBatch(d, path)
+    val before = spark.read.parquet(path).collect().toSet
+    graft.streaming.StreamingExtraction.applyUpsertBatch(d.limit(0), path)
+    assert(spark.read.parquet(path).collect().toSet === before)
   }
 }

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model.{Doc, DocResult, Span}
 import graft.pipe.{ExtractionPipeline, SaltedPipeline}
-import graft.streaming.StreamingExtraction
 
 /** Ingestion cap (reference app/main.py:41, 16 MB MAX_CONTENT_LENGTH):
   * oversize rows must be routed to Rejected on EVERY extraction path
@@ -49,7 +48,7 @@ class OversizeSpec extends AnyFunSuite {
     val stream = MemoryStream[Doc]
     stream.addData(Seq(normal("ok3"),
       Doc("big3", Vector(Span("text", bigText, null, 0)))))
-    val q = StreamingExtraction.extract(stream.toDS())
+    val q = ExtractionPipeline.run(stream.toDS())
       .writeStream.format("memory").queryName("oversize_stream_out")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()

@@ -18,7 +18,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[Doc]
     stream.addData(docs.take(50))
 
-    val q = StreamingExtraction.extract(stream.toDS()).toDF()
+    val q = ExtractionPipeline.run(stream.toDS()).toDF()
       .writeStream.format("memory").queryName("stream_out")
       .outputMode("append").start()
     q.processAllAvailable()

@@ -1,42 +1,59 @@
 #!/usr/bin/env python3
-"""Census of graft.ops' public surface: who calls each op, who sets each option.
+"""Census of graft's library surface: who calls each def, who sets each option.
 
 Run from the repo root:
 
     python3 tools/op_census.py            # full report
-    python3 tools/op_census.py --check    # exit 1 on an unset option or an uncalled op
+    python3 tools/op_census.py --check    # exit 1 on an unset option or an uncalled def
 
-It reads every member `def` of the objects in src/main/scala/graft/ops/ and
-every call of them in src/main, perfbench/src and src/test, then prints
+It reads every member `def` of the objects in the library packages under
+src/main/scala/graft/ (PACKAGES) and every call of them in src/main,
+perfbench/src and src/test, then prints
 
-  * for each public op, its callers outside its own object, split into
+  * for each public def, its callers outside its own object, split into
     main (src/main and perfbench/src) and specs (src/test);
   * for each defaulted parameter, one class: `main` (set by main code),
-    `specs` (set only by specs) or `nobody` (set by no call).
+    `specs` (set only by specs) or `nobody` (set by no call);
+  * totals per package.
+
+The harness and query files are callers, not surface: `Bench`, `Verify`,
+`SparkEntry`, the query objects and the graft.tools mains sit outside
+PACKAGES, and `ClassifyQuery` is left out by EXCLUDED_FILES. Their public
+defs are entry points, or oracles interpolate them.
 
 A call sets a parameter when it passes it, positionally or by name. A call
-inside graft.ops that passes a bare parameter of the def it sits in (say
-`minhashLsh(repDocs, w)` inside an op that takes `w`) is a forward: it sets
-the callee's parameter only as far as the enclosing parameter is itself set
-(a parameter without a default always is). Classes are computed to a fixed
-point over these forwards. A spec variable that shares a parameter's name is
-a real setting: forwards exist only inside graft.ops.
+inside a covered object that passes a bare parameter of the def it sits in
+(say `minhashLsh(repDocs, w)` inside an op that takes `w`) is a forward: it
+sets the callee's parameter only as far as the enclosing parameter is itself
+set (a parameter without a default always is). Classes are computed to a
+fixed point over these forwards. A spec variable that shares a parameter's
+name is a real setting: forwards exist only inside covered objects.
 
-`--check` fails when a defaulted parameter of a graft.ops def is set by
-nobody, or when a public graft.ops def has no caller outside its own object
+Calls are found in four forms: `Obj.name(...)` (also fully qualified, or
+through a renaming import `{Obj => Alias}`), a bare `name(...)` inside `Obj`
+or in a file that imports `Obj._` or `Obj.{name}`, and the `Obj(...)` /
+`Obj(...) = v` sugar for `Obj.apply` / `Obj.update`. An `override def`
+implements a supertype's member, so it is not part of its object's surface.
+
+`--check` fails when a defaulted parameter of a covered def is set by
+nobody, or when a public covered def has no caller outside its own object
 in main code. The guards in GUARDS are exempt from the first rule: they are
 safety switches, so a default nobody overrides is their normal state.
 
 The parser is lexical: it blanks comments and string literals, then matches
-`def`s, `Obj.name(...)` calls and same-object `name(...)` calls by brace
-depth and indentation. It relies on the repo's formatting (members at one
-indent level, a def's body indented below its `def` line).
+`def`s and calls by brace depth and indentation. It relies on the repo's
+formatting (members at one indent level, a def's body indented below its
+`def` line).
 """
 import os
 import re
 import sys
 
-OPS_DIR = "src/main/scala/graft/ops"
+PACKAGES = ["ops", "pipe", "streaming", "io", "kernel", "model", "classify",
+            "extract", "validate", "html", "text", "functions"]
+LIB_DIRS = ["src/main/scala/graft/" + p for p in PACKAGES]
+# Query objects inside a library package: their defs are entry points.
+EXCLUDED_FILES = {"src/main/scala/graft/classify/ClassifyQuery.scala"}
 MAIN_DIRS = ["src/main/scala", "perfbench/src"]
 SPEC_DIRS = ["src/test/scala"]
 
@@ -164,6 +181,7 @@ class Param:
 class Def:
     def __init__(self, obj, name, visibility, member, start, end, lists, path, line):
         self.obj, self.name, self.visibility = obj, name, visibility
+        self.override = visibility == "override"
         self.member = member          # a member of its object (not local)
         self.start, self.end = start, end
         self.lists = lists            # [[Param]]
@@ -175,6 +193,10 @@ class Def:
     @property
     def public(self):
         return self.member and self.visibility == "public"
+
+    @property
+    def package(self):
+        return os.path.basename(os.path.dirname(self.path))
 
     def params(self):
         return [p for pl in self.lists for p in pl]
@@ -237,9 +259,9 @@ def visibility_of(text, def_pos):
     line_start = text.rfind("\n", 0, def_pos) + 1
     prefix = text[line_start:def_pos]
     m = re.search(r"\b(private|protected)(\[\w+\])?", prefix)
-    if not m:
-        return "public"
-    return m.group(1) + (m.group(2) or "")
+    if m:
+        return m.group(1) + (m.group(2) or "")
+    return "override" if re.search(r"\boverride\b", prefix) else "public"
 
 
 def objects_in(text):
@@ -249,8 +271,13 @@ def objects_in(text):
         b = text.find("{", m.end())
         if b < 0:
             continue
-        # only `object X {` or `object X extends ... {` on the same statement
-        if "\n\n" in text[m.end():b]:
+        # only `object X {` or `object X extends ... {` on the same
+        # statement: a later line of the header continues it only after or
+        # with `extends`/`with`, so `case object A extends T` has no body
+        lines = text[m.end():b].split("\n")
+        if any(not (prev.rstrip().endswith(("extends", "with", ",", "(", "["))
+                    or line.strip().startswith(("extends", "with")))
+               for prev, line in zip(lines, lines[1:])):
             continue
         objs.append((m.group(1), b, match_close(text, b)))
     return objs
@@ -281,7 +308,7 @@ def scala_files(dirs):
 
 
 def collect_defs(files):
-    """All defs inside graft.ops objects: members and local ones."""
+    """All defs inside covered objects: members and local ones."""
     defs, by_obj = [], {}
     for path, text in files.items():
         objs = objects_in(text)
@@ -291,13 +318,12 @@ def collect_defs(files):
                 cb = class_body(text, cm.end())
                 if cb is not None:
                     nested.append((cb, match_close(text, cb)))
-            member_indent = None
+            first = re.compile(r"\S").search(text, b + 1, e - 1)
+            member_indent = indent_at(text, first.start()) if first else None
             for m in DEF_RE.finditer(text, b, e):
                 if any(ob < m.start() < oe for ob, oe in nested):
                     continue      # a def of a nested object or class
                 ind = indent_at(text, m.start())
-                if member_indent is None:
-                    member_indent = ind
                 lists = parse_params(text, m.end())
                 member = ind == member_indent
                 d = Def(obj, m.group(1), visibility_of(text, m.start()), member,
@@ -330,13 +356,39 @@ def bind(cands, arg_lists):
     return out or cands
 
 
+IMPORT_RE = re.compile(r"(?<![A-Za-z0-9_])import\s+([A-Za-z0-9_.]+(?:\{[^}]*\})?)")
+
+
+def package_of(text):
+    m = re.search(r"^package\s+([A-Za-z0-9_.]+)", text, re.M)
+    return m.group(1) if m else ""
+
+
+def block_end(text, pos):
+    """End of the innermost `{...}` block holding pos (or of the file)."""
+    depth = 0
+    for j in range(pos - 1, -1, -1):
+        if text[j] == "}":
+            depth += 1
+        elif text[j] == "{":
+            if depth == 0:
+                return match_close(text, j)
+            depth -= 1
+    return len(text)
+
+
 def main(argv):
     check = "--check" in argv
-    ops_files = {p: blank(read(p)) for p in scala_files([OPS_DIR])}
-    defs, by_obj = collect_defs(ops_files)
+    lib_files = {p: blank(read(p)) for p in scala_files(LIB_DIRS)
+                 if p not in EXCLUDED_FILES}
+    defs, by_obj = collect_defs(lib_files)
+    fq_of = {}                        # object -> fully qualified name
+    for path, text in lib_files.items():
+        for (obj, _, _) in objects_in(text):
+            fq_of[obj] = package_of(text) + "." + obj
     members = [d for d in defs if d.member]
     forwards = []                     # (enclosing Param, callee Param)
-    text_of = dict(ops_files)         # path -> blanked source
+    text_of = dict(lib_files)         # path -> blanked source
 
     def enclosing_def(path, pos):
         cands = [d for d in defs if d.path == path and d.start < pos < d.end]
@@ -349,7 +401,7 @@ def main(argv):
                     caller_obj or os.path.basename(path))
             else:
                 d.inside_calls += 1
-            encl = enclosing_def(path, pos) if path in ops_files else []
+            encl = enclosing_def(path, pos) if path in lib_files else []
             for li, args in enumerate(arg_lists[:len(d.lists)]):
                 pl = d.lists[li]
                 for ai, a in enumerate(args):
@@ -394,41 +446,117 @@ def main(argv):
                 inner = text[i + 1:j - 1]
                 lists.append(split_top(inner) if text[i] == "(" else [inner])
                 i = j
-            return lists
+            return lists, i
 
-        qual = re.compile(r"(?<![A-Za-z0-9_])(" + "|".join(by_obj) +
-                          r")\s*\.\s*(" + IDENT + r")")
+        def qualified_ok(pos, obj):
+            """A name preceded by `.` refers to a covered object only when
+            its qualifier is that object's package (not, say, Spark's
+            `org.apache.spark.sql.functions`)."""
+            if pos == 0 or text[pos - 1] != ".":
+                return True
+            pkg = fq_of[obj][:-len(obj)]
+            return text[max(0, pos - len(pkg)):pos] == pkg
+
+        def bare_ok(start, end):
+            before = text[max(0, start - 8):start]
+            if re.search(r"\b(def|val|var|object|class|trait|new)\s+$", before):
+                return False      # a declaration, or a constructor call
+            line_start = text.rfind("\n", 0, start) + 1
+            if text[line_start:start].lstrip().startswith("import"):
+                return False
+            after = skip_ws(text, end)
+            if text.startswith("=", after) and not text.startswith("==", after) \
+                    and not text.startswith("=>", after):
+                return False      # a named argument or an assignment
+            return not (after < len(text) and text[after] == ":")
+
+        # imports: `Obj._` / `Obj.{a, b => c}` bring bare names into scope;
+        # `pkg.{Obj => Alias}` renames the object
+        aliases = {o: o for o in by_obj}
+        bare_names = []           # (scope start, scope end, {bare: (obj, name)})
+        for m in IMPORT_RE.finditer(text):
+            spec = m.group(1)
+            if spec.endswith("}"):
+                path_part, sel = spec[:spec.index("{")].rstrip("."), \
+                    spec[spec.index("{") + 1:-1]
+                sels = [x.strip() for x in sel.split(",") if x.strip()]
+            else:
+                path_part, _, last = spec.rpartition(".")
+                sels = [last]
+            last_obj = path_part.rpartition(".")[2]
+            if last_obj in by_obj and path_part in (
+                    fq_of[last_obj], last_obj,
+                    fq_of[last_obj].split(".", 1)[1]):
+                names = {}
+                for x in sels:
+                    orig, _, new = (t.strip() for t in x.partition("=>"))
+                    if orig == "_":
+                        names.update({n: (last_obj, n) for n in by_obj[last_obj]})
+                    elif orig in by_obj[last_obj] and new != "_":
+                        names[new or orig] = (last_obj, orig)
+                if names:
+                    bare_names.append((m.end(), block_end(text, m.start()), names))
+            else:
+                for x in sels:
+                    orig, _, new = (t.strip() for t in x.partition("=>"))
+                    if new and new != "_" and orig in by_obj and \
+                            path_part + "." + orig == fq_of[orig]:
+                        aliases[new] = orig
+
+        qual = re.compile(r"(?<![A-Za-z0-9_])(" + "|".join(map(re.escape, aliases)) +
+                          r")(?=\s*\.\s*(" + IDENT + r"))")
         for m in qual.finditer(text):
-            obj, name = m.group(1), m.group(2)
+            obj, name = aliases[m.group(1)], m.group(2)
             cands = by_obj[obj].get(name)
-            if cands:
-                al = arg_lists_at(m.end())
+            if cands and (m.group(1) != obj or qualified_ok(m.start(), obj)):
+                al, _ = arg_lists_at(m.end(2))
                 record(bind(cands, al), al, where, path, m.start(), obj_at(m.start()))
-        if path in ops_files:
-            for (obj, b, e) in objs:
-                names = by_obj.get(obj, {})
-                if not names:
+
+        # `Obj(...)` is `Obj.apply(...)`; `Obj(...) = v` is `Obj.update(...)`
+        sugared = [o for o in by_obj if "apply" in by_obj[o] or "update" in by_obj[o]]
+        if sugared:
+            sugar = re.compile(r"(?<![A-Za-z0-9_])(" + "|".join(sugared) +
+                               r")(?=\s*[\[(])")
+            for m in sugar.finditer(text):
+                obj = m.group(1)
+                if not (qualified_ok(m.start(), obj) and bare_ok(m.start(), m.end())):
                     continue
-                bare = re.compile(r"(?<![A-Za-z0-9_.])(" +
-                                  "|".join(map(re.escape, names)) +
-                                  r")(?![A-Za-z0-9_])")
-                for m in bare.finditer(text, b, e):
-                    before = text[max(0, m.start() - 8):m.start()]
-                    if re.search(r"def\s+$", before):
-                        continue
-                    if obj_at(m.start()) != obj:
-                        continue
-                    after = skip_ws(text, m.end())
-                    if text.startswith("=", after) and not text.startswith("==", after) \
-                            and not text.startswith("=>", after):
-                        continue          # a named argument or an assignment
-                    if after < len(text) and text[after] == ":":
-                        continue          # a parameter or val declaration
-                    al = arg_lists_at(m.end())
-                    record(bind(names[m.group(1)], al), al, MAIN, path, m.start(), obj)
+                al, j = arg_lists_at(m.end())
+                j = skip_ws(text, j)
+                if text.startswith("=", j) and not text.startswith("==", j) \
+                        and not text.startswith("=>", j) and "update" in by_obj[obj]:
+                    name = "update"
+                    rhs = text[j + 1:text.find("\n", j) if "\n" in text[j:] else len(text)]
+                    al = [al[0] + [rhs]] if al else [[rhs]]
+                else:
+                    name = "apply"
+                if name in by_obj[obj]:
+                    record(bind(by_obj[obj][name], al), al, where, path, m.start(),
+                           obj_at(m.start()))
+
+        def scan_bare(names, lo, hi, caller):
+            bare = re.compile(r"(?<![A-Za-z0-9_.])(" +
+                              "|".join(map(re.escape, names)) +
+                              r")(?![A-Za-z0-9_])")
+            for m in bare.finditer(text, lo, hi):
+                if not bare_ok(m.start(), m.end()):
+                    continue
+                obj, name = names[m.group(1)]
+                at = obj_at(m.start())
+                if caller is not None and at != caller:
+                    continue
+                al, _ = arg_lists_at(m.end())
+                record(bind(by_obj[obj][name], al), al, where, path, m.start(), at)
+
+        for lo, hi, names in bare_names:
+            scan_bare(names, lo, hi, None)
+        if path in lib_files:
+            for (obj, b, e) in objs:
+                if by_obj.get(obj):
+                    scan_bare({n: (obj, n) for n in by_obj[obj]}, b, e, obj)
 
     for path in scala_files(MAIN_DIRS):
-        scan(path, ops_files.get(path) or blank(read(path)), MAIN)
+        scan(path, lib_files.get(path) or blank(read(path)), MAIN)
     for path in scala_files(SPEC_DIRS):
         scan(path, blank(read(path)), SPECS)
 
@@ -443,16 +571,17 @@ def main(argv):
                 target.cls, changed = src.cls, True
 
     public = [d for d in members if d.public]
-    print("== public graft.ops defs: outside callers (main | specs) ==")
-    for d in sorted(public, key=lambda d: (d.obj, d.line)):
+    print("== public library defs: outside callers (main | specs) ==")
+    for d in sorted(public, key=lambda d: (d.package, d.obj, d.line)):
         note = ("" if d.main_callers or d.spec_callers else
                 "  inside-only" if d.inside_calls else "  UNCALLED")
         print(f"{d.label():45s} main: {','.join(sorted(d.main_callers)) or '-'}"
               f" | specs: {','.join(sorted(d.spec_callers)) or '-'}{note}")
     print()
-    print("== defaulted parameters of graft.ops defs ==")
-    opts = [(d, p) for d in members for p in d.params() if p.default is not None]
-    for d, p in sorted(opts, key=lambda t: (t[0].obj, t[0].line)):
+    print("== defaulted parameters of library defs ==")
+    opts = [(d, p) for d in members if not d.override
+            for p in d.params() if p.default is not None]
+    for d, p in sorted(opts, key=lambda t: (t[0].package, t[0].obj, t[0].line)):
         tag = " (guard)" if p.name in GUARDS else ""
         sites = p.by_main if p.cls == MAIN else p.by_specs
         site = (f"  e.g. {sites[0]}" if sites else
@@ -461,19 +590,28 @@ def main(argv):
               f"{d.visibility}{tag}{site}")
     print()
 
-    pub_params = sum(len(d.params()) for d in public)
-    pub_opts = [(d, p) for d, p in opts if d.public]
     nobody = [(d, p) for d, p in opts if p.cls == NOBODY and p.name not in GUARDS]
     uncalled = [d for d in public if not d.main_callers]
-    print("== totals ==")
-    print(f"public defs: {len(public)}")
-    print(f"public parameters: {pub_params}")
-    print(f"settable options (defaulted public parameters): {len(pub_opts)}")
-    for c in (MAIN, SPECS, NOBODY):
-        print(f"  set by {CLASS_NAME[c]}: {sum(1 for _, p in pub_opts if p.cls == c)}")
-    print(f"  guards: {sum(1 for _, p in pub_opts if p.name in GUARDS)}")
-    print(f"defaulted parameters set by nobody (any visibility, guards exempt): {len(nobody)}")
-    print(f"public defs without an outside caller in main code: {len(uncalled)}")
+
+    def totals(pkg):
+        pub = [d for d in public if pkg in (None, d.package)]
+        pub_opts = [p for d, p in opts if d.public and pkg in (None, d.package)]
+        return [len(pub), sum(len(d.params()) for d in pub), len(pub_opts)] + \
+            [sum(1 for p in pub_opts if p.cls == c) for c in (MAIN, SPECS, NOBODY)] + \
+            [sum(1 for p in pub_opts if p.name in GUARDS),
+             sum(1 for d, p in nobody if pkg in (None, d.package)),
+             sum(1 for d in uncalled if pkg in (None, d.package))]
+
+    print("== totals per package ==")
+    print("columns: public defs | public parameters | settable options (defaulted "
+          "public parameters): set by main, by specs, by nobody, guards | "
+          "parameters set by nobody (any visibility, guards exempt) | public defs "
+          "without an outside caller in main code")
+    for pkg in PACKAGES + [None]:
+        t = totals(pkg)
+        print(f"{pkg or 'all':10s} defs {t[0]:4d}  params {t[1]:4d}  options {t[2]:4d}"
+              f" (main {t[3]:3d}, specs {t[4]:3d}, nobody {t[5]:3d}, guards {t[6]})"
+              f"  nobody {t[7]:3d}  uncalled {t[8]:3d}")
     if check:
         for d, p in nobody:
             print(f"FAIL: {d.label()}.{p.name} ({d.path}:{d.line}) is set by nobody")

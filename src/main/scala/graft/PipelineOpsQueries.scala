@@ -145,15 +145,14 @@ object PipelineOpsQueries {
     // global sort); integer-exact, bits via minimal-width bin()
     "p133_encoding_advisor" -> ((s, dir) =>
       graft.ops.StorageOps.encodingAdvisor(
-        s.read.parquet(s"$dir/lineitem.parquet"), blockRows = 4096)),
+        s.read.parquet(s"$dir/lineitem.parquet"))),
 
     // isotonic (PAV) calibration: best non-decreasing outcome rate over
     // 32 length bins; engine = one keyed agg + driver PAV stack; oracle
     // = the CLOSED-FORM minimax characterization max_j min_k of segment
     // rates — their agreement IS the isotonic-regression theorem
     "p131_isotonic_calibration" -> ((s, dir) =>
-      graft.ops.CalibrationOps.isotonicCalibration(docs(s, dir),
-        bins = 32)),
+      graft.ops.CalibrationOps.isotonicCalibration(docs(s, dir))),
 
     // ε=ln2 DP histogram release (geometric mechanism, p103's
     // governance sibling): every (lang, source) domain cell — absent
@@ -170,7 +169,7 @@ object PipelineOpsQueries {
     // whole loop as generated chained CTEs over the sparse features
     "p129_perceptron_train" -> ((s, dir) =>
       graft.ops.ClassifierOps.perceptronTrain(docs(s, dir), epochs = 8,
-        dims = 256, posLang = "en")),
+        dims = 256)),
 
     // greedy facility-location coreset (submodular subset selection):
     // 8 rounds of integer-exact marginal-gain argmax over a broadcast
@@ -346,19 +345,19 @@ object PipelineOpsQueries {
       graft.ops.CorpusOps.hllValidate(docs(s, dir))),
     // cross-doc repeated 4-gram coverage (boilerplate/template signal)
     "p36_repeated_grams" -> ((s, dir) =>
-      graft.ops.CorpusOps.repeatedGramStats(docs(s, dir), w = 4)),
+      graft.ops.CorpusOps.repeatedGramStats(docs(s, dir))),
     // CMS point estimates vs exact counts for the top-20 tokens (integer,
     // est >= exact by construction — the oracle checks the same cells)
     "p37_cms_validate" -> ((s, dir) =>
       graft.ops.CorpusOps.cmsValidate(docs(s, dir))),
     // integer unigram-surprisal quality score (perplexity-filter stand-in)
     "p38_surprisal" -> ((s, dir) =>
-      graft.ops.CorpusOps.surprisalScores(docs(s, dir), vocabSize = 20)),
+      graft.ops.CorpusOps.surprisalScores(docs(s, dir))),
     // SimHash near-dup PAIRS (p06 emits signatures; this is the banded
     // candidate join + exact hamming verify) — oracle recomputes both the
     // signatures and the band/hamming rule from scratch in SQL
     "p39_simhash_pairs" -> ((s, dir) =>
-      DedupOps.simhashPairs(docs(s, dir), maxHamming = 3)),
+      DedupOps.simhashPairs(docs(s, dir))),
 
     // the 10^12 path of the p12/p28 exact-pairs family, driver-verified:
     // multi-table sign-LSH candidates (bucket-keys-only shuffle), exact
@@ -369,7 +368,7 @@ object PipelineOpsQueries {
     "p40_embed_near_dups" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
       val e = emb(s, dir)
-      SimilarityOps.lshBucketsMulti(e, bits = 4, tables = 8)
+      SimilarityOps.lshBucketsMulti(e)
         .write.mode("overwrite").parquet(multiBucketDumpPath(dir))
       SimilarityOps.embeddingNearDupsFrom(e,
           s.read.parquet(multiBucketDumpPath(dir)), minCosine = 0.45)
@@ -630,7 +629,7 @@ object PipelineOpsQueries {
     "p78_simhash_precision" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val d = docs(s, dir)
-      val sim = DedupOps.simhashPairs(d, maxHamming = 3)
+      val sim = DedupOps.simhashPairs(d)
       val exact = DedupOps.exactJaccardPairs(d)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("is_true"))
       sim.join(exact, Seq("doc_a", "doc_b"), "left")
@@ -946,16 +945,14 @@ object PipelineOpsQueries {
     // representation — replace() is left-to-right non-overlapping in
     // both engines, which IS BPE's apply rule
     "p126_bpe_train" -> ((s, dir) =>
-      graft.ops.CorpusOps.bpeTrain(docs(s, dir), steps = 8,
-        maxWordLen = 32)),
+      graft.ops.CorpusOps.bpeTrain(docs(s, dir), steps = 8)),
 
     // BPE ENCODE census (the apply half of p126): same merge loop, then
     // the whole corpus encodes through one (source, word) count agg + a
     // keyed join against the trained vocab — whose symbol sequences ARE
     // every word's encoding; per-source fertility in exact integers
     "p134_bpe_fertility" -> ((s, dir) =>
-      graft.ops.CorpusOps.bpeEncodeCensus(docs(s, dir), steps = 8,
-        maxWordLen = 32)),
+      graft.ops.CorpusOps.bpeEncodeCensus(docs(s, dir))),
 
     // GroupKFold by dup-cluster: folds assigned to whole near-dup
     // clusters so near-duplicates never straddle train/test (the p73
@@ -964,7 +961,7 @@ object PipelineOpsQueries {
     "p136_group_kfold" -> ((s, dir) => {
       val d = docs(s, dir)
       DedupOps.groupKFold(d,
-        DedupOps.dupClustersOverDocs(d), k = 5) // r6 rep-level CC
+        DedupOps.dupClustersOverDocs(d)) // r6 rep-level CC
     }),
 
     // md5(NFC(text)) with n_raw=2 distinct byte hashes
@@ -1564,8 +1561,7 @@ object PipelineOpsQueries {
     // this measures signature accuracy): per exact near-dup pair, the
     // 16-lane md5-salted signature agreement vs exact Jaccard, integer pct
     "p49_minhash_estimate" -> ((s, dir) =>
-      DedupOps.minhashEstimates(docs(s, dir), w = 3, k = 16,
-        minJaccardPct = 60)),
+      DedupOps.minhashEstimates(docs(s, dir), minJaccardPct = 60)),
 
     // b-bit minhash (Li & König WWW'10, b=1): the 64×-compressed
     // signature (one bit per lane) graded per exact near-dup pair against
@@ -1573,8 +1569,8 @@ object PipelineOpsQueries {
     // actually ship at 10^12 docs, where k·64-bit signatures are the
     // dominant shuffle payload and k bits do the same banding job
     "p106_bbit_minhash" -> ((s, dir) =>
-      DedupOps.minhashEstimates(docs(s, dir), w = 3, k = 16,
-        minJaccardPct = 60, bbit = true)),
+      DedupOps.minhashEstimates(docs(s, dir), minJaccardPct = 60,
+        bbit = true)),
 
     // incremental-crawl snapshot diff: v2 is planted deterministically from
     // v1 (doc%10==7 deleted, doc%10==3 text-changed, doc%10==1 re-added
@@ -1789,8 +1785,7 @@ object PipelineOpsQueries {
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)
-      graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32),
-          numQueries = 10, hops = 5)
+      graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32))
         .write.mode("overwrite").parquet(descentSweepPath(dir))
       graphRecallTable(s, e, s.read.parquet(descentSweepPath(dir)))
     }),
@@ -1880,8 +1875,7 @@ object PipelineOpsQueries {
         .MemoryStream[(Long, java.sql.Timestamp, Long)]
       val q = graft.streaming.StreamingExtraction.intervalJoinStream(
           pStream.toDS().toDF("p_user", "p_ts", "p_id"),
-          cStream.toDS().toDF("c_user", "c_ts", "c_id"),
-          windowSeconds = 3600, watermark = "2 hours", joinType = "inner")
+          cStream.toDS().toDF("c_user", "c_ts", "c_id"), joinType = "inner")
         .writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.write.mode("append").parquet(sink); ()
@@ -2007,8 +2001,7 @@ object PipelineOpsQueries {
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)
-      graft.ops.GraphAnnOps.beamVisitedSweep(e, g1, Seq(2, 8, 32),
-          numQueries = 10, hops = 5)
+      graft.ops.GraphAnnOps.beamVisitedSweep(e, g1, Seq(2, 8, 32))
         .write.mode("overwrite").parquet(graphInsertSweepPath(dir))
       graphRecallTable(s, e, s.read.parquet(graphInsertSweepPath(dir)))
     }),
@@ -2023,8 +2016,7 @@ object PipelineOpsQueries {
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)
-      graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32),
-          numQueries = 10, hops = 5)
+      graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32))
         .write.mode("overwrite").parquet(beamSweepPath(dir))
       graphRecallTable(s, e, s.read.parquet(beamSweepPath(dir)))
     })
@@ -2043,8 +2035,7 @@ object PipelineOpsQueries {
     import s.implicits._
     val brute = SimilarityOps.bruteTopK(embTab)
       .select(col("query_id"), col("neighbor_id"))
-    val hits = graft.ops.GraphAnnOps.topKFromVisitedSweep(embTab, vis,
-        numQueries = 10, k = 10)
+    val hits = graft.ops.GraphAnnOps.topKFromVisitedSweep(embTab, vis)
       .join(brute, Seq("query_id", "neighbor_id"))
       .groupBy(col("ef")).agg(count(lit(1)).as("hits"))
     Seq(2L, 8L, 32L).toDF("ef")

@@ -1459,7 +1459,7 @@ object RelationalQueries {
         ("signup", 3), ("error", 4)).toDF("event_type", "weight")
       graft.ops.SkewJoin.adaptiveSaltedJoin(
           t(s, dir, "events"), dim, "event_type",
-          saltSource = col("event_id"), minSharePct = 10.0, salts = 8)
+          saltSource = col("event_id"), minSharePct = 10.0)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum((col("value").cast("decimal(18,2)") * 100).cast("long")

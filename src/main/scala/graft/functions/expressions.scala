@@ -1,23 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the Python-parity scalar functions that
-  * column pipelines need (SURVEY.md §2.2 "Functions, not UDFs"): a custom
+/** Native Catalyst expressions for the scalar functions that column
+  * pipelines need (SURVEY.md §2.2 "Functions, not UDFs"): a custom
   * `Expression` with `doGenCode` stays inside whole-stage codegen — no
   * lambda boxing, no Row marshaling — unlike a Scala `udf()`.
   */
 object PyFuncs {
-  /** Called from generated code. */
-  def title(s: UTF8String): UTF8String =
-    UTF8String.fromString(graft.text.PyText.title(s.toString))
-  def round2(d: Double): Double = graft.text.PyText.round2(d)
   /** Called from generated code. Unicode NFC via the JDK's ICU-derived
     * normalizer — composed/decomposed sequences ('é' vs 'e'+U+0301)
     * canonicalize to one form, matching utf8proc's nfc_normalize. */
@@ -55,46 +50,10 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
   override def prettyName: String = "nfc_normalize"
 }
 
-/** Python `str.title()` as a codegen'd unary expression
-  * (semantics: graft.text.PyText.title — cleaner.py:34 parity). */
-case class PyTitle(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"py_title requires STRING, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    PyFuncs.title(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PyFuncs.title($c)")
-  override protected def withNewChildInternal(newChild: Expression): PyTitle =
-    copy(child = newChild)
-  override def prettyName: String = "py_title"
-}
-
-/** Python `round(x, 2)` (banker's, exact binary value) as a codegen'd
-  * expression (extractor.py:114 parity; Spark's `round` is HALF_UP). */
-case class PyRound2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"py_round2 requires DOUBLE, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    PyFuncs.round2(input.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PyFuncs.round2($c)")
-  override protected def withNewChildInternal(newChild: Expression): PyRound2 =
-    copy(child = newChild)
-  override def prettyName: String = "py_round2"
-}
-
-/** Column-API access without SQL registration (Spark 4: Column↔Expression
+/** Column-API access to the expressions (Spark 4: Column↔Expression
   * bridging goes through GraftColumnBridge). */
 object functions {
   import org.apache.spark.sql.GraftColumnBridge._
-  private[graft] def py_title(c: Column): Column = column(PyTitle(expression(c)))
-  private[graft] def py_round2(c: Column): Column = column(PyRound2(expression(c)))
   def cosine_sim(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
   def sign_lsh_bucket(c: Column, planes: Array[Array[Double]]): Column =
@@ -104,122 +63,6 @@ object functions {
   def common_prefix_len(a: Column, b: Column): Column =
     column(CommonPrefixLen(expression(a), expression(b)))
   def d_hash64(c: Column): Column = column(DHash64(expression(c)))
-  private[graft] def dot_long(a: Column, b: Column): Column =
-    column(DotLong(expression(a), expression(b)))
-  private[graft] def bloom_might_contain(c: Column,
-      f: org.apache.spark.util.sketch.BloomFilter): Column =
-    column(BloomMightContain(expression(c), f))
-}
-
-/** `SparkSessionExtensions` hook: spark.sql.extensions=graft.functions.GraftExtensions
-  * registers the functions for SQL users. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.descs.foreach(ext.injectFunction)
-}
-object GraftExtensions {
-  type Desc = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
-  val pyTitleDesc: Desc =
-    (FunctionIdentifier("py_title"),
-      new ExpressionInfo(classOf[PyTitle].getName, "py_title"),
-      (args: Seq[Expression]) => PyTitle(args.head))
-  val pyRound2Desc: Desc =
-    (FunctionIdentifier("py_round2"),
-      new ExpressionInfo(classOf[PyRound2].getName, "py_round2"),
-      (args: Seq[Expression]) => PyRound2(args.head))
-  val cosineDesc: Desc =
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1)))
-  val nfcNormalizeDesc: Desc =
-    (FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => NfcNormalize(args.head))
-  val deflateLenDesc: Desc =
-    (FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLength].getName, "deflate_len"),
-      (args: Seq[Expression]) => DeflateLength(args.head))
-  val commonPrefixLenDesc: Desc =
-    (FunctionIdentifier("common_prefix_len"),
-      new ExpressionInfo(classOf[CommonPrefixLen].getName, "common_prefix_len"),
-      (args: Seq[Expression]) => CommonPrefixLen(args(0), args(1)))
-  val dHash64Desc: Desc =
-    (FunctionIdentifier("d_hash64"),
-      new ExpressionInfo(classOf[DHash64].getName, "d_hash64"),
-      (args: Seq[Expression]) => DHash64(args.head))
-  val dotLongDesc: Desc =
-    (FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (args: Seq[Expression]) => DotLong(args(0), args(1)))
-  /** SQL form `sign_lsh_bucket(vec, dim, bits, seed)`: the plane matrix
-    * is a constructor parameter of the expression (shipped with the task
-    * binary, not a per-row input), so the SQL surface takes the three
-    * integers that DERIVE it deterministically — they must be foldable
-    * (literals), exactly like Spark's own `ntile(n)`. */
-  val signLshBucketDesc: Desc =
-    (FunctionIdentifier("sign_lsh_bucket"),
-      new ExpressionInfo(classOf[SignLshBucket].getName, "sign_lsh_bucket"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          "sign_lsh_bucket(vec, dim, bits, seed) takes 4 arguments")
-        require(args.drop(1).forall(_.foldable),
-          "sign_lsh_bucket dim/bits/seed must be literals")
-        // typed extraction: a foldable but non-integral or NULL literal
-        // (sign_lsh_bucket(v, '2', ...)) must get the same descriptive
-        // misuse error as the arity/foldability checks, not a raw CCE/NPE
-        def intArg(name: String, e: Expression): Int = e.eval(null) match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long if l.longValue().isValidInt => l.intValue()
-          case s: java.lang.Short => s.intValue()
-          case b: java.lang.Byte => b.intValue()
-          case null => throw new IllegalArgumentException(
-            s"sign_lsh_bucket $name must be a non-null integer literal")
-          case _ => throw new IllegalArgumentException(
-            s"sign_lsh_bucket $name must be an integer literal, got " +
-              e.dataType.simpleString)
-        }
-        val planes = graft.ops.SimilarityOps.hyperplanes(
-          intArg("dim", args(1)), intArg("bits", args(2)),
-          intArg("seed", args(3)).toLong)
-        SignLshBucket(args(0), planes)
-      })
-
-  /** SQL form `bloom_might_contain(key, filter_bytes)`: the sketch rides
-    * in as a foldable BINARY literal holding `BloomFilter.writeTo`
-    * serialization (the same shape Spark's own runtime-filter
-    * `BloomFilterMightContain` consumes) — built once by an aggregation,
-    * then inlined/parameterized into the probe query. Deserialized once
-    * at resolution, never per row. */
-  val bloomMightContainDesc: Desc =
-    (FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        "bloom_might_contain"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "bloom_might_contain(key, filter_bytes) takes 2 arguments")
-        require(args(1).foldable &&
-          args(1).dataType == org.apache.spark.sql.types.BinaryType,
-          "bloom_might_contain filter_bytes must be a BINARY literal " +
-            "(BloomFilter.writeTo serialization)")
-        val bytes = args(1).eval(null).asInstanceOf[Array[Byte]]
-        require(bytes != null, "bloom_might_contain filter_bytes is NULL")
-        val f = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-        BloomMightContain(args(0), f)
-      })
-
-  /** Every codegen Expression in this file is SQL-registered — asserted
-    * by ExpressionSpec's descs-vs-objects enumeration (r4 item #7). */
-  val descs: Seq[Desc] = Seq(pyTitleDesc, pyRound2Desc, cosineDesc,
-    nfcNormalizeDesc, deflateLenDesc, commonPrefixLenDesc, dHash64Desc,
-    signLshBucketDesc, dotLongDesc, bloomMightContainDesc)
-
-  /** Register into an already-running session (the specs; a SQL user's
-    * session gets them through `spark.sql.extensions`). */
-  private[graft] def registerInto(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descs.foreach(d => reg.registerFunction(d._1, d._2, d._3))
-  }
 }
 
 /** Cosine similarity over two array<double> columns as ONE codegen'd
@@ -296,74 +139,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "cosine_sim"
-}
-
-/** Exact BIGINT dot product of two array<bigint> columns in ONE codegen'd
-  * pass — the integer companion of [[CosineSimilarity]] for the quantized
-  * (floor(x·1000)) vector family (facility-location coresets, PQ
-  * distance tables). The `zip_with`+`aggregate` HOF formulation runs its
-  * lambda interpreted per ELEMENT; on p128's per-round candidates ×
-  * coverage crossJoin that interpretation was the entire cost (measured
-  * ~90 s at sf0.1 → ~3 s with this kernel, same bytes out). Integer sums
-  * are order-free, so the result is identical to the sequential fold and
-  * to DuckDB's list_dot_product on the same quantized values. Null on
-  * length mismatch or any null element (HOF null propagation). */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types.{ArrayType, LongType}
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"dot_long requires ARRAY<BIGINT> args, got $l, $r")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var dot = 0L
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      dot += a.getLong(i) * b.getLong(i)
-      i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $dot = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $dot += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = $dot;
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotLong =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_long"
 }
 
 /** Sign-random-projection LSH bucket id over an array<double> embedding:

@@ -57,7 +57,7 @@ object Corpus {
 
   // Noise vocabulary: verified free of classifier trigger substrings
   // (no "male"/"dob"/"marks"/"result"/"university"/"passport"/"lmv"/"mcwg"/
-  //  "india"/"dl no"/"p<"/long digit runs) — property-tested in CorpusSpec.
+  //  "india"/"dl no"/"p<"/long digit runs) — property-tested in PropertySpec.
   val safeLetters: Vector[Char] = "BCDFGHJKLNPQRSTVWXZ".toVector
 
   val noiseWords: Vector[String] = Vector("garden", "bridge", "copper", "meadow",

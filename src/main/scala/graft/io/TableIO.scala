@@ -2,33 +2,12 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Bucketed-table IO — the Iceberg `bucket(N, doc_id)` emulation
-  * (SURVEY.md §7.1: Iceberg jars are not in /opt/spark/jars, so bucket
-  * partitioning is expressed through Spark's native bucketed tables; the
-  * IcebergIO seam is this object's interface).
-  *
-  * Why it matters at 10^12 docs: two tables bucketed+sorted on `doc_id`
-  * join WITHOUT a shuffle (verified by TableIOSpec on the physical plan) —
-  * the verification join (results vs golden) and incremental-merge jobs
-  * stay narrow.
+/** Table layout and snapshot IO over plain parquet: partitioned and
+  * Z-ordered clustered writes for scan pruning, small-file compaction, and
+  * the Iceberg snapshot model (SURVEY.md §7.1: Iceberg jars are not in
+  * /opt/spark/jars, so its table operations are expressed here).
   */
 object TableIO {
-
-  /** Write `df` as a managed bucketed table (bucketBy doc_id, sorted within
-    * buckets). */
-  private[graft] def writeBucketed(df: DataFrame, table: String,
-                                   buckets: Int = 32): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Equi-join two tables bucketed on doc_id — planner elides the
-    * shuffle on both sides. */
-  private[graft] def bucketedJoin(spark: SparkSession, left: String,
-                                  right: String): DataFrame =
-    spark.table(left).join(spark.table(right), "doc_id")
 
   // ------------------------------------------------------------------
   // Data layout for scan pruning. At 100 TB the fastest scan is the one
@@ -93,85 +72,6 @@ object TableIO {
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  // ------------------------------------------------------------------
-  // Interchange formats (ingest/egress edges of the pipeline; columnar
-  // parquet stays the internal format). Schemas are ALWAYS explicit:
-  // inferSchema costs a full extra scan — at 100 TB that is a second job.
-
-  private[graft] def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  private[graft] def readCsv(spark: SparkSession, path: String,
-                             schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
-  /** ORC — the other columnar interchange format warehouse drops arrive
-    * in; same predicate-pushdown/column-pruning behavior as parquet. */
-  private[graft] def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  private[graft] def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  /** Schema-EVOLUTION read across heterogeneous parquet drops: merge the
-    * footers of every input so columns added by later writers surface as
-    * nulls on older rows. mergeSchema costs a footer read per file — on a
-    * 10^12-row table pin the evolved schema explicitly with
-    * `.schema(...)` instead; this is the ingest-time form for bounded
-    * heterogeneous batches. */
-  private[graft] def readParquetMerged(spark: SparkSession,
-                                       paths: String*): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
-
-  /** JSON-lines (one object per line — splittable, unlike a JSON array). */
-  private[graft] def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  private[graft] def readJsonl(spark: SparkSession, path: String,
-                               schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  /** JSONL ingest with corrupt-record ROUTING — at 10^12 rows malformed
-    * lines are a certainty, FAILFAST kills the job and DROPMALFORMED
-    * silently loses data, so the production mode is PERMISSIVE with the
-    * raw line preserved in `_corrupt_record`: good rows parse, bad rows
-    * carry their original bytes for a quarantine sink + replay. Callers
-    * split on `_corrupt_record IS NULL`. Spark caveat (spec-pinned): a
-    * query referencing ONLY the corrupt column is disallowed over the raw
-    * relation — always keep at least one data column in the projection
-    * (or route via a partitioned sink). */
-  private[graft] def readJsonlFlagged(spark: SparkSession, path: String,
-                                      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .schema(if (schema.fieldNames.contains("_corrupt_record")) schema
-              else schema.add("_corrupt_record",
-                org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
-  /** CSV twin of `readJsonlFlagged`: PERMISSIVE parse with the raw line
-    * quarantined into `_corrupt_record` on type mismatch or column-count
-    * underflow (the short row still carries its parsed prefix, missing
-    * trailing columns null-padded) — ingest never dies on one bad row,
-    * and the quarantine column routes to a rejects sink. The JSONL
-    * caveat bites HARDER here (spec-pinned): CSV parses only the
-    * projected columns, so whether a short row is flagged depends on
-    * the projection — a query that prunes the missing column sees no
-    * corruption. Persist/cache the full frame BEFORE filtering on
-    * `_corrupt_record` (Spark's own documented contract for this
-    * column). */
-  private[graft] def readCsvFlagged(spark: SparkSession, path: String,
-                                    schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .schema(if (schema.fieldNames.contains("_corrupt_record")) schema
-              else schema.add("_corrupt_record",
-                org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("header", "false")
-      .csv(path)
 
   /** Small-file COMPACTION — the Iceberg `rewrite_data_files` analogue and
     * the table-maintenance step every long-running ingest needs: streaming

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * are used as probabilities or thresholds.
   *
   * Scale shape: the corpus contributes ONE keyed (bin → n, positives)
-  * aggregation; PAV itself runs on the driver over ≤ `bins` block rows —
+  * aggregation; PAV itself runs on the driver over ≤ `Bins` block rows —
   * exactly how a 100 TB calibration runs in production, because the
   * pooled state is bounded by the bin count, not the data. All
   * calibrated rates are EXACT RATIONALS (gcd-reduced Σpos/Σn pairs), so
@@ -24,15 +24,18 @@ import org.apache.spark.sql.functions._
   * by the driver gate (the p122-style "gate the theorem" pattern). */
 object CalibrationOps {
 
-  /** Bin = min(floor(length(text)/16), bins−1) (a deterministic score
+  /** Score bins of the calibration curve. */
+  private val Bins = 32
+
+  /** Bin = min(floor(length(text)/16), Bins−1) (a deterministic score
     * proxy), outcome = text contains 'the'. Output one row per PRESENT
     * bin: (bin, n, p, cal_num, cal_den) with cal_* the gcd-reduced
     * isotonic rate. */
-  def isotonicCalibration(docs: DataFrame, bins: Int = 32): DataFrame = {
+  def isotonicCalibration(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val agg = docs.select(
-        least(floor(length(col("text")) / 16), lit(bins - 1))
+        least(floor(length(col("text")) / 16), lit(Bins - 1))
           .cast("long").as("bin"),
         (instr(col("text"), "the") > 0).cast("long").as("pos"))
       .groupBy(col("bin"))
@@ -49,7 +52,7 @@ object CalibrationOps {
       var cur = Block(i, i, n, p)
       // rate comparison via BigInt: per-block counts beyond ~3e9 would
       // overflow the Long cross-product at the claimed 100 TB scale; the
-      // loop runs over ≤ bins blocks so the arbitrary-precision cost is nil
+      // loop runs over ≤ Bins blocks so the arbitrary-precision cost is nil
       while (stack.nonEmpty &&
         BigInt(stack.last.p) * cur.n > BigInt(cur.p) * stack.last.n) {
         val t = stack.remove(stack.length - 1)

@@ -24,8 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object ClassifierOps {
 
+  /** The positive class of the perceptron's label. */
+  private val PosLang = "en"
+
   /** Train `epochs` batch-perceptron epochs; label +1 iff `lang` equals
-    * `posLang`, features = char-3-gram counts hashed into `dims` buckets.
+    * `PosLang`, features = char-3-gram counts hashed into `dims` buckets.
     * Output one row per epoch: (epoch, n_mis, delta_abs, w_chk) —
     * misclassified-count (margin ≤ 0), Σ|Δw|, and the Σ wᵢ·(i+1)
     * checksum binding the whole post-update weight vector.
@@ -38,8 +41,8 @@ object ClassifierOps {
     * given 50 full passes plateaus at ~199). On vocab-separated classes
     * the same loop drives the error to 0 (spec). `dims` ≤ 0 throws
     * IllegalArgumentException. */
-  def perceptronTrain(docs: DataFrame, epochs: Int = 5, dims: Int = 64,
-                      posLang: String = "en"): DataFrame = {
+  def perceptronTrain(docs: DataFrame, epochs: Int = 5,
+                      dims: Int = 64): DataFrame = {
     require(dims >= 1,
       s"ClassifierOps.perceptronTrain: dims must be >= 1 (got $dims)")
     val spark = docs.sparkSession
@@ -57,7 +60,7 @@ object ClassifierOps {
           x((hs(i) % dims).toInt) += 1L
           i += 1
         }
-        (id, if (lang == posLang) 1L else -1L, x.toSeq)
+        (id, if (lang == PosLang) 1L else -1L, x.toSeq)
       }
       .toDF("doc_id", "y", "x").persist()
     feats.count()

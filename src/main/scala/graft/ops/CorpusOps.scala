@@ -24,7 +24,7 @@ object CorpusOps {
 
   /** The value of a one-row `sum` aggregate; 0 when it summed no rows
     * (SQL's sum of nothing is null). */
-  private def sumOrZero(agg: DataFrame): Long = {
+  private[ops] def sumOrZero(agg: DataFrame): Long = {
     val r = agg.collect()(0)
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
@@ -666,21 +666,24 @@ object CorpusOps {
       .toDF("m", "n_exact_inter", "est_a", "est_b", "est_union", "est_inter")
   }
 
+  /** Word w-gram width of `repeatedGramStats`. */
+  private val RepeatedGramW = 4
+
   /** Cross-document REPEATED-PASSAGE coverage (RefinedWeb-style signal):
-    * for each doc, how many of its distinct word w-grams also occur in at
+    * for each doc, how many of its distinct word 4-grams also occur in at
     * least one other document. High coverage = boilerplate /
     * template page → downweight or drop before training. Raw text never
     * shuffles: docs reduce to 8-byte masked-md5 gram hashes
     * (`DedupOps.gramHashes`, the p27 kernel), the repeated-gram set is one
     * hash-keyed agg, and the coverage count is a keys-only join back.
     * Output (doc_id, n_grams, n_repeated_grams). */
-  def repeatedGramStats(df: DataFrame, w: Int = 4): DataFrame = {
+  def repeatedGramStats(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val g = df.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        DedupOps.gramHashes(text, w).iterator.map(h => (id, h))
+        DedupOps.gramHashes(text, RepeatedGramW).iterator.map(h => (id, h))
       }
       .toDF("doc_id", "h")
     val totals = g.groupBy(col("doc_id"))
@@ -729,25 +732,27 @@ object CorpusOps {
     rows.toSeq.toDF("token", "exact_count", "est_count", "overshoot")
   }
 
+  /** Vocabulary size of `surprisalScores`: rarer tokens score as tf = 1. */
+  private val SurprisalVocab = 20
+
   /** Unigram SURPRISAL quality score — the integer-arithmetic stand-in for
     * perplexity filtering (CCNet-style): each token occurrence contributes
     * bitlen(N) − bitlen(tf(token)) ≈ log₂(N / tf), summed per doc. All in
     * integer bit-length math (`bin()` exists in both Spark and DuckDB with
     * identical no-leading-zeros semantics), so the score is engine-exact —
-    * no float log. Tokens outside the induced top-`vocabSize` vocab score
+    * no float log. Tokens outside the induced top-`SurprisalVocab` vocab score
     * as tf = 1 (maximum surprisal), the same deterministic
     * (freq DESC, token ASC) vocab boundary as `oovStats`. Scale shape:
     * tokenize once into (doc, token, tf); global tf is one token-keyed
     * agg; the vocab broadcasts; the per-doc score is one keyed agg with
     * the bit-length arithmetic inside codegen. */
-  def surprisalScores(df: DataFrame, vocabSize: Int = 50000): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  def surprisalScores(df: DataFrame): DataFrame = {
     val tf = tokenTf(df)
     val global = tf.groupBy(col("token")).agg(sum(col("tf")).as("gtf"))
-    val n = global.agg(sum(col("gtf"))).as[Long].head()
+    val n = sumOrZero(global.agg(sum(col("gtf"))))
     val nBits = 64 - java.lang.Long.numberOfLeadingZeros(n)
-    val vocab = global.orderBy(col("gtf").desc, col("token")).limit(vocabSize)
+    val vocab = global.orderBy(col("gtf").desc, col("token"))
+      .limit(SurprisalVocab)
     tf.join(broadcast(vocab), Seq("token"), "left")
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("n_tokens"),
@@ -981,7 +986,7 @@ object CorpusOps {
     * content hash. Both sides project to (id, md5) BEFORE the full-outer
     * join, so only 8-byte ids + 16-byte hashes ever shuffle — never text.
     * At 10^12 docs both snapshots read from the same doc_id-bucketed
-    * layout (`TableIO.writeBucketed`) and the join plans shuffle-free;
+    * layout (Spark's `bucketBy`) and the join plans shuffle-free;
     * the status rollup is a partial+final aggregate over 4 keys. */
   def snapshotDiff(v1: DataFrame, v2: DataFrame): DataFrame = {
     val a = v1.select(col("doc_id").cast("long").as("id_a"),
@@ -1573,6 +1578,14 @@ object CorpusOps {
       .orderBy(col("source"))
   }
 
+  /** Longest word the BPE vocabulary keeps: longer tokens (URLs, base64
+    * runs) are dropped, the production guard that keeps per-word state
+    * O(1). */
+  private val BpeMaxWordLen = 32
+
+  /** Merge steps of the vocabulary `bpeEncodeCensus` encodes with. */
+  private val BpeEncodeSteps = 8
+
   /** The BPE merge loop that [[bpeTrain]] and [[bpeEncodeCensus]] share:
     * the one-time (word, freq) vocabulary scan, then up to `steps` rounds
     * of argmax-then-replace over the separator-bracketed symbol strings
@@ -1588,14 +1601,14 @@ object CorpusOps {
     * parent generation must stay cached until that argmax has run
     * (unpersisting it earlier would force the un-materialized child to
     * recompute its whole replace lineage from the corpus scan). */
-  private def bpeMergeLoop[A](df: DataFrame, steps: Int, maxWordLen: Int)(
+  private def bpeMergeLoop[A](df: DataFrame, steps: Int)(
       onMerge: (Int, String, String, Long, DataFrame) => Unit)(
       finish: DataFrame => A): A = {
     val SEP = "\u001f"
     val SEP2 = SEP + SEP
     var vocab = df
       .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
+      .filter(length(col("w")) > 0 && length(col("w")) <= BpeMaxWordLen &&
         !col("w").contains(SEP))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("w"),
@@ -1668,16 +1681,14 @@ object CorpusOps {
     * independent corpus-wide checksum that the apply actually ran.
     *
     * Output: one row per merge step (step, lsym, rsym, n_pair,
-    * tok_total, vocab_syms). `maxWordLen` caps pathological tokens
-    * (URLs, base64 runs) — the production guard that keeps per-word
-    * state O(1). */
-  def bpeTrain(df: DataFrame, steps: Int = 8, maxWordLen: Int = 32)
-    : DataFrame = {
+    * tok_total, vocab_syms). Words longer than `BpeMaxWordLen` are
+    * dropped. */
+  def bpeTrain(df: DataFrame, steps: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val SEP2 = "\u001f\u001f"
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, String, String, Long, Long, Long)]
-    bpeMergeLoop(df, steps, maxWordLen) { (step, l, r, n, next) =>
+    bpeMergeLoop(df, steps) { (step, l, r, n, next) =>
       // fused census (r6: ONE action per round instead of three — it
       // doubles as the persist materializer, so the count() is gone
       // too): explode the symbol array once, charge freq·|syms| only
@@ -1714,11 +1725,11 @@ object CorpusOps {
     * aggregation and one keyed join, never a re-tokenization scan. The
     * census is the number every tokenizer-budget decision hangs on:
     * per-source fertility (tokens per word, millis-scaled integer) plus
-    * exact token/char totals. */
-  def bpeEncodeCensus(df: DataFrame, steps: Int = 8, maxWordLen: Int = 32)
-    : DataFrame = {
+    * exact token/char totals. The vocabulary is trained for
+    * `BpeEncodeSteps` merges. */
+  def bpeEncodeCensus(df: DataFrame): DataFrame = {
     val SEP = "\u001f"
-    bpeMergeLoop(df, steps, maxWordLen)((_, _, _, _, _) => ()) { vocab =>
+    bpeMergeLoop(df, BpeEncodeSteps)((_, _, _, _, _) => ()) { vocab =>
       val enc = vocab.select(col("w"),
         ((length(col("s")) -
           length(call_function("replace", col("s"), lit(SEP), lit(""))))
@@ -1726,7 +1737,7 @@ object CorpusOps {
       val occ = df
         .select(col("source"), explode(split(trim(col("text")), "\\s+"))
           .as("w"))
-        .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen &&
+        .filter(length(col("w")) > 0 && length(col("w")) <= BpeMaxWordLen &&
           !col("w").contains(SEP))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("occ"))
       val out = occ.join(enc, "w")

@@ -14,13 +14,13 @@ import java.util.regex.Pattern
 object DedupOps {
 
   /** Word-shingle width of the near-dup family. */
-  private[graft] val ShingleW = 3
+  private val ShingleW = 3
 
   /** MinHash LSH banding: 32 bands × 3 rows = 96 hashes, and the verified
     * Jaccard floor in percent (see [[minhashLsh]] for the recall math). */
-  private[graft] val LshBands = 32
-  private[graft] val LshRowsPerBand = 3
-  private[graft] val LshMinJaccardPct = 60
+  private val LshBands = 32
+  private val LshRowsPerBand = 3
+  private val LshMinJaccardPct = 60
 
   /** Jaccard floor in percent of the exact, prefix-filtered and weighted
     * pair ops. */
@@ -103,7 +103,7 @@ object DedupOps {
     shingleArr(text, w).map(TextOps.md5Low63)
 
   /** Per-doc distinct shingle sets: (doc_id, sh). At 100 TB this table is
-    * written bucketed by doc_id (TableIO.writeBucketed) so the verify joins
+    * written bucketed by doc_id (Spark's `bucketBy`) so the verify joins
     * below are shuffle-free on the big side. */
   private def shingleSets(df: DataFrame, w: Int): DataFrame = {
     val spark = df.sparkSession
@@ -126,11 +126,10 @@ object DedupOps {
       .toDF("doc_id", "band_keys")
   }
 
-  /** The per-row minhash band-key kernel behind `minhashBands` — also
-    * probes the streaming near-dup index (`StreamingExtraction
-    * .nearDupStream`). Band id is baked into each key's fold seed, so keys
-    * from different band positions never collide by construction. */
-  def bandKeysFor(text: String, w: Int, bands: Int,
+  /** The per-row minhash band-key kernel behind `minhashBands`. Band id is
+    * baked into each key's fold seed, so keys from different band
+    * positions never collide by construction. */
+  private def bandKeysFor(text: String, w: Int, bands: Int,
                   rowsPerBand: Int): Array[Long] = {
     val numHashes = bands * rowsPerBand
     val sh = shingleArr(text, w)
@@ -228,8 +227,7 @@ object DedupOps {
 
   /** INCREMENTAL near-dup: probe a batch of NEW docs (`delta`) against the
     * existing corpus (`index`) through the banded minhash keys — the
-    * incremental-crawl form of [[minhashLsh]] and the batch twin of
-    * `StreamingExtraction.nearDupStream`. Only the delta's band keys join
+    * incremental-crawl form of [[minhashLsh]]. Only the delta's band keys join
     * against the index's, so each ingest batch costs
     * O(|delta| × bands) probe keys against a (bucketable, precomputable)
     * index — the corpus never re-pairs with itself. Same band kernel as
@@ -459,7 +457,7 @@ object DedupOps {
   /** Distinct shingle-hash postings (doc_id, h, n_sh) — the shared front
     * of every exact set-similarity join. Hash = DuckDB `md5_number_lower`
     * masked to 63 bits, so SQL oracles replicate hash-exactly. */
-  private def shingleHashTable(df: DataFrame, w: Int): DataFrame = {
+  private[graft] def shingleHashTable(df: DataFrame, w: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -485,8 +483,8 @@ object DedupOps {
     * index, so the self-join fan-out is Σ df² over RARE keys only —
     * p25's df cap gets the same fan-out bound by sacrificing recall;
     * this keeps the answer exact. */
-  private[ops] def prefixJaccardCandidates(hashed: DataFrame,
-                                           minJaccardPct: Int): DataFrame = {
+  private[graft] def prefixJaccardCandidates(hashed: DataFrame,
+                                             minJaccardPct: Int): DataFrame = {
     val spark = hashed.sparkSession
     import spark.implicits._
     val dfTab = hashed.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -509,12 +507,6 @@ object DedupOps {
              col("n_b") * 100 >= col("n_a") * minJaccardPct)
       .distinct()
   }
-
-  /** Docs-level wrapper over the candidate generator (spec/audit entry:
-    * candidate counts are the observable the prefix filter exists to cut). */
-  private[graft] def prefixJaccardCandidates(df: DataFrame, w: Int,
-                                            minJaccardPct: Int): DataFrame =
-    prefixJaccardCandidates(shingleHashTable(df, w), minJaccardPct)
 
   /** Exact Jaccard pairs via prefix filtering — bit-identical output to
     * `exactJaccardPairs` (the driver oracle computes the FULL inverted-
@@ -735,6 +727,9 @@ object DedupOps {
         col("n_fp"), col("containment_pct"))
   }
 
+  /** Signature length (minhash lanes) of `minhashEstimates`. */
+  private val MinhashEstimateLanes = 16
+
   /** MinHash signature-ACCURACY validation (p49) — the estimator-error
     * counterpart of p46's candidate-recall measurement: for every exact
     * near-dup pair, compare the k-component signature-agreement estimate
@@ -743,19 +738,18 @@ object DedupOps {
     * oracle's salt pattern) so DuckDB rebuilds the identical signatures
     * from scratch. Signatures are one typed pass per doc (k·8 bytes/doc);
     * the estimator join is keyed on doc ids over the (small) verified pair
-    * set; the lane comparison is a row-local zip_with fold. */
-  def minhashEstimates(df: DataFrame, w: Int = 3, k: Int = 16,
-                       minJaccardPct: Int = 60,
+    * set; the lane comparison is a row-local zip_with fold. Shingles are
+    * `ShingleW` words wide and signatures `MinhashEstimateLanes` long. */
+  def minhashEstimates(df: DataFrame, minJaccardPct: Int = 60,
                        bbit: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val kk = k
     val sigs = df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val sig = Array.fill(kk)(Long.MaxValue)
-        shingleArr(text, w).foreach { s =>
+        val sig = Array.fill(MinhashEstimateLanes)(Long.MaxValue)
+        shingleArr(text, ShingleW).foreach { s =>
           var i = 0
-          while (i < kk) {
+          while (i < MinhashEstimateLanes) {
             val h = TextOps.md5Low63(s + "#" + i)
             if (h < sig(i)) sig(i) = h
             i += 1
@@ -763,7 +757,7 @@ object DedupOps {
         }
         (id, sig.toSeq)
       }.toDF("doc_id", "sig")
-    val base = exactJaccardPairs(df, w, minJaccardPct)
+    val base = exactJaccardPairs(df, ShingleW, minJaccardPct)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .withColumn("n_match", expr(
@@ -781,12 +775,13 @@ object DedupOps {
             "CASE WHEN x % 2 = y % 2 THEN 1L ELSE 0L END), " +
             "0L, (acc, v) -> acc + v)"))
         .withColumn("est_bbit_pct",
-          expr(s"greatest(0L, (n_bit_match * 200) div $kk - 100)"))
+          expr("greatest(0L, (n_bit_match * 200) div " +
+            s"$MinhashEstimateLanes - 100)"))
     val core = withBbit
       .select((Seq(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
         expr("(n_inter * 100) div n_union").as("exact_pct"),
         col("n_match"),
-        expr(s"(n_match * 100) div $kk").as("est_pct")) ++
+        expr(s"(n_match * 100) div $MinhashEstimateLanes").as("est_pct")) ++
         (if (bbit) Seq(col("n_bit_match"), col("est_bbit_pct")) else Nil)): _*)
       .withColumn("err_pp", expr("abs(est_pct - exact_pct)"))
     (if (bbit)
@@ -1063,6 +1058,9 @@ object DedupOps {
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
   }
 
+  /** Fold count of `groupKFold`. */
+  private val Folds = 5
+
   /** GroupKFold by duplicate cluster — the split rule that makes p73's
     * leakage census structurally zero: folds are assigned to whole
     * near-dup CLUSTERS (hash of the canonical cluster id), so two
@@ -1080,8 +1078,7 @@ object DedupOps {
     * measured on the same corpus. Scale: one label join + two keyed
     * aggs; the cluster table is the p26/p132 output the pipeline
     * already maintains. */
-  def groupKFold(docs: DataFrame, labels: DataFrame, k: Int = 5)
-    : DataFrame = {
+  def groupKFold(docs: DataFrame, labels: DataFrame): DataFrame = {
     val lbl = docs.select(col("doc_id").cast("long").as("doc_id"))
       .join(labels.select(col("doc_id").cast("long").as("doc_id"),
         col("cluster_id").cast("long").as("cid")), Seq("doc_id"), "left")
@@ -1089,7 +1086,7 @@ object DedupOps {
         coalesce(col("cid"), col("doc_id")).as("cid"))
     def foldOf(name: String): Column =
       expr(s"CAST(CAST(conv(substring(md5(CAST($name AS STRING) " +
-        s"|| ':fold'), 17, 16), 16, 10) AS DECIMAL(20,0)) % $k AS BIGINT)")
+        s"|| ':fold'), 17, 16), 16, 10) AS DECIMAL(20,0)) % $Folds AS BIGINT)")
     val assigned = lbl
       .withColumn("fold", foldOf("cid"))
       .withColumn("doc_fold", foldOf("doc_id"))
@@ -1103,9 +1100,12 @@ object DedupOps {
       .orderBy(col("fold"))
   }
 
+  /** Largest hamming distance of a SimHash near-dup pair. */
+  private val SimhashMaxHamming = 3
+
   /** SimHash near-dup pairs: docs sharing any 16-bit band (≤3 differing
     * bands ⇐ hamming ≤ 3 guaranteed candidates), verified by exact hamming
-    * distance ≤ maxHamming.
+    * distance ≤ `SimhashMaxHamming`.
     *
     * r5: the p127/textGroups collapse applied to SimHash — the banded
     * self-join runs over ONE representative per distinct 64-bit
@@ -1118,7 +1118,7 @@ object DedupOps {
     * than 4096 distinct signatures are dropped: the p127-style hot-bucket
     * recall cap. Below that cap the output equals
     * [[simhashPairsUncollapsed]]'s (spec-pinned). */
-  def simhashPairs(df: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashPairs(df: DataFrame): DataFrame = {
     val sh = simhashTable(df)
     val same = sh.as("x").join(sh.as("y"),
         col("x.simhash") === col("y.simhash") &&
@@ -1142,7 +1142,7 @@ object DedupOps {
       .distinct()
       .withColumn("hamming",
         bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= SimhashMaxHamming)
     val cross = sigPairs
       .join(sh.select(col("simhash").as("sa"), col("doc_id").as("da")),
         "sa")
@@ -1155,8 +1155,7 @@ object DedupOps {
 
   /** The per-doc banded self-join — the spec reference for
     * [[simhashPairs]]'s signature collapse. */
-  private[graft] def simhashPairsUncollapsed(df: DataFrame,
-                                             maxHamming: Int): DataFrame = {
+  private[graft] def simhashPairsUncollapsed(df: DataFrame): DataFrame = {
     val sh = simhashTable(df)
     val exploded = sh.select(col("doc_id"), col("simhash"),
       posexplode(array(bandsOf(col("simhash")): _*))
@@ -1168,7 +1167,7 @@ object DedupOps {
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).as("hamming"))
       .dropDuplicates("doc_a", "doc_b")
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= SimhashMaxHamming)
   }
 
   /** (doc_id, simhash) — one typed pass over the text. */

@@ -233,9 +233,18 @@ object GraphAnnOps {
     * window truncation; visited ≤ 1 + hops·ef·M rows per query. */
   def beamVisited(emb: DataFrame, graph: DataFrame, numQueries: Int = 10,
                   ef: Int = 8, hops: Int = 3): DataFrame =
-    beamVisitedSweep(emb, graph, Seq(ef), numQueries, hops)
+    sweep(emb, graph, Seq(ef), numQueries, hops)
       .select(col("query_id"), col("node_id"))
       .orderBy(col("query_id"), col("node_id"))
+
+  /** Query count of the multi-`ef` sweeps: the walk and its top-k. */
+  private val SweepQueries = 10
+
+  /** Hops of the multi-`ef` beam walk. */
+  private val SweepHops = 5
+
+  /** Neighbours kept per (ef, query) by [[topKFromVisitedSweep]]. */
+  private val SweepTopK = 10
 
   /** Multi-`ef` beam sweep in ONE pass (r6): the p141/p145/p151 recall
     * sweeps run the SAME walk at ef ∈ {2, 8, 32}; the searches never
@@ -244,12 +253,21 @@ object GraphAnnOps {
     * exchange per step instead of one per ef — and one localCheckpoint
     * job per hop instead of three (r5 paid 2 checkpoints × hops × efs).
     * Each ef-slice of the output is row-identical to an independent
-    * [[beamVisited]] run at that ef (spec-pinned). Output columns:
-    * (query_id, node_id, ef). */
-  def beamVisitedSweep(emb: DataFrame, graph: DataFrame, efs: Seq[Int],
-                       numQueries: Int = 10, hops: Int = 3): DataFrame = {
-    // 1-row driver scalar: the deterministic entry point
-    val entry = emb.agg(min(col("vec_id").cast("long"))).head().getLong(0)
+    * [[beamVisited]] run at that ef (spec-pinned). The walk runs
+    * `SweepHops` hops for the first `SweepQueries` vectors. Output
+    * columns: (query_id, node_id, ef). */
+  def beamVisitedSweep(emb: DataFrame, graph: DataFrame,
+                       efs: Seq[Int]): DataFrame =
+    sweep(emb, graph, efs, SweepQueries, SweepHops)
+
+  /** The walk of [[beamVisited]] and [[beamVisitedSweep]] from the global
+    * minimum vec_id. */
+  private def sweep(emb: DataFrame, graph: DataFrame, efs: Seq[Int],
+                    numQueries: Int, hops: Int): DataFrame = {
+    // 1-row driver scalar: the deterministic entry point (null on an
+    // empty table, whose query set is empty too, so any entry will do)
+    val r = emb.agg(min(col("vec_id").cast("long"))).head()
+    val entry = if (r.isNullAt(0)) 0L else r.getLong(0)
     beamVisitedSweepFor(emb, graph, querySet(emb, numQueries), efs, hops,
       entry)
   }
@@ -426,13 +444,13 @@ object GraphAnnOps {
     * `TopK.TopKIds` aggregation over the ef-tagged visited dump, keyed by
     * (ef, query_id) — each ef-slice's top-k set is identical to the
     * per-slice call (same aggregator: score DESC, id ASC). Rank is
-    * dropped: the recall join consumes the SET. Output
+    * dropped: the recall join consumes the SET. `SweepTopK` neighbours
+    * per (ef, query) of the first `SweepQueries` vectors. Output
     * (ef, query_id, neighbor_id). */
-  def topKFromVisitedSweep(emb: DataFrame, visited: DataFrame,
-                           numQueries: Int = 10, k: Int = 10): DataFrame = {
+  def topKFromVisitedSweep(emb: DataFrame, visited: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val queries = querySet(emb, numQueries)
+    val queries = querySet(emb, SweepQueries)
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))
     visited
@@ -444,7 +462,7 @@ object GraphAnnOps {
       .as[(Long, Long, Long, Double)]
       .groupByKey(r => (r._1, r._2))
       .mapValues(r => (0L, r._3, r._4))
-      .agg(new TopK.TopKIds(k).toColumn.name("topk"))
+      .agg(new TopK.TopKIds(SweepTopK).toColumn.name("topk"))
       .toDF("key", "topk")
       .select(col("key._1").as("ef"), col("key._2").as("query_id"),
         explode(col("topk")).as("neighbor_id"))

@@ -172,14 +172,4 @@ object IvfOps {
       .drop("grand")
       .orderBy(col("cell"))
   }
-
-  /** End-to-end IVF ANN: train → assign → probe → rank. Specs run it
-    * whole; the queries call the steps one by one. */
-  private[graft] def ivfTopK(emb: DataFrame, numQueries: Int = 10,
-                             topK: Int = 10, k: Int = 16,
-                             nprobe: Int = 2): DataFrame = {
-    val centroids = train(emb, k)
-    topKFrom(emb, assign(emb, centroids),
-      probes(emb, centroids, numQueries, nprobe), numQueries, topK)
-  }
 }

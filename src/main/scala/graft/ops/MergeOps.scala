@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * `deleteCol` remove the key entirely.
   *
   * Plan: ONE full-outer shuffle join keyed by `key`. At 10^12 rows both
-  * sides live bucketed on the key (TableIO.writeBucketed emulating Iceberg
+  * sides live bucketed on the key (Spark's `bucketBy`, emulating Iceberg
   * `bucket(N, doc_id)`), which elides the shuffle on both sides — the merge
   * is then a narrow zip of co-located buckets, the property that makes
   * daily incremental maintenance of a 100 TB table affordable.
@@ -95,8 +95,9 @@ object MergeOps {
     * broadcasts into a left-semi probe on each table (no table ever
     * shuffles); the stats are two partial-aggregate scans per table
     * cross-joined into its one lineage row, all in a single lazy plan.
-    * The actual rewrite at scale is each table anti-joined the same way
-    * (`deleteFrom`), written back as an Iceberg overwrite commit. */
+    * The actual rewrite at scale is each table left-anti-joined against
+    * the same broadcast key set, written back as an Iceberg overwrite
+    * commit. */
   def cascadeDelete(deleteKeys: DataFrame, keyCol: String,
                     tables: Seq[(String, DataFrame, String)]): DataFrame = {
     // the key set is renamed so a delete list DERIVED from one of the
@@ -114,15 +115,6 @@ object MergeOps {
     }.reduce(_ unionAll _).orderBy(col("table_name"))
   }
 
-  /** The rewrite half of [[cascadeDelete]]: the table minus the keyed
-    * rows, via the same broadcast left-anti probe. */
-  private[graft] def deleteFrom(df: DataFrame, key: String,
-                                deleteKeys: DataFrame,
-                                keyCol: String): DataFrame =
-    df.join(
-      broadcast(deleteKeys.select(col(keyCol).as("__del_key")).distinct()),
-      df(key) === col("__del_key"), "left_anti")
-
   /** Incremental materialized-view maintenance: fold a delta batch's
     * partial aggregate into the standing MV withOUT re-scanning the base
     * data — the daily-rollup refresh pattern where a full recompute over
@@ -131,7 +123,7 @@ object MergeOps {
     * max/min by greatest/least (which skip the null a key missing on one
     * side produces). One full-outer join keyed on `keys` — Spark cannot
     * broadcast a full-outer build side, so at 10^12 rows the MV lives
-    * bucketed on its key (TableIO.writeBucketed): the merge is then a
+    * bucketed on its key (Spark's `bucketBy`): the merge is then a
     * narrow zip of co-located buckets and only the small delta shuffles.
     * Correctness contract: merged MV ≡ the aggregate recomputed over
     * base ∪ delta (the driver oracle recomputes exactly that). */

@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   *      base + local running sum.
   *
   * Two narrow passes + one small agg + one keyed exchange of 16-byte rows;
-  * nothing global ever sits in one task. PackingSpec pins the output to the
-  * window formulation and asserts the plan carries no SinglePartition
-  * exchange.
+  * nothing global ever sits in one task. CurationOpsSpec pins the output
+  * to the window formulation and asserts the plan carries no
+  * SinglePartition exchange.
   */
 object PackingOps {
 

@@ -636,13 +636,18 @@ object SimilarityOps {
     math.sqrt(s)
   }
 
-  /** Multi-table sign-LSH buckets: `tables` independent bucketings
-    * (vec_id, table_id, bucket). Union-of-tables candidate recall at cosine
-    * c is 1-(1-p^bits)^tables with p = 1-acos(c)/π — the standard recall
-    * lever when one table's 2^bits split is too aggressive. */
-  def lshBucketsMulti(emb: DataFrame, bits: Int = 8, tables: Int = 4): DataFrame =
-    (0 until tables).map { t =>
-      val planes = hyperplanes(64, bits, seed = 7L + 1000L * t)
+  /** Bits per table and table count of [[lshBucketsMulti]]. */
+  private val MultiBits = 4
+  private val MultiTables = 8
+
+  /** Multi-table sign-LSH buckets: `MultiTables` independent bucketings of
+    * `MultiBits` bits each, (vec_id, table_id, bucket). Union-of-tables
+    * candidate recall at cosine c is 1-(1-p^bits)^tables with
+    * p = 1-acos(c)/π — the standard recall lever when one table's 2^bits
+    * split is too aggressive. */
+  def lshBucketsMulti(emb: DataFrame): DataFrame =
+    (0 until MultiTables).map { t =>
+      val planes = hyperplanes(64, MultiBits, seed = 7L + 1000L * t)
       emb.select(col("vec_id"), lit(t).as("table_id"),
         graft.functions.functions.sign_lsh_bucket(
           col("embedding").cast("array<double>"), planes).as("bucket"))
@@ -653,16 +658,15 @@ object SimilarityOps {
     * The bucket join shuffles only (vec_id, table_id, bucket); embeddings
     * (fixed-width) are fetched for candidates via vec_id-keyed joins —
     * bucketed-by-vec_id storage makes those co-located at scale. */
-  private[graft] def embeddingNearDups(emb: DataFrame, bits: Int = 8,
-                                       tables: Int = 4,
+  private[graft] def embeddingNearDups(emb: DataFrame,
                                        minCosine: Double = 0.9): DataFrame =
-    embeddingNearDupsFrom(emb, lshBucketsMulti(emb, bits, tables), minCosine)
+    embeddingNearDupsFrom(emb, lshBucketsMulti(emb), minCosine)
 
   /** Same, from an already-materialized bucket table — the driver query
     * dumps `lshBucketsMulti` so the DuckDB oracle can rebuild the identical
     * candidate set (the hyperplane hash is engine code) and re-verify every
     * pair with its own cosine; also the natural shape when buckets are a
-    * persisted index (see `StreamingExtraction.nearDupStream`).
+    * persisted index.
     *
     * r5 identical-VECTOR collapse (the DedupOps.textGroups lesson on the
     * embedding side — the sf10 probe measured the uncollapsed bucket

@@ -10,13 +10,16 @@ import org.apache.spark.sql.functions._
   */
 object StorageOps {
 
+  /** Rows per encoding block of `encodingAdvisor` (a writer's page). */
+  private val BlockRows = 4096
+
   /** Columnar-encoding advisor: for each candidate column, predict the
     * encoded size under PLAIN, RLE and DICTIONARY and recommend the
     * cheapest — the decision a parquet/ORC writer makes per column
     * chunk, surfaced as a query so layout choices are data-driven
     * instead of default.
     *
-    * Runs are counted within `blockRows`-sized blocks of the canonical
+    * Runs are counted within `BlockRows`-sized blocks of the canonical
     * `(l_orderkey, l_linenumber)` order — real writers reset encodings
     * per page, so block-local runs (a slight boundary over-count) are
     * the HONEST statistic, and they keep the window partitioned: no
@@ -26,8 +29,7 @@ object StorageOps {
     * dict = ceil(n·bits/8) + Σ distinct-value lengths with
     * bits = len(bin(distinct−1)) (minimal-width binary, q131-pinned
     * identical in both engines). Ties break dict < plain < rle. */
-  def encodingAdvisor(lineitem: DataFrame,
-                      blockRows: Int = 4096): DataFrame = {
+  def encodingAdvisor(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(
       col("l_orderkey").cast("long").as("ok"),
       col("l_linenumber").cast("long").as("ln"),
@@ -36,7 +38,7 @@ object StorageOps {
       col("l_quantity").cast("long").cast("string").as("c_quantity"),
       col("l_shipdate").cast("date").cast("string").as("c_shipdate"))
     val blocked = base.withColumn("blk",
-      expr(s"(ok * 8 + ln) div $blockRows"))
+      expr(s"(ok * 8 + ln) div $BlockRows"))
     val cols = Seq("c_returnflag", "c_linestatus", "c_quantity",
       "c_shipdate")
     val per = cols.map { c =>

@@ -12,7 +12,7 @@ import graft.model.{Doc, DocResult}
   * each writing its output slice plus a manifest entry and a lineage row.
   * A restart skips every bucket group the manifest records as complete, so
   * a killed job resumes where it stopped and produces byte-identical
-  * output (CheckpointSpec proves this).
+  * output (PipelineSparkSpec proves this).
   *
   * Reference analogue: Celery task states PENDING→PROCESSING→SUCCESS in
   * Redis (`app/tasks.py:32,40,50`) — here the "queue" is the bucket list
@@ -98,9 +98,14 @@ final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
     executed
   }
 
+  /** The output of every group the manifest records as complete. The
+    * directories are named one by one: a `group=*` glob makes Spark probe
+    * the literal pattern for a streaming-sink metadata directory, which
+    * logs a FileNotFoundException. */
   def results(spark: SparkSession): Dataset[DocResult] = {
     import spark.implicits._
-    spark.read.parquet(s"$resultPath/group=*").as[DocResult]
+    spark.read.parquet(completedGroups().toSeq.sorted
+      .map(g => s"$resultPath/group=$g"): _*).as[DocResult]
   }
 
   def lineage(spark: SparkSession): Dataset[graft.model.LineageRow] = {

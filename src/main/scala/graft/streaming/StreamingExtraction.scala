@@ -14,27 +14,23 @@ import org.apache.spark.sql.functions._
   * work units, per-worker model reuse, progress via the streaming query
   * listener instead of Redis task states.
   *
-  * The windowed, session and watermark-dedup streams read event time from
-  * a `ts` column and hold late rows for a 10-minute watermark.
+  * The session stream reads event time from a `ts` column and holds late
+  * rows for a 10-minute watermark.
   */
 object StreamingExtraction {
 
-  /** Event-time column of the windowed, session and watermark-dedup
-    * streams. */
+  /** Event-time column of the session stream. */
   private val Ts = "ts"
 
-  /** Their watermark delay. */
+  /** Its watermark delay. */
   private val Watermark = "10 minutes"
 
-  /** Event-time windowed extraction metrics with a watermark: doc counts
-    * and validity by document_type per 5-minute processing window. `ts`
-    * must be an event-time column on the input. */
-  private[graft] def windowedMetrics(results: DataFrame): DataFrame =
-    results
-      .withWatermark(Ts, Watermark)
-      .groupBy(window(col(Ts), "5 minutes"), col("document_type"))
-      .agg(count(lit(1)).as("doc_count"),
-        sum(when(col("is_valid"), 1L).otherwise(0L)).as("valid_count"))
+  /** The interval join's event-time window: a purchase joins the clicks of
+    * the hour before it. */
+  private val IntervalWindowSeconds = 3600L
+
+  /** Watermark delay of both interval-join sides. */
+  private val IntervalWatermark = "2 hours"
 
   /** Event-time SESSION windows over the metrics stream — the streaming
     * analogue of the batch sessionize (q24): rows for the same key within
@@ -54,19 +50,6 @@ object StreamingExtraction {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
-
-  /** Watermark-BOUNDED streaming dedup (`dropDuplicatesWithinWatermark`) —
-    * the production counterpart of [[dedupStream]]: dedup state for a key
-    * is evicted once the watermark passes its event time + delay, so state
-    * is bounded by arrival rate × window instead of growing with every
-    * distinct key ever seen. The contract is correspondingly weaker — a
-    * duplicate arriving after its original's state expired is re-emitted
-    * (spec-pinned) — which is the right trade for re-crawl dedup, where
-    * duplicates cluster in time and exact history lives in the batch
-    * layer (p01/p26). Rows are keyed by `content_hash`. */
-  private[graft] def dedupWithinWatermark(docs: DataFrame): DataFrame =
-    docs.withWatermark(Ts, Watermark)
-      .dropDuplicatesWithinWatermark(Seq("content_hash"))
 
   /** Streaming benchmark decontamination — the continuous-ingestion form
     * of `CorpusOps.decontaminate`: the static eval set's gram hashes (MBs
@@ -95,72 +78,13 @@ object StreamingExtraction {
     }.filter(_._2 > 0L)
   }
 
-  /** Streaming NEAR-dup detection vs a static corpus — continuous-ingestion
-    * LSH: the corpus is indexed once at query build (minhash band key →
-    * doc ids, plus per-doc gram-hash sets for the exact-Jaccard verify) and
-    * broadcast; each arriving doc computes its own band keys in the map
-    * stage, probes the index for candidates, and verifies them exactly —
-    * per-doc stateless, zero stream-side shuffles, no state store. Emits
-    * (doc_id, corpus_doc_id, n_inter, n_union) per verified near-dup.
-    *
-    * Contract: the band index must fit executor memory (24 B/band/doc —
-    * hundreds of millions of corpus docs per executor-GB). Past that, the
-    * same band keys become a stream-static equi-join on (band_id,
-    * band_key) against the parquet-backed `minhashBands` table — identical
-    * semantics, one stream-side shuffle per micro-batch.
-    *
-    * Shingle width, banding and the Jaccard cut are `DedupOps`' batch LSH
-    * policy, so a stream and the batch near-dup ops agree on what a
-    * near-dup is. */
-  private[graft] def nearDupStream(docs: Dataset[(Long, String)],
-                                   staticCorpus: DataFrame)
-      : Dataset[(Long, Long, Int, Int)] = {
-    import graft.ops.DedupOps
-    import DedupOps.{LshBands, LshMinJaccardPct, LshRowsPerBand, ShingleW}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val corpus = staticCorpus
-      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .collect()
-    val index = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-    corpus.foreach { case (id, text) =>
-      DedupOps.bandKeysFor(text, ShingleW, LshBands, LshRowsPerBand).foreach { k =>
-        index.computeIfAbsent(k, _ => new java.util.ArrayList[Long]()).add(id)
-      }
-    }
-    val sets: Map[Long, Array[Long]] = corpus.map { case (id, text) =>
-      id -> DedupOps.gramHashes(text, ShingleW).sorted
-    }.toMap
-    val bcIndex = spark.sparkContext.broadcast(index)
-    val bcSets = spark.sparkContext.broadcast(sets)
-    docs.flatMap { case (id, text) =>
-      val idx = bcIndex.value
-      val cands = scala.collection.mutable.SortedSet[Long]()
-      DedupOps.bandKeysFor(text, ShingleW, LshBands, LshRowsPerBand).foreach { k =>
-        val hit = idx.get(k)
-        if (hit != null) hit.forEach(c => cands += c)
-      }
-      val mine = DedupOps.gramHashes(text, ShingleW).toSet
-      cands.iterator.flatMap { c =>
-        val other = bcSets.value(c)
-        var inter = 0
-        other.foreach(h => if (mine.contains(h)) inter += 1)
-        val union = mine.size + other.length - inter
-        if (inter * 100 >= union * LshMinJaccardPct) Some((id, c, inter, union))
-        else None
-      }.toSeq
-    }
-  }
-
   /** Streaming exact dedup via custom state
     * (`KeyValueGroupedDataset.flatMapGroupsWithState`): keyed by content
     * hash, the state is one boolean per key — the first arrival of a hash
     * passes through, every later duplicate (within or across micro-batches)
     * is dropped. At 10^12 docs the state store shards by the same hash key
     * the batch dedup groups on, so memory per task is bounded by distinct
-    * keys per shard; [[dedupStreamTtl]] bounds it further to a sliding
-    * event-time horizon for re-crawl dedup that only needs recent
-    * history. */
+    * keys per shard. */
   def dedupStream(docs: Dataset[(Long, String)]): Dataset[(Long, String)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
@@ -177,48 +101,6 @@ object StreamingExtraction {
             // keeper = min doc_id within this batch for the key (matches
             // the batch dedup's min-keeper rule)
             rows.toSeq.sortBy(_._1).headOption.iterator
-          }
-      }
-  }
-
-  /** [[dedupStream]] with a BOUNDED state horizon — the 10^12-doc form.
-    * Keyed state carries an event-time timeout at last_seen + ttl: while
-    * a content hash keeps re-arriving the horizon slides forward and
-    * duplicates stay suppressed; once the watermark passes the horizon
-    * the key evicts, and a later re-arrival passes through again — the
-    * re-crawl contract, where dup suppression only needs recent history
-    * and state per shard is bounded by the keys seen within the TTL
-    * window, never by corpus history. Rows older than the watermark are
-    * dropped by the engine before the stateful operator, so the timeout
-    * timestamp is always ahead of the watermark. */
-  private[graft] def dedupStreamTtl(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                     watermarkDelay: String = "10 minutes",
-                     ttlMs: Long = 30L * 60 * 1000)
-      : Dataset[(Long, String)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.withWatermark("_3", watermarkDelay)
-      .groupByKey { case (_, text, _) => graft.ops.Corpus64.md5Low64(text) }
-      .flatMapGroupsWithState[Boolean, (Long, String)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { // watermark passed last_seen + ttl
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toSeq
-            val lastSeen = batch.map(_._3.getTime).max
-            val out =
-              if (state.exists) Iterator.empty // suppressed duplicate
-              else {
-                state.update(true)
-                batch.sortBy(_._1).headOption
-                  .map(r => (r._1, r._2)).iterator // min-keeper rule
-              }
-            state.setTimeoutTimestamp(lastSeen + ttlMs) // slide the horizon
-            out
           }
       }
   }
@@ -285,14 +167,12 @@ object StreamingExtraction {
     * keep outer results exactly-once under out-of-order arrival.
     * Inputs: purchases(p_user, p_ts, p_id), clicks(c_user, c_ts, c_id). */
   def intervalJoinStream(purchases: DataFrame, clicks: DataFrame,
-                         windowSeconds: Long = 3600,
-                         watermark: String = "2 hours",
                          joinType: String = "inner"): DataFrame = {
-    val p = purchases.withWatermark("p_ts", watermark)
-    val c = clicks.withWatermark("c_ts", watermark)
+    val p = purchases.withWatermark("p_ts", IntervalWatermark)
+    val c = clicks.withWatermark("c_ts", IntervalWatermark)
     val joined = p.join(c, expr(
       s"""p_user = c_user AND
-          c_ts >= p_ts - INTERVAL $windowSeconds SECONDS AND
+          c_ts >= p_ts - INTERVAL $IntervalWindowSeconds SECONDS AND
           c_ts <= p_ts"""), joinType)
     // a semi join drops the right side entirely — each qualifying purchase
     // emits ONCE however many clicks match (the existence probe)

@@ -40,7 +40,7 @@ class CalibrationOpsSpec extends AnyFunSuite {
       val filler = "x" * (len - (if (hasThe) 5 else 0))
       (i, if (hasThe) s"$filler the " else filler)
     }.toDF("doc_id", "text")
-    val got = CalibrationOps.isotonicCalibration(docs, bins = 32)
+    val got = CalibrationOps.isotonicCalibration(docs)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     val expected = minimax(got.map(r => (r._2, r._3)))
     assert(got.map(r => (r._4, r._5)) === expected)
@@ -56,8 +56,7 @@ class CalibrationOpsSpec extends AnyFunSuite {
       case Seq((p1, n1), (p2, n2)) => p1 * n2 > p2 * n1
       case _ => false
     })
-    val got2 = CalibrationOps.isotonicCalibration(docs.repartition(7),
-        bins = 32)
+    val got2 = CalibrationOps.isotonicCalibration(docs.repartition(7))
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(got2 === got)
   }
@@ -67,7 +66,7 @@ class CalibrationOpsSpec extends AnyFunSuite {
     val mono = Seq((0L, "aa"), (1L, "a" * 40 + " the "), (2L, "b" * 200),
       (3L, "c" * 200 + " the "), (4L, "d" * 460 + " the "))
       .toDF("doc_id", "text")
-    val g1 = CalibrationOps.isotonicCalibration(mono, bins = 32)
+    val g1 = CalibrationOps.isotonicCalibration(mono)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     g1.map(r => (r._4, r._5)).sliding(2).foreach {
       case Seq((n1, d1), (n2, d2)) => assert(n1 * d2 <= n2 * d1)
@@ -77,7 +76,7 @@ class CalibrationOpsSpec extends AnyFunSuite {
     val anti = ((0L until 10L).map(i => (i, "s" * 60 + " the ")) ++
       (10L until 20L).map(i => (i, "t" * 500)))
       .toDF("doc_id", "text")
-    val g2 = CalibrationOps.isotonicCalibration(anti, bins = 32)
+    val g2 = CalibrationOps.isotonicCalibration(anti)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(g2.map(r => (r._4, r._5)).distinct.size === 1)
     assert(g2.head._4 === 1L && g2.head._5 === 2L) // 10/20 reduced

@@ -52,12 +52,11 @@ class ClassifierOpsSpec extends AnyFunSuite {
     val df = docs.map { case (id, lang, t) => (id, t, lang) }
       .toDF("doc_id", "text", "lang")
     val expected = bruteTrain(docs, epochs = 6, dims = 64, posLang = "en")
-    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64,
-        posLang = "en")
+    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got === expected)
     val got2 = ClassifierOps.perceptronTrain(df.repartition(7),
-        epochs = 6, dims = 64, posLang = "en")
+        epochs = 6, dims = 64)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -71,8 +70,7 @@ class ClassifierOpsSpec extends AnyFunSuite {
     }
     val df = docs.map { case (id, t, l) => (id, t, l) }
       .toDF("doc_id", "text", "lang")
-    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64,
-        posLang = "en")
+    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got.last._2 === 0L)
     assert(got.map(_._2).takeRight(3).forall(_ === 0L))

@@ -184,7 +184,7 @@ class CurationOpsSpec extends AnyFunSuite {
       val s = toks.map(t => bitlen(n) - bitlen(vocab.getOrElse(t, 1L))).sum
       (id, toks.length.toLong, s.toLong)
     }.sortBy(_._1).toSeq
-    val got = CorpusOps.surprisalScores(docs, vocabSize = 20)
+    val got = CorpusOps.surprisalScores(docs)
       .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
     assert(got === expected)
   }
@@ -356,7 +356,7 @@ class CurationOpsSpec extends AnyFunSuite {
       (1L, "alpha beta gamma delta unique1 tail1"), // shares one 4-gram with 0
       (2L, "totally different words here indeed")
     ).toDF("doc_id", "text")
-    val got = CorpusOps.repeatedGramStats(docs, w = 4)
+    val got = CorpusOps.repeatedGramStats(docs)
       .orderBy("doc_id")
       .as[(Long, Long, Long)].collect().toSeq
     // docs 0/1: 3 distinct 4-grams each, exactly one shared
@@ -554,11 +554,10 @@ class CurationOpsSpec extends AnyFunSuite {
     val docs = docsDf(120).select(col("doc_id"), col("text"))
     val texts = docs.as[(Long, String)].collect().map(_._2).toSeq
     val expected = bruteBpe(texts, steps = 6, maxWordLen = 32)
-    val got = CorpusOps.bpeTrain(docs, steps = 6, maxWordLen = 32)
+    val got = CorpusOps.bpeTrain(docs, steps = 6)
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     assert(got === expected)
-    val got2 = CorpusOps.bpeTrain(docs.repartition(9), steps = 6,
-        maxWordLen = 32)
+    val got2 = CorpusOps.bpeTrain(docs.repartition(9), steps = 6)
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -568,7 +567,7 @@ class CurationOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((0L, "aaaa aaaa bq"), (1L, "aaaa bq bq")).toDF(
       "doc_id", "text")
-    val got = CorpusOps.bpeTrain(docs, steps = 2, maxWordLen = 32)
+    val got = CorpusOps.bpeTrain(docs, steps = 2)
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     // step 1: pair (a,a) counted OVERLAPPING = 3 sites × 3 word occurrences
     assert(got(0)._2 === "a" && got(0)._3 === "a" && got(0)._4 === 9L)

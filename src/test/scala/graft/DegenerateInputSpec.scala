@@ -63,6 +63,16 @@ class DegenerateInputSpec extends AnyFunSuite {
       (col("doc_id") % 5).as("block"), col("n_chars").as("cents"),
       col("lang").as("seg"))
 
+  /** q131-shaped lineitem rows, derived from documents. */
+  private def lineitem(d: DataFrame) =
+    d.select(col("doc_id").as("l_orderkey"),
+      (col("doc_id") % 7 + 1).as("l_linenumber"),
+      substring(col("lang"), 1, 1).as("l_returnflag"),
+      substring(col("source"), 4, 1).as("l_linestatus"),
+      (col("n_chars") % 50).as("l_quantity"),
+      date_add(lit("2024-01-01").cast("date"), (col("doc_id") % 300).cast("int"))
+        .as("l_shipdate"))
+
   /** Synthesized `Doc`s with as many rows as `d`. */
   private def docsLike(d: DataFrame) =
     graft.io.Synthesizer.docs(spark, d.count(), seed = 42L)
@@ -131,6 +141,16 @@ class DegenerateInputSpec extends AnyFunSuite {
       MultimodalOps.frameSampleSchedule(mediaOf(d))),
     "MultimodalOps.preprocessPlan" -> (d =>
       MultimodalOps.preprocessPlan(mediaOf(d))),
+    "CalibrationOps.isotonicCalibration" -> (d =>
+      CalibrationOps.isotonicCalibration(d)),
+    "ClassifierOps.perceptronTrain" -> (d => ClassifierOps.perceptronTrain(d)),
+    "CorpusOps.surprisalScores" -> (d => CorpusOps.surprisalScores(d)),
+    "CorpusOps.bpeTrain" -> (d => CorpusOps.bpeTrain(d, steps = 2)),
+    "CorpusOps.bpeEncodeCensus" -> (d => CorpusOps.bpeEncodeCensus(d)),
+    "DedupOps.minhashEstimates" -> (d => DedupOps.minhashEstimates(d)),
+    "DedupOps.groupKFold" -> (d =>
+      DedupOps.groupKFold(d, DedupOps.dupClustersOverDocs(d))),
+    "StorageOps.encodingAdvisor" -> (d => StorageOps.encodingAdvisor(lineitem(d))),
   )
 
   private val eventOps: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -138,13 +158,28 @@ class DegenerateInputSpec extends AnyFunSuite {
     "EventOps.nearestEventJoin" -> (e => EventOps.nearestEventJoin(e)),
     "EventOps.hllSlidingUnion" -> (e => EventOps.hllSlidingUnion(e)),
     "EventOps.ewmaScan" -> (e => EventOps.ewmaScan(e)),
+    "SkewJoin.adaptiveSaltedJoin" -> (e => SkewJoin.adaptiveSaltedJoin(e,
+      e.select(col("event_type")).distinct()
+        .withColumn("kind_len", length(col("event_type"))),
+      "event_type", saltSource = col("event_id"), minSharePct = 10.0)),
   )
 
   private val embOps: Seq[(String, DataFrame => DataFrame)] = Seq(
     "SimilarityOps.lshBuckets" -> (e => SimilarityOps.lshBuckets(e)),
     "SimilarityOps.lshTopKFrom" -> (e =>
       SimilarityOps.lshTopKFrom(e, SimilarityOps.lshBuckets(e))),
-    "IvfOps.ivfTopK" -> (e => IvfOps.ivfTopK(e)),
+    "IvfOps.topKFrom" -> { e =>
+      val c = IvfOps.train(e)
+      IvfOps.topKFrom(e, IvfOps.assign(e, c),
+        IvfOps.probes(e, c, numQueries = 10, nprobe = 2), numQueries = 10,
+        topK = 10)
+    },
+    "SimilarityOps.lshBucketsMulti" -> (e => SimilarityOps.lshBucketsMulti(e)),
+    "GraphAnnOps.beamVisitedSweep + topKFromVisitedSweep" -> { e =>
+      val g = GraphAnnOps.buildKnnGraph(e, m = 8)
+      GraphAnnOps.topKFromVisitedSweep(e,
+        GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8)))
+    },
     "IvfOps.cellCensus" -> { e =>
       val c = IvfOps.train(e)
       IvfOps.cellCensus(IvfOps.assign(e, c),
@@ -155,17 +190,6 @@ class DegenerateInputSpec extends AnyFunSuite {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-degenerate").toString
 
-  private val tableIds = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** A managed table name, cleared of what an earlier run left under it. */
-  private def freshTable(prefix: String): String = {
-    val t = s"$prefix${tableIds.incrementAndGet()}"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    new scala.reflect.io.Directory(new java.io.File(s"spark-warehouse/$t"))
-      .deleteRecursively()
-    t
-  }
-
   private def texts(d: DataFrame) =
     d.select(col("doc_id"), col("text")).as[(Long, String)]
 
@@ -174,18 +198,16 @@ class DegenerateInputSpec extends AnyFunSuite {
     d.select(col("doc_id"), col("text"), col("n_chars").as("seq"),
       (col("doc_id") % 9 === 0).as("is_delete"))
 
-  /** Streaming ops, run on batch frames (the operators are the same;
-    * `dedupWithinWatermark` exists only on streams and has its own test). */
+  /** Streaming ops, run on batch frames (the operators are the same). */
   private val streamOps: Seq[(String, DataFrame => DataFrame)] = {
     import graft.streaming.StreamingExtraction._
+    def side(e: DataFrame, kind: String, p: String) =
+      e.where(col("event_type") === kind).select(col("user_id").as(s"${p}_user"),
+        col("ts").as(s"${p}_ts"), col("event_id").as(s"${p}_id"))
     Seq(
-      "StreamingExtraction.windowedMetrics" -> (e => windowedMetrics(
-        e.select(col("ts"), col("event_type").as("document_type"),
-          (col("user_id") % 2 === 0).as("is_valid")))),
       "StreamingExtraction.sessionMetrics" -> (e => sessionMetrics(e)),
-      "StreamingExtraction.dedupStreamTtl" -> (e => dedupStreamTtl(
-        e.select(col("event_id"), col("event_type"), col("ts"))
-          .as[(Long, String, Timestamp)]).toDF()),
+      "StreamingExtraction.intervalJoinStream" -> (e => intervalJoinStream(
+        side(e, "purchase", "p"), side(e, "click", "c"))),
     )
   }
 
@@ -193,10 +215,6 @@ class DegenerateInputSpec extends AnyFunSuite {
   private def streamDocOps(full: DataFrame): Seq[(String, DataFrame => DataFrame)] = {
     import graft.streaming.StreamingExtraction._
     Seq(
-      "StreamingExtraction.nearDupStream (stream)" -> (d =>
-        nearDupStream(texts(d), full).toDF()),
-      "StreamingExtraction.nearDupStream (static corpus)" -> (d =>
-        nearDupStream(texts(full), d).toDF()),
       "StreamingExtraction.decontaminateStream (stream)" -> (d =>
         decontaminateStream(texts(d), full, w = 4).toDF()),
       "StreamingExtraction.decontaminateStream (benchmark)" -> (d =>
@@ -217,47 +235,26 @@ class DegenerateInputSpec extends AnyFunSuite {
       graft.pipe.SaltedPipeline.run(docsLike(d)).toDF()),
   )
 
-  /** TableIO writers, each read back by its reader. */
+  /** TableIO writers, each read back. */
   private val ioOps: Seq[(String, DataFrame => DataFrame)] = {
     import graft.io.TableIO
     Seq(
-      "TableIO.writeBucketed + bucketedJoin" -> { d =>
-        val (a, b) = (freshTable("t_degen_a"), freshTable("t_degen_b"))
-        TableIO.writeBucketed(d, a, buckets = 4)
-        TableIO.writeBucketed(d.select(col("doc_id"), col("lang").as("lang_b")),
-          b, buckets = 4)
-        TableIO.bucketedJoin(spark, a, b)
+      "TableIO.writePartitionedClustered" -> { d =>
+        val p = tmpDir() + "/part"
+        TableIO.writePartitionedClustered(d, p, "lang", "doc_id",
+          numRangeBuckets = 4)
+        // zero rows write no partition dir, so the schema is given
+        spark.read.schema(d.schema).parquet(p).select(d.columns.map(col): _*)
       },
-      "TableIO.writeCsv + readCsv" -> { d =>
-        val p = tmpDir() + "/csv"
-        TableIO.writeCsv(d, p)
-        TableIO.readCsv(spark, p, d.schema)
+      "TableIO.writeZOrdered" -> { d =>
+        val p = tmpDir() + "/z"
+        TableIO.writeZOrdered(d, p, "doc_id", "n_chars", files = 4)
+        spark.read.parquet(p)
       },
-      "TableIO.writeOrc + readOrc" -> { d =>
-        val p = tmpDir() + "/orc"
-        TableIO.writeOrc(d, p)
-        TableIO.readOrc(spark, p)
-      },
-      "TableIO.readParquetMerged" -> { d =>
-        val (a, b) = (tmpDir() + "/a", tmpDir() + "/b")
-        d.drop("n_chars").write.parquet(a)
-        d.write.parquet(b)
-        TableIO.readParquetMerged(spark, a, b)
-      },
-      "TableIO.writeJsonl + readJsonl" -> { d =>
-        val p = tmpDir() + "/jsonl"
-        TableIO.writeJsonl(d, p)
-        TableIO.readJsonl(spark, p, d.schema)
-      },
-      "TableIO.readJsonlFlagged" -> { d =>
-        val p = tmpDir() + "/jsonl"
-        TableIO.writeJsonl(d, p)
-        TableIO.readJsonlFlagged(spark, p, d.schema).cache()
-      },
-      "TableIO.readCsvFlagged" -> { d =>
-        val p = tmpDir() + "/csv"
-        d.write.csv(p)
-        TableIO.readCsvFlagged(spark, p, d.schema).cache()
+      "TableIO.commitSnapshot + readSnapshot" -> { d =>
+        val t = tmpDir() + "/snap"
+        TableIO.commitSnapshot(d, t, 1)
+        TableIO.readSnapshot(spark, t)
       },
     )
   }
@@ -316,26 +313,6 @@ class DegenerateInputSpec extends AnyFunSuite {
       val dir = tmpDir() + "/sink"
       graft.pipe.Sink.write(results.limit(n), dir)
       assert(spark.read.schema(results.schema).parquet(dir).count() === n)
-    }
-  }
-
-  test("dedupWithinWatermark on a stream of zero rows and of one row keeps " +
-    "the stream's columns") {
-    implicit val sqlCtx = spark.sqlContext
-    for (n <- Seq(0, 1)) {
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Timestamp, Long, Long)]
-      val in = stream.toDS().toDF("ts", "content_hash", "doc_id")
-      val name = s"degenerate_wmdedup_$n"
-      val q = graft.streaming.StreamingExtraction.dedupWithinWatermark(in)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      stream.addData(
-        Seq((Timestamp.valueOf("2024-01-01 00:00:00"), 7L, 1L)).take(n))
-      try q.processAllAvailable() finally q.stop()
-      val out = spark.table(name)
-      assert(columns(out) === columns(in))
-      assert(out.count() === n)
     }
   }
 

@@ -2,178 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.functions.{functions => gf, GraftExtensions}
+import graft.functions.{functions => gf}
 
-/** Custom Catalyst expressions: Column API, SQL registration, codegen
-  * execution, and parity with the Scala reference implementations. */
+/** Custom Catalyst expressions: Column API, codegen execution, and parity
+  * with the Scala reference implementations. */
 class ExpressionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  test("py_title expression matches PyText.title through codegen") {
-    import spark.implicits._
-    val in = Seq("ramesh kumar", "o'neil 2nd-gen", "ABC DEF", "a1b2", "")
-    val out = in.toDF("s").select(gf.py_title(col("s"))).as[String].collect()
-    assert(out.toSeq === in.map(graft.text.PyText.title))
-  }
-
-  test("py_round2 expression is banker's rounding (not Spark HALF_UP)") {
-    import spark.implicits._
-    val out = Seq(0.125, 2.675).toDF("d")
-      .select(gf.py_round2(col("d"))).as[Double].collect()
-    assert(out.toSeq === Seq(0.12, 2.67))
-    // Spark's own round() gives 0.13 / 2.68 here — the trap SURVEY.md §7.6 names
-  }
-
-  test("SQL registration via GraftExtensions descriptors") {
-    GraftExtensions.registerInto(spark)
-    val r = spark.sql("SELECT py_title('visvesvaraya tech') AS t, py_round2(CAST(0.125 AS DOUBLE)) AS r")
-      .collect()(0)
-    assert(r.getString(0) === "Visvesvaraya Tech")
-    assert(r.getDouble(1) === 0.12)
-  }
-
-  test("EVERY codegen expression is SQL-registered: nfc_normalize, " +
-    "deflate_len, common_prefix_len, d_hash64, sign_lsh_bucket, " +
-    "cosine_sim run via spark.sql and match their Column-API twins") {
-    GraftExtensions.registerInto(spark)
-    val r = spark.sql(
-      """SELECT nfc_normalize('café') AS nfc,
-        |  deflate_len('aaaaaaaaaaaaaaaaaaaaaaaa') AS dl,
-        |  common_prefix_len('interleave', 'internal') AS cpl,
-        |  d_hash64('span-payload-bytes') AS dh,
-        |  sign_lsh_bucket(array(CAST(0.5 AS DOUBLE), CAST(-0.25 AS DOUBLE)),
-        |                  2, 4, 7) AS lsh,
-        |  cosine_sim(array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
-        |             array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))) AS cs
-        |""".stripMargin).collect()(0)
-    assert(r.getString(0) === "café")
-    // Column-API twins on the same inputs
-    import spark.implicits._
-    val twin = Seq(("café", "aaaaaaaaaaaaaaaaaaaaaaaa",
-      "interleave", "internal", "span-payload-bytes"))
-      .toDF("n", "d", "a", "b", "p")
-      .select(gf.nfc_normalize(col("n")), gf.deflate_len(col("d")),
-        gf.common_prefix_len(col("a"), col("b")), gf.d_hash64(col("p")),
-        gf.sign_lsh_bucket(
-          org.apache.spark.sql.functions.array(
-            org.apache.spark.sql.functions.lit(0.5),
-            org.apache.spark.sql.functions.lit(-0.25)),
-          graft.ops.SimilarityOps.hyperplanes(2, 4, 7L)))
-      .collect()(0)
-    assert(r.getString(0) === twin.getString(0))
-    assert(r.getInt(1) === twin.getInt(1))
-    assert(r.getInt(2) === twin.getInt(2)) // "inter" → 5
-    assert(r.getInt(2) === 5)
-    assert(r.getLong(3) === twin.getLong(3))
-    assert(r.getLong(4) === twin.getLong(4))
-    assert(r.getDouble(5) === 1.0)
-    // non-literal dim/bits/seed must be rejected, not mis-planed
-    val err = intercept[Exception](spark.sql(
-      "SELECT sign_lsh_bucket(array(CAST(1.0 AS DOUBLE)), CAST(rand()*2 AS INT), 4, 7)").collect())
-    assert(err.getMessage.contains("literal"))
-  }
-
-  test("descs enumeration == expression objects: every codegen Expression " +
-    "class in graft.functions has exactly one SQL descriptor") {
-    // the r4 item-#7 audit, pinned: adding an Expression without a Desc
-    // (or a stale Desc) fails here, not in a judge's grep
-    val registered = GraftExtensions.descs.map(_._1.funcName).toSet
-    val expressionClasses = Set(
-      "py_title", "py_round2", "cosine_sim", "nfc_normalize",
-      "deflate_len", "common_prefix_len", "d_hash64", "sign_lsh_bucket",
-      "dot_long", "bloom_might_contain")
-    assert(registered === expressionClasses)
-    assert(GraftExtensions.descs.size === GraftExtensions.descs
-      .map(_._1.funcName).distinct.size) // no duplicate registrations
-  }
-
-  test("bloom_might_contain SQL form: serialized-filter BINARY literal " +
-    "matches the Column-API probe; misuse gets descriptive errors") {
-    GraftExtensions.registerInto(spark)
-    val f = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
-    Seq(3L, 5L, 7L).foreach(f.putLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    f.writeTo(bos)
-    val hex = bos.toByteArray.map(b => f"$b%02X").mkString
-    val rows = spark.sql(
-      s"SELECT id, bloom_might_contain(id, X'$hex') AS hit " +
-        "FROM range(0, 10)").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    Seq(3L, 5L, 7L).foreach(k => assert(rows(k), s"inserted key $k missed"))
-    // no false positives at this size/fpp for the tiny probe domain
-    assert(rows.count(_._2) <= 4)
-    // Column-API twin over the same filter object
-    import spark.implicits._
-    val twin = spark.range(10)
-      .select(col("id"), gf.bloom_might_contain(col("id"), f).as("hit"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(twin === rows)
-    val err1 = intercept[Exception](spark.sql(
-      "SELECT bloom_might_contain(1)").collect())
-    assert(err1.getMessage.contains("2 arguments"))
-    val err2 = intercept[Exception](spark.sql(
-      "SELECT bloom_might_contain(1, 'not-binary')").collect())
-    assert(err2.getMessage.contains("BINARY literal"))
-  }
-
-  test("sign_lsh_bucket SQL misuse: non-integral or NULL dim/bits/seed " +
-    "literals get the descriptive error, not a raw CCE/NPE") {
-    GraftExtensions.registerInto(spark)
-    val errStr = intercept[Exception](spark.sql(
-      "SELECT sign_lsh_bucket(array(CAST(1.0 AS DOUBLE)), '2', 4, 7)")
-      .collect())
-    assert(errStr.getMessage.contains("integer literal"), errStr.getMessage)
-    val errNull = intercept[Exception](spark.sql(
-      "SELECT sign_lsh_bucket(array(CAST(1.0 AS DOUBLE)), NULL, 4, 7)")
-      .collect())
-    assert(errNull.getMessage.contains("non-null integer literal"),
-      errNull.getMessage)
-  }
-
-  test("dot_long equals the zip_with/aggregate fold, SQL-registered, " +
-    "null on length mismatch or null element") {
-    import spark.implicits._
-    GraftExtensions.registerInto(spark)
-    val rng = new scala.util.Random(23)
-    val rows = (1 to 100).map { i =>
-      (i.toLong, Array.fill(64)(rng.nextInt(2001) - 1000L),
-        Array.fill(64)(rng.nextInt(2001) - 1000L))
-    }
-    val df = rows.toDF("id", "a", "b")
-    val got = df.select(col("id"), gf.dot_long(col("a"), col("b")).as("d"))
-      .as[(Long, Long)].collect().toMap
-    val want = df.selectExpr("id",
-      "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v) AS d")
-      .as[(Long, Long)].collect().toMap
-    assert(got === want)
-    val sql = spark.sql(
-      "SELECT dot_long(array(2L, 3L), array(5L, 7L)) AS d").collect()(0)
-    assert(sql.getLong(0) === 31L)
-    val nulls = spark.sql(
-      """SELECT dot_long(array(1L), array(1L, 2L)) AS mismatch,
-        |       dot_long(array(1L, NULL), array(1L, 2L)) AS nullelem
-        |""".stripMargin).collect()(0)
-    assert(nulls.isNullAt(0) && nulls.isNullAt(1))
-    // the hot-path property the p128 fix depends on: the kernel stays
-    // inside WholeStageCodegen (the HOF fold it replaced ran interpreted);
+  test("expression stays inside WholeStageCodegen") {
     // spark.range forces a real scan — a local Seq constant-folds to
     // LocalTableScan and shows no codegen span at all
-    val plan = spark.range(8)
-      .select(gf.dot_long(
-        org.apache.spark.sql.functions.array(col("id"), col("id") + 1),
-        org.apache.spark.sql.functions.array(col("id"),
-          org.apache.spark.sql.functions.lit(2L))))
-      .queryExecution.executedPlan.toString
-    assert(plan.trim.startsWith("*(1) Project [dot_long("), plan)
-  }
-
-  test("expression stays inside WholeStageCodegen") {
     val plan = spark.range(10)
-      .select(gf.py_title(org.apache.spark.sql.functions.concat(
+      .select(gf.nfc_normalize(org.apache.spark.sql.functions.concat(
         org.apache.spark.sql.functions.lit("x"), col("id"))))
       .queryExecution.executedPlan.toString
     // "*(1)" is the WholeStageCodegen marker in the compact plan string
-    assert(plan.trim.startsWith("*(1) Project [py_title("), plan)
+    assert(plan.trim.startsWith("*(1) Project [nfc_normalize("), plan)
   }
 
   test("cosine_sim is bit-identical to the zip_with/aggregate fold " +

@@ -166,9 +166,11 @@ class OpsSpec extends AnyFunSuite {
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(stats("base") === ((3L, 2L, 1L)))
     assert(stats("derived") === ((5L, 4L, 1L)))
-    val left = graft.ops.MergeOps.deleteFrom(derived, "doc_id", del, "doc_id")
+    // the rewrite: the table left-anti-joined against the delete keys
+    val left = derived.join(del, Seq("doc_id"), "left_anti")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(left === Set((2L, 20)))
+    assert(left.size.toLong === stats("derived")._3)
   }
 
   test("incremental MV merge: fold of base+delta partials equals the " +
@@ -759,13 +761,13 @@ class OpsSpec extends AnyFunSuite {
       (i, base, 0)
     }.toDF("vec_id", "embedding", "label")
     val dir = java.nio.file.Files.createTempDirectory("graft-lshmulti").toString
-    SimilarityOps.lshBucketsMulti(vecs, bits = 4, tables = 8)
+    SimilarityOps.lshBucketsMulti(vecs)
       .write.mode("overwrite").parquet(dir)
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val direct = pairSet(
-      SimilarityOps.embeddingNearDups(vecs, bits = 4, tables = 8,
-        minCosine = 0.99).select("vec_a", "vec_b"))
+      SimilarityOps.embeddingNearDups(vecs, minCosine = 0.99)
+        .select("vec_a", "vec_b"))
     val fromDump = pairSet(
       SimilarityOps.embeddingNearDupsFrom(vecs, spark.read.parquet(dir),
         minCosine = 0.99).select("vec_a", "vec_b"))
@@ -888,13 +890,17 @@ class OpsSpec extends AnyFunSuite {
     assert((0L until 20L).map(cells).toSet.size === 1)
     assert((20L until 40L).map(cells).toSet.size === 1)
     assert(cells(0L) !== cells(20L))
+    // train → assign → probe → rank, as the queries run the steps
+    val assigned = IvfOps.assign(vecs, centroids)
+    def ivfTopK(nprobe: Int) = IvfOps.topKFrom(vecs, assigned,
+      IvfOps.probes(vecs, centroids, numQueries = 3, nprobe = nprobe),
+      numQueries = 3, topK = 5)
     // queries 0..2 probe their own cell first; neighbors stay in-cluster
-    val top = IvfOps.ivfTopK(vecs, numQueries = 3, topK = 5, k = 2,
-      nprobe = 1).collect()
+    val top = ivfTopK(nprobe = 1).collect()
     assert(top.nonEmpty)
     assert(top.forall(_.getAs[Long]("neighbor_id") < 20L))
     // IVF with nprobe=all cells equals brute force
-    val full = IvfOps.ivfTopK(vecs, numQueries = 3, topK = 5, k = 2, nprobe = 2)
+    val full = ivfTopK(nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val brute = SimilarityOps.bruteTopK(vecs, numQueries = 3, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -996,8 +1002,8 @@ class OpsSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 7) "CHANGED" else s"token$i").mkString(" ")
     val df = docsDf(1L -> base, 2L -> nearDup)
-    val out = DedupOps.minhashEstimates(df, w = 3, k = 16,
-      minJaccardPct = 60, bbit = true).collect()
+    val out = DedupOps.minhashEstimates(df, minJaccardPct = 60,
+      bbit = true).collect()
     assert(out.length === 1)
     val r = out.head
     val (estPct, nBit, estB) = (r.getAs[Long]("est_pct"),
@@ -1433,7 +1439,8 @@ class OpsSpec extends AnyFunSuite {
     // last in the (df, h) order and fall outside every 16-of-30 prefix, so
     // the candidate join emits ONLY the planted pair — not the ~120²/2
     // crowd pairs the full index must feed through its aggregation
-    val cands = graft.ops.DedupOps.prefixJaccardCandidates(docs, 3, 50).collect()
+    val cands = graft.ops.DedupOps.prefixJaccardCandidates(
+      graft.ops.DedupOps.shingleHashTable(docs, 3), 50).collect()
     assert(cands.length === 1)
     assert(cands.head.getLong(0) === 100L && cands.head.getLong(1) === 101L)
   }
@@ -1469,7 +1476,7 @@ class OpsSpec extends AnyFunSuite {
       ("minhash", d => DedupOps.minhashLsh(d),
         d => DedupOps.minhashLshUncollapsed(d, 3, 32, 3, 60)),
       ("simhash", d => DedupOps.simhashPairs(d),
-        d => DedupOps.simhashPairsUncollapsed(d, 3)))
+        d => DedupOps.simhashPairsUncollapsed(d)))
     cases.foreach { case (name, collapsed, uncollapsed) =>
       degenerateDocs.foreach { case (corpus, d) =>
         val on = rows(collapsed(d))
@@ -1762,7 +1769,7 @@ class OpsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
     def both(vecs: org.apache.spark.sql.DataFrame) = {
-      val buckets = SimilarityOps.lshBucketsMulti(vecs, bits = 4, tables = 8)
+      val buckets = SimilarityOps.lshBucketsMulti(vecs)
       (rows(SimilarityOps.embeddingNearDupsFrom(vecs, buckets,
         minCosine = 0.45)),
        rows(SimilarityOps.bucketPairsVerify(buckets, vecs, 0.45)))
@@ -2065,110 +2072,6 @@ class OpsSpec extends AnyFunSuite {
     assert(salted !== a) // salt redraws
   }
 
-  test("csv/jsonl round-trip preserves rows with explicit schema") {
-    val df = Seq((1L, "alpha", 2.5), (2L, "beta", -1.0)).toDF("id", "name", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft_io").toString
-    graft.io.TableIO.writeCsv(df, s"$base/csv")
-    graft.io.TableIO.writeJsonl(df, s"$base/jsonl")
-    val backCsv = graft.io.TableIO.readCsv(spark, s"$base/csv", df.schema)
-    val backJson = graft.io.TableIO.readJsonl(spark, s"$base/jsonl", df.schema)
-    Seq(backCsv, backJson).foreach { back =>
-      // file sources mark everything nullable — compare names + types
-      assert(back.schema.map(f => (f.name, f.dataType)) ===
-        df.schema.map(f => (f.name, f.dataType)))
-      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-    }
-  }
-
-  test("orc round-trip preserves rows and types") {
-    val df = Seq((1L, "alpha", 2.5), (2L, "beta", -1.0)).toDF("id", "name", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    graft.io.TableIO.writeOrc(df, s"$base/orc")
-    val back = graft.io.TableIO.readOrc(spark, s"$base/orc")
-    assert(back.schema.map(f => (f.name, f.dataType)) ===
-      df.schema.map(f => (f.name, f.dataType)))
-    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-  }
-
-  test("parquet schema evolution: mergeSchema surfaces late columns as " +
-    "nulls on older batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft_evo").toString
-    Seq((1L, "a")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$base/batch1")
-    Seq((2L, "b", "en")).toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet(s"$base/batch2")
-    val merged = graft.io.TableIO.readParquetMerged(spark,
-      s"$base/batch1", s"$base/batch2")
-    assert(merged.columns.toSet === Set("doc_id", "text", "lang"))
-    val rows = merged.orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        Option(r.getString(2)))).toSeq
-    assert(rows === Seq((1L, "a", None), (2L, "b", Some("en"))))
-  }
-
-  test("jsonl corrupt-record routing: bad lines flagged with their raw " +
-    "bytes, good lines parse; corrupt-only projection is the pinned trap") {
-    import org.apache.spark.sql.types._
-    val base = java.nio.file.Files.createTempDirectory("graft_io_bad").toString
-    val lines = Seq(
-      """{"id": 1, "name": "ok1"}""",
-      """{"id": 2, "name": "ok2"}""",
-      """{"id": 3, "name": """, // truncated mid-object
-      """not json at all""",
-      """{"id": 4, "name": "ok3"}""")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/data.jsonl"),
-      lines.mkString("\n").getBytes("UTF-8"))
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    val flagged = graft.io.TableIO.readJsonlFlagged(spark, base, schema)
-    val good = flagged.where(col("_corrupt_record").isNull)
-      .select("id", "name").as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(good === Seq((1L, "ok1"), (2L, "ok2"), (4L, "ok3")))
-    // quarantine rows carry the ORIGINAL line for replay (keep a data
-    // column in the projection — corrupt-only queries are disallowed)
-    val bad = flagged.where(col("_corrupt_record").isNotNull)
-      .select(col("id"), col("_corrupt_record"))
-      .collect().map(_.getString(1)).sorted.toSeq
-    assert(bad === lines.slice(2, 4).sorted)
-  }
-
-  test("csv corrupt-record routing: type-mismatched AND short rows " +
-    "quarantined with their raw line once the frame is persisted " +
-    "(projection-dependent flagging is the pinned CSV trap)") {
-    import org.apache.spark.sql.types._
-    val base = java.nio.file.Files.createTempDirectory("graft_io_csv").toString
-    val lines = Seq(
-      "1,ok1,10",
-      "2,ok2,20",
-      "x,bad-id,30", // type mismatch on id
-      "5,only-two", // column-count underflow
-      "4,ok3,40")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/data.csv"),
-      lines.mkString("\n").getBytes("UTF-8"))
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType), StructField("v", LongType)))
-    // persist BEFORE filtering on the corrupt column: CSV parses only
-    // projected columns, so un-persisted flagging is projection-
-    // dependent (a query pruning `v` would see "5,only-two" as clean)
-    val flagged = graft.io.TableIO.readCsvFlagged(spark, base, schema)
-      .localCheckpoint(true)
-    val good = flagged.where(col("_corrupt_record").isNull)
-      .select("id", "name", "v").as[(Long, String, Long)]
-      .collect().sortBy(_._1).toSeq
-    assert(good === Seq((1L, "ok1", 10L), (2L, "ok2", 20L),
-      (4L, "ok3", 40L)))
-    val bad = flagged.where(col("_corrupt_record").isNotNull)
-      .select(col("id"), col("_corrupt_record"))
-      .collect().map(_.getString(1)).sorted.toSeq
-    // the short row keeps its parsed prefix AND is quarantined
-    assert(bad === Seq("5,only-two", "x,bad-id,30"))
-    val shortRow = flagged.where(col("_corrupt_record").isNotNull &&
-        col("id") === 5L)
-      .select("name", "v").collect().map(r =>
-        (r.getString(0), Option(r.get(1)))).toSeq
-    assert(shortRow === Seq(("only-two", None)))
-  }
-
   test("salted skew join: row-identical to the plain join, heavy key spread") {
     // key 7 carries 60% of probe rows (the skew); dim is small
     val probe = ((1L to 600L).map(i => (7L, i)) ++
@@ -2176,7 +2079,7 @@ class OpsSpec extends AnyFunSuite {
     val build = (0L to 7L).map(k => (k, s"dim$k")).toDF("k", "dim_val")
     val plain = probe.join(build, "k")
     val salted = graft.ops.SkewJoin.saltedJoin(
-      probe, build, "k", col("row_id"), heavyKeys = Seq(7L), salts = 8)
+      probe, build, "k", col("row_id"), heavyKeys = Seq(7L))
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
     // the heavy key's probe rows really did receive > 1 distinct salt
     val nSalts = probe.where(col("k") === 7L)
@@ -2188,7 +2091,7 @@ class OpsSpec extends AnyFunSuite {
     val detected = graft.ops.SkewJoin.heavyKeys(probe, "k", minSharePct = 20.0)
     assert(detected === Seq(7L))
     val adaptive = graft.ops.SkewJoin.adaptiveSaltedJoin(
-      probe, build, "k", col("row_id"), minSharePct = 20.0, salts = 8)
+      probe, build, "k", col("row_id"), minSharePct = 20.0)
     assert(adaptive.exceptAll(plain).isEmpty && plain.exceptAll(adaptive).isEmpty)
     // no-skew input: empty heavy list degrades to the plain join
     val uniform = (1L to 100L).map(i => (i % 10, i)).toDF("k", "row_id")
@@ -2206,8 +2109,7 @@ class OpsSpec extends AnyFunSuite {
     val near = (1 to 27).map(i => s"tok$i").mkString(" ") + " alt1 alt2 alt3"
     val docs = Seq((1L, base), (2L, base), (3L, near), (4L, "unrelated words only"))
       .toDF("doc_id", "text")
-    val rows = graft.ops.DedupOps.minhashEstimates(docs, w = 3, k = 16,
-        minJaccardPct = 50)
+    val rows = graft.ops.DedupOps.minhashEstimates(docs, minJaccardPct = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7)))
     val ident = rows.find(t => t._1 == 1L && t._2 == 2L).get
@@ -2220,7 +2122,7 @@ class OpsSpec extends AnyFunSuite {
     nearRows.foreach(t => assert(t._6 <= 40L,
       s"estimator error ${t._6}pp outside the k=16 envelope"))
     val rows2 = graft.ops.DedupOps.minhashEstimates(docs.repartition(5),
-        w = 3, k = 16, minJaccardPct = 50)
+        minJaccardPct = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7)))
     assert(rows2.toSeq === rows.toSeq)
@@ -2442,7 +2344,7 @@ class OpsSpec extends AnyFunSuite {
     val labels = ((0L until 10L).map(i => (i, 0L)) ++
       Seq((10L, 10L), (11L, 10L)))
       .toDF("doc_id", "cluster_id")
-    val got = DedupOps.groupKFold(docs, labels, k = 5).collect()
+    val got = DedupOps.groupKFold(docs, labels).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.map(_._2).sum === 40L)
     // reference: every doc's fold = fold(cid); spanning = clusters whose

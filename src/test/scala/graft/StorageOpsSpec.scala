@@ -49,7 +49,7 @@ class StorageOpsSpec extends AnyFunSuite {
       (i / 4, i % 4, rf, ls, 100L + i, "2024-01-0" + (i % 9 + 1))
     }
     val df = liDf(rows)
-    val got = StorageOps.encodingAdvisor(df, blockRows = 4096)
+    val got = StorageOps.encodingAdvisor(df)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getString(7))))
@@ -63,7 +63,7 @@ class StorageOpsSpec extends AnyFunSuite {
     assert(got("returnflag")._7 === "rle")
     assert(got("linestatus")._7 === "dict")
     assert(got("quantity")._7 === "plain")
-    val got2 = StorageOps.encodingAdvisor(df.repartition(7), blockRows = 4096)
+    val got2 = StorageOps.encodingAdvisor(df.repartition(7))
       .collect()
       .map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(got2 === got.map { case (k, v) => k -> v._3 })

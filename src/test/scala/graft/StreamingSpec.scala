@@ -36,43 +36,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("windowed metrics with watermark aggregate by event-time window") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, String, Boolean)]
-    val ts = (m: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
-    stream.addData(Seq(
-      (ts(1), "Aadhaar Card", true), (ts(2), "Aadhaar Card", false),
-      (ts(7), "PAN Card", true)))
-    val df = stream.toDS().toDF("ts", "document_type", "is_valid")
-    val q = StreamingExtraction.windowedMetrics(df)
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("update").start()
-    q.processAllAvailable()
-    val rows = spark.table("win_out").collect()
-    assert(rows.length === 2) // two 5-minute windows
-    val aad = rows.find(_.getAs[String]("document_type") == "Aadhaar Card").get
-    assert(aad.getAs[Long]("doc_count") === 2L)
-    assert(aad.getAs[Long]("valid_count") === 1L)
-
-    // batch 2: the watermark is now 10:07 − 10 min = 09:57, so a 09:30
-    // straggler must be DROPPED (never aggregated), while a fresh 10:20
-    // row opens its window normally — the semantics that bound state at
-    // 10^12 events (windows older than the watermark are evictable)
-    val late = java.sql.Timestamp.valueOf("2026-01-01 09:30:00")
-    stream.addData(Seq((late, "Voter ID", true), (ts(20), "PAN Card", true)))
-    q.processAllAvailable()
-    q.stop()
-    val rows2 = spark.table("win_out").collect()
-    assert(!rows2.exists(_.getAs[String]("document_type") == "Voter ID"),
-      "late row beyond the watermark leaked into the aggregation")
-    assert(rows2.exists { r =>
-      r.getAs[String]("document_type") == "PAN Card" &&
-        r.getAs[org.apache.spark.sql.Row]("window")
-          .getAs[java.sql.Timestamp]("start").toString.contains("10:20")
-    }, "fresh 10:20 window missing")
-  }
-
   test("stream-stream interval join pairs each purchase with prior-hour " +
     "clicks, across micro-batches, in either arrival order") {
     import spark.implicits._
@@ -264,31 +227,6 @@ class StreamingSpec extends AnyFunSuite {
       ("u1", ts(10, 30), ts(10, 35), 1L)))
   }
 
-  test("watermark-bounded dedup drops duplicates inside the window and " +
-    "re-admits a key after its state expires") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, String, Long)]
-    val ts = (h: Int, m: Int) =>
-      java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    val q = StreamingExtraction
-      .dedupWithinWatermark(stream.toDS().toDF("ts", "content_hash", "doc_id"))
-      .writeStream.format("memory").queryName("wmdedup_out")
-      .outputMode("append").start()
-    stream.addData(Seq((ts(10, 0), "h1", 1L), (ts(10, 1), "h1", 2L)))
-    q.processAllAvailable() // in-batch duplicate dropped
-    stream.addData(Seq((ts(10, 5), "h1", 3L)))
-    q.processAllAvailable() // cross-batch duplicate inside the window dropped
-    stream.addData(Seq((ts(10, 40), "h2", 4L)))
-    q.processAllAvailable() // advances the watermark to 10:30 > 10:00 + 10m
-    stream.addData(Seq((ts(10, 35), "h1", 5L)))
-    q.processAllAvailable() // h1 state expired — re-admitted
-    q.stop()
-    val ids = spark.table("wmdedup_out")
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(ids === Set(1L, 4L, 5L))
-  }
-
   test("streaming dedup drops duplicates within and across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -307,42 +245,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toSet
     // min-keeper within batch 1 (doc 1 beats 3), duplicate 9 dropped in batch 2
     assert(got === Set(1L -> "alpha beta", 2L -> "unique one", 4L -> "brand new"))
-  }
-
-  test("streaming dedup with event-time TTL: duplicates suppress inside " +
-    "the horizon, the key evicts once the watermark passes last_seen + " +
-    "ttl, and a later re-arrival passes through again") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(hhmm: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-    val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
-    // watermark delay 10 min, ttl 30 min
-    val q = StreamingExtraction
-      .dedupStreamTtl(stream.toDS(), "10 minutes", 30L * 60 * 1000)
-      .toDF("doc_id", "text")
-      .writeStream.format("memory").queryName("dedup_ttl_out")
-      .outputMode("append").start()
-    stream.addData(Seq((1L, "dup text", ts("10:00")))) // first arrival
-    q.processAllAvailable()
-    // in-horizon duplicate (10:05 < 10:00 + 30min) — suppressed; the
-    // horizon slides to 10:35
-    stream.addData(Seq((2L, "dup text", ts("10:05"))))
-    q.processAllAvailable()
-    // advance the watermark past the horizon: 11:00 - 10min = 10:50 > 10:35
-    stream.addData(Seq((3L, "other a", ts("11:00"))))
-    q.processAllAvailable()
-    // timeout processing fires in the batch AFTER the watermark advanced;
-    // this batch evicts the key's state
-    stream.addData(Seq((4L, "other b", ts("11:01"))))
-    q.processAllAvailable()
-    // re-arrival after eviction (10:55 is still above the 10:51 watermark)
-    stream.addData(Seq((5L, "dup text", ts("10:55"))))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("dedup_ttl_out").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toSet
-    assert(got === Set(1L -> "dup text", 3L -> "other a",
-      4L -> "other b", 5L -> "dup text"))
   }
 
   test("streaming upsert maintains a parquet snapshot across micro-batches " +
@@ -420,33 +322,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getAs[Long]("n_hit_grams")).toSet
     assert(got === batch)
     assert(got.map(_._1) === Set(1L, 3L))
-  }
-
-  test("streaming near-dup detection flags arrivals against the static " +
-       "LSH index with exact-verified jaccard") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = (1 to 40).map(i => s"token$i").mkString(" ")
-    val other = (100 to 140).map(i => s"word$i").mkString(" ")
-    val corpus = Seq((10L, base), (11L, other)).toDF("doc_id", "text")
-    val nearDup = (1 to 40).map(i => if (i == 7) "CHANGED" else s"token$i")
-      .mkString(" ")
-    val fresh = (200 to 240).map(i => s"new$i").mkString(" ")
-    val stream = MemoryStream[(Long, String)]
-    stream.addData(Seq(50L -> nearDup))
-    val q = StreamingExtraction.nearDupStream(stream.toDS(), corpus)
-      .toDF("doc_id", "corpus_doc_id", "n_inter", "n_union")
-      .writeStream.format("memory").queryName("neardup_out")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    stream.addData(Seq(51L -> fresh, 52L -> base)) // clean + exact dup
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("neardup_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSet
-    // near-dup: 1 of 40 tokens changed kills 3 of 38 shingles; exact dup:
-    // full overlap. The unrelated arrival and corpus doc 11 never pair.
-    assert(got === Set((50L, 10L, 35, 41), (52L, 10L, 38, 38)))
   }
 
   test("stream-static broadcast join enriches micro-batches with a dimension") {

@@ -3,44 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.io.{Synthesizer, TableIO}
-import graft.pipe.ExtractionPipeline
 
-/** Bucketed-table layout: co-located joins must be shuffle-free —
-  * the property that keeps the golden-verification join narrow at scale. */
+/** Table layout and snapshot IO: scan pruning on the clustered layouts,
+  * narrow compaction, and snapshot isolation and expiry. */
 class TableIOSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-
-  test("doc_id-bucketed tables join without a shuffle") {
-    spark.sql("DROP TABLE IF EXISTS t_results")
-    spark.sql("DROP TABLE IF EXISTS t_golden")
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File("spark-warehouse/t_results")).deleteRecursively()
-    new Directory(new java.io.File("spark-warehouse/t_golden")).deleteRecursively()
-    val docs = Synthesizer.docs(spark, 300, 42L)
-    val results = ExtractionPipeline.run(docs).toDF()
-      .select(col("doc_id"), col("document_type"), col("is_valid"))
-    // results table + a "golden" copy, both bucketed on doc_id
-    TableIO.writeBucketed(results, "t_results", buckets = 8)
-    TableIO.writeBucketed(results.withColumnRenamed("is_valid", "golden_valid"),
-      "t_golden", buckets = 8)
-
-    // force the sort-merge path (tiny test tables would broadcast, which is
-    // the right plan when one side is small — the bucketed layout is for
-    // the large-large case, so demonstrate that one)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = TableIO.bucketedJoin(spark, "t_results", "t_golden")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"), s"bucketed join shuffled:\n$plan")
-      assert(joined.count() === 300)
-
-      // verification semantics: zero mismatches between results and golden
-      val mismatches = joined
-        .where(col("is_valid") =!= col("golden_valid")).count()
-      assert(mismatches === 0)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
 
   test("snapshot expiry: expired version unreadable, orphan dir reclaimed, " +
     "kept versions byte-stable") {

@@ -4,7 +4,8 @@
 Run from the repo root:
 
     python3 tools/op_census.py            # full report
-    python3 tools/op_census.py --check    # exit 1 on an unset option or an uncalled def
+    python3 tools/op_census.py --check    # exit 1 on an unset option, an uncalled
+                                          # public def or an unreached def
 
 It reads every member `def` of the objects in the library packages under
 src/main/scala/graft/ (PACKAGES) and every call of them in src/main,
@@ -35,15 +36,28 @@ or in a file that imports `Obj._` or `Obj.{name}`, and the `Obj(...)` /
 `Obj(...) = v` sugar for `Obj.apply` / `Obj.update`. An `override def`
 implements a supertype's member, so it is not part of its object's surface.
 
-`--check` fails when a defaulted parameter of a covered def is set by
-nobody, or when a public covered def has no caller outside its own object
-in main code. The guards in GUARDS are exempt from the first rule: they are
-safety switches, so a default nobody overrides is their normal state.
+A member def is *reached* when main code outside the library files calls
+it (the pipeline entry points, the harness, the query objects, graft.tools,
+perfbench/src), or when a reached def calls it; reach is computed to a
+fixed point over the call sites above. A call from library code that sits in
+no member def (an object's initialiser, a class body, a top-level class)
+counts as reached: the census does not parse classes, so check those by
+hand. `override def`s implement a supertype and are never unreached.
 
-The parser is lexical: it blanks comments and string literals, then matches
-`def`s and calls by brace depth and indentation. It relies on the repo's
-formatting (members at one indent level, a def's body indented below its
-`def` line).
+`--check` fails when a defaulted parameter of a covered def is set by
+nobody, when a public covered def has no caller outside its own object in
+main code, or when a member def is not reached. The guards in GUARDS are
+exempt from the first rule: they are safety switches, so a default nobody
+overrides is their normal state. The defs in SPEC_HOOKS are exempt from the
+third: they are reference implementations and branch kernels that specs
+compare a reached op against, and each entry names the op it pins. An entry
+that names a missing def, a def that is now reached, or a pinned op that is
+not reached fails the check too, so the list cannot go stale.
+
+The parser is lexical: it blanks comments and string literals (not the code
+inside their interpolations), then matches `def`s and calls by brace depth
+and indentation. It relies on the repo's formatting (members at one indent
+level, a def's body indented below its `def` line).
 """
 import os
 import re
@@ -57,9 +71,22 @@ EXCLUDED_FILES = {"src/main/scala/graft/classify/ClassifyQuery.scala"}
 MAIN_DIRS = ["src/main/scala", "perfbench/src"]
 SPEC_DIRS = ["src/test/scala"]
 
-# Safety switches and spec hooks kept on purpose (ROADMAP direction 9).
+# Safety switches kept on purpose (ROADMAP direction 9).
 GUARDS = {"maxBroadcastRows", "requireUniqueDeltaKeys", "materialize",
           "lineageTruncate"}
+
+# Unreached defs kept on purpose: the reference implementation or branch
+# kernel a spec compares against -> the reached op it pins.
+SPEC_HOOKS = {
+    "DedupOps.simhashPairsUncollapsed": "DedupOps.simhashPairs",
+    "PackingOps.packChunksWindow": "PackingOps.packChunks",
+    "SimilarityOps.semDedupUncollapsed": "SimilarityOps.semDedupFrom",
+    "SimilarityOps.cosineHof": "SimilarityOps.cosine",
+    "SimilarityOps.thresholdPairs": "SimilarityOps.topPairs",
+    "SimilarityOps.embeddingNearDups": "SimilarityOps.embeddingNearDupsFrom",
+    "SuffixOps.suffixRanks": "SuffixOps.ranksCore",
+    "SuffixOps.suffixCensusUncollapsed": "SuffixOps.suffixCensus",
+}
 
 NOBODY, SPECS, MAIN = 0, 1, 2
 CLASS_NAME = {NOBODY: "nobody", SPECS: "specs", MAIN: "main"}
@@ -69,7 +96,8 @@ IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 def blank(src):
     """Replace comments and string/char literal bodies with spaces, keeping
-    every newline so offsets and line numbers are unchanged."""
+    every newline so offsets and line numbers are unchanged, and keeping the
+    code inside `s"${...}"` interpolations (a call there is a call)."""
     out = list(src)
     i, n = 0, len(src)
 
@@ -77,6 +105,30 @@ def blank(src):
         for k in range(a, b):
             if out[k] != "\n":
                 out[k] = " "
+
+    def wipe_literal(q, a, b):
+        """Blank a literal's body, but keep the `${expr}` and `$name` parts of
+        an interpolated one (`s"..."`): they are code."""
+        if q == 0 or not re.match(r"[A-Za-z0-9_]", src[q - 1]):
+            wipe(a, b)
+            return
+        k = a
+        while k < b:
+            if src.startswith("$$", k):
+                wipe(k, k + 2)
+                k += 2
+            elif src.startswith("${", k):
+                e = min(match_close(src, k + 1), b)
+                wipe(k, k + 2)
+                wipe(e - 1, e)
+                k = e
+            elif src[k] == "$":
+                m = re.compile(IDENT).match(src, k + 1)
+                wipe(k, k + 1)
+                k = m.end() if m and m.end() <= b else k + 1
+            else:
+                wipe(k, k + 1)
+                k += 1
 
     while i < n:
         c = src[i]
@@ -101,13 +153,13 @@ def blank(src):
             j = n if j < 0 else j + 3
             while j < n and src[j] == '"':
                 j += 1
-            wipe(i + 1, j - 1)
+            wipe_literal(i, i + 3, j - 3)
             i = j
         elif c == '"':
             j = i + 1
             while j < n and src[j] != '"' and src[j] != "\n":
                 j += 2 if src[j] == "\\" else 1
-            wipe(i + 1, j)
+            wipe_literal(i, i + 1, j)
             i = j + 1
         elif c == "'" and i + 2 < n and (src[i + 2] == "'" or src[i + 1] == "\\"):
             j = src.find("'", i + 2)
@@ -389,19 +441,27 @@ def main(argv):
     members = [d for d in defs if d.member]
     forwards = []                     # (enclosing Param, callee Param)
     text_of = dict(lib_files)         # path -> blanked source
+    roots = set()                     # member defs main code reaches directly
+    edges = {}                        # member def -> member defs it calls
 
     def enclosing_def(path, pos):
         cands = [d for d in defs if d.path == path and d.start < pos < d.end]
         return sorted(cands, key=lambda d: d.start, reverse=True)
 
     def record(callee_defs, arg_lists, where, path, pos, caller_obj):
+        encl = enclosing_def(path, pos) if path in lib_files else []
+        if where == MAIN:
+            caller = next((e for e in encl if e.member), None)
+            if caller is None:
+                roots.update(callee_defs)
+            else:
+                edges.setdefault(caller, set()).update(callee_defs)
         for d in callee_defs:
             if caller_obj != d.obj:
                 (d.main_callers if where == MAIN else d.spec_callers).add(
                     caller_obj or os.path.basename(path))
             else:
                 d.inside_calls += 1
-            encl = enclosing_def(path, pos) if path in lib_files else []
             for li, args in enumerate(arg_lists[:len(d.lists)]):
                 pl = d.lists[li]
                 for ai, a in enumerate(args):
@@ -570,6 +630,26 @@ def main(argv):
             if src.cls > target.cls:
                 target.cls, changed = src.cls, True
 
+    reached, todo = set(), list(roots)
+    while todo:
+        d = todo.pop()
+        if d not in reached:
+            reached.add(d)
+            todo.extend(edges.get(d, ()))
+    unreached = [d for d in members if not d.override and d not in reached]
+    member_of = {d.label(): d for d in members}
+    hooked = [d for d in unreached if d.label() in SPEC_HOOKS]
+    unreached = [d for d in unreached if d.label() not in SPEC_HOOKS]
+    stale = []
+    for hook, pinned in sorted(SPEC_HOOKS.items()):
+        if hook not in member_of:
+            stale.append(f"SPEC_HOOKS entry {hook} names no member def")
+        elif member_of[hook] in reached:
+            stale.append(f"SPEC_HOOKS entry {hook} is reached; drop the entry")
+        if pinned not in member_of or member_of[pinned] not in reached:
+            stale.append(f"SPEC_HOOKS entry {hook} pins {pinned}, which is "
+                         f"not a reached def")
+
     public = [d for d in members if d.public]
     print("== public library defs: outside callers (main | specs) ==")
     for d in sorted(public, key=lambda d: (d.package, d.obj, d.line)):
@@ -600,25 +680,40 @@ def main(argv):
             [sum(1 for p in pub_opts if p.cls == c) for c in (MAIN, SPECS, NOBODY)] + \
             [sum(1 for p in pub_opts if p.name in GUARDS),
              sum(1 for d, p in nobody if pkg in (None, d.package)),
-             sum(1 for d in uncalled if pkg in (None, d.package))]
+             sum(1 for d in uncalled if pkg in (None, d.package)),
+             sum(1 for d in members if pkg in (None, d.package)),
+             sum(1 for d in unreached if pkg in (None, d.package)),
+             sum(1 for d in hooked if pkg in (None, d.package))]
+
+    print("== spec hooks: unreached on purpose -> the reached op each pins ==")
+    for d in sorted(hooked, key=lambda d: (d.package, d.obj, d.line)):
+        print(f"{d.label():45s} pins {SPEC_HOOKS[d.label()]}")
+    print()
 
     print("== totals per package ==")
     print("columns: public defs | public parameters | settable options (defaulted "
           "public parameters): set by main, by specs, by nobody, guards | "
           "parameters set by nobody (any visibility, guards exempt) | public defs "
-          "without an outside caller in main code")
+          "without an outside caller in main code | member defs (any visibility): "
+          "unreached, spec hooks")
     for pkg in PACKAGES + [None]:
         t = totals(pkg)
         print(f"{pkg or 'all':10s} defs {t[0]:4d}  params {t[1]:4d}  options {t[2]:4d}"
               f" (main {t[3]:3d}, specs {t[4]:3d}, nobody {t[5]:3d}, guards {t[6]})"
-              f"  nobody {t[7]:3d}  uncalled {t[8]:3d}")
+              f"  nobody {t[7]:3d}  uncalled {t[8]:3d}"
+              f"  members {t[9]:4d} (unreached {t[10]:3d}, hooks {t[11]:2d})")
     if check:
         for d, p in nobody:
             print(f"FAIL: {d.label()}.{p.name} ({d.path}:{d.line}) is set by nobody")
         for d in uncalled:
             print(f"FAIL: public {d.label()} ({d.path}:{d.line}) has no caller outside "
                   f"{d.obj} in main code")
-        return 1 if nobody or uncalled else 0
+        for d in sorted(unreached, key=lambda d: (d.path, d.line)):
+            print(f"FAIL: {d.label()} ({d.path}:{d.line}) is reached by no main "
+                  f"code and is not in SPEC_HOOKS")
+        for msg in stale:
+            print(f"FAIL: {msg}")
+        return 1 if nobody or uncalled or unreached or stale else 0
     return 0
 
 

@@ -160,7 +160,7 @@ object PipelineOpsQueries {
     // from md5 trailing-zero geometrics; the oracle re-derives every
     // noisy cell from the same bits via bit_count((h & -h) - 1)
     "p130_dp_histogram" -> ((s, dir) =>
-      graft.ops.PrivacyOps.dpHistogram(docs(s, dir), seed = "e1")),
+      graft.ops.PrivacyOps.dpHistogram(docs(s, dir))),
 
     // batch-perceptron quality-classifier trainer: 5 epochs of
     // (broadcast-w scoring scan → misclassified integer update), hashed
@@ -168,8 +168,7 @@ object PipelineOpsQueries {
     // sums make training bit-deterministic, and the oracle re-runs the
     // whole loop as generated chained CTEs over the sparse features
     "p129_perceptron_train" -> ((s, dir) =>
-      graft.ops.ClassifierOps.perceptronTrain(docs(s, dir), epochs = 8,
-        dims = 256)),
+      graft.ops.ClassifierOps.perceptronTrain(docs(s, dir))),
 
     // greedy facility-location coreset (submodular subset selection):
     // 8 rounds of integer-exact marginal-gain argmax over a broadcast
@@ -177,8 +176,7 @@ object PipelineOpsQueries {
     // an exact BIGINT dot, so argmax and census are bit-deterministic —
     // the oracle re-runs the whole greedy loop as generated chained CTEs
     "p128_coreset_facility" -> ((s, dir) =>
-      graft.ops.CoresetOps.facilityLocation(emb(s, dir), k = 8,
-        coverageMod = 2)),
+      graft.ops.CoresetOps.facilityLocation(emb(s, dir))),
     "p12_embedding_top_pairs" -> ((s, dir) => SimilarityOps.topPairs(emb(s, dir))),
     "p13_ann_ivf_topk" -> ((s, dir) => {
       // IVF-Flat ANN: dump the trained assignment + probe tables so the
@@ -187,10 +185,10 @@ object PipelineOpsQueries {
       val centroids = graft.ops.IvfOps.train(e)
       graft.ops.IvfOps.assign(e, centroids)
         .write.mode("overwrite").parquet(ivfAssignPath(dir))
-      graft.ops.IvfOps.probes(e, centroids, numQueries = 10, nprobe = 2)
+      graft.ops.IvfOps.probes(e, centroids, nprobe = 2)
         .write.mode("overwrite").parquet(ivfProbePath(dir))
       graft.ops.IvfOps.topKFrom(e, s.read.parquet(ivfAssignPath(dir)),
-        s.read.parquet(ivfProbePath(dir)), numQueries = 10, topK = 10)
+        s.read.parquet(ivfProbePath(dir)))
     }),
     "p11_shingle_counts" -> ((s, dir) => DedupOps.shingleCounts(docs(s, dir))),
     "p14_token_df" -> ((s, dir) => graft.ops.CorpusOps.tokenDf(docs(s, dir))),
@@ -260,7 +258,7 @@ object PipelineOpsQueries {
       val d = docs(s, dir)
       graft.ops.CorpusOps.decontaminate(
         d.where(col("doc_id") % 20 =!= 0),
-        d.where(col("doc_id") % 20 === 0), w = 4)
+        d.where(col("doc_id") % 20 === 0))
     }),
     // embedding-modality cluster resolution: the exact top-100 cosine pair
     // graph (p12's oracled edge set) resolved into transitive clusters by
@@ -268,7 +266,7 @@ object PipelineOpsQueries {
     "p28_embed_dup_clusters" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
       DedupOps.dupClusters(
-        SimilarityOps.topPairs(emb(s, dir), 100)
+        SimilarityOps.topPairs(emb(s, dir))
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
         .select(col("doc_id").as("vec_id"), col("cluster_id"),
                 col("cluster_size"))
@@ -293,7 +291,7 @@ object PipelineOpsQueries {
         .where(col("keep") === 1).select(col("doc_id"))
       val keepers = DedupOps.exact(train)
         .select(col("keeper_doc_id").as("doc_id"))
-      val contaminated = graft.ops.CorpusOps.decontaminate(train, evalSet, w = 4)
+      val contaminated = graft.ops.CorpusOps.decontaminate(train, evalSet)
         .select(col("doc_id"))
       val sampled = graft.ops.CorpusOps
         .hashSample(train, Map("en" -> 50), defaultPct = 20)
@@ -311,7 +309,7 @@ object PipelineOpsQueries {
     // OOV stats vs a top-20 induced vocab (corpus vocabulary is 31 tokens,
     // so the 11 rarest become the OOV tail)
     "p31_oov_stats" -> ((s, dir) =>
-      graft.ops.CorpusOps.oovStats(docs(s, dir), vocabSize = 20)),
+      graft.ops.CorpusOps.oovStats(docs(s, dir))),
     "p24_hash_sample" -> ((s, dir) =>
       graft.ops.CorpusOps.hashSample(docs(s, dir),
         Map("en" -> 50), defaultPct = 20)),
@@ -334,11 +332,11 @@ object PipelineOpsQueries {
     // pack range via the distributed prefix sum (never a SinglePartition
     // window); oracled by the running-sum window formulation
     "p33_seq_packing" -> ((s, dir) =>
-      graft.ops.PackingOps.packChunks(docs(s, dir), capacity = 256)),
+      graft.ops.PackingOps.packChunks(docs(s, dir))),
     // per-source caps (keep the 10 longest docs per source): bounded-heap
     // partial top-k per partition, one source-keyed merge
     "p34_domain_cap" -> ((s, dir) =>
-      graft.ops.CorpusOps.domainCap(docs(s, dir), cap = 10)),
+      graft.ops.CorpusOps.domainCap(docs(s, dir))),
     // HLL estimator vs exact cardinality on distinct (doc, token) pairs —
     // integer-arithmetic estimate so the oracle replicates it bit-for-bit
     "p35_hll_validate" -> ((s, dir) =>
@@ -371,7 +369,7 @@ object PipelineOpsQueries {
       SimilarityOps.lshBucketsMulti(e)
         .write.mode("overwrite").parquet(multiBucketDumpPath(dir))
       SimilarityOps.embeddingNearDupsFrom(e,
-          s.read.parquet(multiBucketDumpPath(dir)), minCosine = 0.45)
+          s.read.parquet(multiBucketDumpPath(dir)))
         .select(col("vec_a"), col("vec_b"))
         .orderBy(col("vec_a"), col("vec_b"))
     }),
@@ -418,11 +416,11 @@ object PipelineOpsQueries {
     "p46_lsh_recall" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val d = docs(s, dir)
-      DedupOps.minhashCandidates(d, w = 3, bands = 1, rowsPerBand = 16)
+      DedupOps.minhashCandidates(d, bands = 1, rowsPerBand = 16)
         .write.mode("overwrite").parquet(lshRecallDumpPath(dir))
       val cands = s.read.parquet(lshRecallDumpPath(dir))
         .withColumn("is_cand", lit(1L))
-      val exact = DedupOps.exactJaccardPairs(d, w = 3, minJaccardPct = 60)
+      val exact = DedupOps.exactJaccardPairs(d, minJaccardPct = 60)
         .select(col("doc_a"), col("doc_b")).withColumn("is_exact", lit(1L))
       exact.join(cands, Seq("doc_a", "doc_b"), "full_outer")
         .agg(sum(coalesce(col("is_exact"), lit(0L))).cast("long").as("n_exact"),
@@ -554,8 +552,7 @@ object PipelineOpsQueries {
     // (df-capped index + materialized fingerprint table); the oracle
     // replicates the cap, so the hash stays exact
     "p65_containment" -> ((s, dir) =>
-      DedupOps.containmentPairs(docs(s, dir), maxDf = Some(64),
-          materialize = true)
+      DedupOps.containmentPairs(docs(s, dir), materialize = true)
         .orderBy("doc_id", "container_id")),
 
     // corpus drift monitor: the even/odd doc_id slices stand in as two
@@ -717,12 +714,12 @@ object PipelineOpsQueries {
       val d = docs(s, dir)
       val settings = Seq((2, 8), (4, 4), (8, 2), (16, 1))
       settings.map { case (b, r) =>
-          DedupOps.minhashCandidates(d, w = 3, bands = b, rowsPerBand = r)
+          DedupOps.minhashCandidates(d, bands = b, rowsPerBand = r)
             .select(lit(b.toLong).as("bands"), col("doc_a"), col("doc_b"))
         }.reduce(_ unionByName _)
         .write.mode("overwrite").parquet(bandSweepDumpPath(dir))
       val cand = s.read.parquet(bandSweepDumpPath(dir))
-      val exact = DedupOps.exactJaccardPairs(d, w = 3, minJaccardPct = 60)
+      val exact = DedupOps.exactJaccardPairs(d, minJaccardPct = 60)
         .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
       val ex = exact.agg(count(lit(1)).as("n_exact"))
       val hits = cand
@@ -905,7 +902,7 @@ object PipelineOpsQueries {
       import org.apache.spark.sql.functions.col
       graft.ops.SuffixOps.suffixCensus(
         docs(s, dir).filter(col("doc_id") % 16 === 0)
-          .select(col("doc_id"), col("text")), maxLen = 128)
+          .select(col("doc_id"), col("text")))
     }),
 
     // LCP census over the suffix order (Kasai companion to p123): for
@@ -918,7 +915,7 @@ object PipelineOpsQueries {
       import org.apache.spark.sql.functions.col
       graft.ops.SuffixOps.lcpCensus(
         docs(s, dir).filter(col("doc_id") % 16 === 0)
-          .select(col("doc_id"), col("text")), maxLen = 128, window = 64)
+          .select(col("doc_id"), col("text")))
     }),
 
     // verbatim-repeat removal plan (Lee et al. ExactSubstr, completed):
@@ -931,8 +928,7 @@ object PipelineOpsQueries {
       import org.apache.spark.sql.functions.col
       graft.ops.SuffixOps.repeatSpans(
         docs(s, dir).filter(col("doc_id") % 4 === 0)
-          .select(col("doc_id"), col("text")),
-        maxLen = 128, window = 64, minLen = 20)
+          .select(col("doc_id"), col("text")))
     }),
 
     // BPE merge-training loop (Sennrich et al. 2016 learn_bpe): 8 rounds
@@ -945,7 +941,7 @@ object PipelineOpsQueries {
     // representation — replace() is left-to-right non-overlapping in
     // both engines, which IS BPE's apply rule
     "p126_bpe_train" -> ((s, dir) =>
-      graft.ops.CorpusOps.bpeTrain(docs(s, dir), steps = 8)),
+      graft.ops.CorpusOps.bpeTrain(docs(s, dir))),
 
     // BPE ENCODE census (the apply half of p126): same merge loop, then
     // the whole corpus encodes through one (source, word) count agg + a
@@ -1199,8 +1195,8 @@ object PipelineOpsQueries {
       val cs = graft.ops.IvfOps.train(e)
       graft.ops.IvfOps.assign(e, cs)
         .write.mode("overwrite").parquet(ivfSweepAssignPath(dir))
-      Seq(1, 2, 4).map(n => graft.ops.IvfOps.probes(e, cs, numQueries = 10,
-          nprobe = n).withColumn("nprobe", lit(n.toLong)))
+      Seq(1, 2, 4).map(n => graft.ops.IvfOps.probes(e, cs, nprobe = n)
+          .withColumn("nprobe", lit(n.toLong)))
         .reduce(_ unionByName _)
         .write.mode("overwrite").parquet(ivfSweepProbePath(dir))
       val assigned = s.read.parquet(ivfSweepAssignPath(dir))
@@ -1213,8 +1209,7 @@ object PipelineOpsQueries {
       Seq(1L, 2L, 4L).map { n =>
         graft.ops.IvfOps.topKFrom(e, assigned,
             probed.where(col("nprobe") === n)
-              .select(col("query_id"), col("cell")),
-            numQueries = 10, topK = 10)
+              .select(col("query_id"), col("cell")))
           .join(brute, Seq("query_id", "neighbor_id"))
           .agg(count(lit(1)).as("n_hits"))
           .select(lit(n).as("nprobe"), col("n_hits"))
@@ -1561,7 +1556,7 @@ object PipelineOpsQueries {
     // this measures signature accuracy): per exact near-dup pair, the
     // 16-lane md5-salted signature agreement vs exact Jaccard, integer pct
     "p49_minhash_estimate" -> ((s, dir) =>
-      DedupOps.minhashEstimates(docs(s, dir), minJaccardPct = 60)),
+      DedupOps.minhashEstimates(docs(s, dir))),
 
     // b-bit minhash (Li & König WWW'10, b=1): the 64×-compressed
     // signature (one bit per lane) graded per exact near-dup pair against
@@ -1569,8 +1564,7 @@ object PipelineOpsQueries {
     // actually ship at 10^12 docs, where k·64-bit signatures are the
     // dominant shuffle payload and k bits do the same banding job
     "p106_bbit_minhash" -> ((s, dir) =>
-      DedupOps.minhashEstimates(docs(s, dir), minJaccardPct = 60,
-        bbit = true)),
+      DedupOps.minhashEstimates(docs(s, dir), bbit = true)),
 
     // incremental-crawl snapshot diff: v2 is planted deterministically from
     // v1 (doc%10==7 deleted, doc%10==3 text-changed, doc%10==1 re-added
@@ -1619,7 +1613,7 @@ object PipelineOpsQueries {
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
       val q = graft.streaming.StreamingExtraction
-        .decontaminateStream(stream.toDS(), bench, w = 4)
+        .decontaminateStream(stream.toDS(), bench)
         .toDF("doc_id", "n_hit_grams")
         .writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -1682,7 +1676,7 @@ object PipelineOpsQueries {
     // index structure graph-based ANN serves from, fully SQL-expressible
     // (row_number over cosine per node), so the oracle is exhaustive
     "p139_knn_graph" -> ((s, dir) =>
-      graft.ops.GraphAnnOps.buildKnnGraph(emb(s, dir), m = 8)),
+      graft.ops.GraphAnnOps.buildKnnGraph(emb(s, dir))),
 
     // NSW beam search over the M-NN graph: entry at min vec_id, 5 hops,
     // beam ef=8 — the VISITED set dumps to parquet and the output is its
@@ -1692,13 +1686,12 @@ object PipelineOpsQueries {
     "p140_graph_beam_topk" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val e = emb(s, dir)
-      val g = graft.ops.GraphAnnOps.buildKnnGraph(e, m = 8)
+      val g = graft.ops.GraphAnnOps.buildKnnGraph(e)
         .localCheckpoint(true)
-      graft.ops.GraphAnnOps.beamVisited(e, g, numQueries = 10, ef = 8,
-          hops = 5)
+      graft.ops.GraphAnnOps.beamVisited(e, g)
         .write.mode("overwrite").parquet(beamVisitedPath(dir))
       graft.ops.GraphAnnOps.topKFromVisited(e,
-        s.read.parquet(beamVisitedPath(dir)), numQueries = 10, k = 10)
+        s.read.parquet(beamVisitedPath(dir)))
     }),
 
     // feature-histogram drift census between two snapshots (v2 =
@@ -1781,7 +1774,7 @@ object PipelineOpsQueries {
       // bits ≈ log2(N / wanted-bucket) — 64 buckets keeps seed
       // neighborhoods healthy from the 500-vector gate up to the sf1
       // campaign's 20k (and is a per-deployment knob beyond that)
-      val g = graft.ops.GraphAnnOps.buildKnnGraphDescent(e, m = 8, bits = 6)
+      val g = graft.ops.GraphAnnOps.buildKnnGraphDescent(e)
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)
@@ -1815,8 +1808,7 @@ object PipelineOpsQueries {
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long)]
       val q = graft.streaming.StreamingExtraction
-        .sessionMetrics(stream.toDS().toDF("ts", "user_id"),
-          gap = "30 minutes")
+        .sessionMetrics(stream.toDS().toDF("ts", "user_id"))
         .writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.write.mode("append").parquet(sink); ()
@@ -1875,7 +1867,7 @@ object PipelineOpsQueries {
         .MemoryStream[(Long, java.sql.Timestamp, Long)]
       val q = graft.streaming.StreamingExtraction.intervalJoinStream(
           pStream.toDS().toDF("p_user", "p_ts", "p_id"),
-          cStream.toDS().toDF("c_user", "c_ts", "c_id"), joinType = "inner")
+          cStream.toDS().toDF("c_user", "c_ts", "c_id"))
         .writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.write.mode("append").parquet(sink); ()
@@ -1953,12 +1945,12 @@ object PipelineOpsQueries {
         .write.mode("overwrite").parquet(ivfIncBasePath(dir))
       graft.ops.IvfOps.assign(delta, centroids)
         .write.mode("overwrite").parquet(ivfIncDeltaPath(dir))
-      graft.ops.IvfOps.probes(e, centroids, numQueries = 10, nprobe = 2)
+      graft.ops.IvfOps.probes(e, centroids, nprobe = 2)
         .write.mode("overwrite").parquet(ivfIncProbePath(dir))
       graft.ops.IvfOps.topKFrom(e,
         s.read.parquet(ivfIncBasePath(dir))
           .unionByName(s.read.parquet(ivfIncDeltaPath(dir))),
-        s.read.parquet(ivfIncProbePath(dir)), numQueries = 10, topK = 10)
+        s.read.parquet(ivfIncProbePath(dir)))
     }),
 
     // the maintenance DECISION table for p149's incremental index: per
@@ -1995,9 +1987,9 @@ object PipelineOpsQueries {
       val base = e.where(col("vec_id") % 7 =!= 3)
       val delta = e.where(col("vec_id") % 7 === 3)
       val g0 = graft.ops.GraphAnnOps
-        .buildKnnGraphDescent(base, m = 8, bits = 6)
+        .buildKnnGraphDescent(base)
         .localCheckpoint(true)
-      val g1 = graft.ops.GraphAnnOps.insertIntoGraph(e, g0, delta, m = 8)
+      val g1 = graft.ops.GraphAnnOps.insertIntoGraph(e, g0, delta)
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)
@@ -2012,7 +2004,7 @@ object PipelineOpsQueries {
     // scale with ef·M·hops, not N)
     "p141_graph_recall_sweep" -> ((s, dir) => {
       val e = emb(s, dir)
-      val g = graft.ops.GraphAnnOps.buildKnnGraph(e, m = 8)
+      val g = graft.ops.GraphAnnOps.buildKnnGraph(e)
         .localCheckpoint(true)
       // r6: one fused multi-ef sweep + one fused re-rank — row-identical
       // to the r5 per-ef union (spec-pinned per-slice equality)

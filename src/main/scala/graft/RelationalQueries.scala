@@ -121,7 +121,7 @@ object RelationalQueries {
       val landed = t(s, dir, "documents")
         .where(!(col("doc_id") % 1000 >= 430 && col("doc_id") % 1000 < 440) &&
                col("doc_id") % 97 =!= 13)
-      graft.ops.ProfileOps.missingIdRanges(landed, "doc_id", blockBits = 8)
+      graft.ops.ProfileOps.missingIdRanges(landed, "doc_id")
     }),
 
     // leading-digit (Benford) census over order totals in cents — the
@@ -202,7 +202,7 @@ object RelationalQueries {
     "q116_dense_ids" -> ((s, dir) =>
       graft.ops.ProfileOps.denseRanks(
         t(s, dir, "documents").where(col("doc_id") % 7 =!= 3),
-        "doc_id", blockBits = 5)),
+        "doc_id")),
 
     // Merkle-style replica anti-entropy diff: right replica planted with
     // drops, changes and extra rows; per-block xor fingerprints prune the
@@ -1459,7 +1459,7 @@ object RelationalQueries {
         ("signup", 3), ("error", 4)).toDF("event_type", "weight")
       graft.ops.SkewJoin.adaptiveSaltedJoin(
           t(s, dir, "events"), dim, "event_type",
-          saltSource = col("event_id"), minSharePct = 10.0)
+          saltSource = col("event_id"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum((col("value").cast("decimal(18,2)") * 100).cast("long")
@@ -1489,7 +1489,7 @@ object RelationalQueries {
       val snap0 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       graft.io.TableIO.writePartitionedClustered(snap0, s"$base/snap",
-        "lang", "doc_id", numRangeBuckets = 8)
+        "lang", "doc_id")
       val snapshot = s.read.parquet(s"$base/snap")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val updates = snap0
@@ -1507,10 +1507,9 @@ object RelationalQueries {
           lit(77L).as("n_chars"),
           lit(false).as("is_delete"))
       val delta = updates.unionByName(deletes).unionByName(inserts)
-      val merged = graft.ops.MergeOps.upsert(snapshot, delta, "doc_id",
-        deleteCol = Some("is_delete"))
+      val merged = graft.ops.MergeOps.upsert(snapshot, delta, "doc_id")
       graft.io.TableIO.writePartitionedClustered(merged, s"$base/merged",
-        "lang", "doc_id", numRangeBuckets = 8)
+        "lang", "doc_id")
       Seq("en", "fr").toDF("lang")
         .write.mode("overwrite").parquet(s"$base/dim")
       s.read.parquet(s"$base/merged")
@@ -1534,8 +1533,7 @@ object RelationalQueries {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartition(64)
         .write.mode("overwrite").parquet(s"$base/small")
-      graft.io.TableIO.compact(s, s"$base/small", s"$base/out",
-        targetFileBytes = 4L * 1024 * 1024)
+      graft.io.TableIO.compact(s, s"$base/small", s"$base/out")
       s.read.parquet(s"$base/out")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1745,12 +1743,11 @@ object RelationalQueries {
       val base = s"/tmp/graft_zorder_${SparkEntry.docCountFor(dir)}"
       val d = t(s, dir, "documents").select(col("doc_id"),
         (col("n_chars") % 64).as("cx"), (col("doc_id") % 64).as("cy"))
-      graft.io.TableIO.writeZOrdered(d, base, "cx", "cy",
-        files = 8, bits = 6)
+      graft.io.TableIO.writeZOrdered(d, base, "cx", "cy")
       s.read.parquet(base)
         .where(col("cx").between(16, 31) && col("cy").between(32, 47))
         .select(col("doc_id"), col("cx"), col("cy"),
-          graft.io.TableIO.zValue(col("cx"), col("cy"), 6).as("zvalue"))
+          graft.io.TableIO.zValue(col("cx"), col("cy")).as("zvalue"))
     }),
 
     // GROUPED top-k (top 3 longest docs per source) via the bounded-heap

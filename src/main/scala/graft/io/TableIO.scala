@@ -17,38 +17,44 @@ object TableIO {
   // the cluster key, so pushed predicates skip whole row groups at read
   // time. TableIOSpec measures both effects on FileSourceScanExec metrics.
 
+  /** Range buckets of [[writePartitionedClustered]]; files and Morton bits
+    * of [[writeZOrdered]]; the target file size of [[compact]]. */
+  private val RangeBuckets = 8
+  private val ZFiles = 8
+  private val ZBits = 6
+  private val CompactTargetBytes = 4L * 1024 * 1024
+
   /** Write with hive-style `partitionBy(partitionCol)` dirs, rows
     * range-clustered on `clusterCol` within each partition (one sorted
     * run per output file ⇒ tight per-row-group min/max stats).
     *
-    * `numRangeBuckets` is the TOTAL `repartitionByRange` bucket count across
+    * `RangeBuckets` is the TOTAL `repartitionByRange` bucket count across
     * ALL partition values, not per-dir — with V distinct partition values
-    * each hive dir receives roughly `numRangeBuckets / V` files. Size it to
-    * the job's write parallelism (at 100 TB: ≈ total input bytes / target
-    * file size, e.g. 512 MB files). */
+    * each hive dir receives roughly `RangeBuckets / V` files. At 100 TB it
+    * would follow the job's write parallelism (≈ total input bytes /
+    * target file size, e.g. 512 MB files). */
   def writePartitionedClustered(df: DataFrame, path: String,
-                                partitionCol: String, clusterCol: String,
-                                numRangeBuckets: Int = 32): Unit = {
+                                partitionCol: String, clusterCol: String): Unit = {
     import org.apache.spark.sql.functions.col
-    df.repartitionByRange(numRangeBuckets, col(partitionCol), col(clusterCol))
+    df.repartitionByRange(RangeBuckets, col(partitionCol), col(clusterCol))
       .sortWithinPartitions(col(partitionCol), col(clusterCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(path)
   }
 
-  /** Morton/Z-order value: interleave the low `bits` bits of two
+  /** Morton/Z-order value: interleave the low `ZBits` bits of two
     * non-negative integer columns (x even positions, y odd). Pure integer
     * Column math — constant-folds to a chain of shift/and/or inside
     * whole-stage codegen, no UDF and no custom Expression needed. Inputs
-    * are masked to `bits` bits so out-of-range values wrap rather than
+    * are masked to `ZBits` bits so out-of-range values wrap rather than
     * corrupt the interleave. */
-  def zValue(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
-             bits: Int = 16): org.apache.spark.sql.Column = {
+  def zValue(x: org.apache.spark.sql.Column,
+             y: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{lit, shiftleft, shiftright}
     val xi = x.cast("long")
     val yi = y.cast("long")
-    (0 until bits).map { i =>
+    (0 until ZBits).map { i =>
       shiftleft(shiftright(xi, i).bitwiseAND(lit(1L)), 2 * i)
         .bitwiseOR(shiftleft(shiftright(yi, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }.reduce(_ bitwiseOR _)
@@ -61,13 +67,12 @@ object TableIO {
     * narrow per-row-group stats, so a pushed box predicate on either — or
     * both — dimensions skips most row groups at read time. The Iceberg
     * analogue is `rewrite_data_files(strategy => 'sort', sort_order =>
-    * 'zorder(cx, cy)')`; at 100 TB size `files` to total bytes / target
-    * file size as in [[writePartitionedClustered]]. */
-  def writeZOrdered(df: DataFrame, path: String, cx: String, cy: String,
-                    files: Int = 16, bits: Int = 16): Unit = {
+    * 'zorder(cx, cy)')`; at 100 TB `ZFiles` would follow total bytes /
+    * target file size as in [[writePartitionedClustered]]. */
+  def writeZOrdered(df: DataFrame, path: String, cx: String, cy: String): Unit = {
     import org.apache.spark.sql.functions.col
-    df.withColumn("__z", zValue(col(cx), col(cy), bits))
-      .repartitionByRange(files, col("__z"))
+    df.withColumn("__z", zValue(col(cx), col(cy)))
+      .repartitionByRange(ZFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
@@ -78,7 +83,7 @@ object TableIO {
     * micro-batches and per-task writers leave thousands of KB-sized files,
     * and at 10^12 docs the scan's task-scheduling and footer-read overhead
     * becomes O(files), not O(bytes). Rewrites `inPath` into
-    * ceil(totalBytes / targetFileBytes) files via `coalesce` — a NARROW
+    * ceil(totalBytes / `CompactTargetBytes`) files via `coalesce` — a NARROW
     * rewrite (no exchange: compaction must not pay a shuffle; it only
     * merges splits). Returns the output file count. Row-group clustering
     * is `writePartitionedClustered`'s job — compose the two when both
@@ -89,15 +94,14 @@ object TableIO {
     * For a hive-partitioned layout, compact each `part=...` dir
     * separately — per-partition compaction is also what keeps the rewrite
     * incremental at 10^12 rows (only dirs with new small files pay). */
-  def compact(spark: SparkSession, inPath: String, outPath: String,
-              targetFileBytes: Long = 512L * 1024 * 1024): Int = {
+  def compact(spark: SparkSession, inPath: String, outPath: String): Int = {
     // Hadoop FS, not java.io: inPath is an HDFS/S3 prefix on a real cluster.
     val in = new org.apache.hadoop.fs.Path(inPath)
     val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.listStatus(in)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
-    val n = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes)
+    val n = math.max(1L, (totalBytes + CompactTargetBytes - 1) / CompactTargetBytes)
       .toInt
     spark.read.parquet(inPath).coalesce(n)
       .write.mode(SaveMode.Overwrite).parquet(outPath)

@@ -24,6 +24,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   */
 object BloomJoin {
 
+  /** The sketch's target false-positive rate. */
+  private val Fpp = 0.01
+
   /** Inner join with the probe (`large`) side pre-filtered by a Bloom
     * filter of `small`'s keys. Key column must be integral or string.
     * NOT valid for outer joins (dropped probe rows would lose their
@@ -31,20 +34,19 @@ object BloomJoin {
     *
     * The probe is a codegen'd Catalyst expression (BloomMightContain), not a
     * `udf()` — per-row lambda boxing on the probe side would tax exactly the
-    * rows this operator exists to make cheap. `expectedItems` ≤ 0 (default)
-    * sizes the sketch from `small.count()` — one agg-only job, trivially
-    * cheap next to the build scan, and it keeps the fpp contract honest: a
-    * fixed guess that the build side outgrows silently degrades the realized
-    * fpp and evaporates the shuffle reduction. */
-  def bloomReducedJoin(large: DataFrame, small: DataFrame, key: String,
-                       expectedItems: Long = -1L,
-                       fpp: Double = 0.01): DataFrame = {
-    val n = if (expectedItems > 0) expectedItems else math.max(small.count(), 1L)
-    val bf = small.stat.bloomFilter(key, n, fpp)
+    * rows this operator exists to make cheap. The sketch is sized from
+    * `small.count()` — one agg-only job, trivially cheap next to the build
+    * scan, and it keeps the `Fpp` contract honest: a fixed guess that the
+    * build side outgrows silently degrades the realized fpp and evaporates
+    * the shuffle reduction. */
+  def bloomReducedJoin(large: DataFrame, small: DataFrame, key: String): DataFrame = {
     large.schema(key).dataType match {
       case LongType | IntegerType | StringType => ()
       case t => throw new IllegalArgumentException(s"unsupported key type $t")
     }
+    val n = small.count()
+    if (n == 0) return large.join(small, key) // no build keys: nothing to probe
+    val bf = small.stat.bloomFilter(key, n, Fpp)
     import org.apache.spark.sql.GraftColumnBridge._
     val keep = column(graft.functions.BloomMightContain(expression(col(key)), bf))
     large.filter(keep).join(small, key)

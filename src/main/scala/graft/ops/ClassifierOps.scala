@@ -27,8 +27,12 @@ object ClassifierOps {
   /** The positive class of the perceptron's label. */
   private val PosLang = "en"
 
-  /** Train `epochs` batch-perceptron epochs; label +1 iff `lang` equals
-    * `PosLang`, features = char-3-gram counts hashed into `dims` buckets.
+  /** Epochs and hashed feature buckets of the perceptron. */
+  private val Epochs = 8
+  private val Dims = 256
+
+  /** Train `Epochs` batch-perceptron epochs; label +1 iff `lang` equals
+    * `PosLang`, features = char-3-gram counts hashed into `Dims` buckets.
     * Output one row per epoch: (epoch, n_mis, delta_abs, w_chk) —
     * misclassified-count (margin ≤ 0), Σ|Δw|, and the Σ wᵢ·(i+1)
     * checksum binding the whole post-update weight vector.
@@ -39,12 +43,8 @@ object ClassifierOps {
     * at 192/500 errors, better than BOTH constant classifiers (218/282)
     * and matching the linear ceiling (a per-sample reference perceptron
     * given 50 full passes plateaus at ~199). On vocab-separated classes
-    * the same loop drives the error to 0 (spec). `dims` ≤ 0 throws
-    * IllegalArgumentException. */
-  def perceptronTrain(docs: DataFrame, epochs: Int = 5,
-                      dims: Int = 64): DataFrame = {
-    require(dims >= 1,
-      s"ClassifierOps.perceptronTrain: dims must be >= 1 (got $dims)")
+    * the same loop drives the error to 0 (spec). */
+  def perceptronTrain(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val feats = docs.select(col("doc_id").cast("long"),
@@ -53,11 +53,11 @@ object ClassifierOps {
         // char-3-gram features, not word tokens: language identity lives
         // in character n-grams (the p04 langid signal) — word-level
         // hashed BoW plateaued at ~61% on this corpus, 3-grams separate
-        val x = new Array[Long](dims)
+        val x = new Array[Long](Dims)
         val hs = TextOps.kgramHashes(text, 3)
         var i = 0
         while (i < hs.length) {
-          x((hs(i) % dims).toInt) += 1L
+          x((hs(i) % Dims).toInt) += 1L
           i += 1
         }
         (id, if (lang == PosLang) 1L else -1L, x.toSeq)
@@ -65,11 +65,11 @@ object ClassifierOps {
       .toDF("doc_id", "y", "x").persist()
     feats.count()
 
-    var w = new Array[Long](dims)
+    var w = new Array[Long](Dims)
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Long, Long)]
     var epoch = 1
-    while (epoch <= epochs) {
+    while (epoch <= Epochs) {
       val scored = feats
         .withColumn("wv", typedLit(w.toSeq))
         .withColumn("margin", col("y") * expr(
@@ -79,7 +79,7 @@ object ClassifierOps {
       // D-row update: posexplode the misclassified features, partial
       // aggregation makes each partition contribute ≤ D rows. n_mis
       // rides the SAME aggregation (r6): x is a dense array of length
-      // D = dims ≥ 1 (the guard above), so every misclassified doc
+      // D = Dims ≥ 1, so every misclassified doc
       // contributes exactly one row to every index group — any group's
       // count IS the misclassified-doc count, and the old separate
       // mis.count() re-ran the whole scoring scan a second time per epoch

@@ -32,14 +32,17 @@ import org.apache.spark.sql.functions._
   */
 object CoresetOps {
 
-  /** Select `k` facilities from `emb` (vec_id, embedding: array<float>)
-    * with the coverage set `emb` filtered by `coverageMod` (vec_id %
-    * coverageMod == 0). Output one row per selection round:
+  /** Facilities selected, and the coverage sample's id modulus. */
+  private val Facilities = 8
+  private val CoverageMod = 2
+
+  /** Select `Facilities` facilities from `emb` (vec_id, embedding:
+    * array<float>) with the coverage set `emb` filtered by `CoverageMod`
+    * (vec_id % CoverageMod == 0). Output one row per selection round:
     * (step, vec_id, gain, objective) — `gain` the marginal coverage the
     * pick added, `objective` the total Σ_j best_j after it (the census
     * binding the whole best state each round). */
-  def facilityLocation(emb: DataFrame, k: Int = 8,
-                       coverageMod: Int = 2): DataFrame = {
+  def facilityLocation(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     // spread the candidate side across the session's parallelism: a small
@@ -62,7 +65,7 @@ object CoresetOps {
     // codegen recompile every round, the other half of the ~90 s), and
     // the gain scan is ONE typed mapPartitions job emitting a single
     // (gain, id) argmax per partition instead of a 2M-row groupBy.
-    val coverArr = cands.filter(_._1 % coverageMod == 0)
+    val coverArr = cands.filter(_._1 % CoverageMod == 0)
       .collect().sortBy(_._1)
     val coverVecs = coverArr.map(_._2)
     val best = new Array[Long](coverArr.length)
@@ -70,7 +73,7 @@ object CoresetOps {
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Long, Long)]
     var step = 1
-    while (step <= k) {
+    while (step <= Facilities) {
       val bc = spark.sparkContext.broadcast(
         (coverVecs, best.clone(), picked.toSet))
       // partition-local argmax by (gain DESC, id ASC), then the same rule
@@ -103,7 +106,7 @@ object CoresetOps {
         // every un-picked candidate is exhausted (k > distinct candidates):
         // the greedy is complete — stop instead of crashing on empty.maxBy
         bc.destroy()
-        step = k + 1
+        step = Facilities + 1
       } else {
       val (gain, sel) = cand.maxBy { case (g, id) => (g, -id) }
       picked += sel

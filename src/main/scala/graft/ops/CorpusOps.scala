@@ -22,6 +22,24 @@ object CorpusOps {
   private val CmsDepth = 4
   private val CmsWidth = 256
 
+  /** The fixed sizes of the other corpus ops. */
+  private val CmsTopK = 20            // tokens cmsValidate checks
+  private val DriftTopK = 100         // tokens tokenDrift reports
+  private val OovVocab = 20           // oovStats' induced vocabulary
+  private val DomainCap = 10          // docs per source domainCap keeps
+  private val OverlapW = 4            // sourceOverlap's w-gram width...
+  private val OverlapMaxDf = 64       // ...and its df cap, in sources
+  private val BpePairTopK = 50        // pairs bpePairCounts reports
+  private val QuantileSampleK = 256   // quantileValidate's sample size
+  private val MixBudgetPct = 60       // mixturePlan's budget, % of supply
+  private val WaterfillNum = 2L       // budgetWaterfill's budget is
+  private val WaterfillDen = 5L       // total · Num / Den tokens
+  private val CoverageGrid = Seq(3, 10, 30, 100, 1000, 10000) // vocabCoverage ranks
+
+  /** Word w-gram width of `decontaminate` and of the streaming
+    * `StreamingExtraction.decontaminateStream`. */
+  private[graft] val DecontamW = 4
+
   /** The value of a one-row `sum` aggregate; 0 when it summed no rows
     * (SQL's sum of nothing is null). */
   private[ops] def sumOrZero(agg: DataFrame): Long = {
@@ -113,7 +131,7 @@ object CorpusOps {
         max(col("n_chars")).as("max_chars"))
 
   /** Count-Min Sketch of token frequencies (Cormode & Muthukrishnan '05):
-    * `depth` hash rows × `width` buckets; every token occurrence increments
+    * `CmsDepth` hash rows × `CmsWidth` buckets; every token occurrence increments
     * one bucket per row, and a point estimate is the min over rows. The
     * sketch is THE mergeable fixed-size summary for heavy-hitter detection
     * on unbounded vocabularies: per-partition sub-sketches merge by cell
@@ -122,8 +140,7 @@ object CorpusOps {
     * size. Row hashes are salted md5-low63 (= DuckDB `md5_number_lower`
     * masked), so the cell table is exactly replicable in SQL. Output:
     * nonzero cells (row, bucket, count). */
-  def countMinSketch(df: DataFrame, depth: Int = CmsDepth,
-                     width: Int = CmsWidth): DataFrame = {
+  def countMinSketch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("text")).as[String]
@@ -132,8 +149,8 @@ object CorpusOps {
         val cells = new java.util.HashMap[Long, Long]() // (row<<32|bucket) -> n
         wsPat.split(text.trim).foreach { t =>
           var r = 0
-          while (r < depth) {
-            val b = (TextOps.md5Low63(t + "#" + r) % width).toInt
+          while (r < CmsDepth) {
+            val b = (TextOps.md5Low63(t + "#" + r) % CmsWidth).toInt
             cells.merge((r.toLong << 32) | b, 1L, (a, x) => a + x)
             r += 1
           }
@@ -231,17 +248,18 @@ object CorpusOps {
       .toDF("word_idx", "bits")
   }
 
-  /** TF-IDF text similarity search: top-k most similar documents per query
-    * doc (the text counterpart of the embedding ANN family). Integer-exact
-    * across engines: idf = (N·100) div df (integer division — no log,
-    * whose last-ulp could diverge between JVMs/engines), weight = tf·idf,
+  /** TF-IDF text similarity search: the top `SimilarityOps.RecallK` most
+    * similar documents per query doc (doc_id < `RecallQueries`; the text
+    * counterpart of the embedding ANN family). Integer-exact across
+    * engines: idf = (N·100) div df (integer division — no log, whose
+    * last-ulp could diverge between JVMs/engines), weight = tf·idf,
     * score = dot product accumulated ONLY over shared tokens via the token
     * inverted index — never a dense doc×doc product. Top-k via the
     * bounded-heap Aggregator (partial top-k map-side). At web scale the
     * inverted index is additionally df-capped (stop-tokens pair everything
     * with everything and carry no signal); uncapped here because the DuckDB
     * oracle replicates the exact uncapped ranking. */
-  def tfidfTopK(df: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
+  def tfidfTopK(df: DataFrame): DataFrame = {
     val n = df.count() // one cheap metadata-ish pass; a known table stat at scale
     val tf = tokenTf(df)
     val idf = tf.groupBy(col("token"))
@@ -250,14 +268,14 @@ object CorpusOps {
     // vocabulary is ≪ corpus: broadcast the idf table into the weight join
     val w = tf.join(broadcast(idf), "token")
       .select(col("doc_id"), col("token"), (col("tf") * col("idf")).as("wt"))
-    val qw = w.where(col("doc_id") < numQueries)
+    val qw = w.where(col("doc_id") < SimilarityOps.RecallQueries)
       .select(col("doc_id").as("query_id"), col("token").as("q_token"),
         col("wt").as("q_wt"))
     val scored = w.join(broadcast(qw),
         col("token") === col("q_token") && col("doc_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
       .agg(sum(col("wt") * col("q_wt")).cast("double").as("score")) // dots ≪ 2^53: exact
-    SimilarityOps.rankTopK(scored, k)
+    SimilarityOps.rankTopK(scored, SimilarityOps.RecallK)
   }
 
   /** tokenTf plus the document's total token count on every row — len is
@@ -295,7 +313,7 @@ object CorpusOps {
     * top-k. N and L are table stats (two cheap aggregates here, catalog
     * stats at 10^12 rows — where the production variant also pre-divides
     * L out of the scaling so 22000·L·tf stays in range). */
-  def bm25TopK(df: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
+  def bm25TopK(df: DataFrame): DataFrame = {
     val n = df.count()
     val tf = tokenTfWithLen(df)
     // an empty corpus sums to L = 0, and the division below then raised
@@ -312,13 +330,13 @@ object CorpusOps {
         col("token"),
         expr(s"idf * ((22000L * ${bigL}L * tf) div " +
           s"(10L * ${bigL}L * tf + 3L * ${bigL}L + 9L * ${n}L * len))").as("wt"))
-    val q = tf.where(col("doc_id") < numQueries)
+    val q = tf.where(col("doc_id") < SimilarityOps.RecallQueries)
       .select(col("doc_id").as("query_id"), col("token").as("q_token"))
     val scored = w.join(broadcast(q),
         col("token") === col("q_token") && col("doc_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
       .agg(sum(col("wt")).cast("double").as("score")) // wt sums ≪ 2^53: exact
-    SimilarityOps.rankTopK(scored, k)
+    SimilarityOps.rankTopK(scored, SimilarityOps.RecallK)
   }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09) — the standard
@@ -348,15 +366,14 @@ object CorpusOps {
     * distribution-shift alarm a continuously-crawled corpus needs: per
     * token, occurrence rates in parts-per-million on each side
     * (integer floor division, engine-exact) and the absolute rate
-    * delta, top-k by drift. A token surging between crawls (spam
+    * delta, top `DriftTopK` by drift. A token surging between crawls (spam
     * template, new boilerplate, seasonal burst) surfaces at the top;
     * p48's row-level snapshot diff says WHICH docs changed, this says
     * what the change did to the token distribution. Scale shape: each
     * side collapses to a vocab-sized count table before the one
     * full-outer token join; totals are two scalar aggregates (catalog
     * stats at 10^12 rows); raw text never shuffles. */
-  def tokenDrift(oldSnap: DataFrame, newSnap: DataFrame,
-                 k: Int = 100): DataFrame = {
+  def tokenDrift(oldSnap: DataFrame, newSnap: DataFrame): DataFrame = {
     val scale = 1000000L // rates in parts per million
     def counts(df: DataFrame) =
       tokenTf(df).groupBy(col("token")).agg(sum(col("tf")).as("c"))
@@ -375,7 +392,7 @@ object CorpusOps {
       .withColumn("drift_ppm",
         abs(col("rate_new_ppm") - col("rate_old_ppm")))
       .orderBy(col("drift_ppm").desc, col("token"))
-      .limit(k)
+      .limit(DriftTopK)
   }
 
   /** Feature-HISTOGRAM drift census between two corpus snapshots — the
@@ -440,7 +457,7 @@ object CorpusOps {
   }
 
   /** Token-coverage / OOV statistics against an INDUCED top-V vocabulary —
-    * the tokenizer-evaluation primitive: induce vocab = the `vocabSize`
+    * the tokenizer-evaluation primitive: induce vocab = the `OovVocab`
     * highest-term-frequency tokens (ties broken by token text, so the
     * boundary is deterministic cross-engine), then per doc count the
     * occurrences (n_oov_tokens) and distinct types (n_oov_types) falling
@@ -449,12 +466,12 @@ object CorpusOps {
     * is V rows, broadcast into a left join marker; one keyed aggregation
     * per doc. Every doc appears (zero counts included) since every doc has
     * at least one token row. */
-  def oovStats(df: DataFrame, vocabSize: Int = 50000): DataFrame = {
+  def oovStats(df: DataFrame): DataFrame = {
     val tf = tokenTf(df)
     val vocab = tf.groupBy(col("token"))
       .agg(sum(col("tf")).as("term_freq"))
       .orderBy(col("term_freq").desc, col("token"))
-      .limit(vocabSize)
+      .limit(OovVocab)
       .select(col("token"), lit(1).as("__v"))
     tf.join(broadcast(vocab), Seq("token"), "left")
       .groupBy(col("doc_id"))
@@ -466,7 +483,7 @@ object CorpusOps {
   /** Benchmark DECONTAMINATION — the train/eval overlap check every LLM
     * data pipeline runs before training: flag corpus documents that share
     * any word w-gram with an evaluation/benchmark set (the GPT-3 appendix-C
-    * rule; 13-grams there, parameterized here). Returns
+    * rule; 13-grams there, `DecontamW`-grams here). Returns
     * (doc_id, n_hit_grams) for each contaminated corpus doc — n_hit_grams =
     * how many of its distinct w-grams appear anywhere in the benchmark.
     *
@@ -475,14 +492,13 @@ object CorpusOps {
     * join. Eval sets are MBs against a 100-TB corpus, so the benchmark
     * gram set broadcasts and the whole op is ONE narrow pass over the
     * corpus plus a map-side hash probe. */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    w: Int = 13): DataFrame = {
+  def decontaminate(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     def grams(df: DataFrame): DataFrame =
       df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
         .flatMap { case (id, text) =>
-          DedupOps.gramHashes(text, w).iterator.map(h => (id, h))
+          DedupOps.gramHashes(text, DecontamW).iterator.map(h => (id, h))
         }
         .toDF("doc_id", "h")
     val benchGrams = grams(benchmark).select(col("h")).distinct()
@@ -493,12 +509,12 @@ object CorpusOps {
 
   /** Exact-QUOTA stratified sampling — the mixing primitive when the recipe
     * says "exactly n docs per language", not a rate: rank docs within each
-    * stratum by md5-low63(doc_id‖salt) (a deterministic, engine-independent
+    * stratum by md5-low63(doc_id‖"qta") (a deterministic, engine-independent
     * shuffle order; ties impossible since doc_id is unique per stratum) and
     * keep rank ≤ quota. One exchange keyed by the stratum, then the rank
     * window — the same formulation as the SQL oracle. */
   def quotaSample(df: DataFrame, quotaByLang: Map[String, Int],
-                  defaultQuota: Int, salt: String = "qta"): DataFrame = {
+                  defaultQuota: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     import spark.implicits._
@@ -506,7 +522,7 @@ object CorpusOps {
     val keyed = df.select(col("doc_id").cast("long"), col("lang"))
       .as[(Long, String)]
       .map { case (id, lang) =>
-        (id, lang, TextOps.md5Low63(id.toString + "|" + salt),
+        (id, lang, TextOps.md5Low63(id.toString + "|qta"),
           rates.getOrElse(lang, defaultQuota)) }
       .toDF("doc_id", "lang", "rk_hash", "quota")
     keyed
@@ -517,26 +533,25 @@ object CorpusOps {
   }
 
   /** Deterministic stratified sampling — the corpus-mixing primitive. Keep a
-    * row iff md5-low63(key‖salt) mod 100 < rate(stratum); rates per language
+    * row iff md5-low63(key‖"smp") mod 100 < rate(stratum); rates per language
     * here. Unlike `sampleBy` (seeded RNG, partition-order-sensitive and not
     * reproducible outside Spark), the hash rule is a pure row function:
     * re-runs, retries, and other engines (the DuckDB oracle) select the
-    * exact same rows, and changing the salt redraws the sample. Narrow:
-    * filter only, no shuffle. */
+    * exact same rows. Narrow: filter only, no shuffle. */
   def hashSample(df: DataFrame, ratePctByLang: Map[String, Int],
-                 defaultPct: Int, salt: String = "smp"): DataFrame = {
+                 defaultPct: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val rates = ratePctByLang // serializable copy for the closure
     df.select(col("doc_id").cast("long"), col("lang")).as[(Long, String)]
       .filter { case (id, lang) =>
         val r = rates.getOrElse(lang, defaultPct)
-        TextOps.md5Low63(id.toString + "|" + salt) % 100 < r
+        TextOps.md5Low63(id.toString + "|smp") % 100 < r
       }
       .toDF("doc_id", "lang")
   }
 
-  /** Per-SOURCE document caps — the Common-Crawl-style "keep at most `cap`
+  /** Per-SOURCE document caps — the Common-Crawl-style "keep at most `DomainCap`
     * docs per domain, best first" mixing rule (quality rank = longer doc
     * wins, doc_id breaks ties). Map-side partial top-k: every input
     * partition keeps a `TopK` buffer of the cap best (n_chars, doc_id)
@@ -545,9 +560,9 @@ object CorpusOps {
     * per-source sort, state O(sources × cap) per task. Entries are
     * (0.0, −n_chars, doc_id), so TopK's order (a asc, then b asc) is
     * exactly n_chars desc, doc_id asc. Output (doc_id, source, n_chars,
-    * rk) with rk = 1-based quality rank inside the source; cap ≤ 0 keeps
-    * nothing. The SQL oracle is the row_number() window formulation. */
-  def domainCap(df: DataFrame, cap: Int = 10): DataFrame = {
+    * rk) with rk = 1-based quality rank inside the source. The SQL oracle
+    * is the row_number() window formulation. */
+  def domainCap(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val partial = df
@@ -557,7 +572,7 @@ object CorpusOps {
       .mapPartitions { it =>
         val bufs = scala.collection.mutable.HashMap[String, TopK.Buf]()
         it.foreach { case (id, src, n) =>
-          bufs(src) = TopK.insert(cap, bufs.getOrElse(src, TopK.emptyBuf),
+          bufs(src) = TopK.insert(DomainCap, bufs.getOrElse(src, TopK.emptyBuf),
             0.0, -n, id)
         }
         bufs.iterator.flatMap { case (src, (_, negN, ids)) =>
@@ -568,7 +583,7 @@ object CorpusOps {
       .flatMapGroups { (src, it) =>
         var buf = TopK.emptyBuf
         it.foreach { case (_, n, id) =>
-          buf = TopK.insert(cap, buf, 0.0, -n, id)
+          buf = TopK.insert(DomainCap, buf, 0.0, -n, id)
         }
         buf._2.indices.map(i => (buf._3(i), src, -buf._2(i), (i + 1).toLong))
       }
@@ -700,7 +715,7 @@ object CorpusOps {
 
   /** Count-Min sketch VALIDATION — the heavy-hitter companion to
     * `hllValidate`: the point estimates (min over the sketch's depth rows)
-    * for the top-`topK` tokens are checked against their exact occurrence
+    * for the top-`CmsTopK` tokens are checked against their exact occurrence
     * counts. CMS guarantees est ≥ exact with bounded overshoot — both
     * quantities here are plain integers, so the oracle replicates the
     * check bit-for-bit. The sketch (depth×width cells) and the top-K list
@@ -708,7 +723,7 @@ object CorpusOps {
     * contract; the corpus-side work is the same one-pass pre-aggregated
     * cell build as `countMinSketch` plus one token-keyed agg. Output per
     * top token: (token, exact_count, est_count, overshoot ≥ 0). */
-  def cmsValidate(df: DataFrame, topK: Int = 20): DataFrame = {
+  def cmsValidate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val cells = countMinSketch(df)
@@ -717,7 +732,7 @@ object CorpusOps {
     val top = tokenTf(df).groupBy(col("token"))
       .agg(sum(col("tf")).cast("long").as("exact_count"))
       .orderBy(col("exact_count").desc, col("token"))
-      .limit(topK)
+      .limit(CmsTopK)
       .as[(String, Long)].collect()
     val rows = top.map { case (t, exact) =>
       var est = Long.MaxValue
@@ -763,8 +778,9 @@ object CorpusOps {
 
   /** Inter-source w-gram overlap matrix — the cross-source duplication /
     * contamination census run before mixing corpora: distinct (source,
-    * gram-hash) postings, a df cap dropping stop-grams present in more
-    * than `maxDf` sources (bounds the self-join fan-out at maxDf² per
+    * gram-hash) postings (`OverlapW`-grams), a df cap dropping stop-grams
+    * present in more than `OverlapMaxDf` sources (bounds the self-join
+    * fan-out at OverlapMaxDf² per
     * gram — p25's rule applied at source granularity; at web scale with
     * millions of domains this cap is what keeps the pair count finite),
     * then a hash-keyed self-join + pair rollup. Gram hashes are the same
@@ -777,19 +793,18 @@ object CorpusOps {
     * localCheckpoint of the postings (the table a production pipeline
     * would persist to the lake anyway) replaces the extra corpus scans.
     * Output is identical either way (spec-pinned). */
-  def sourceOverlap(df: DataFrame, w: Int = 4, maxDf: Int = 64,
-                    materialize: Boolean = false): DataFrame = {
+  def sourceOverlap(df: DataFrame, materialize: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val gramsRaw = df.select(col("source"), col("text")).as[(String, String)]
       .flatMap { case (src, text) =>
-        graft.ops.DedupOps.gramHashes(text, w).iterator.map(h => (src, h))
+        graft.ops.DedupOps.gramHashes(text, OverlapW).iterator.map(h => (src, h))
       }
       .toDF("source", "h").distinct()
     val grams = if (materialize) gramsRaw.localCheckpoint(false) else gramsRaw
     val kept = grams.join(
       grams.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .where(col("df") <= maxDf).select(col("h")), "h")
+        .where(col("df") <= OverlapMaxDf).select(col("h")), "h")
     kept.as("l").join(kept.as("r"),
         col("l.h") === col("r.h") && col("l.source") < col("r.source"))
       .groupBy(col("l.source").as("src_a"), col("r.source").as("src_b"))
@@ -823,8 +838,9 @@ object CorpusOps {
     * the first merge). One typed pass per doc with a local pair→count hash
     * map, so the shuffle carries (2-char pair, partial count) rows — the
     * pair vocabulary is bounded by the alphabet², never by the corpus.
-    * Top-k via TakeOrderedAndProject (no global sort materialization). */
-  def bpePairCounts(df: DataFrame, topK: Int = 50): DataFrame = {
+    * Top-`BpePairTopK` via TakeOrderedAndProject (no global sort
+    * materialization). */
+  def bpePairCounts(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("text")).as[String]
@@ -847,7 +863,7 @@ object CorpusOps {
       .toDF("pair", "cnt")
       .groupBy(col("pair")).agg(sum(col("cnt")).as("n"))
       .orderBy(col("n").desc, col("pair"))
-      .limit(topK)
+      .limit(BpePairTopK)
   }
 
   /** Text normalization (the ftfy/whitespace-cleanup stage every crawl
@@ -945,14 +961,14 @@ object CorpusOps {
   /** Source-mixture token-budget planner (p50) — the data-MIXING step a
     * pretraining corpus build runs after per-source accounting (the
     * SlimPajama/Dolma-style weighting pass): given md5-derived per-source
-    * target weights in 1..5 and a global token budget (`budgetPct` of supply),
+    * target weights in 1..5 and a global token budget (`MixBudgetPct` of supply),
     * compute each source's target allocation, sampling rate (permille),
     * planned yield and deficit in pure integer arithmetic. The corpus-wide
     * work is ONE partial+final aggregate keyed by source; everything after
     * runs on the tiny per-source rollup (a 1-row totals cross join that
     * Catalyst broadcasts). The oracle rebuilds weights and every division
     * from the same md5 + floor-div rules bit-for-bit. */
-  def mixturePlan(df: DataFrame, budgetPct: Int = 60): DataFrame = {
+  def mixturePlan(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val per = df.select(col("source"),
@@ -967,7 +983,7 @@ object CorpusOps {
       sum(col("weight")).as("t_weight"))
     per.crossJoin(tot)
       .withColumn("target_tokens",
-        expr(s"(((t_tokens * $budgetPct) div 100) * weight) div t_weight"))
+        expr(s"(((t_tokens * $MixBudgetPct) div 100) * weight) div t_weight"))
       .withColumn("rate_permille",
         expr("least(1000L, (target_tokens * 1000) div n_tokens)"))
       .withColumn("planned_tokens",
@@ -1016,7 +1032,7 @@ object CorpusOps {
     * ties. All arithmetic is integer (rank = (q·n + 99) div 100,
     * err_permille = |est − exact|·1000 div exact) so DuckDB replicates the
     * output bit-for-bit. */
-  def quantileValidate(df: DataFrame, k: Int = 256): DataFrame = {
+  def quantileValidate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val qs = Seq(25, 50, 75, 90) // the reported percentiles
@@ -1026,7 +1042,7 @@ object CorpusOps {
     val sample = v.as[(Long, Long)]
       .map { case (id, n) => (TextOps.md5Low63(id.toString + "|qtl"), id, n) }
       .toDF("h", "id", "value")
-      .orderBy(col("h"), col("id")).limit(k)
+      .orderBy(col("h"), col("id")).limit(QuantileSampleK)
       .select(col("value"))
     // value at rank ceil(q·n/100) over a (distinct value → count) table
     def valueAtQuantiles(vals: DataFrame, valName: String,
@@ -1233,17 +1249,16 @@ object CorpusOps {
 
   /** Tokenizer-vocabulary coverage curve: what fraction of all corpus token
     * occurrences the top-`rank` vocabulary entries cover, reported at each
-    * rank in `grid` (the vocab-size-vs-OOV trade-off table tokenizer
+    * rank in `CoverageGrid` (the vocab-size-vs-OOV trade-off table tokenizer
     * training reads). Term frequencies come from the explode-free typed
     * pass (tokenTf) + one keyed aggregation; the ranking never sorts the
     * full vocabulary globally — a bounded top-max(grid) TakeOrdered feeds
     * a single-partition window over at most max(grid) rows, which is
     * constant-size regardless of corpus size. Ties rank by token string.
     * Integer ppm (non-negative operands, so Spark div ≡ DuckDB //). */
-  def vocabCoverage(df: DataFrame,
-                    grid: Seq[Int] = Seq(3, 10, 30, 100, 1000, 10000)): DataFrame = {
+  def vocabCoverage(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val topN = grid.max
+    val topN = CoverageGrid.max
     val tf = tokenTf(df).groupBy(col("token"))
       .agg(sum(col("tf")).as("term_freq"))
     val total = tf.agg(sum(col("term_freq")).as("total_tokens"))
@@ -1254,7 +1269,7 @@ object CorpusOps {
         row_number().over(
           Window.orderBy(col("term_freq").desc, col("token").asc)).as("rank"),
         sum(col("term_freq")).over(w).as("cum_tokens"))
-      .where(col("rank").isin(grid.map(Integer.valueOf): _*))
+      .where(col("rank").isin(CoverageGrid.map(Integer.valueOf): _*))
       .crossJoin(broadcast(total))
       .select(col("rank").cast("long").as("rank"), col("token"),
         col("term_freq"), col("cum_tokens"),
@@ -1517,7 +1532,7 @@ object CorpusOps {
     * source?" under the max-min-fairness rule every mixture designer
     * reaches for: small sources contribute everything they have, large
     * sources are capped at a common water level L chosen so the total is
-    * exactly B. Budget = total·budgetNum/budgetDen (integer).
+    * exactly B. Budget = total·`WaterfillNum`/`WaterfillDen` (integer).
     *
     * Exact integer construction (no float level search): sort sources by
     * (supply asc, source asc); source i is saturated iff
@@ -1534,8 +1549,7 @@ object CorpusOps {
     * (≤ thousands of rows at web scale), where the global window and the
     * two 1-row-aggregate broadcast crosses are driver-scale math, the
     * same tiny-table contract as kAnonymity/p50. */
-  def budgetWaterfill(df: DataFrame, budgetNum: Long = 2L,
-                      budgetDen: Long = 5L): DataFrame = {
+  def budgetWaterfill(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val supply = df
       .select(col("source"),
@@ -1550,7 +1564,7 @@ object CorpusOps {
       count(lit(1)).cast("long").as("n"))
     val c = ranked.crossJoin(broadcast(tot))
       .withColumn("budget",
-        expr(s"(total * $budgetNum) div $budgetDen").cast("long"))
+        expr(s"(total * $WaterfillNum) div $WaterfillDen").cast("long"))
       .withColumn("cost",
         (col("pfx") - col("supply") +
           col("supply") * (col("n") - col("i") + 1)).cast("long"))
@@ -1583,8 +1597,9 @@ object CorpusOps {
     * O(1). */
   private val BpeMaxWordLen = 32
 
-  /** Merge steps of the vocabulary `bpeEncodeCensus` encodes with. */
-  private val BpeEncodeSteps = 8
+  /** Merge steps of `bpeTrain` and of the vocabulary `bpeEncodeCensus`
+    * encodes with. */
+  private val BpeSteps = 8
 
   /** The BPE merge loop that [[bpeTrain]] and [[bpeEncodeCensus]] share:
     * the one-time (word, freq) vocabulary scan, then up to `steps` rounds
@@ -1683,12 +1698,12 @@ object CorpusOps {
     * Output: one row per merge step (step, lsym, rsym, n_pair,
     * tok_total, vocab_syms). Words longer than `BpeMaxWordLen` are
     * dropped. */
-  def bpeTrain(df: DataFrame, steps: Int = 8): DataFrame = {
+  def bpeTrain(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val SEP2 = "\u001f\u001f"
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, String, String, Long, Long, Long)]
-    bpeMergeLoop(df, steps) { (step, l, r, n, next) =>
+    bpeMergeLoop(df, BpeSteps) { (step, l, r, n, next) =>
       // fused census (r6: ONE action per round instead of three — it
       // doubles as the persist materializer, so the count() is gone
       // too): explode the symbol array once, charge freq·|syms| only
@@ -1726,10 +1741,10 @@ object CorpusOps {
     * census is the number every tokenizer-budget decision hangs on:
     * per-source fertility (tokens per word, millis-scaled integer) plus
     * exact token/char totals. The vocabulary is trained for
-    * `BpeEncodeSteps` merges. */
+    * `BpeSteps` merges. */
   def bpeEncodeCensus(df: DataFrame): DataFrame = {
     val SEP = "\u001f"
-    bpeMergeLoop(df, BpeEncodeSteps)((_, _, _, _, _) => ()) { vocab =>
+    bpeMergeLoop(df, BpeSteps)((_, _, _, _, _) => ()) { vocab =>
       val enc = vocab.select(col("w"),
         ((length(col("s")) -
           length(call_function("replace", col("s"), lit(SEP), lit(""))))

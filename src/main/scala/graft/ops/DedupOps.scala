@@ -153,11 +153,11 @@ object DedupOps {
 
   /** LSH candidate pairs only (no verification) — the banded self-join
     * shared by `minhashLsh` and the recall-measurement query (p46).
-    * Shuffle payload is the 24-byte (doc_id, band_id, band_key) row. */
-  def minhashCandidates(df: DataFrame, w: Int = ShingleW,
-                        bands: Int = LshBands,
+    * Shuffle payload is the 24-byte (doc_id, band_id, band_key) row.
+    * Shingles are `ShingleW` words wide. */
+  def minhashCandidates(df: DataFrame, bands: Int = LshBands,
                         rowsPerBand: Int = LshRowsPerBand): DataFrame = {
-    val banded = minhashBands(df, w, bands, rowsPerBand)
+    val banded = minhashBands(df, ShingleW, bands, rowsPerBand)
       .select(col("doc_id"),
         posexplode(col("band_keys")).as(Seq("band_id", "band_key")))
     // bucket join → unordered candidate pairs (a < b), deduped across bands
@@ -192,7 +192,7 @@ object DedupOps {
     * the dup-cluster quadratic from every band bucket. */
   def minhashLsh(df: DataFrame): DataFrame = {
     val (repDocs, members) = textGroups(df)
-    val repPairs = minhashLshUncollapsed(repDocs, ShingleW, LshBands,
+    val repPairs = minhashLshUncollapsed(repDocs, LshBands,
       LshRowsPerBand, LshMinJaccardPct)
     val withinVals = shingleSets(repDocs, ShingleW)
       .select(col("doc_id").as("rep_id"),
@@ -208,11 +208,11 @@ object DedupOps {
     * intersection/union sizes. The candidate side is broadcast so the
     * (large) shingle table never shuffles — candidate pairs are a tiny
     * fraction of the corpus on dedup workloads. */
-  private[graft] def minhashLshUncollapsed(df: DataFrame, w: Int,
-                                           bands: Int, rowsPerBand: Int,
+  private[graft] def minhashLshUncollapsed(df: DataFrame, bands: Int,
+                                           rowsPerBand: Int,
                                            minJaccardPct: Int): DataFrame = {
-    val candidates = minhashCandidates(df, w, bands, rowsPerBand)
-    val sets = shingleSets(df, w)
+    val candidates = minhashCandidates(df, bands, rowsPerBand)
+    val sets = shingleSets(df, ShingleW)
     val withA = sets
       .withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a")
       .join(broadcast(candidates), "doc_a") // sets streams map-side
@@ -377,9 +377,9 @@ object DedupOps {
     * rep per distinct text; member pairs expand arithmetically —
     * output-identical to [[exactJaccardPairsUncollapsed]] (spec-pinned),
     * join cost no longer quadratic in dup-cluster size. */
-  def exactJaccardPairs(df: DataFrame, w: Int = ShingleW,
-                        minJaccardPct: Int = PairMinPct,
+  def exactJaccardPairs(df: DataFrame, minJaccardPct: Int = PairMinPct,
                         maxDf: Option[Int] = None): DataFrame = {
+    val w = ShingleW
     val (repDocs, members, csize) = textGroupsSized(df)
     maxDf match {
       case Some(cap) =>
@@ -574,72 +574,32 @@ object DedupOps {
     * (counts merge by hash, exactly as the SQL oracle groups — shingle
     * strings never shuffle); the self-join carries (doc, 8-byte hash, tf,
     * wsum) postings only. Σmax is derived, not joined: Σmax = wsum_a +
-    * wsum_b − Σmin. `maxDf` is the p25-style production cap: postings on
-    * shingles carried by more than `maxDf` docs (boilerplate) are dropped
-    * before the join; wsum stays uncapped so w_union is exact and only
-    * w_inter can undercount.
+    * wsum_b − Σmin. The index is uncapped: the DuckDB oracle replicates
+    * the exact pair set.
     *
     * Exact-dup collapse (r5): identical texts have identical shingle
     * BAGS, so the weighted score is text-pure too — reps-only posting
     * join, arithmetic expansion, within pairs at w_inter = w_union = wsum
     * (output-identical to [[weightedJaccardPairsUncollapsed]],
     * spec-pinned). */
-  def weightedJaccardPairs(df: DataFrame,
-                           maxDf: Option[Int] = None): DataFrame = {
+  def weightedJaccardPairs(df: DataFrame): DataFrame = {
     val w = ShingleW
-    val minPct = PairMinPct
-    val (repDocs, members, csize) = textGroupsSized(df)
-    maxDf match {
-      case Some(cap) =>
-        // r6 fix (ADVICE #1), same rule as the exact path: df counts
-        // DOCUMENTS (rep weight = cluster size) and within-cluster
-        // pairs take the capped w_inter = Σ tf over SURVIVING postings
-        // with the uncollapsed w_union formula ws_a + ws_b − w_inter.
-        val posts = weightedPostings(df.sparkSession, repDocs, w)
-        val rare = posts
-          .join(csize, posts("doc_id") === csize("rep_id"))
-          .groupBy(col("h")).agg(sum(col("csize")).as("dfw"))
-          .where(col("dfw") <= cap)
-          .select(col("h"))
-        val indexed = posts.join(rare, Seq("h"), "left_semi")
-        val repPairs = weightedPairsFromIndex(indexed, minPct)
-        val withinVals = indexed.groupBy(col("doc_id"))
-          .agg(sum(col("tf")).as("k"), max(col("wsum")).as("wsum"))
-          .select(col("doc_id").as("rep_id"),
-            col("k").cast("long").as("w_inter"),
-            (lit(2L) * col("wsum") - col("k")).cast("long").as("w_union"))
-          .where(col("w_inter") * 100 >= col("w_union") * minPct)
-        expandCollapsed(repPairs, members, withinVals,
-          Seq("w_inter", "w_union"))
-      case None =>
-        val repPairs = weightedJaccardPairsUncollapsed(repDocs, w, minPct,
-          None)
-        // wsum mirror of the posting flatMap: toks < w → 1 whole-text
-        // shingle, else toks − w + 1 sliding shingles (with multiplicity)
-        val withinVals = repDocs.select(col("doc_id").as("rep_id"),
-          greatest(size(split(trim(col("text")), "\\s+")) - (w - 1), lit(1))
-            .cast("long").as("w_inter"))
-          .withColumn("w_union", col("w_inter"))
-        expandCollapsed(repPairs, members, withinVals,
-          Seq("w_inter", "w_union"))
-    }
+    val (repDocs, members) = textGroups(df)
+    val repPairs = weightedJaccardPairsUncollapsed(repDocs, w, PairMinPct)
+    // wsum mirror of the posting flatMap: toks < w → 1 whole-text
+    // shingle, else toks − w + 1 sliding shingles (with multiplicity)
+    val withinVals = repDocs.select(col("doc_id").as("rep_id"),
+      greatest(size(split(trim(col("text")), "\\s+")) - (w - 1), lit(1))
+        .cast("long").as("w_inter"))
+      .withColumn("w_union", col("w_inter"))
+    expandCollapsed(repPairs, members, withinVals, Seq("w_inter", "w_union"))
   }
 
   /** The per-doc posting kernel [[weightedJaccardPairs]] runs over its
-    * representatives when uncapped (and the spec reference for the
-    * collapse, capped or not). */
+    * representatives (and the spec reference for the collapse). */
   private[graft] def weightedJaccardPairsUncollapsed(df: DataFrame, w: Int,
-                                                     minPct: Int,
-                                                     maxDf: Option[Int])
-    : DataFrame = {
-    val postings = weightedPostings(df.sparkSession, df, w)
-    val indexed = maxDf.fold(postings) { cap =>
-      val rare = postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .where(col("df") <= cap).select(col("h"))
-      postings.join(rare, Seq("h"), "left_semi")
-    }
-    weightedPairsFromIndex(indexed, minPct)
-  }
+                                                     minPct: Int): DataFrame =
+    weightedPairsFromIndex(weightedPostings(df.sparkSession, df, w), minPct)
 
   /** Per-doc shingle-bag postings (doc_id, h, tf, wsum) — one typed pass,
     * counts keyed by md5-low63 so strings never shuffle. */
@@ -682,6 +642,11 @@ object DedupOps {
       .where(col("w_inter") * 100 >= col("w_union") * minPct)
       .select(col("doc_a"), col("doc_b"), col("w_inter"), col("w_union"))
 
+  /** Fingerprint document-frequency cap and containment floor (percent)
+    * of [[containmentPairs]]. */
+  private val ContainMaxDf = 64
+  private val ContainMinPct = 50
+
   /** Fingerprint CONTAINMENT pairs — the ASYMMETRIC near-dup detector
     * Jaccard misses: a short doc quoted wholesale inside a much longer one
     * has tiny Jaccard (union is dominated by the long doc) but containment
@@ -695,14 +660,13 @@ object DedupOps {
     *
     * Scale shape = `exactJaccardPairs`: only (doc_id, 8-byte fp) rows
     * reach the self-join, fan-out is Σ df² over fingerprint keys and
-    * `maxDf` caps it for the production path (winnowing prefers globally
+    * `ContainMaxDf` caps it (winnowing prefers globally
     * small hashes, so without a cap a handful of low-hash boilerplate
     * grams pair everything with everything). n_fp comes from the
     * UNCAPPED set, so the cap can only undercount n_shared — the same
-    * documented recall trade as the capped Jaccard path. */
-  def containmentPairs(df: DataFrame, minPct: Int = 50,
-                       maxDf: Option[Int] = None,
-                       materialize: Boolean = false): DataFrame = {
+    * documented recall trade as the capped Jaccard path. Pairs below
+    * `ContainMinPct` are dropped. */
+  def containmentPairs(df: DataFrame, materialize: Boolean = false): DataFrame = {
     // the fingerprint table feeds sizes AND both self-join sides; exchange
     // reuse does not fire across the typed flatMap, so without
     // `materialize` the corpus re-fingerprints three times (measured
@@ -710,11 +674,9 @@ object DedupOps {
     val fpsRaw = TextOps.fingerprints(df, 12, 8) // distinct (doc_id, fp)
     val fps = if (materialize) fpsRaw.localCheckpoint(false) else fpsRaw
     val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
-    val indexed = maxDf.fold(fps) { cap =>
-      val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .where(col("df") <= cap).select(col("fp"))
-      fps.join(rare, Seq("fp"), "left_semi")
-    }
+    val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+      .where(col("df") <= ContainMaxDf).select(col("fp"))
+    val indexed = fps.join(rare, Seq("fp"), "left_semi")
     indexed.as("a").join(indexed.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_id"),
@@ -722,7 +684,7 @@ object DedupOps {
       .agg(count(lit(1)).as("n_shared"))
       .join(sizes, "doc_id") // n_fp of the CONTAINED side
       .withColumn("containment_pct", expr("(n_shared * 100) div n_fp"))
-      .where(col("containment_pct") >= minPct)
+      .where(col("containment_pct") >= ContainMinPct)
       .select(col("doc_id"), col("container_id"), col("n_shared"),
         col("n_fp"), col("containment_pct"))
   }
@@ -739,9 +701,9 @@ object DedupOps {
     * from scratch. Signatures are one typed pass per doc (k·8 bytes/doc);
     * the estimator join is keyed on doc ids over the (small) verified pair
     * set; the lane comparison is a row-local zip_with fold. Shingles are
-    * `ShingleW` words wide and signatures `MinhashEstimateLanes` long. */
-  def minhashEstimates(df: DataFrame, minJaccardPct: Int = 60,
-                       bbit: Boolean = false): DataFrame = {
+    * `ShingleW` words wide and signatures `MinhashEstimateLanes` long;
+    * the pairs are those at Jaccard ≥ `LshMinJaccardPct`. */
+  def minhashEstimates(df: DataFrame, bbit: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val sigs = df.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -757,7 +719,7 @@ object DedupOps {
         }
         (id, sig.toSeq)
       }.toDF("doc_id", "sig")
-    val base = exactJaccardPairs(df, ShingleW, minJaccardPct)
+    val base = exactJaccardPairs(df, LshMinJaccardPct)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .withColumn("n_match", expr(
@@ -995,7 +957,7 @@ object DedupOps {
     val (dCount, nTotal) = (cnt.getLong(0), cnt.getLong(1))
     if (dCount > DupClustersCollapseRatio * nTotal)
       return dupClusters(minhashLsh(df))
-    val repPairs = minhashLshUncollapsed(repDocs, ShingleW, LshBands,
+    val repPairs = minhashLshUncollapsed(repDocs, LshBands,
       LshRowsPerBand, LshMinJaccardPct)
     val inPairs = dupClusters(repPairs)
       .select(col("doc_id").as("rep_id"), col("cluster_id"))

@@ -32,13 +32,17 @@ import org.apache.spark.sql.functions._
   */
 object GraphAnnOps {
 
+  /** Degree M of every k-NN graph here: the brute build, the NN-descent
+    * build and the insert path keep the top `GraphM` neighbours. */
+  private val GraphM = 8
+
   /** Exact M-nearest-neighbor adjacency: (node_id, rank, neighbor_id),
-    * rank 1..m by (cosine DESC, neighbor_id ASC). Broadcast-kernel brute
+    * rank 1..`GraphM` by (cosine DESC, neighbor_id ASC). Broadcast-kernel brute
     * build (per-node M-slot insertion against the collected side — same
     * contract, arithmetic and guard as `SimilarityOps.topPairs`): the
     * exactness baseline the 10^12-row NN-descent build is verified
     * against. */
-  def buildKnnGraph(emb: DataFrame, m: Int = 4,
+  def buildKnnGraph(emb: DataFrame,
                     maxBroadcastRows: Long = SimilarityOps.BruteRowLimit)
       : DataFrame = {
     val spark = emb.sparkSession
@@ -56,8 +60,8 @@ object GraphAnnOps {
       val (ids, es, norms) = bc.value
       val an = SimilarityOps.norm(ae)
       // M-slot insertion sort: better = (score >, or == with smaller id)
-      val topScore = new Array[Double](m)
-      val topId = new Array[Long](m)
+      val topScore = new Array[Double](GraphM)
+      val topId = new Array[Long](GraphM)
       var filled = 0
       var j = 0
       while (j < ids.length) {
@@ -70,14 +74,14 @@ object GraphAnnOps {
           var pos = filled
           while (pos > 0 && (topScore(pos - 1) < sc ||
             (topScore(pos - 1) == sc && topId(pos - 1) > ids(j)))) pos -= 1
-          if (pos < m) {
-            val last = math.min(filled, m - 1)
+          if (pos < GraphM) {
+            val last = math.min(filled, GraphM - 1)
             var q = last
             while (q > pos) {
               topScore(q) = topScore(q - 1); topId(q) = topId(q - 1); q -= 1
             }
             topScore(pos) = sc; topId(pos) = ids(j)
-            if (filled < m) filled += 1
+            if (filled < GraphM) filled += 1
           }
         }
         j += 1
@@ -86,6 +90,13 @@ object GraphAnnOps {
     }.toDF("node_id", "rnk", "neighbor_id")
       .orderBy(col("node_id"), col("rnk"))
   }
+
+  /** Shape of [[buildKnnGraphDescent]] (its stages 1–3 below). */
+  private val DescentDim = 64
+  private val DescentBits = 6
+  private val DescentTables = 4
+  private val DescentRounds = 3
+  private val DescentMaxBucket = 1024
 
   /** PRODUCTION-SCALE k-NN-graph construction — sign-LSH candidate
     * seeding + NN-descent refinement (Dong, Moses & Li, "Efficient
@@ -99,9 +110,10 @@ object GraphAnnOps {
     *
     * Shape, stage by stage — the vector table is NEVER collected and no
     * stage is quadratic in N:
-    *   1. SEED: `tables` independent sign-LSH bucketings (the p40
+    *   1. SEED: `DescentTables` independent `DescentBits`-bit sign-LSH
+    *      bucketings of the `DescentDim`-dim vectors (the p40
     *      multi-table convention, seed 7 + 1000·t); candidate pairs are
-    *      within-bucket with a `maxBucket` cap on hot buckets (the
+    *      within-bucket with a `DescentMaxBucket` cap on hot buckets (the
     *      p25/p127 documented recall trade) — Σ per-bucket quadratics,
     *      bounded by cap², never N².
     *   2. DESCENT round: the current adjacency plus its REVERSE (capped
@@ -112,7 +124,7 @@ object GraphAnnOps {
     *      current edges (good edges persist), are scored with the
     *      bit-stable codegen cosine, and each node keeps top-m by
     *      (score DESC, neighbor_id ASC).
-    *   3. Repeat `rounds` times (fixed — deterministic work, no
+    *   3. Repeat `DescentRounds` times (fixed — deterministic work, no
     *      data-dependent convergence test), truncating lineage per round
     *      with localCheckpoint of the BOUNDED adjacency (≤ N·m rows) —
     *      the CC/Lloyd/BPE driver-loop pattern. With
@@ -129,10 +141,15 @@ object GraphAnnOps {
     * the exact graph is MEASURED, not asserted, by the p145 driver row
     * (beam recall over this graph vs p139's brute graph, the p141 sweep
     * pattern). */
-  def buildKnnGraphDescent(emb: DataFrame, m: Int = 8, dim: Int = 64,
-                           bits: Int = 8, tables: Int = 4, rounds: Int = 3,
-                           maxBucket: Int = 1024,
-                           lineageTruncate: Boolean = true): DataFrame = {
+  def buildKnnGraphDescent(emb: DataFrame,
+                           lineageTruncate: Boolean = true): DataFrame =
+    descentRounds(emb, DescentRounds, lineageTruncate)
+
+  /** [[buildKnnGraphDescent]] at an explicit round count — the spec entry
+    * for the fully lazy build, whose plan triples per round (each round
+    * reads the previous adjacency three times), so it is executed at 2. */
+  private[graft] def descentRounds(emb: DataFrame, rounds: Int,
+                                   lineageTruncate: Boolean): DataFrame = {
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))
     def maybeCk(df: DataFrame): DataFrame =
@@ -166,20 +183,21 @@ object GraphAnnOps {
         .withColumn("prev_nb", lag(col("nb"), 1).over(w))
         .where(col("prev_nb").isNull || col("prev_nb") =!= col("nb"))
         .withColumn("rnk", row_number().over(w).cast("long"))
-        .where(col("rnk") <= m)
+        .where(col("rnk") <= GraphM)
         .select(col("node_id"), col("rnk"), col("nb").as("neighbor_id"))
     }
 
     // 1. multi-table sign-LSH seeding (seed-pair dedup is now inside
     // rankTopM's windowed lag — no standalone `distinct` exchange)
-    val buckets = (0 until tables).map { t =>
-      val planes = SimilarityOps.hyperplanes(dim, bits, seed = 7L + 1000L * t)
+    val buckets = (0 until DescentTables).map { t =>
+      val planes = SimilarityOps.hyperplanes(DescentDim, DescentBits,
+        seed = 7L + 1000L * t)
       nodes.select(col("node_id"), lit(t).as("tbl"),
         graft.functions.functions.sign_lsh_bucket(col("n_emb"), planes)
           .as("bkt"))
     }.reduce(_ unionByName _)
     val okBuckets = buckets.groupBy(col("tbl"), col("bkt"))
-      .agg(count(lit(1)).as("bn")).where(col("bn") <= maxBucket)
+      .agg(count(lit(1)).as("bn")).where(col("bn") <= DescentMaxBucket)
       .select(col("tbl"), col("bkt"))
     val pruned = buckets.join(okBuckets, Seq("tbl", "bkt"))
     val seedPairs = pruned.as("a").join(pruned.as("b"),
@@ -200,7 +218,7 @@ object GraphAnnOps {
       val wRev = Window.partitionBy(col("c")).orderBy(col("w"))
       val rev = adj
         .select(col("neighbor_id").as("c"), col("node_id").as("w"))
-        .withColumn("rr", row_number().over(wRev)).where(col("rr") <= m)
+        .withColumn("rr", row_number().over(wRev)).where(col("rr") <= GraphM)
         .drop("rr")
       val und = fwd.unionByName(rev)
       val cand = und.as("x").join(und.as("y"),
@@ -215,36 +233,27 @@ object GraphAnnOps {
     adj.orderBy(col("node_id"), col("rnk"))
   }
 
-  /** The first `numQueries` vectors by vec_id as the query set — the
-    * convention every ANN op in the engine shares (p07/p89). */
-  private def querySet(emb: DataFrame, numQueries: Int): DataFrame =
-    emb.orderBy(col("vec_id")).limit(numQueries)
-      .select(col("vec_id").cast("long").as("query_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-
   /** Beam search VISITED set: starting every query at the global minimum
-    * vec_id, expand the beam's adjacency `hops` times, after each hop
-    * keeping the top-`ef` visited nodes per query as the next beam.
+    * vec_id, expand the beam's adjacency `SweepHops` times, after each hop
+    * keeping the top-`BeamEf` visited nodes per query as the next beam.
     * Returns every (query_id, node_id) ever visited — the candidate dump
     * the oracle re-ranks (the p13/p89 pattern: the walk's OUTPUT is
     * verified exactly even though the walk itself is not SQL).
     *
     * Per hop: one equi-join frontier⋈adjacency on node_id + one bounded
     * window truncation; visited ≤ 1 + hops·ef·M rows per query. */
-  def beamVisited(emb: DataFrame, graph: DataFrame, numQueries: Int = 10,
-                  ef: Int = 8, hops: Int = 3): DataFrame =
-    sweep(emb, graph, Seq(ef), numQueries, hops)
+  def beamVisited(emb: DataFrame, graph: DataFrame): DataFrame =
+    beamVisitedSweep(emb, graph, Seq(BeamEf))
       .select(col("query_id"), col("node_id"))
       .orderBy(col("query_id"), col("node_id"))
 
-  /** Query count of the multi-`ef` sweeps: the walk and its top-k. */
-  private val SweepQueries = 10
+  /** Beam width of [[beamVisited]] and of the insert path's walk. */
+  private val BeamEf = 8
 
-  /** Hops of the multi-`ef` beam walk. */
+  /** Hops of the query walk ([[beamVisited]], [[beamVisitedSweep]]) and of
+    * the insert path's walk. */
   private val SweepHops = 5
-
-  /** Neighbours kept per (ef, query) by [[topKFromVisitedSweep]]. */
-  private val SweepTopK = 10
+  private val InsertHops = 3
 
   /** Multi-`ef` beam sweep in ONE pass (r6): the p141/p145/p151 recall
     * sweeps run the SAME walk at ef ∈ {2, 8, 32}; the searches never
@@ -254,36 +263,21 @@ object GraphAnnOps {
     * job per hop instead of three (r5 paid 2 checkpoints × hops × efs).
     * Each ef-slice of the output is row-identical to an independent
     * [[beamVisited]] run at that ef (spec-pinned). The walk runs
-    * `SweepHops` hops for the first `SweepQueries` vectors. Output
-    * columns: (query_id, node_id, ef). */
+    * `SweepHops` hops for the first `SimilarityOps.RecallQueries`
+    * vectors. Output columns: (query_id, node_id, ef). */
   def beamVisitedSweep(emb: DataFrame, graph: DataFrame,
-                       efs: Seq[Int]): DataFrame =
-    sweep(emb, graph, efs, SweepQueries, SweepHops)
-
-  /** The walk of [[beamVisited]] and [[beamVisitedSweep]] from the global
-    * minimum vec_id. */
-  private def sweep(emb: DataFrame, graph: DataFrame, efs: Seq[Int],
-                    numQueries: Int, hops: Int): DataFrame = {
+                       efs: Seq[Int]): DataFrame = {
     // 1-row driver scalar: the deterministic entry point (null on an
     // empty table, whose query set is empty too, so any entry will do)
     val r = emb.agg(min(col("vec_id").cast("long"))).head()
     val entry = if (r.isNullAt(0)) 0L else r.getLong(0)
-    beamVisitedSweepFor(emb, graph, querySet(emb, numQueries), efs, hops,
-      entry)
+    beamVisitedSweepFor(emb, graph, SimilarityOps.recallQueries(emb), efs, SweepHops, entry)
   }
 
-  /** [[beamVisited]] generalized to an explicit query set (query_id,
-    * q_emb) and entry node — the form the INSERT path uses, where the
-    * queries are the new vectors (not yet in the graph) and the entry
-    * must be a node the graph actually contains. */
-  private def beamVisitedFor(emb: DataFrame, graph: DataFrame,
-                             queries: DataFrame, ef: Int, hops: Int,
-                             entry: Long): DataFrame =
-    beamVisitedSweepFor(emb, graph, queries, Seq(ef), hops, entry)
-      .select(col("query_id"), col("node_id"))
-      .orderBy(col("query_id"), col("node_id"))
-
-  /** The sweep core. r6 hop shape (vs r5's): scores are computed ONCE per
+  /** The sweep core, from an explicit query set (query_id, q_emb) and
+    * entry node: the insert path's queries are the new vectors (not yet
+    * in the graph) and its entry must be a node the graph contains. r6
+    * hop shape (vs r5's): scores are computed ONCE per
     * newly-reached (query, node) and carried in the visited state — the
     * r5 loop re-scored the ENTIRE visited set every hop — and the per-hop
     * dedup is a (ef, query, node) aggregate (max(score) over copies of the
@@ -333,9 +327,9 @@ object GraphAnnOps {
 
   /** INCREMENTAL graph insert — the HNSW insertion primitive, batched:
     * each new vector beam-searches the EXISTING graph for candidates
-    * (the same walk a query runs), links to its top-`m` by (cosine DESC,
-    * id ASC), and the touched existing nodes re-rank their edge set —
-    * old edges ∪ new back-edges, keep top-m — so degrees stay capped and
+    * (`BeamEf` wide, `InsertHops` hops), links to its top-`GraphM` by
+    * (cosine DESC, id ASC), and the touched existing nodes re-rank their
+    * edge set — old edges ∪ new back-edges, keep top-M — so degrees stay capped and
     * a closer new neighbor evicts the worst old edge exactly as HNSW's
     * neighbor-selection prune does. Everything is joins over bounded
     * state: the delta's beam (≤ hops·ef·M candidates per new vector), one
@@ -368,15 +362,23 @@ object GraphAnnOps {
     * (GraphAnnSpec pins the pass-through behaviorally: a deliberately
     * rank-corrupted untouched node survives the insert bit-identical,
     * which a rescoring implementation would repair). */
-  def insertIntoGraph(emb: DataFrame, graph: DataFrame, delta: DataFrame,
-                      m: Int = 8, ef: Int = 8, hops: Int = 3): DataFrame = {
+  def insertIntoGraph(emb: DataFrame, graph: DataFrame,
+                      delta: DataFrame): DataFrame = {
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))
     val dq = delta.select(col("vec_id").cast("long").as("query_id"),
       col("embedding").cast("array<double>").as("q_emb"))
-    // 1-row driver scalar: entry must be a node the OLD graph contains
-    val entry = graph.agg(min(col("node_id"))).head().getLong(0)
-    val visited = beamVisitedFor(emb, graph, dq, ef, hops, entry)
+    // 1-row driver scalar: entry must be a node the OLD graph contains;
+    // an empty graph has no node to link the delta to
+    val first = graph.agg(min(col("node_id"))).head()
+    if (first.isNullAt(0))
+      return graph.select(col("node_id"), col("rnk").cast("long").as("rnk"),
+        col("neighbor_id"))
+    val entry = first.getLong(0)
+    val visited = beamVisitedSweepFor(emb, graph, dq, Seq(BeamEf), InsertHops,
+        entry)
+      .select(col("query_id"), col("node_id"))
+      .orderBy(col("query_id"), col("node_id"))
     val scored = visited
       .where(col("node_id") =!= col("query_id"))
       .join(nodes, "node_id")
@@ -386,7 +388,7 @@ object GraphAnnOps {
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("node_id"))
     val newFwd = scored.withColumn("rnk", row_number().over(wq).cast("long"))
-      .where(col("rnk") <= m)
+      .where(col("rnk") <= GraphM)
       .select(col("query_id").as("node_id"), col("rnk"),
         col("node_id").as("neighbor_id"))
     // back-edges: ONLY nodes receiving a reverse edge re-rank
@@ -411,7 +413,7 @@ object GraphAnnOps {
       .orderBy(col("score").desc, col("nb"))
     val rerankedTouched = merged
       .withColumn("rnk", row_number().over(wn).cast("long"))
-      .where(col("rnk") <= m)
+      .where(col("rnk") <= GraphM)
       .select(col("node_id"), col("rnk"), col("nb").as("neighbor_id"))
     // untouched adjacency passes through verbatim (rnk already ranked)
     val untouched = graph
@@ -422,13 +424,13 @@ object GraphAnnOps {
       .orderBy(col("node_id"), col("rnk"))
   }
 
-  /** Exact re-rank of a visited/candidate set: top-`k` per query by
-    * (cosine DESC, neighbor_id ASC), self-matches excluded — identical
+  /** Exact re-rank of a visited/candidate set: top-`RecallK` per query
+    * (the first `RecallQueries` vectors) by (cosine DESC, neighbor_id
+    * ASC), self-matches excluded — identical
     * scoring path to `SimilarityOps.bruteTopK`, restricted to the
     * candidates. Output (query_id, rank, neighbor_id). */
-  def topKFromVisited(emb: DataFrame, visited: DataFrame,
-                      numQueries: Int = 10, k: Int = 10): DataFrame = {
-    val queries = querySet(emb, numQueries)
+  def topKFromVisited(emb: DataFrame, visited: DataFrame): DataFrame = {
+    val queries = SimilarityOps.recallQueries(emb)
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))
     val scored = visited
@@ -437,20 +439,20 @@ object GraphAnnOps {
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col("node_id").as("neighbor_id"),
         SimilarityOps.cosine(col("q_emb"), col("n_emb")).as("score"))
-    SimilarityOps.rankTopK(scored, k)
+    SimilarityOps.rankTopK(scored, SimilarityOps.RecallK)
   }
 
   /** Multi-ef [[topKFromVisited]] (r6): ONE scoring pass + ONE
     * `TopK.TopKIds` aggregation over the ef-tagged visited dump, keyed by
     * (ef, query_id) — each ef-slice's top-k set is identical to the
     * per-slice call (same aggregator: score DESC, id ASC). Rank is
-    * dropped: the recall join consumes the SET. `SweepTopK` neighbours
-    * per (ef, query) of the first `SweepQueries` vectors. Output
+    * dropped: the recall join consumes the SET. `SimilarityOps.RecallK`
+    * neighbours per (ef, query) of the first `RecallQueries` vectors. Output
     * (ef, query_id, neighbor_id). */
   def topKFromVisitedSweep(emb: DataFrame, visited: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val queries = querySet(emb, SweepQueries)
+    val queries = SimilarityOps.recallQueries(emb)
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),
       col("embedding").cast("array<double>").as("n_emb"))
     visited
@@ -462,7 +464,7 @@ object GraphAnnOps {
       .as[(Long, Long, Long, Double)]
       .groupByKey(r => (r._1, r._2))
       .mapValues(r => (0L, r._3, r._4))
-      .agg(new TopK.TopKIds(SweepTopK).toColumn.name("topk"))
+      .agg(new TopK.TopKIds(SimilarityOps.RecallK).toColumn.name("topk"))
       .toDF("key", "topk")
       .select(col("key._1").as("ef"), col("key._2").as("query_id"),
         explode(col("topk")).as("neighbor_id"))

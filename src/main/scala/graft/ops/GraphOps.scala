@@ -99,26 +99,30 @@ object GraphOps {
       .orderBy(col("node"))
   }
 
+  /** Depth and seed-set modulus of [[bfsHops]]. */
+  private val BfsHops = 3
+  private val BfsSeedMod = 97L
+
   /** Bounded-depth BFS — min-hop distance from a deterministic seed set
-    * (doc_id % seedMod == 0) over the directed link graph: the crawl-
+    * (doc_id % `BfsSeedMod` == 0) over the directed link graph: the crawl-
     * frontier / influence-radius primitive (seed-expansion scheduling,
     * blast radius of a flagged spam domain). The SQL-engine analogue is
     * `WITH RECURSIVE`, which Catalyst lacks — so the recursion is driven
-    * as `maxHops` rounds of (frontier ⋈ edges) → anti-join visited, the
+    * as `BfsHops` rounds of (frontier ⋈ edges) → anti-join visited, the
     * standard Pregel unrolling. Scale shape: only the FRONTIER (new nodes
     * this round, two longs each) ever crosses an exchange — the visited
     * set participates solely as the anti-join build side, and the closure
     * is never re-shuffled wholesale; lineage truncates per round
     * (localCheckpoint, same rationale as `pagerank`). First discovery IS
     * the min hop (per-round anti-join), so no terminal min-agg is needed. */
-  def bfsHops(docs: DataFrame, maxHops: Int = 3, seedMod: Long = 97L): DataFrame = {
+  def bfsHops(docs: DataFrame): DataFrame = {
     val n = docs.count() // metadata-only count; keys the modular edge space
     val edges = linkEdges(docs, n).localCheckpoint(false)
     var visited = docs.select(col("doc_id").cast("long").as("node"))
-      .where(pmod(col("node"), lit(seedMod)) === 0)
+      .where(pmod(col("node"), lit(BfsSeedMod)) === 0)
       .select(col("node"), lit(0L).as("hops")).localCheckpoint(true)
     var frontier = visited.select(col("node"))
-    (1 to maxHops).foreach { h =>
+    (1 to BfsHops).foreach { h =>
       val next = edges.join(frontier, edges("src") === frontier("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")

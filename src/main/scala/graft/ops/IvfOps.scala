@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
-  * quantizer splits the corpus into `k` cells; a query scores only the
+  * quantizer splits the corpus into k = `Cells` cells; a query scores only the
   * vectors in its `nprobe` nearest cells — candidate cost drops from O(N)
   * to O(N·nprobe/k) with recall controlled by nprobe (the standard
   * IVF-Flat scheme; sign-LSH in SimilarityOps is the hash-based
@@ -46,14 +46,19 @@ object IvfOps {
       col("embedding").cast("array<double>").as("_2")).as[(Long, Vec)]
   }
 
-  /** Deterministic Lloyd training. Empty cells keep their old centroid. */
-  def train(emb: DataFrame, k: Int = 16, iters: Int = 5): Array[Vec] = {
+  /** Cells (centroids) and Lloyd iterations of [[train]]. */
+  private val Cells = 16
+  private val LloydIters = 5
+
+  /** Deterministic Lloyd training of `Cells` centroids over `LloydIters`
+    * iterations. Empty cells keep their old centroid. */
+  def train(emb: DataFrame): Array[Vec] = {
     val spark = emb.sparkSession
     import spark.implicits._
     val vecs = typedVecs(emb)
     var centroids: Array[Vec] =
-      vecs.orderBy(col("_1")).limit(k).collect().map(_._2)
-    (1 to iters).foreach { _ =>
+      vecs.orderBy(col("_1")).limit(Cells).collect().map(_._2)
+    (1 to LloydIters).foreach { _ =>
       val bc = spark.sparkContext.broadcast(centroids)
       // one scan: (cell, sumVec, count) partial-aggregated per partition
       val sums = vecs.mapPartitions { it =>
@@ -99,13 +104,13 @@ object IvfOps {
       .toDF("vec_id", "cell")
   }
 
-  /** Cells a query probes: its `nprobe` nearest centroids. */
-  def probes(emb: DataFrame, centroids: Array[Vec], numQueries: Int,
-             nprobe: Int): DataFrame = {
+  /** Cells a query (one of the first `SimilarityOps.RecallQueries`
+    * vectors) probes: its `nprobe` nearest centroids. */
+  def probes(emb: DataFrame, centroids: Array[Vec], nprobe: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(centroids)
-    typedVecs(emb).orderBy(col("_1")).limit(numQueries)
+    typedVecs(emb).orderBy(col("_1")).limit(SimilarityOps.RecallQueries)
       .flatMap { case (id, v) =>
         val cs = bc.value
         cs.indices.map(c => (c, sqDist(cs(c), v)))
@@ -116,25 +121,22 @@ object IvfOps {
       .toDF("query_id", "cell")
   }
 
-  /** IVF top-k over precomputed (vec_id, cell) assignment and
-    * (query_id, cell) probe tables — split out so a driver query can dump
-    * both to parquet and hand the DuckDB oracle the exact candidate sets. */
-  def topKFrom(emb: DataFrame, assigned: DataFrame, probed: DataFrame,
-               numQueries: Int, topK: Int): DataFrame = {
-    val queries = emb.orderBy(col("vec_id")).limit(numQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
+  /** IVF top-`SimilarityOps.RecallK` over precomputed (vec_id, cell)
+    * assignment and (query_id, cell) probe tables — split out so a driver
+    * query can dump both to parquet and hand the DuckDB oracle the exact
+    * candidate sets. */
+  def topKFrom(emb: DataFrame, assigned: DataFrame, probed: DataFrame): DataFrame = {
     val scored = emb.join(assigned, "vec_id")
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").cast("array<double>").as("n_emb"), col("cell"))
       .join(broadcast(probed), "cell")
-      .join(broadcast(queries), "query_id")
+      .join(broadcast(SimilarityOps.recallQueries(emb)), "query_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         SimilarityOps.cosine(col("q_emb"), col("n_emb")).as("score"))
     // no dedup needed: assignment is single-cell, so (query, neighbor)
     // appears at most once across probes
-    SimilarityOps.rankTopK(scored, topK)
+    SimilarityOps.rankTopK(scored, SimilarityOps.RecallK)
   }
 
   /** IVF MAINTENANCE census — the monitored-retrain decision of an

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * re-extraction job needs: yesterday's snapshot + today's delta → new
   * snapshot). Semantics: delta rows matched on `key` replace snapshot rows
   * (whole-row), unmatched delta rows insert, and delta rows flagged in
-  * `deleteCol` remove the key entirely.
+  * `is_delete` remove the key entirely.
   *
   * Plan: ONE full-outer shuffle join keyed by `key`. At 10^12 rows both
   * sides live bucketed on the key (Spark's `bucketBy`, emulating Iceberg
@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   */
 object MergeOps {
 
-  /** @param deleteCol boolean column on `delta` marking deletions; rows
-    *                  where it is true erase the key from the output (the
-    *                  column itself is not carried into the result).
+  /** `delta` carries the boolean column `is_delete` marking deletions;
+    * rows where it is true erase the key from the output (the column
+    * itself is not carried into the result).
+    *
     * @param requireUniqueDeltaKeys delta keys must be unique — a duplicate
     *                  key would fan out through the full-outer join, emitting
     *                  one output row per duplicate and silently corrupting
@@ -29,7 +30,6 @@ object MergeOps {
     *                  before the merge plan executes. Disable only when the
     *                  producer already guarantees uniqueness. */
   def upsert(snapshot: DataFrame, delta: DataFrame, key: String,
-             deleteCol: Option[String] = None,
              requireUniqueDeltaKeys: Boolean = true): DataFrame = {
     val dataCols = snapshot.columns.filter(_ != key)
     require((dataCols :+ key).forall(delta.columns.contains),
@@ -43,8 +43,7 @@ object MergeOps {
           s"${dup.head.getLong(1)}) — dedup the delta or pass " +
           "requireUniqueDeltaKeys=false")
     }
-    val del = deleteCol.map(c => coalesce(col(s"d.$c"), lit(false)))
-      .getOrElse(lit(false))
+    val del = coalesce(col("d.is_delete"), lit(false))
     snapshot.as("s")
       .join(delta.as("d"), col(s"s.$key") === col(s"d.$key"), "full_outer")
       .where(!del) // delete wins over update/keep

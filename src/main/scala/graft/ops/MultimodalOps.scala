@@ -131,15 +131,25 @@ object MultimodalOps {
     * their pairs are emitted arithmetically from a plain equi-join on
     * the full hash (output-sized, lossless: hamming(x,x)=0 always
     * qualifies) and the band join's input shrinks to the distinct-hash
-    * count. On top, `maxBandBucket` caps reps per (band, key) bucket —
+    * count. On top, `MaxBandBucket` caps reps per (band, key) bucket —
     * flat/synthetic images concentrate on hot 16-bit keys and a hot
     * bucket is quadratic in the join; like p25's maxDf this is a
     * DOCUMENTED recall trade (pairs whose ONLY shared band is capped are
-    * missed — the default is far above anything the test corpora reach,
-    * so the oracle's exact-equality contract is unaffected). */
-  def phashNearDupsDumped(docs: Dataset[Doc], dumpPath: String,
-                          maxHamming: Int = 3,
-                          maxBandBucket: Int = 4096): DataFrame = {
+    * missed — the cap is far above anything the test corpora reach,
+    * so the oracle's exact-equality contract is unaffected). Pairs are
+    * kept at hamming ≤ 3. */
+  def phashNearDupsDumped(docs: Dataset[Doc], dumpPath: String): DataFrame =
+    phashNearDupsCapped(docs, dumpPath, MaxBandBucket)
+
+  /** Reps per (band, key) bucket above which [[phashNearDupsDumped]]
+    * prunes the bucket. */
+  private val MaxBandBucket = 4096
+
+  /** [[phashNearDupsDumped]] at an explicit bucket cap — the spec entry
+    * for the cap's recall trade, which no test corpus reaches at
+    * `MaxBandBucket`. */
+  private[graft] def phashNearDupsCapped(docs: Dataset[Doc], dumpPath: String,
+                                         maxBandBucket: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap(d => d.spans.filter(_.kind == "media").map(_.media_ref))
@@ -173,7 +183,7 @@ object MultimodalOps {
       .select(col("a.h").as("ha"), col("b.h").as("hb"))
       .distinct()
       .withColumn("hamming", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
     // expand qualifying hash pairs back to member refs (output-sized)
     val crossPairs = hashPairs
       .join(hashed.select(col("h").as("ha"), col("ref").as("ra")), "ha")

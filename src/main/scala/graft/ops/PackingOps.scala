@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * PREFIX SUM instead:
   *
   *   1. bucket every doc by a VALUE-derived range key
-  *      (`doc_id / ceil((max_id+1)/numBuckets)` — no sampling, so the
+  *      (`doc_id / ceil((max_id+1)/PackBuckets)` — no sampling, so the
   *      bucketing is deterministic across runs/retries, unlike
   *      `repartitionByRange`),
-  *   2. one tiny agg computes per-bucket token totals (≤ numBuckets rows to
-  *      the driver — at 10^12 docs numBuckets is O(cluster cores), still
+  *   2. one tiny agg computes per-bucket token totals (≤ PackBuckets rows to
+  *      the driver — at 10^12 docs PackBuckets is O(cluster cores), still
   *      trivially collectable),
   *   3. exclusive-prefix-sum those totals on the driver and broadcast the
   *      per-bucket base offsets in the task closure,
@@ -36,21 +36,23 @@ import org.apache.spark.sql.functions._
   */
 object PackingOps {
 
+  /** Tokens per pack of [[packChunks]], and the doc-id range buckets the
+    * prefix sum runs over. */
+  private val PackCapacity = 256
+  private val PackBuckets = 32
+
   /** Per-doc packing assignment. Output: (doc_id, n_tokens, global_offset,
-    * start_pack, end_pack), exact under concat-then-chunk at `capacity`
-    * tokens per pack.
+    * start_pack, end_pack), exact under concat-then-chunk at
+    * `PackCapacity` tokens per pack.
     */
-  def packChunks(df: DataFrame, capacity: Int = 256,
-                 numBuckets: Int = 32): DataFrame =
-    packChunksCost(df, size(TextOps.wsTokens(col("text"))), capacity,
-      numBuckets)
+  def packChunks(df: DataFrame): DataFrame =
+    packChunksCost(df, size(TextOps.wsTokens(col("text"))), PackCapacity)
 
   /** `packChunks` over an arbitrary per-doc cost expression — the
     * multimodal form: interleaved docs cost text tokens PLUS a per-media
     * token budget (vision-encoder patch count), but the packing math is
     * cost-agnostic. */
-  def packChunksCost(df: DataFrame, cost: Column, capacity: Int = 256,
-                     numBuckets: Int = 32): DataFrame = {
+  def packChunksCost(df: DataFrame, cost: Column, capacity: Int = 256): DataFrame = {
     require(capacity > 0, "capacity must be positive")
     val spark = df.sparkSession
     import spark.implicits._
@@ -58,11 +60,12 @@ object PackingOps {
     val base = df.select(col("doc_id").cast("long").as("doc_id"),
       cost.cast("long").as("n_tokens"))
 
-    val maxId = base.agg(max(col("doc_id"))).as[Long].head()
-    val bucketWidth = math.max((maxId + numBuckets) / numBuckets, 1L)
+    val top = base.agg(max(col("doc_id"))).head() // null on zero rows
+    val maxId = if (top.isNullAt(0)) 0L else top.getLong(0)
+    val bucketWidth = math.max((maxId + PackBuckets) / PackBuckets, 1L)
     def bucketOf(id: Column): Column = (id / bucketWidth).cast("long")
 
-    // per-bucket totals: ≤ numBuckets rows — the only driver-side state
+    // per-bucket totals: ≤ PackBuckets rows — the only driver-side state
     val totals = base.groupBy(bucketOf(col("doc_id")).as("bucket"))
       .agg(sum(col("n_tokens")).as("total"))
       .as[(Long, Long)].collect().sortBy(_._1)
@@ -156,11 +159,11 @@ object PackingOps {
     * each epoch is an independent permutation of the SAME domain.
     *
     * Returned census proves the contract instead of asserting it: per
-    * (epoch, shard = pos >> 27) — the 32 range-shard files a writer would
+    * (epoch ∈ {0, 1}, shard = pos >> 27) — the 32 range-shard files a writer would
     * cut — n_docs with n_distinct_pos (equal ⇔ injective, since equal
     * positions share a shard), and the min/max position span showing the
     * shards tile the domain. */
-  def feistelShuffle(df: DataFrame, epochs: Int = 2): DataFrame = {
+  def feistelShuffle(df: DataFrame): DataFrame = {
     def feistel(id: Column, epoch: Column): Column = {
       def f(r: Column, round: Int): Column =
         shiftright((r * lit(2654435761L) +
@@ -176,7 +179,7 @@ object PackingOps {
       l * lit(65536L) + r
     }
     df.select(col("doc_id"),
-        explode(sequence(lit(0L), lit(epochs - 1L))).as("epoch"))
+        explode(sequence(lit(0L), lit(1L))).as("epoch"))
       .select(col("epoch"), feistel(col("doc_id"), col("epoch")).as("pos"))
       .groupBy(col("epoch"), shiftright(col("pos"), 27).as("shard"))
       .agg(count(lit(1)).as("n_docs"),

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011) — the vector-COMPRESSION scale path that
   * complements the candidate-PRUNING families (sign-LSH `SimilarityOps`,
-  * IVF `IvfOps`): the embedding is split into `m` subspaces, each quantized
-  * by its own `k`-centroid codebook, so a d-dim float vector stores as m
-  * single-byte codes (64 dims × 4 B → 4 B here, 64×) and distance to a
-  * query is computed WITHOUT decompressing via ADC (asymmetric distance
+  * IVF `IvfOps`): the embedding is split into m = `PqM` subspaces, each
+  * quantized by its own k-centroid codebook (k = `PqK`), so a d-dim float
+  * vector stores as m single-byte codes (64 dims × 4 B → 4 B here, 64×)
+  * and distance to a query is computed WITHOUT decompressing via ADC (asymmetric distance
   * computation): per query, one m×k table of exact subspace distances is
   * precomputed, and each candidate costs m table lookups + adds instead of
   * d multiplies. At 10^12 rows the codes table is what fits in cluster
@@ -48,18 +48,27 @@ object PqOps {
     s
   }
 
-  /** codebook(s)(j) = centroid j of subspace s (subDim = d/m longs each).
-    * Deterministic integer Lloyd, all m subspaces trained in the SAME
+  /** Codebook shape: `PqM` subspaces of `PqK` centroids, trained by
+    * `PqIters` Lloyd iterations. */
+  private val PqM = 4
+  private val PqK = 16
+  private val PqIters = 3
+
+  /** codebook(s)(j) = centroid j of subspace s (subDim = d/m longs each,
+    * m = `PqM`, k = `PqK`). Deterministic integer Lloyd over `PqIters`
+    * iterations, all m subspaces trained in the SAME
     * scans: init from the first k vectors by vec_id; each iteration is one
     * pass emitting (subspace, code) partial sums — ≤ m·k keys through the
     * shuffle per partition regardless of corpus size; update is
     * floorDiv(sum, n) per dim; empty cells keep their centroid. */
-  def train(emb: DataFrame, m: Int = 4, k: Int = 16,
-            iters: Int = 3): Array[Array[LVec]] = {
+  def train(emb: DataFrame): Array[Array[LVec]] = {
+    val (m, k) = (PqM, PqK)
     val spark = emb.sparkSession
     import spark.implicits._
     val vecs = quantized(emb)
-    val dim = vecs.head()._2.length
+    val first = vecs.take(1)
+    if (first.isEmpty) return Array.fill(m)(Array.empty[LVec]) // no vectors, no centroids
+    val dim = first.head._2.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
     var cb: Array[Array[LVec]] = {
@@ -67,7 +76,7 @@ object PqOps {
       Array.tabulate(m)(s => seed.map(v =>
         java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim)))
     }
-    (1 to iters).foreach { _ =>
+    (1 to PqIters).foreach { _ =>
       val bc = spark.sparkContext.broadcast(cb)
       val sums = vecs.mapPartitions { it =>
         val cs = bc.value
@@ -206,12 +215,18 @@ object PqOps {
       .toDF("query_id", outCol)
   }
 
-  /** Exact integer-L2 top-k of every vector against the broadcast query
+  /** A recall audit's answer on an empty table: no query, no row. */
+  private def noQueries(spark: SparkSession, top1: String): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, Long, Long)].toDF("query_id", "n_overlap", top1, "exact_top1")
+  }
+
+  /** Exact integer-L2 top-`RecallK` of every vector against the broadcast query
     * set over the FIRST `dims` dimensions (dims = full length → exact
     * ranking; a prefix → the Matryoshka truncated ranking). The p07-class
     * broadcast scan that grades sketches, not the scale path. */
   private def intL2TopDf(vecs: Dataset[(Long, LVec)], qs: Array[(Long, LVec)],
-                         dims: Int, topK: Int, outCol: String): DataFrame = {
+                         dims: Int, outCol: String): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val bcQ = spark.sparkContext.broadcast(qs)
@@ -227,24 +242,26 @@ object PqOps {
       }
     }
       .groupByKey(_._1)
-      .agg(new TopK.TopKIds(topK).toColumn.name(outCol))
+      .agg(new TopK.TopKIds(SimilarityOps.RecallK).toColumn.name(outCol))
       .toDF("query_id", outCol)
   }
 
   /** ADC recall audit from the DUMPED codebook + codes tables (the same
     * parquet the DuckDB oracle reads — p13's topKFrom contract): per
-    * query, |ADC top-k ∩ exact top-k| plus both rank-1 ids. */
-  def adcRecallFrom(emb: DataFrame, codes: DataFrame, cbDf: DataFrame,
-                    numQueries: Int = 10, topK: Int = 10): DataFrame = {
+    * query (the first `SimilarityOps.RecallQueries` vectors),
+    * |ADC top-k ∩ exact top-k| at k = `RecallK` plus both rank-1 ids. */
+  def adcRecallFrom(emb: DataFrame, codes: DataFrame, cbDf: DataFrame): DataFrame = {
+    val vecs = quantized(emb)
+    val qs = vecs.orderBy(col("_1")).limit(SimilarityOps.RecallQueries).collect()
+    if (qs.isEmpty) return noQueries(emb.sparkSession, "adc_top1")
     val cb = loadCodebook(cbDf)
     val (m, k, subDim) = (cb.length, cb(0).length, cb(0)(0).length)
-    val vecs = quantized(emb)
-    val qs = vecs.orderBy(col("_1")).limit(numQueries).collect()
     val dtab = qs.map { case (_, v) =>
       Array.tabulate(m)(s => Array.tabulate(k)(j => sqDistSub(v, s * subDim, cb(s)(j))))
     }
-    val adcTop = adcTopDf(codes, qs.map(_._1), dtab, m, topK, "adc_topk")
-    val exactTop = intL2TopDf(vecs, qs, m * subDim, topK, "exact_topk")
+    val adcTop = adcTopDf(codes, qs.map(_._1), dtab, m, SimilarityOps.RecallK,
+      "adc_topk")
+    val exactTop = intL2TopDf(vecs, qs, m * subDim, "exact_topk")
     adcTop.join(exactTop, "query_id")
       .select(col("query_id"),
         size(array_intersect(col("adc_topk"), col("exact_topk")))
@@ -254,27 +271,30 @@ object PqOps {
       .orderBy(col("query_id"))
   }
 
+  /** Stage-1 candidates per query of [[rerankRecall]]. */
+  private val RerankCandidates = 50
+
   /** Two-stage retrieval (the production ANN serving shape): stage 1 =
-    * ADC over codes produces `candidates` ids per query (compressed-domain
-    * scan, m lookups/vector); stage 2 = exact integer L2 over ONLY those
-    * candidates (one equi-join on vec_id brings ≤ candidates raw vectors
-    * per query back) re-ranks to top-k. Graded against the global exact
-    * top-k: rerank recall ≥ raw-ADC recall by construction whenever the
-    * true neighbors survive stage 1 — the audit shows what candidate
-    * depth buys. */
-  def rerankRecall(emb: DataFrame, codes: DataFrame, cbDf: DataFrame,
-                   candidates: Int = 50, numQueries: Int = 10,
-                   topK: Int = 10): DataFrame = {
+    * ADC over codes produces `RerankCandidates` ids per query
+    * (compressed-domain scan, m lookups/vector); stage 2 = exact integer
+    * L2 over ONLY those candidates (one equi-join on vec_id brings
+    * ≤ `RerankCandidates` raw vectors per query back) re-ranks to top-k
+    * (`SimilarityOps.RecallK`, for the first `RecallQueries` vectors).
+    * Graded against the global exact top-k: rerank recall ≥ raw-ADC
+    * recall by construction whenever the true neighbors survive stage 1 —
+    * the audit shows what candidate depth buys. */
+  def rerankRecall(emb: DataFrame, codes: DataFrame, cbDf: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val vecs = quantized(emb)
+    val qs = vecs.orderBy(col("_1")).limit(SimilarityOps.RecallQueries).collect()
+    if (qs.isEmpty) return noQueries(spark, "rerank_top1")
     val cb = loadCodebook(cbDf)
     val (m, k, subDim) = (cb.length, cb(0).length, cb(0)(0).length)
-    val vecs = quantized(emb)
-    val qs = vecs.orderBy(col("_1")).limit(numQueries).collect()
     val dtab = qs.map { case (_, v) =>
       Array.tabulate(m)(s => Array.tabulate(k)(j => sqDistSub(v, s * subDim, cb(s)(j))))
     }
-    val cand = adcTopDf(codes, qs.map(_._1), dtab, m, candidates, "cand")
+    val cand = adcTopDf(codes, qs.map(_._1), dtab, m, RerankCandidates, "cand")
       .select(col("query_id"), explode(col("cand")).as("vec_id"))
     val bcQ = spark.sparkContext.broadcast(qs.toMap)
     // stage 2: fetch candidate vectors (vec_id equi-join) + exact re-rank
@@ -291,9 +311,9 @@ object PqOps {
         (qid, id, -d.toDouble)
       }
       .groupByKey(_._1)
-      .agg(new TopK.TopKIds(topK).toColumn.name("rerank_topk"))
+      .agg(new TopK.TopKIds(SimilarityOps.RecallK).toColumn.name("rerank_topk"))
       .toDF("query_id", "rerank_topk")
-    val exactTop = intL2TopDf(vecs, qs, m * subDim, topK, "exact_topk")
+    val exactTop = intL2TopDf(vecs, qs, m * subDim, "exact_topk")
     reranked.join(exactTop, "query_id")
       .select(col("query_id"),
         size(array_intersect(col("rerank_topk"), col("exact_topk")))
@@ -339,6 +359,10 @@ object PqOps {
       .orderBy(col("cohort"))
   }
 
+  /** Chunks per document and dims reported by [[chunkPooling]]. */
+  private val ChunksPerDoc = 5
+  private val PooledDims = 8
+
   /** Chunk→document embedding pooling: long documents are embedded as
     * CHUNKS (context-window bound) and a document vector is the mean of
     * its chunk vectors — the standard retrieval aggregation. Mean is
@@ -347,18 +371,17 @@ object PqOps {
     * runs as a typed Aggregator merging fixed-width long arrays, so the
     * shuffle carries ONE partial-sum row per (doc, partition), never the
     * chunk set. Output exploded (group_id, dim, pooled_q) for the first
-    * `outDims` dims (the oracle-friendly projection; the full array is
-    * the same buffer). Chunk→doc assignment here: vec_id div chunksPerDoc. */
-  def chunkPooling(emb: DataFrame, chunksPerDoc: Int = 5,
-                   outDims: Int = 8): DataFrame = {
+    * `PooledDims` dims (the oracle-friendly projection; the full array is
+    * the same buffer). Chunk→doc assignment here: vec_id div `ChunksPerDoc`. */
+  def chunkPooling(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val q = quantized(emb)
-      .map { case (id, v) => (id / chunksPerDoc, v) }
+      .map { case (id, v) => (id / ChunksPerDoc, v) }
     q.groupByKey(_._1)
       .agg(new VecSumAgg().toColumn.name("acc"))
       .flatMap { case (g, (sum, n)) =>
-        Iterator.range(0, math.min(outDims, sum.length)).map(d =>
+        Iterator.range(0, math.min(PooledDims, sum.length)).map(d =>
           (g, d.toLong, Math.floorDiv(sum(d), n)))
       }
       .toDF("group_id", "dim", "pooled_q")
@@ -436,18 +459,21 @@ object PqOps {
       .orderBy(col("dim"), col("norm2_log2_bucket"))
   }
 
+  /** Prefix width [[prefixRecall]] ranks with. */
+  private val PrefixDims = 16
+
   /** Matryoshka (MRL) truncation audit: ranking quality of the FIRST
-    * `prefixDims` dimensions vs the full vector — the adaptive-retrieval
+    * `PrefixDims` dimensions vs the full vector — the adaptive-retrieval
     * trick where a d/4 prefix serves the candidate scan at 4× less memory
-    * bandwidth and the full vector only re-ranks. Integer L2 both sides. */
-  def prefixRecall(emb: DataFrame, prefixDims: Int = 16,
-                   numQueries: Int = 10, topK: Int = 10): DataFrame = {
+    * bandwidth and the full vector only re-ranks. Integer L2 both sides,
+    * top-`SimilarityOps.RecallK` of the first `RecallQueries` vectors. */
+  def prefixRecall(emb: DataFrame): DataFrame = {
     val vecs = quantized(emb)
-    val qs = vecs.orderBy(col("_1")).limit(numQueries).collect()
-    val dim = qs.head._2.length
-    require(prefixDims > 0 && prefixDims <= dim)
-    val pre = intL2TopDf(vecs, qs, prefixDims, topK, "prefix_topk")
-    val full = intL2TopDf(vecs, qs, dim, topK, "exact_topk")
+    val qs = vecs.orderBy(col("_1")).limit(SimilarityOps.RecallQueries).collect()
+    val dim = qs.headOption.fold(PrefixDims)(_._2.length) // no query: nothing to rank
+    require(PrefixDims <= dim)
+    val pre = intL2TopDf(vecs, qs, PrefixDims, "prefix_topk")
+    val full = intL2TopDf(vecs, qs, dim, "exact_topk")
     pre.join(full, "query_id")
       .select(col("query_id"),
         size(array_intersect(col("prefix_topk"), col("exact_topk")))

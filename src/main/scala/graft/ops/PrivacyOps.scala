@@ -27,13 +27,17 @@ import org.apache.spark.sql.functions._
   */
 object PrivacyOps {
 
+  /** Noise seed of [[dpHistogram]]. */
+  private val DpSeed = "e1"
+
   /** ε = ln 2 DP release of the (lang, source) doc-count histogram:
     * every domain cell (including empties) gets noisy = n + G₁ − G₂
     * and the post-processed released = max(noisy, 0). Neighboring
     * corpora differ in one doc → one cell moves by 1 (sensitivity 1).
     * The label domains are treated as PUBLIC (standard assumption —
-    * they come from the schema, not the data). */
-  def dpHistogram(docs: DataFrame, seed: String = "e1"): DataFrame = {
+    * they come from the schema, not the data). The noise is keyed by the
+    * cell and `DpSeed`. */
+  def dpHistogram(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val counts = docs.groupBy(col("lang"), col("source"))
@@ -45,7 +49,7 @@ object PrivacyOps {
       .as[(String, String, Long)]
       .map { case (lang, source, n) =>
         def tz(tag: String): Long = {
-          val h = Corpus64.md5Low64(s"$lang|$source|$seed|$tag") &
+          val h = Corpus64.md5Low64(s"$lang|$source|$DpSeed|$tag") &
             Long.MaxValue
           java.lang.Long.numberOfTrailingZeros(h).toLong
         }

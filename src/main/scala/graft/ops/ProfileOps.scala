@@ -17,16 +17,18 @@ import org.apache.spark.sql.functions._
   */
 object ProfileOps {
 
+  /** Buckets B of [[equiDepthHistogram]]. */
+  private val HistBuckets = 10
+
   /** Equi-depth histogram (ANALYZE's companion stat to [[profile]]):
-    * boundaries are the exact q/B-quantiles via the rank-over-distinct-
+    * boundaries are the exact q/B-quantiles (B = `HistBuckets`) via the rank-over-distinct-
     * values formulation (the q25 method — cumulative counts over the
     * DISTINCT value domain, never a global row sort), collected as B−1
     * scalars (the IvfOps-style tiny-collect contract), then every row is
     * bucketed by a codegen'd comparison chain and aggregated once.
     * Ties bucket low (bucket = #boundaries strictly below the value), so
     * the histogram is deterministic under duplicates. */
-  def equiDepthHistogram(df: DataFrame, valueCol: String,
-                         buckets: Int = 10): DataFrame = {
+  def equiDepthHistogram(df: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val v = df.select(col(valueCol).cast("long").as("v"))
     val w = Window.orderBy(col("v"))
@@ -36,8 +38,8 @@ object ProfileOps {
     val n = v.count()
     val spark = df.sparkSession
     import spark.implicits._
-    val rks = (1 until buckets)
-      .map(q => (q, (q.toLong * n + buckets - 1) / buckets))
+    val rks = (1 until HistBuckets)
+      .map(q => (q, (q.toLong * n + HistBuckets - 1) / HistBuckets))
       .toDF("q", "rk")
     // all B−1 boundaries in ONE pass over the distinct-value rollup
     val bounds = cum.crossJoin(broadcast(rks))
@@ -54,23 +56,27 @@ object ProfileOps {
       .orderBy(col("bucket"))
   }
 
+  /** Block widths (log2 of ids per block) of [[missingIdRanges]] and
+    * [[denseRanks]]. */
+  private val MissingBlockBits = 8
+  private val DenseBlockBits = 5
+
   /** Ingest-completeness audit: the maximal MISSING id ranges of a table
     * whose key is expected dense (upload manifests, shard row counters) —
     * after a 6-hour 10^12-doc ingest, "which id ranges never landed" is
     * THE resumability question, and rescanning must not cost a global
     * sort. Two-level exact formulation: ids are bucketed into fixed
-    * 2^blockBits blocks, gaps WITHIN a block come from a block-local
+    * 2^`MissingBlockBits` blocks, gaps WITHIN a block come from a block-local
     * window (embarrassingly parallel — one keyed shuffle), and gaps that
     * CROSS block boundaries (including entirely-missing blocks) come from
     * a second window over the per-block (min, max) summary — one row per
     * non-empty block, thousands of rows where the naive global-sort
     * window would order 10^12. Union of the two is exactly the lead()-
     * over-all-ids answer, which is how the oracle computes it. */
-  def missingIdRanges(df: DataFrame, idCol: String,
-                      blockBits: Int = 12): DataFrame = {
+  def missingIdRanges(df: DataFrame, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ids = df.select(col(idCol).cast("long").as("id"))
-      .withColumn("blk", shiftright(col("id"), blockBits))
+      .withColumn("blk", shiftright(col("id"), MissingBlockBits))
     val wLocal = Window.partitionBy(col("blk")).orderBy(col("id"))
     val local = ids.withColumn("nxt", lead(col("id"), 1).over(wLocal))
       .where(col("nxt") - col("id") > 1)
@@ -88,18 +94,17 @@ object ProfileOps {
   /** Global DENSE row numbering without a global sort — the 10^12-row
     * zipWithIndex: a single `row_number() OVER (ORDER BY key)` funnels the
     * whole table through ONE partition, so the rank is computed in two
-    * levels instead. Keys are bucketed into 2^blockBits blocks (monotone
+    * levels instead. Keys are bucketed into 2^`DenseBlockBits` blocks (monotone
     * in the key, so block order IS key order); each block ranks locally
     * (keyed shuffle, embarrassingly parallel) and a prefix-sum over the
     * tiny per-block count summary supplies each block's global offset.
     * dense_id = block offset + local rank − 1 — exactly row_number()−1,
     * which is how the oracle computes it. Requires unique keys (ties
     * within a key would make the local order nondeterministic). */
-  def denseRanks(df: DataFrame, keyCol: String,
-                 blockBits: Int = 12): DataFrame = {
+  def denseRanks(df: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = df.select(col(keyCol).cast("long").as("k"))
-      .withColumn("blk", shiftright(col("k"), blockBits))
+      .withColumn("blk", shiftright(col("k"), DenseBlockBits))
     val wLocal = Window.partitionBy(col("blk")).orderBy(col("k"))
     val local = keyed.withColumn("rn", row_number().over(wLocal))
     val wBlocks = Window.orderBy(col("blk"))

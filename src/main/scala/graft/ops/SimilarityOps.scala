@@ -196,7 +196,20 @@ object SimilarityOps {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Brute-force cosine top-k: the first `numQueries` vectors (by vec_id)
+  /** The query set of the retrieval and recall ops: the first
+    * `RecallQueries` vectors (or docs) by id, each ranked to its top
+    * `RecallK` neighbours. */
+  private[graft] val RecallQueries = 10
+  private[graft] val RecallK = 10
+
+  /** The vector query set, (query_id, q_emb) — the convention every ANN op
+    * in the engine shares (p07/p89). */
+  private[ops] def recallQueries(emb: DataFrame): DataFrame =
+    emb.orderBy(col("vec_id")).limit(RecallQueries)
+      .select(col("vec_id").cast("long").as("query_id"),
+        col("embedding").cast("array<double>").as("q_emb"))
+
+  /** Brute-force cosine top-k: the first `RecallQueries` vectors (by vec_id)
     * are the query set (broadcast — small side), ranked against the whole
     * table. Output is integer-only (query, rank, neighbor) so the oracle is
     * float-free; ties break by neighbor id.
@@ -205,18 +218,15 @@ object SimilarityOps {
     * to a BroadcastNestedLoopJoin — here that IS the right plan (the big
     * side streams once against Q broadcast rows; there is no equi-key), not
     * the accidental-cartesian smell PlanSweep flags it as. */
-  def bruteTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
-    val queries = emb.orderBy(col("vec_id")).limit(numQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
+  def bruteTopK(emb: DataFrame): DataFrame = {
     val scored = emb
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").cast("array<double>").as("n_emb"))
-      .crossJoin(broadcast(queries))
+      .crossJoin(broadcast(recallQueries(emb)))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("score"))
-    rankTopK(scored, k)
+    rankTopK(scored, RecallK)
   }
 
   /** Contrastive hard-negative mining (the DPR/SimCSE data recipe): for
@@ -228,8 +238,8 @@ object SimilarityOps {
     * the candidate generator for the LSH/IVF bucket families and keeps
     * the label exclusion as a post-candidate filter. Integer-only output
     * (query_id, rank, neighbor_id); ties break by neighbor_id. */
-  def hardNegatives(emb: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
-    val queries = emb.orderBy(col("vec_id")).limit(numQueries)
+  def hardNegatives(emb: DataFrame): DataFrame = {
+    val queries = emb.orderBy(col("vec_id")).limit(RecallQueries)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("q_emb"),
         col("label").as("q_label"))
@@ -240,7 +250,7 @@ object SimilarityOps {
       .where(col("label") =!= col("q_label"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("score"))
-    rankTopK(scored, k)
+    rankTopK(scored, RecallK)
   }
 
   /** Symmetric per-dimension int8 scalar quantization of the embedding
@@ -262,7 +272,7 @@ object SimilarityOps {
       .select(col("dim"), col("min_q"), col("max_q")).collect()
       .sortBy(_.getInt(0))
       .map(r => math.max(math.max(r.getLong(2), -r.getLong(1)), 1L))
-    val scArr = scales.mkString("array(", "L,", "L)")
+    val scArr = scales.map(s => s"${s}L").mkString("array(", ",", ")")
     emb.select(col("vec_id"), expr(
       s"""transform(cast(embedding as array<double>), (x, i) -> cast(
          |  if(floor(x * 1000) >= 0,
@@ -284,23 +294,21 @@ object SimilarityOps {
     * products (≪ 2^53), so the cosine of quantized vectors is
     * bit-deterministic in BOTH engines despite the float division.
     * Output: (query_id, n_overlap, recall_pct) — integer-only. */
-  def quantizedRecall(emb: DataFrame, numQueries: Int = 10,
-                      k: Int = 10): DataFrame = {
+  def quantizedRecall(emb: DataFrame): DataFrame = {
     val q = quantizeEmbeddings(emb)
       .select(col("vec_id"), col("q_emb").as("embedding"))
-    val qRank = bruteTopK(q, numQueries, k)
-    val eRank = bruteTopK(emb, numQueries, k)
+    val qRank = bruteTopK(q)
+    val eRank = bruteTopK(emb)
     val overlap = qRank.as("q").join(eRank.as("e"),
         col("q.query_id") === col("e.query_id") &&
           col("q.neighbor_id") === col("e.neighbor_id"))
       .groupBy(col("q.query_id").as("query_id"))
       .agg(count(lit(1)).as("n_overlap"))
-    emb.orderBy(col("vec_id")).limit(numQueries)
-      .select(col("vec_id").as("query_id"))
+    recallQueries(emb).select(col("query_id"))
       .join(overlap, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .withColumn("recall_pct", expr(s"(n_overlap * 100) div $k"))
+      .withColumn("recall_pct", expr(s"(n_overlap * 100) div $RecallK"))
       .orderBy(col("query_id"))
   }
 
@@ -357,11 +365,12 @@ object SimilarityOps {
     * the brute kernel ([[bruteTopPairs]]) below [[TopPairsCollapseFloor]] rows
     * or when its cost rule says the collapse does not pay. Both end in the
     * same ranked tail ([[rankedPairs]]). Integer-only output (rank, vec_a,
-    * vec_b); ties break by (vec_a, vec_b); k ≤ 0 returns an empty frame of the
-    * same schema. */
-  def topPairs(emb: DataFrame, k: Int = 100,
-               maxBroadcastRows: Long = BruteRowLimit): DataFrame =
-    topPairsWithFloor(emb, k, maxBroadcastRows, TopPairsCollapseFloor)
+    * vec_b) of the top `TopPairsK`; ties break by (vec_a, vec_b). */
+  def topPairs(emb: DataFrame, maxBroadcastRows: Long = BruteRowLimit): DataFrame =
+    topPairsWithFloor(emb, TopPairsK, maxBroadcastRows, TopPairsCollapseFloor)
+
+  /** Pairs [[topPairs]] returns. */
+  private[graft] val TopPairsK = 100
 
   /** Row count below which [[topPairs]] skips the collapse: under it the
     * N² kernel is already sub-second and the brute plan is the cheaper
@@ -653,14 +662,17 @@ object SimilarityOps {
           col("embedding").cast("array<double>"), planes).as("bucket"))
     }.reduce(_ unionByName _)
 
+  /** Cosine floor of the embedding near-duplicate pairs. */
+  private[graft] val NearDupMinCosine = 0.45
+
   /** Embedding-cosine near-duplicate pairs: candidates share a bucket in ANY
-    * of the LSH tables (deduped), then exact-cosine verified ≥ threshold.
+    * of the LSH tables (deduped), then exact-cosine verified ≥
+    * `NearDupMinCosine`.
     * The bucket join shuffles only (vec_id, table_id, bucket); embeddings
     * (fixed-width) are fetched for candidates via vec_id-keyed joins —
     * bucketed-by-vec_id storage makes those co-located at scale. */
-  private[graft] def embeddingNearDups(emb: DataFrame,
-                                       minCosine: Double = 0.9): DataFrame =
-    embeddingNearDupsFrom(emb, lshBucketsMulti(emb), minCosine)
+  private[graft] def embeddingNearDups(emb: DataFrame): DataFrame =
+    embeddingNearDupsFrom(emb, lshBucketsMulti(emb))
 
   /** Same, from an already-materialized bucket table — the driver query
     * dumps `lshBucketsMulti` so the DuckDB oracle can rebuild the identical
@@ -686,8 +698,7 @@ object SimilarityOps {
     * and a group whose rep is missing from `buckets` loses its cross-pair
     * candidacy. To probe a partial index, restrict `emb` to the vec_ids
     * it covers first. */
-  def embeddingNearDupsFrom(emb: DataFrame, buckets: DataFrame,
-                            minCosine: Double = 0.9): DataFrame = {
+  def embeddingNearDupsFrom(emb: DataFrame, buckets: DataFrame): DataFrame = {
     val vecs = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("e"))
     val reps = vecs.groupBy(col("e")).agg(min(col("vec_id")).as("rep_id"))
@@ -695,7 +706,7 @@ object SimilarityOps {
       .select(col("rep_id"), col("vec_id"))
     val repBuckets = buckets.join(
       reps.select(col("rep_id").as("vec_id")), Seq("vec_id"), "left_semi")
-    val repPairs = bucketPairsVerify(repBuckets, emb, minCosine)
+    val repPairs = bucketPairsVerify(repBuckets, emb, NearDupMinCosine)
     val within = members.as("x").join(members.as("y"),
         col("x.rep_id") === col("y.rep_id") &&
           col("x.vec_id") < col("y.vec_id"))
@@ -704,7 +715,7 @@ object SimilarityOps {
       .join(reps.select(col("rep_id"), col("e")), "rep_id")
       .select(col("vec_a"), col("vec_b"),
         cosine(col("e"), col("e")).as("score"))
-      .where(col("score") >= minCosine)
+      .where(col("score") >= NearDupMinCosine)
     val cross = repPairs
       .join(members.select(col("rep_id").as("vec_a"),
         col("vec_id").as("ma")), "vec_a")
@@ -737,10 +748,13 @@ object SimilarityOps {
       .where(col("score") >= minCosine) // pair output: no global sort
   }
 
+  /** Points `kcenterCoreset` selects. */
+  private val CoresetK = 4
+
   /** Greedy k-center diversity CORESET (farthest-point traversal — the
     * classic 2-approximation, the shape behind diversity-sampling passes
     * like DiverseEvol/coreset selection): seed at the minimum vec_id,
-    * then k−1 rounds of "pick the point farthest from the selected set".
+    * then `CoresetK`−1 rounds of "pick the point farthest from the selected set".
     * Coordinates are integer-quantized `floor(double(x)·1000)` (the
     * dimensionStats convention — float32→float64 widening is exact, so
     * both engines floor identical doubles) and distances are integer
@@ -751,14 +765,13 @@ object SimilarityOps {
     * iterate-with-tiny-driver-state contract as IVF Lloyd (IvfOps); k is
     * a constant (single-digit), never data-sized. Output: one row per
     * round (iter, vec_id, min_d2 = the selected point's distance to the
-    * previously-selected set; 0 for the seed). Zero rows or k ≤ 0 select
-    * nothing: an empty frame of the same schema. */
-  def kcenterCoreset(emb: DataFrame, k: Int = 4): DataFrame = {
+    * previously-selected set; 0 for the seed). Zero rows select nothing:
+    * an empty frame of the same schema. */
+  def kcenterCoreset(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     def out = spark.createDataFrame(rows.toSeq).toDF("iter", "vec_id", "min_d2")
-    if (k <= 0) return out
     val q = emb.select(col("vec_id").cast("long"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000)" +
           " AS BIGINT))").as("v"))
@@ -770,7 +783,7 @@ object SimilarityOps {
     var selVecs = List(seedVec)
     rows += ((1L, seedId, 0L))
     var it = 2
-    while (it <= k) {
+    while (it <= CoresetK) {
       val sel = selVecs
       val (farId, farD2) = q.map { case (id, v) =>
         var best = Long.MaxValue

@@ -33,21 +33,23 @@ object SkewJoin {
     * how large the input. This is the derivation pass `saltedJoin`'s
     * heavyKeys parameter documents. */
   private[graft] def heavyKeys(df: DataFrame, key: String,
-                               minSharePct: Double = 1.0): Seq[Any] = {
+                               minSharePct: Double): Seq[Any] = {
     val counts = df.groupBy(col(key)).agg(count(lit(1)).as("__n"))
     val total = CorpusOps.sumOrZero(counts.agg(sum(col("__n"))))
     counts.where(col("__n") * 100 >= lit(total * minSharePct))
       .select(col(key)).collect().map(_.get(0)).toSeq
   }
 
-  /** `saltedJoin` with the heavy-key list derived by `heavyKeys` — the
-    * one-call adaptive form for when the skew profile isn't known ahead
-    * of time. */
+  /** Row share (percent) at which [[adaptiveSaltedJoin]] salts a key. */
+  private val HeavySharePct = 10.0
+
+  /** `saltedJoin` with the heavy-key list derived by `heavyKeys` at
+    * `HeavySharePct` — the one-call adaptive form for when the skew
+    * profile isn't known ahead of time. */
   def adaptiveSaltedJoin(probe: DataFrame, build: DataFrame, key: String,
-                         saltSource: Column,
-                         minSharePct: Double = 1.0): DataFrame =
+                         saltSource: Column): DataFrame =
     saltedJoin(probe, build, key, saltSource,
-      heavyKeys(probe, key, minSharePct))
+      heavyKeys(probe, key, HeavySharePct))
 
   /** @param saltSource a probe-side column with per-row variation (an id,
     *                   an offset — anything; only its hash is used). */

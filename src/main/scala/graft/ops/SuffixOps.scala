@@ -288,10 +288,19 @@ object SuffixOps {
     (ranked, Some(sorted), total)
   }
 
+  /** Text cap of the public suffix ops, the LCP window of [[lcpCensus]]
+    * and [[repeatSpans]], the repeat length [[repeatSpans]] flags, and the
+    * log2 of ranks per [[suffixCensus]] shard. */
+  private[graft] val SuffixMaxLen = 128
+  private[graft] val LcpWindow = 64
+  private[graft] val RepeatMinLen = 20
+  private[graft] val CensusShardShift = 9
+
   /** LCP census over the global suffix order — the Kasai-style companion
     * to [[suffixRanks]]: for every adjacent pair of DISTINCT ranks
     * (r, r+1), the length of the longest common prefix of the two suffix
-    * strings, capped at `window` chars. This is the signal exact-substring
+    * strings, capped at `LcpWindow` chars, over the `SuffixMaxLen`-capped
+    * texts. This is the signal exact-substring
     * dedup actually thresholds on (Lee et al. 2021 remove repeats with
     * LCP ≥ 50 tokens): a long verbatim repeat appears as an adjacent-rank
     * pair with a large LCP, and the census histogram is the corpus's
@@ -304,7 +313,7 @@ object SuffixOps {
     *      ranks are equal suffix strings, so the class's window is any
     *      member's window; the groupBy shuffles (rnk, doc, pos) triples
     *      only;
-    *   2. the `window` cap: dedup thresholds at some repeat length W, so
+    *   2. the `LcpWindow` cap: dedup thresholds at some repeat length W, so
     *      each representative carries exactly min(W, remaining) chars —
     *      O(n_distinct · W) bytes total, the tunable that replaces len².
     *      Two windows that are equal through all W chars report LCP = W
@@ -322,9 +331,8 @@ object SuffixOps {
     * duplicate docs — so the whole chain runs over one rep per distinct
     * capped text with NO member expansion at all.
     */
-  def lcpCensus(docs: DataFrame, maxLen: Int = 192,
-                window: Int = 64): DataFrame =
-    lcpCensusOf(collapse(docs, maxLen)._1, docs, maxLen, window)
+  def lcpCensus(docs: DataFrame): DataFrame =
+    lcpCensusOf(collapse(docs, SuffixMaxLen)._1, docs, SuffixMaxLen, LcpWindow)
 
   /** [[lcpCensus]] over the suffixes of `src` (the spec reference passes
     * `src = docs`). Window text comes from the ORIGINAL `docs` table
@@ -354,7 +362,7 @@ object SuffixOps {
 
   /** Verbatim-repeat REMOVAL PLAN — the operator the suffix ranks and the
     * LCP exist for (Lee et al. 2021 §3, ExactSubstr): every suffix whose
-    * repeat length reaches `minLen` contributes a flagged span
+    * repeat length reaches `RepeatMinLen` contributes a flagged span
     * [pos, pos + repLen), and per-doc overlapping/touching spans merge
     * into maximal intervals — the byte ranges a dedup pass would cut.
     *
@@ -363,7 +371,7 @@ object SuffixOps {
     * equal strings, so all members of a class share its neighbor LCPs)
     * plus the duplicate-class term: a class with ≥ 2 members is a suffix
     * that appears verbatim elsewhere, so its whole (window-capped) length
-    * counts. All lengths are capped at `window` — the production contract
+    * counts. All lengths are capped at `LcpWindow` — the production contract
     * is "flag repeats ≥ minLen, report span lengths up to W", which keeps
     * every intermediate O(n) rows / O(nd·W) bytes.
     *
@@ -382,9 +390,9 @@ object SuffixOps {
     * fires when a suffix string occurs ≥ 2 times corpus-wide), which the
     * rep path recovers exactly as Σ cluster sizes over the class's reps.
     */
-  def repeatSpans(docs: DataFrame, maxLen: Int = 128, window: Int = 64,
-                  minLen: Int = 20): DataFrame =
-    repeatSpansKernel(docs, maxLen, window, minLen, collapseExact = true)
+  def repeatSpans(docs: DataFrame): DataFrame =
+    repeatSpansKernel(docs, SuffixMaxLen, LcpWindow, RepeatMinLen,
+      collapseExact = true)
 
   /** [[repeatSpans]] with the collapse on or off (`false` is the per-doc
     * spec reference). */
@@ -495,7 +503,8 @@ object SuffixOps {
     }
   }
 
-  /** Driver-gate census of the full rank array: 512-rank shards carrying
+  /** Driver-gate census of the full rank array: 512-rank shards
+    * (2^`CensusShardShift`) of the `SuffixMaxLen`-capped texts, carrying
     * suffix/distinct counts plus two product checksums that bind every
     * rank to its (doc, pos) — any single wrong rank moves a shard or
     * breaks a checksum. Integer-exact: rnk < n and the factors are < 2^10,
@@ -506,12 +515,11 @@ object SuffixOps {
     * csize/dsum-weighted sum over rep rows — the member table is never
     * materialized (count → Σ csize, Σ pos → Σ pos·csize,
     * Σ rnk·(doc%997+1) → Σ rnk·dsum); distinct ranks are unweighted. */
-  def suffixCensus(docs: DataFrame, maxLen: Int = 192,
-                   shardShift: Int = 9): DataFrame = {
-    val (reps, _, stats) = collapse(docs, maxLen)
-    ranksCore(reps, maxLen)
+  def suffixCensus(docs: DataFrame): DataFrame = {
+    val (reps, _, stats) = collapse(docs, SuffixMaxLen)
+    ranksCore(reps, SuffixMaxLen)
       .join(stats, "doc_id")
-      .groupBy(shiftright(col("rnk"), shardShift).as("shard"))
+      .groupBy(shiftright(col("rnk"), CensusShardShift).as("shard"))
       .agg(sum(col("csize")).as("n_suffixes"),
         countDistinct(col("rnk")).as("n_distinct"),
         sum(col("pos").cast("long") * col("csize")).as("sum_pos"),

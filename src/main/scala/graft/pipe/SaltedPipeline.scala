@@ -32,18 +32,21 @@ object SaltedPipeline {
   /** Spans per salted group of a heavy doc. */
   private val GroupSize = 4
 
-  /** Salted run: heavy docs (≥ heavyThreshold spans) are exploded into span
+  /** Spans at which a doc counts as heavy. */
+  private val HeavyThreshold = 8
+
+  /** Salted run: heavy docs (≥ `HeavyThreshold` spans) are exploded into span
     * groups of `GroupSize`, OCR'd in parallel, re-merged by doc_id; light
     * docs take the fused path. So do oversize docs, heavy or not: the fused
     * path turns them into `Rejected` rows in its kernel, so the cap is never
     * re-checked here. Like the fused path's default, it runs without the
     * Donut fallback. */
-  def run(docs: Dataset[Doc], heavyThreshold: Int = 8): Dataset[DocResult] = {
+  def run(docs: Dataset[Doc]): Dataset[DocResult] = {
     val spark = docs.sparkSession
     import spark.implicits._
 
     val isHeavy = (d: Doc) =>
-      d.spans.length >= heavyThreshold && !ExtractionPipeline.oversize(d)
+      d.spans.length >= HeavyThreshold && !ExtractionPipeline.oversize(d)
     val light = docs.filter(d => !isHeavy(d))
     val heavy = docs.filter(isHeavy)
 

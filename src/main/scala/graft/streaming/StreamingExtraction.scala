@@ -32,19 +32,22 @@ object StreamingExtraction {
   /** Watermark delay of both interval-join sides. */
   private val IntervalWatermark = "2 hours"
 
+  /** Inactivity gap that closes a session of [[sessionMetrics]]. */
+  private val SessionGap = "30 minutes"
+
   /** Event-time SESSION windows over the metrics stream — the streaming
     * analogue of the batch sessionize (q24): rows for the same key within
-    * `gap` of each other merge into one dynamic-length session;
+    * `SessionGap` of each other merge into one dynamic-length session;
     * `session_window` keeps state only for OPEN sessions and the watermark
     * finalizes + evicts them, so state is bounded by concurrently-active
     * keys, not history. Append mode emits each session exactly once, when
     * the watermark passes its close — the right contract for downstream
     * sinks that must never see a session twice. Sessions are keyed by
     * `user_id`. */
-  def sessionMetrics(events: DataFrame, gap: String = "5 minutes"): DataFrame =
+  def sessionMetrics(events: DataFrame): DataFrame =
     events
       .withWatermark(Ts, Watermark)
-      .groupBy(session_window(col(Ts), gap), col("user_id"))
+      .groupBy(session_window(col(Ts), SessionGap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
@@ -55,13 +58,14 @@ object StreamingExtraction {
     * of `CorpusOps.decontaminate`: the static eval set's gram hashes (MBs
     * against an unbounded stream) are collected once at query build and
     * broadcast; each arriving doc counts its distinct w-gram hashes
-    * against the broadcast set inside the map stage. Per-doc stateless:
+    * (`CorpusOps.DecontamW`-grams) against the broadcast set inside the
+    * map stage. Per-doc stateless:
     * zero shuffles, no state store, no watermark needed — the right shape
     * for a filter that every ingested document must pass exactly once.
     * Emits (doc_id, n_hit_grams) for contaminated docs only. */
   def decontaminateStream(docs: Dataset[(Long, String)],
-                          benchmark: DataFrame,
-                          w: Int = 13): Dataset[(Long, Long)] = {
+                          benchmark: DataFrame): Dataset[(Long, Long)] = {
+    val w = graft.ops.CorpusOps.DecontamW
     val spark = docs.sparkSession
     import spark.implicits._
     val benchSet: Set[Long] = benchmark
@@ -147,7 +151,7 @@ object StreamingExtraction {
         spark.read.parquet(snapshotPath)
       else delta.select(col("doc_id"), col("text")).limit(0)
     val merged = graft.ops.MergeOps
-      .upsert(snap, delta, "doc_id", deleteCol = Some("is_delete"))
+      .upsert(snap, delta, "doc_id")
       .localCheckpoint(true)
     merged.write.mode("overwrite").parquet(snapshotPath)
     ()
@@ -161,25 +165,15 @@ object StreamingExtraction {
     * the purchase watermark passes click_ts + window) — state is bounded
     * by rate × (watermark + window), never by history. Append-mode inner
     * join: a pair is emitted exactly once, whichever side arrives first.
-    * With `joinType = "leftOuter"` an unmatched purchase emits a
-    * null-click row — but only once the watermark proves no matching
-    * click can still arrive (its state is evictable): the semantics that
-    * keep outer results exactly-once under out-of-order arrival.
     * Inputs: purchases(p_user, p_ts, p_id), clicks(c_user, c_ts, c_id). */
-  def intervalJoinStream(purchases: DataFrame, clicks: DataFrame,
-                         joinType: String = "inner"): DataFrame = {
+  def intervalJoinStream(purchases: DataFrame, clicks: DataFrame): DataFrame = {
     val p = purchases.withWatermark("p_ts", IntervalWatermark)
     val c = clicks.withWatermark("c_ts", IntervalWatermark)
-    val joined = p.join(c, expr(
+    p.join(c, expr(
       s"""p_user = c_user AND
           c_ts >= p_ts - INTERVAL $IntervalWindowSeconds SECONDS AND
-          c_ts <= p_ts"""), joinType)
-    // a semi join drops the right side entirely — each qualifying purchase
-    // emits ONCE however many clicks match (the existence probe)
-    if (joinType == "leftSemi")
-      joined.select(col("p_id"), col("p_user").as("user_id"))
-    else joined.select(col("p_id"), col("c_id"),
-      coalesce(col("p_user"), col("c_user")).as("user_id"))
+          c_ts <= p_ts"""))
+      .select(col("p_id"), col("c_id"), col("p_user").as("user_id"))
   }
 
   /** Running per-key event count on Spark 4's `transformWithState` — the

@@ -51,12 +51,11 @@ class ClassifierOpsSpec extends AnyFunSuite {
     }
     val df = docs.map { case (id, lang, t) => (id, t, lang) }
       .toDF("doc_id", "text", "lang")
-    val expected = bruteTrain(docs, epochs = 6, dims = 64, posLang = "en")
-    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64)
+    val expected = bruteTrain(docs, epochs = 8, dims = 256, posLang = "en")
+    val got = ClassifierOps.perceptronTrain(df)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got === expected)
-    val got2 = ClassifierOps.perceptronTrain(df.repartition(7),
-        epochs = 6, dims = 64)
+    val got2 = ClassifierOps.perceptronTrain(df.repartition(7))
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -70,21 +69,12 @@ class ClassifierOpsSpec extends AnyFunSuite {
     }
     val df = docs.map { case (id, t, l) => (id, t, l) }
       .toDF("doc_id", "text", "lang")
-    val got = ClassifierOps.perceptronTrain(df, epochs = 6, dims = 64)
+    val got = ClassifierOps.perceptronTrain(df)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got.last._2 === 0L)
     assert(got.map(_._2).takeRight(3).forall(_ === 0L))
     assert(got === bruteTrain(
-      docs.map { case (id, t, l) => (id, l, t) }, 6, 64, "en"))
-  }
-
-  test("perceptron rejects dims <= 0 with a named IllegalArgumentException") {
-    val df = Seq((0L, "qqq www eee", "en")).toDF("doc_id", "text", "lang")
-    for (dims <- Seq(0, -1)) {
-      val e = intercept[IllegalArgumentException](
-        ClassifierOps.perceptronTrain(df, epochs = 1, dims = dims))
-      assert(e.getMessage.contains("dims must be >= 1"), s"dims=$dims")
-    }
+      docs.map { case (id, t, l) => (id, l, t) }, 8, 256, "en"))
   }
 
   test("Cohen's kappa: perfect agreement → 1000 milli, hand-computed " +

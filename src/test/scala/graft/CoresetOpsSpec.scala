@@ -48,13 +48,11 @@ class CoresetOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val vecs = (0L until 40L).map(i =>
       i -> Seq.fill(8)(rnd.nextFloat() * 2f - 1f))
-    val expected = bruteGreedy(vecs, k = 5, coverageMod = 2)
-    val got = CoresetOps.facilityLocation(embDf(vecs), k = 5,
-        coverageMod = 2)
+    val expected = bruteGreedy(vecs, k = 8, coverageMod = 2)
+    val got = CoresetOps.facilityLocation(embDf(vecs))
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got === expected)
-    val got2 = CoresetOps.facilityLocation(embDf(vecs).repartition(7),
-        k = 5, coverageMod = 2)
+    val got2 = CoresetOps.facilityLocation(embDf(vecs).repartition(7))
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -69,23 +67,21 @@ class CoresetOpsSpec extends AnyFunSuite {
     val stragglers = Seq(11L -> Seq(0f, 0.9f, 0f, 0f),
       12L -> Seq(0f, 0f, 0.9f, 0f))
     val vecs = cluster ++ center ++ stragglers
-    val got = CoresetOps.facilityLocation(embDf(vecs), k = 3,
-        coverageMod = 1)
+    val got = CoresetOps.facilityLocation(embDf(vecs))
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got.head._2 === 10L)
     // marginal gains never increase (greedy on a submodular objective)
     assert(got.map(_._3) === got.map(_._3).sorted.reverse)
     // objective is the running sum of gains
     assert(got.map(_._3).sum === got.last._4)
-    assert(got === bruteGreedy(vecs, k = 3, coverageMod = 1))
+    assert(got === bruteGreedy(vecs, k = 8, coverageMod = 2))
   }
 
   test("facility location with k > candidate count stops cleanly after " +
     "exhausting candidates (no empty.maxBy crash)") {
     val vecs = Seq(
       1L -> Seq(1.0f, 0.0f), 2L -> Seq(0.0f, 1.0f), 3L -> Seq(1.0f, 1.0f))
-    val got = CoresetOps.facilityLocation(embDf(vecs), k = 10,
-        coverageMod = 1)
+    val got = CoresetOps.facilityLocation(embDf(vecs))
       .collect()
     // exactly the 3 candidates picked, steps 1..3, then the greedy halts
     assert(got.length === 3)

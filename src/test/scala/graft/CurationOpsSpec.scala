@@ -24,11 +24,11 @@ class CurationOpsSpec extends AnyFunSuite {
   test("packChunks (distributed prefix sum) is row-identical to the " +
     "running-sum window formulation, partition-layout invariant") {
     val docs = docsDf(300)
-    val expected = PackingOps.packChunksWindow(docs, capacity = 64)
+    val expected = PackingOps.packChunksWindow(docs, capacity = 256)
       .orderBy("doc_id").collect().toSeq
     Seq(docs, docs.repartition(7), docs.repartition(1),
         docs.orderBy(col("doc_id").desc)).foreach { in =>
-      val got = PackingOps.packChunks(in, capacity = 64, numBuckets = 5)
+      val got = PackingOps.packChunks(in)
         .orderBy("doc_id").collect().toSeq
       assert(got === expected)
     }
@@ -36,14 +36,17 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("packChunks straddles pack boundaries exactly (concat-then-chunk)") {
     import spark.implicits._
-    // token counts 3, 4, 5 with capacity 4: offsets 0,3,7 → packs [0,0],[0,1],[1,2]
-    val docs = Seq((0L, "a b c"), (1L, "a b c d"), (2L, "a b c d e"))
+    // token counts 100, 200, 300 with 256-token packs: offsets 0,100,300
+    // → packs [0,0],[0,1],[1,2]
+    def text(n: Int) = Seq.fill(n)("a").mkString(" ")
+    val docs = Seq((0L, text(100)), (1L, text(200)), (2L, text(300)))
       .toDF("doc_id", "text")
-    val got = PackingOps.packChunks(docs, capacity = 4, numBuckets = 2)
+    val got = PackingOps.packChunks(docs)
       .orderBy("doc_id")
       .select("doc_id", "global_offset", "start_pack", "end_pack")
       .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(got === Seq((0L, 0L, 0L, 0L), (1L, 3L, 0L, 1L), (2L, 7L, 1L, 2L)))
+    assert(got === Seq((0L, 0L, 0L, 0L), (1L, 100L, 0L, 1L),
+      (2L, 300L, 1L, 2L)))
   }
 
   test("packChunks plans NO SinglePartition exchange (the window " +
@@ -70,14 +73,14 @@ class CurationOpsSpec extends AnyFunSuite {
       .orderBy(col("n_chars").desc, col("doc_id"))
     val expected = docs
       .withColumn("rk", row_number().over(w).cast("long"))
-      .where(col("rk") <= 7)
+      .where(col("rk") <= 10)
       .select(col("doc_id"), col("source"), col("n_chars"), col("rk"))
       .orderBy("doc_id").collect().toSeq
-    val got = CorpusOps.domainCap(docs, cap = 7)
+    val got = CorpusOps.domainCap(docs)
       .orderBy("doc_id").collect().toSeq
     assert(got === expected)
     // and partition-layout invariant (map-side heaps must not change output)
-    val got1 = CorpusOps.domainCap(docs.repartition(13), cap = 7)
+    val got1 = CorpusOps.domainCap(docs.repartition(13))
       .orderBy("doc_id").collect().toSeq
     assert(got1 === expected)
   }
@@ -101,14 +104,14 @@ class CurationOpsSpec extends AnyFunSuite {
     "(CMS one-sided error), layout-invariant") {
     import spark.implicits._
     val docs = docsDf(300).select(col("doc_id"), col("text"))
-    val rows = CorpusOps.cmsValidate(docs, topK = 15)
+    val rows = CorpusOps.cmsValidate(docs)
       .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(rows.size === 15)
+    assert(rows.size === 20)
     rows.foreach { case (t, exact, est, over) =>
       assert(est >= exact, s"$t: est $est < exact $exact")
       assert(over === est - exact)
     }
-    val rows2 = CorpusOps.cmsValidate(docs.repartition(11), topK = 15)
+    val rows2 = CorpusOps.cmsValidate(docs.repartition(11))
       .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(rows2 === rows)
   }
@@ -117,7 +120,7 @@ class CurationOpsSpec extends AnyFunSuite {
     "layout-invariant") {
     import spark.implicits._
     val docs = docsDf(300)
-    val rows = CorpusOps.mixturePlan(docs, budgetPct = 60)
+    val rows = CorpusOps.mixturePlan(docs)
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
       .collect().toSeq
     assert(rows.map(_._1).distinct.size === rows.size)
@@ -135,7 +138,7 @@ class CurationOpsSpec extends AnyFunSuite {
         s"$src deficit $deficit exceeds the rounding bound below the cap")
       assert(deficit === math.max(target - planned, 0L))
     }
-    val rows2 = CorpusOps.mixturePlan(docs.repartition(7), budgetPct = 60)
+    val rows2 = CorpusOps.mixturePlan(docs.repartition(7))
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
       .collect().toSeq
     assert(rows2 === rows)
@@ -146,7 +149,7 @@ class CurationOpsSpec extends AnyFunSuite {
     "layout-invariant") {
     import spark.implicits._
     val docs = docsDf(400)
-    val q = CorpusOps.quantileValidate(docs, k = 64)
+    val q = CorpusOps.quantileValidate(docs)
     assert(q.queryExecution.sparkPlan.toString.contains("TakeOrderedAndProject"),
       "bottom-k-by-hash must plan as a bounded per-partition heap")
     val rows = q.as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
@@ -155,17 +158,17 @@ class CurationOpsSpec extends AnyFunSuite {
     val sortedAll = vals.map(_._2).sorted
     val samp = vals
       .sortBy { case (id, _) => (graft.ops.TextOps.md5Low63(id.toString + "|qtl"), id) }
-      .take(64).map(_._2).sorted
+      .take(256).map(_._2).sorted
     def rk(q: Long, n: Int): Int = ((q * n + 99) / 100).toInt
     assert(rows.map(_._1).toSeq === Seq(25L, 50L, 75L, 90L))
     rows.foreach { case (qq, nTot, kS, exact, est, err) =>
       assert(nTot === vals.length.toLong)
-      assert(kS === 64L)
+      assert(kS === 256L)
       assert(exact === sortedAll(rk(qq, vals.length) - 1))
-      assert(est === samp(rk(qq, 64) - 1))
+      assert(est === samp(rk(qq, 256) - 1))
       assert(err === math.abs(est - exact) * 1000 / math.max(exact, 1L))
     }
-    val rows2 = CorpusOps.quantileValidate(docs.repartition(9), k = 64)
+    val rows2 = CorpusOps.quantileValidate(docs.repartition(9))
       .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(rows2 === rows)
   }
@@ -416,29 +419,28 @@ class CurationOpsSpec extends AnyFunSuite {
     "chain with vec_id tie-break") {
     import spark.implicits._
     val emb = Seq(
-      (0L, Array(0.0f)), (1L, Array(0.1f)), (2L, Array(0.25f))
+      (0L, Array(0.0f)), (1L, Array(0.1f)), (2L, Array(0.25f)),
+      (3L, Array(0.5f))
     ).toDF("vec_id", "embedding")
-    val got = graft.ops.SimilarityOps.kcenterCoreset(emb, k = 3)
+    val got = graft.ops.SimilarityOps.kcenterCoreset(emb)
       .orderBy("iter").as[(Long, Long, Long)].collect().toSeq
-    // quantized coords 0/100/250: seed 0 → farthest 250 (d²=62500) →
-    // then v1 at min-dist min(100², 150²) = 10000
-    assert(got === Seq((1L, 0L, 0L), (2L, 2L, 62500L), (3L, 1L, 10000L)))
+    // quantized coords 0/100/250/500: seed 0 → farthest 500 (d²=250000) →
+    // then v2 at min-dist min(250², 250²) = 62500 → then v1 at
+    // min(100², 150²) = 10000
+    assert(got === Seq((1L, 0L, 0L), (2L, 3L, 250000L), (3L, 2L, 62500L),
+      (4L, 1L, 10000L)))
   }
 
-  test("kcenterCoreset is total: zero rows or k <= 0 select nothing " +
-    "(the oracle's empty answer), with the k = 1 schema") {
+  test("kcenterCoreset is total: zero rows select nothing (the oracle's " +
+    "empty answer), with the selecting run's schema") {
     import spark.implicits._
     val emb = Seq((0L, Array(0.0f)), (1L, Array(0.1f)))
       .toDF("vec_id", "embedding")
-    val one = graft.ops.SimilarityOps.kcenterCoreset(emb, k = 1)
-    assert(one.as[(Long, Long, Long)].collect().toSeq === Seq((1L, 0L, 0L)))
-    val cases = Seq(("zero rows", emb.limit(0), 4), ("k = 0", emb, 0),
-      ("k = -1", emb, -1))
-    for ((name, df, k) <- cases) {
-      val out = graft.ops.SimilarityOps.kcenterCoreset(df, k)
-      assert(out.schema === one.schema, name)
-      assert(out.collect().isEmpty, name)
-    }
+    val some = graft.ops.SimilarityOps.kcenterCoreset(emb)
+    assert(some.collect().nonEmpty)
+    val out = graft.ops.SimilarityOps.kcenterCoreset(emb.limit(0))
+    assert(out.schema === some.schema)
+    assert(out.collect().isEmpty)
   }
 
   test("sourceEntropy: integer bitlen identity on a hand corpus") {
@@ -455,19 +457,21 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("sourceOverlap df cap drops stop-grams present in > maxDf sources") {
     import spark.implicits._
-    // gram "a b c" in 3 sources; "x y z" in 2; "p q r" unique
-    val docs = Seq(
-      ("s1", "a b c"), ("s2", "a b c"), ("s3", "a b c"),
-      ("s1", "x y z"), ("s2", "x y z"), ("s3", "p q r")
-    ).toDF("source", "text")
-    // cap 2: only "x y z" survives → exactly the (s1, s2) pair
-    val capped = CorpusOps.sourceOverlap(docs, w = 3, maxDf = 2)
+    // 4-gram "a b c d" in 65 sources (one over the 64-source cap);
+    // "x y z w" in s00 and s01 only
+    val srcs = (0 until 65).map(i => f"s$i%02d")
+    val stop = srcs.map(s => (s, "a b c d"))
+    val pair = Seq(("s00", "x y z w"), ("s01", "x y z w"))
+    // over the cap: the stop-gram is dropped → exactly the (s00, s01) pair
+    val capped = CorpusOps.sourceOverlap((stop ++ pair).toDF("source", "text"))
       .as[(String, String, Long)].collect().toSeq
-    assert(capped === Seq(("s1", "s2", 1L)))
-    // cap 3: the stop-gram contributes all three pairs too
-    val open = CorpusOps.sourceOverlap(docs, w = 3, maxDf = 3)
-      .orderBy("src_a", "src_b").as[(String, String, Long)].collect().toSeq
-    assert(open === Seq(("s1", "s2", 2L), ("s1", "s3", 1L), ("s2", "s3", 1L)))
+    assert(capped === Seq(("s00", "s01", 1L)))
+    // at the cap (64 sources): the gram is kept and pairs all 64 sources
+    val open = CorpusOps.sourceOverlap(
+        (stop.take(64) ++ pair).toDF("source", "text"))
+      .as[(String, String, Long)].collect().toSeq
+    assert(open.size === 64 * 63 / 2)
+    assert(open.filter(_._3 == 2L) === Seq(("s00", "s01", 2L)))
   }
 
   test("lineDedupStats / sourceOverlap: materialize=true (the 10^12 " +
@@ -478,9 +482,9 @@ class CurationOpsSpec extends AnyFunSuite {
     val b = graft.ops.DedupOps.lineDedupStats(docs, materialize = true)
       .orderBy("doc_id").collect().toSeq
     assert(a === b)
-    val c = CorpusOps.sourceOverlap(docs, w = 3)
+    val c = CorpusOps.sourceOverlap(docs)
       .orderBy("src_a", "src_b").collect().toSeq
-    val d = CorpusOps.sourceOverlap(docs, w = 3, materialize = true)
+    val d = CorpusOps.sourceOverlap(docs, materialize = true)
       .orderBy("src_a", "src_b").collect().toSeq
     assert(c === d)
     assert(c.nonEmpty)
@@ -496,10 +500,10 @@ class CurationOpsSpec extends AnyFunSuite {
       }
       .groupBy(identity).map { case (p, a) => (p, a.length.toLong) }
       .toSeq.sortBy { case (p, n) => (-n, p) }.take(50)
-    val got = CorpusOps.bpePairCounts(docs, topK = 50)
+    val got = CorpusOps.bpePairCounts(docs)
       .as[(String, Long)].collect().toSeq
     assert(got === expected)
-    val got2 = CorpusOps.bpePairCounts(docs.repartition(9), topK = 50)
+    val got2 = CorpusOps.bpePairCounts(docs.repartition(9))
       .as[(String, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -517,8 +521,10 @@ class CurationOpsSpec extends AnyFunSuite {
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, String, String, Long, Long, Long)]
     var step = 1
-    while (step <= steps) {
-      val counts = scala.collection.mutable.Map
+    var counts = scala.collection.mutable.Map
+      .empty[(String, String), Long].withDefaultValue(0L)
+    def census(): Unit = {
+      counts = scala.collection.mutable.Map
         .empty[(String, String), Long].withDefaultValue(0L)
       vocab.foreach { case (syms, f) =>
         var i = 0
@@ -527,7 +533,9 @@ class CurationOpsSpec extends AnyFunSuite {
           i += 1
         }
       }
-      assert(counts.nonEmpty)
+    }
+    census()
+    while (step <= steps && counts.nonEmpty) {
       val ((l, r), n) = counts.toSeq
         .minBy { case ((a, b), c) => (-c, a, b) }
       vocab = vocab.map { case (syms, f) =>
@@ -544,6 +552,7 @@ class CurationOpsSpec extends AnyFunSuite {
       val nsym = vocab.keys.flatten.toSet.size
       out += ((step.toLong, l, r, n, tok, nsym.toLong))
       step += 1
+      census()
     }
     out.toSeq
   }
@@ -553,11 +562,11 @@ class CurationOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = docsDf(120).select(col("doc_id"), col("text"))
     val texts = docs.as[(Long, String)].collect().map(_._2).toSeq
-    val expected = bruteBpe(texts, steps = 6, maxWordLen = 32)
-    val got = CorpusOps.bpeTrain(docs, steps = 6)
+    val expected = bruteBpe(texts, steps = 8, maxWordLen = 32)
+    val got = CorpusOps.bpeTrain(docs)
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     assert(got === expected)
-    val got2 = CorpusOps.bpeTrain(docs.repartition(9), steps = 6)
+    val got2 = CorpusOps.bpeTrain(docs.repartition(9))
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     assert(got2 === expected)
   }
@@ -567,14 +576,14 @@ class CurationOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((0L, "aaaa aaaa bq"), (1L, "aaaa bq bq")).toDF(
       "doc_id", "text")
-    val got = CorpusOps.bpeTrain(docs, steps = 2)
+    val got = CorpusOps.bpeTrain(docs)
       .as[(Long, String, String, Long, Long, Long)].collect().toSeq
     // step 1: pair (a,a) counted OVERLAPPING = 3 sites × 3 word occurrences
     assert(got(0)._2 === "a" && got(0)._3 === "a" && got(0)._4 === 9L)
     // greedy apply: each aaaa → [aa, aa]; tok_total = 3×2 (aaaa) + 3×2 (bq)
     assert(got(0)._5 === 12L)
     val expected = bruteBpe(Seq("aaaa aaaa bq", "aaaa bq bq"),
-      steps = 2, maxWordLen = 32)
+      steps = 8, maxWordLen = 32)
     assert(got === expected)
   }
 
@@ -629,14 +638,12 @@ class CurationOpsSpec extends AnyFunSuite {
     // freqs: a x6, b x3, c x3, d x2 -> total 14; ties b/c rank by token
     val docs = Seq((0L, "a a a b c d"), (1L, "a a a b b c c d"))
       .toDF("doc_id", "text")
-    val got = CorpusOps.vocabCoverage(docs, grid = Seq(1, 2, 3, 4))
+    // grid ranks 3, 10, 30, …: only rank 3 exists; the b/c tie puts c
+    // there, after a and b (cumulative 6 + 3 + 3)
+    val got = CorpusOps.vocabCoverage(docs)
       .select("rank", "token", "term_freq", "cum_tokens", "coverage_ppm")
       .as[(Long, String, Long, Long, Long)].collect().toSeq
-    assert(got === Seq(
-      (1L, "a", 6L, 6L, 6L * 1000000 / 14),
-      (2L, "b", 3L, 9L, 9L * 1000000 / 14),
-      (3L, "c", 3L, 12L, 12L * 1000000 / 14),
-      (4L, "d", 2L, 14L, 1000000L)))
+    assert(got === Seq((3L, "c", 3L, 12L, 12L * 1000000 / 14)))
   }
 
   test("ksDrift computes the exact scaled KS sup (hand-checked CDFs)") {

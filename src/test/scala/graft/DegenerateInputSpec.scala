@@ -145,12 +145,48 @@ class DegenerateInputSpec extends AnyFunSuite {
       CalibrationOps.isotonicCalibration(d)),
     "ClassifierOps.perceptronTrain" -> (d => ClassifierOps.perceptronTrain(d)),
     "CorpusOps.surprisalScores" -> (d => CorpusOps.surprisalScores(d)),
-    "CorpusOps.bpeTrain" -> (d => CorpusOps.bpeTrain(d, steps = 2)),
+    "CorpusOps.bpeTrain" -> (d => CorpusOps.bpeTrain(d)),
     "CorpusOps.bpeEncodeCensus" -> (d => CorpusOps.bpeEncodeCensus(d)),
     "DedupOps.minhashEstimates" -> (d => DedupOps.minhashEstimates(d)),
     "DedupOps.groupKFold" -> (d =>
       DedupOps.groupKFold(d, DedupOps.dupClustersOverDocs(d))),
     "StorageOps.encodingAdvisor" -> (d => StorageOps.encodingAdvisor(lineitem(d))),
+    "BloomJoin.bloomReducedJoin" -> (d => BloomJoin.bloomReducedJoin(d,
+      d.where(col("doc_id") % 3 === 0).select(col("doc_id"),
+        col("lang").as("small_lang")), "doc_id")),
+    "CorpusOps.countMinSketch" -> (d => CorpusOps.countMinSketch(d)),
+    "CorpusOps.bm25TopK" -> (d => CorpusOps.bm25TopK(d)),
+    "CorpusOps.oovStats" -> (d => CorpusOps.oovStats(d)),
+    "CorpusOps.decontaminate" -> { d => val (a, b) = evenOdd(d)
+      CorpusOps.decontaminate(a, b) },
+    "CorpusOps.quotaSample" -> (d =>
+      CorpusOps.quotaSample(d, Map("en" -> 7), 4)),
+    "CorpusOps.hashSample" -> (d =>
+      CorpusOps.hashSample(d, Map("en" -> 50), 20)),
+    "CorpusOps.domainCap" -> (d => CorpusOps.domainCap(d)),
+    "CorpusOps.sourceOverlap" -> (d => CorpusOps.sourceOverlap(d)),
+    "CorpusOps.bpePairCounts" -> (d => CorpusOps.bpePairCounts(d)),
+    "CorpusOps.vocabCoverage" -> (d => CorpusOps.vocabCoverage(d)),
+    "CorpusOps.budgetWaterfill" -> (d => CorpusOps.budgetWaterfill(d)),
+    "DedupOps.exactJaccardPairs" -> (d => DedupOps.exactJaccardPairs(d)),
+    "DedupOps.minhashCandidates" -> (d => DedupOps.minhashCandidates(d)),
+    "GraphOps.bfsHops" -> (d => GraphOps.bfsHops(d)),
+    "MergeOps.upsert" -> (d => MergeOps.upsert(
+      d.select(col("doc_id"), col("text")),
+      changes(d.where(col("doc_id") % 4 === 0)).drop("seq"), "doc_id")),
+    "MultimodalOps.phashNearDupsDumped" -> (d =>
+      MultimodalOps.phashNearDupsDumped(docsLike(d), tmpDir() + "/refs")),
+    "PackingOps.packChunks" -> (d => PackingOps.packChunks(d)),
+    "PackingOps.feistelShuffle" -> (d => PackingOps.feistelShuffle(d)),
+    "PrivacyOps.dpHistogram" -> (d => PrivacyOps.dpHistogram(d)),
+    "ProfileOps.equiDepthHistogram" -> (d =>
+      ProfileOps.equiDepthHistogram(d, "n_chars")),
+    "ProfileOps.missingIdRanges" -> (d =>
+      ProfileOps.missingIdRanges(d.where(col("doc_id") % 7 =!= 3), "doc_id")),
+    "ProfileOps.denseRanks" -> (d => ProfileOps.denseRanks(d, "doc_id")),
+    "SuffixOps.suffixCensus" -> (d => SuffixOps.suffixCensus(texts(d).toDF())),
+    "SuffixOps.lcpCensus" -> (d => SuffixOps.lcpCensus(texts(d).toDF())),
+    "SuffixOps.repeatSpans" -> (d => SuffixOps.repeatSpans(texts(d).toDF())),
   )
 
   private val eventOps: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -161,7 +197,7 @@ class DegenerateInputSpec extends AnyFunSuite {
     "SkewJoin.adaptiveSaltedJoin" -> (e => SkewJoin.adaptiveSaltedJoin(e,
       e.select(col("event_type")).distinct()
         .withColumn("kind_len", length(col("event_type"))),
-      "event_type", saltSource = col("event_id"), minSharePct = 10.0)),
+      "event_type", saltSource = col("event_id"))),
   )
 
   private val embOps: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -170,16 +206,42 @@ class DegenerateInputSpec extends AnyFunSuite {
       SimilarityOps.lshTopKFrom(e, SimilarityOps.lshBuckets(e))),
     "IvfOps.topKFrom" -> { e =>
       val c = IvfOps.train(e)
-      IvfOps.topKFrom(e, IvfOps.assign(e, c),
-        IvfOps.probes(e, c, numQueries = 10, nprobe = 2), numQueries = 10,
-        topK = 10)
+      IvfOps.topKFrom(e, IvfOps.assign(e, c), IvfOps.probes(e, c, nprobe = 2))
     },
     "SimilarityOps.lshBucketsMulti" -> (e => SimilarityOps.lshBucketsMulti(e)),
     "GraphAnnOps.beamVisitedSweep + topKFromVisitedSweep" -> { e =>
-      val g = GraphAnnOps.buildKnnGraph(e, m = 8)
+      val g = GraphAnnOps.buildKnnGraph(e)
       GraphAnnOps.topKFromVisitedSweep(e,
         GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8)))
     },
+    "GraphAnnOps.buildKnnGraph + beamVisited + topKFromVisited" -> { e =>
+      val g = GraphAnnOps.buildKnnGraph(e)
+      GraphAnnOps.topKFromVisited(e, GraphAnnOps.beamVisited(e, g))
+    },
+    "GraphAnnOps.buildKnnGraphDescent" -> (e =>
+      GraphAnnOps.buildKnnGraphDescent(e)),
+    "GraphAnnOps.insertIntoGraph" -> { e =>
+      val g = GraphAnnOps.buildKnnGraph(e.where(col("vec_id") % 5 =!= 2))
+      GraphAnnOps.insertIntoGraph(e, g, e.where(col("vec_id") % 5 === 2))
+    },
+    "SimilarityOps.bruteTopK" -> (e => SimilarityOps.bruteTopK(e)),
+    "SimilarityOps.hardNegatives" -> (e => SimilarityOps.hardNegatives(e)),
+    "SimilarityOps.quantizedRecall" -> (e => SimilarityOps.quantizedRecall(e)),
+    "SimilarityOps.topPairs" -> (e => SimilarityOps.topPairs(e)),
+    "SimilarityOps.embeddingNearDupsFrom" -> (e =>
+      SimilarityOps.embeddingNearDupsFrom(e, SimilarityOps.lshBucketsMulti(e))),
+    "SimilarityOps.kcenterCoreset" -> (e => SimilarityOps.kcenterCoreset(e)),
+    "CoresetOps.facilityLocation" -> (e => CoresetOps.facilityLocation(e)),
+    "PqOps.train + adcRecallFrom" -> { e =>
+      val cb = PqOps.train(e)
+      PqOps.adcRecallFrom(e, PqOps.encode(e, cb), PqOps.codebookDf(spark, cb))
+    },
+    "PqOps.train + rerankRecall" -> { e =>
+      val cb = PqOps.train(e)
+      PqOps.rerankRecall(e, PqOps.encode(e, cb), PqOps.codebookDf(spark, cb))
+    },
+    "PqOps.chunkPooling" -> (e => PqOps.chunkPooling(e)),
+    "PqOps.prefixRecall" -> (e => PqOps.prefixRecall(e)),
     "IvfOps.cellCensus" -> { e =>
       val c = IvfOps.train(e)
       IvfOps.cellCensus(IvfOps.assign(e, c),
@@ -216,9 +278,9 @@ class DegenerateInputSpec extends AnyFunSuite {
     import graft.streaming.StreamingExtraction._
     Seq(
       "StreamingExtraction.decontaminateStream (stream)" -> (d =>
-        decontaminateStream(texts(d), full, w = 4).toDF()),
+        decontaminateStream(texts(d), full).toDF()),
       "StreamingExtraction.decontaminateStream (benchmark)" -> (d =>
-        decontaminateStream(texts(full), d, w = 4).toDF()),
+        decontaminateStream(texts(full), d).toDF()),
       "StreamingExtraction.applyUpsertBatch" -> { d =>
         val path = tmpDir() + "/snap"
         applyUpsertBatch(changes(d), path)
@@ -241,15 +303,20 @@ class DegenerateInputSpec extends AnyFunSuite {
     Seq(
       "TableIO.writePartitionedClustered" -> { d =>
         val p = tmpDir() + "/part"
-        TableIO.writePartitionedClustered(d, p, "lang", "doc_id",
-          numRangeBuckets = 4)
+        TableIO.writePartitionedClustered(d, p, "lang", "doc_id")
         // zero rows write no partition dir, so the schema is given
         spark.read.schema(d.schema).parquet(p).select(d.columns.map(col): _*)
       },
       "TableIO.writeZOrdered" -> { d =>
         val p = tmpDir() + "/z"
-        TableIO.writeZOrdered(d, p, "doc_id", "n_chars", files = 4)
+        TableIO.writeZOrdered(d, p, "doc_id", "n_chars")
         spark.read.parquet(p)
+      },
+      "TableIO.compact" -> { d =>
+        val t = tmpDir()
+        d.write.parquet(t + "/small")
+        TableIO.compact(spark, t + "/small", t + "/out")
+        spark.read.parquet(t + "/out")
       },
       "TableIO.commitSnapshot + readSnapshot" -> { d =>
         val t = tmpDir() + "/snap"

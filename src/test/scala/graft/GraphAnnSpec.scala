@@ -8,16 +8,18 @@ class GraphAnnSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  /** 4 tight clusters of 8 vectors each around orthogonal axes, small
-    * deterministic within-cluster jitter so ranks are strict. */
+  /** 4 tight clusters of 12 vectors each around orthogonal axes of a
+    * 64-dim space (the NN-descent build hashes 64-dim vectors), small
+    * deterministic within-cluster jitter so ranks are strict. 12 > M + 1,
+    * so every node's M = 8 nearest neighbours lie in its own cluster. */
   private def clustered() = {
     val rows = for {
       c <- 0 until 4
-      i <- 0 until 8
+      i <- 0 until 12
     } yield {
-      val base = Array.fill(4)(0.05f)
+      val base = Array.fill(64)(0.05f)
       base(c) = 1f + 0.01f * i // axis-dominant, distinct norms
-      ((c * 8 + i).toLong, base)
+      ((c * 12 + i).toLong, base)
     }
     rows.toDF("vec_id", "embedding")
   }
@@ -25,15 +27,15 @@ class GraphAnnSpec extends AnyFunSuite {
   test("knn graph: nearest neighbors are within-cluster, ranks strict, " +
     "ties impossible by construction, layout-invariant") {
     val e = clustered()
-    val g = GraphAnnOps.buildKnnGraph(e, m = 3).collect()
+    val g = GraphAnnOps.buildKnnGraph(e).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // every node has exactly 3 neighbors, all from its own 8-cluster
-    assert(g.length === 32 * 3)
+    // every node has exactly 8 neighbors, all from its own 12-cluster
+    assert(g.length === 48 * 8)
     g.foreach { case (node, _, nbr) =>
-      assert(node / 8 === nbr / 8,
+      assert(node / 12 === nbr / 12,
         s"node $node got out-of-cluster neighbor $nbr")
     }
-    val g2 = GraphAnnOps.buildKnnGraph(e.repartition(7), m = 3).collect()
+    val g2 = GraphAnnOps.buildKnnGraph(e.repartition(7)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(g2.sortBy(x => (x._1, x._2)).toSeq ===
       g.sortBy(x => (x._1, x._2)).toSeq)
@@ -41,12 +43,13 @@ class GraphAnnSpec extends AnyFunSuite {
 
   test("knn graph: cosine ties break by smaller neighbor id") {
     // 0 and 1 identical; 2 and 3 identical and orthogonal to them —
-    // node 0's list must rank 1 (cosine 1) then 2 before 3 (tie on id)
+    // node 0's list must rank 1 (cosine 1) then 2 before 3 (tie on id);
+    // 4 nodes give each node 3 of its 8 slots
     val e = Seq(
       (0L, Array(1f, 0f)), (1L, Array(1f, 0f)),
       (2L, Array(0f, 1f)), (3L, Array(0f, 1f)))
       .toDF("vec_id", "embedding")
-    val g = GraphAnnOps.buildKnnGraph(e, m = 3).collect()
+    val g = GraphAnnOps.buildKnnGraph(e).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(g.filter(_._1 == 0L).sortBy(_._2).map(_._3).toSeq ===
       Seq(1L, 2L, 3L))
@@ -57,20 +60,21 @@ class GraphAnnSpec extends AnyFunSuite {
   test("beam search: visited grows with ef, recall@k is perfect once the " +
     "beam covers the graph, and the walk is layout-invariant") {
     val e = clustered()
-    val g = GraphAnnOps.buildKnnGraph(e, m = 3)
-    // entry is node 0 (cluster 0); queries are vec_ids 0..3 (cluster 0),
-    // so with a wide beam every query's own cluster is fully reachable
-    val visNarrow = GraphAnnOps.beamVisited(e, g, numQueries = 4,
-      ef = 1, hops = 2)
-    val visWide = GraphAnnOps.beamVisited(e, g, numQueries = 4,
-      ef = 8, hops = 6)
-    assert(visNarrow.count() < visWide.count())
-    val top = GraphAnnOps.topKFromVisited(e, visWide, numQueries = 4, k = 3)
-    val brute = graft.ops.SimilarityOps.bruteTopK(e, numQueries = 4, k = 3)
+    val g = GraphAnnOps.buildKnnGraph(e)
+    // entry is node 0 (cluster 0); queries are vec_ids 0..9 (cluster 0),
+    // so with a wide beam every query's own cluster is fully reachable.
+    // The sweep walks at ef 1 and 8: at ef 1, query 0's beam never leaves
+    // the entry, so it visits only node 0 and its 8 neighbours
+    val sweep = GraphAnnOps.beamVisitedSweep(e, g, Seq(1, 8))
+    val visNarrow = sweep.where(col("ef") === 1)
+    assert(visNarrow.count() < sweep.where(col("ef") === 8).count())
+    val visWide = GraphAnnOps.beamVisited(e, g)
+    val top = GraphAnnOps.topKFromVisited(e, visWide)
+    val brute = graft.ops.SimilarityOps.bruteTopK(e)
       .select(col("query_id"), col("neighbor_id"))
     // within-cluster graph + queries in the entry cluster → exact recall
-    assert(top.join(brute, Seq("query_id", "neighbor_id")).count() === 12L)
-    val visWide2 = GraphAnnOps.beamVisited(e.repartition(5), g, 4, 8, 6)
+    assert(top.join(brute, Seq("query_id", "neighbor_id")).count() === 100L)
+    val visWide2 = GraphAnnOps.beamVisited(e.repartition(5), g)
     assert(visWide2.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       .toSeq ===
       visWide.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
@@ -80,19 +84,18 @@ class GraphAnnSpec extends AnyFunSuite {
     "clusters stay unvisited (the recall loss ef cannot fix — only the " +
     "graph build can, the reason production layers entry points)") {
     val e = clustered()
-    val g = GraphAnnOps.buildKnnGraph(e, m = 3)
-    val vis = GraphAnnOps.beamVisited(e, g, numQueries = 4, ef = 32,
-      hops = 8)
-    // within-cluster 3-NN graphs are disconnected across clusters and the
-    // entry is node 0 → only cluster 0's 8 nodes are ever reachable
+    val g = GraphAnnOps.buildKnnGraph(e)
+    val vis = GraphAnnOps.beamVisitedSweep(e, g, Seq(32))
+    // within-cluster 8-NN graphs are disconnected across clusters and the
+    // entry is node 0 → only cluster 0's 12 nodes are ever reachable
     assert(vis.select(col("node_id")).distinct().collect()
-      .map(_.getLong(0)).forall(_ < 8L))
+      .map(_.getLong(0)).forall(_ < 12L))
   }
 
   test("knn graph build refuses oversized inputs (brute-contract guard)") {
     val e = clustered()
     val err = intercept[IllegalArgumentException](
-      GraphAnnOps.buildKnnGraph(e, m = 3, maxBroadcastRows = 4))
+      GraphAnnOps.buildKnnGraph(e, maxBroadcastRows = 4))
     assert(err.getMessage.contains("buildKnnGraph"))
     assert(err.getMessage.contains("NN-descent"))
   }
@@ -101,10 +104,9 @@ class GraphAnnSpec extends AnyFunSuite {
     "contiguous ranks, high edge agreement with the exact graph, " +
     "layout-invariant") {
     val e = clustered()
-    val descent = GraphAnnOps.buildKnnGraphDescent(e, m = 3, dim = 4,
-        bits = 2, tables = 4, rounds = 2).collect()
+    val descent = GraphAnnOps.buildKnnGraphDescent(e).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val brute = GraphAnnOps.buildKnnGraph(e, m = 3).collect()
+    val brute = GraphAnnOps.buildKnnGraph(e).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     descent.foreach { case (n, _, nb) => assert(n !== nb) }
     // ranks are 1..deg(n) contiguous per node
@@ -117,8 +119,7 @@ class GraphAnnSpec extends AnyFunSuite {
     val be = brute.map(x => (x._1, x._3)).toSet
     assert(de.intersect(be).size >= (be.size * 9) / 10,
       s"edge agreement ${de.intersect(be).size}/${be.size}")
-    val descent2 = GraphAnnOps.buildKnnGraphDescent(e.repartition(7), m = 3,
-        dim = 4, bits = 2, tables = 4, rounds = 2).collect()
+    val descent2 = GraphAnnOps.buildKnnGraphDescent(e.repartition(7)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(descent2.sortBy(x => (x._1, x._2)).toSeq ===
       descent.sortBy(x => (x._1, x._2)).toSeq)
@@ -136,30 +137,36 @@ class GraphAnnSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val lazyBuild = GraphAnnOps.buildKnnGraphDescent(e, m = 3, dim = 4,
-        bits = 2, tables = 4, rounds = 2, lineageTruncate = false)
+      GraphAnnOps.buildKnnGraphDescent(e, lineageTruncate = false)
       Thread.sleep(1000) // listener bus is async — let any event land
       assert(jobs === 0,
         s"plan construction launched $jobs job(s) — something collects")
       // the eager (per-round localCheckpoint of the BOUNDED adjacency)
-      // and fully-lazy variants are the same function of the table
-      val a = lazyBuild.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sortBy(x => (x._1, x._2)).toSeq
-      val b = GraphAnnOps.buildKnnGraphDescent(e, m = 3, dim = 4, bits = 2,
-          tables = 4, rounds = 2).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sortBy(x => (x._1, x._2)).toSeq
-      assert(a === b)
+      // and fully-lazy variants are the same function of the table; the
+      // lazy plan triples per round, so they are compared at 2 rounds
+      def rows(lineageTruncate: Boolean) =
+        GraphAnnOps.descentRounds(e, 2, lineageTruncate).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .sortBy(x => (x._1, x._2)).toSeq
+      assert(rows(false) === rows(true))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("NN-descent bucket cap is a pure recall trade: maxBucket=0 prunes " +
-    "every seed bucket → empty graph, never an error") {
-    val e = clustered()
-    val g = GraphAnnOps.buildKnnGraphDescent(e, m = 3, dim = 4, bits = 2,
-      tables = 4, rounds = 2, maxBucket = 0)
-    assert(g.count() === 0L)
+  test("NN-descent bucket cap is a pure recall trade: a seed bucket over " +
+    "the 1024-row cap is pruned, its nodes get no edges, never an error") {
+    // 1025 vectors of ONE direction share their bucket in every table (over
+    // the cap); cluster 1 of clustered() (12 vectors on another axis) stays
+    // under it and is built as usual
+    val hot = (0 until 1025).map { i =>
+      val v = Array.fill(64)(0.05f)
+      v(0) = 1f
+      (10000L + i, v.map(_ * (1f + i / 1024f)))
+    }.toDF("vec_id", "embedding")
+    val e = hot.unionByName(clustered().where(col("vec_id").between(12, 23)))
+    val nodes = GraphAnnOps.buildKnnGraphDescent(e)
+      .select(col("node_id"), col("neighbor_id")).collect()
+      .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    assert(nodes === (12L until 24L).toSet)
   }
 
   /** 32 vectors fanning along a line: cosine strictly decreasing in
@@ -177,34 +184,32 @@ class GraphAnnSpec extends AnyFunSuite {
     val e = chain()
     val base = e.where(col("vec_id") % 8 =!= 5)
     val delta = e.where(col("vec_id") % 8 === 5)
-    val g0 = GraphAnnOps.buildKnnGraph(base, m = 3)
-    val g1 = GraphAnnOps.insertIntoGraph(e, g0, delta, m = 3, ef = 32,
-      hops = 8)
+    val g0 = GraphAnnOps.buildKnnGraph(base)
+    val g1 = GraphAnnOps.insertIntoGraph(e, g0, delta)
     val edges = g1.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     edges.foreach { case (n, _, nb) => assert(n !== nb) }
     edges.groupBy(_._1).foreach { case (n, rows) =>
-      assert(rows.length <= 3, s"node $n degree ${rows.length}")
+      assert(rows.length <= 8, s"node $n degree ${rows.length}")
       assert(rows.map(_._2).sorted.toSeq === (1L to rows.length).toSeq)
     }
-    // every delta node carries exactly m forward links
+    // every delta node carries exactly M forward links
     Seq(5L, 13L, 21L, 29L).foreach { d =>
-      assert(edges.count(_._1 == d) === 3, s"delta $d link count")
+      assert(edges.count(_._1 == d) === 8, s"delta $d link count")
     }
     // at least one base node adopted a delta back-edge (the prune ran)
     assert(edges.exists(x => x._1 % 8 != 5 && x._3 % 8 == 5))
-    // exhaustive beam (ef=32 covers the 32-node graph) == brute top-k on
-    // the FULL merged set: insert left the index answer-exact here
-    val vis = GraphAnnOps.beamVisited(e, g1, numQueries = 4, ef = 32,
-      hops = 16)
-    val got = GraphAnnOps.topKFromVisited(e, vis, numQueries = 4, k = 5)
+    // the query beam over the post-insert graph == brute top-k on the
+    // FULL merged set: insert left the index answer-exact here
+    val vis = GraphAnnOps.beamVisited(e, g1)
+    val got = GraphAnnOps.topKFromVisited(e, vis)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val brute = graft.ops.SimilarityOps.bruteTopK(e, numQueries = 4, k = 5)
+    val brute = graft.ops.SimilarityOps.bruteTopK(e)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got === brute)
     // determinism under repartition
     val g2 = GraphAnnOps.insertIntoGraph(e.repartition(7), g0,
-        delta.repartition(3), m = 3, ef = 32, hops = 8)
+        delta.repartition(3))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(g2.sortBy(x => (x._1, x._2)).toSeq ===
       edges.sortBy(x => (x._1, x._2)).toSeq)
@@ -218,9 +223,8 @@ class GraphAnnSpec extends AnyFunSuite {
     val e = chain()
     val base = e.where(col("vec_id") % 8 =!= 5)
     val delta = e.where(col("vec_id") % 8 === 5)
-    val g0 = GraphAnnOps.buildKnnGraph(base, m = 3)
-    val g1 = GraphAnnOps.insertIntoGraph(e, g0, delta, m = 3, ef = 32,
-      hops = 8)
+    val g0 = GraphAnnOps.buildKnnGraph(base)
+    val g1 = GraphAnnOps.insertIntoGraph(e, g0, delta)
     // touched = nodes that adopted a delta back-edge; pick an untouched
     // BASE node (delta nodes are new rows, not pass-through)
     val touched = g1.where(col("neighbor_id") % 8 === 5)
@@ -234,8 +238,7 @@ class GraphAnnSpec extends AnyFunSuite {
       when(col("node_id") === target && col("rnk") === 1L, 2L)
         .when(col("node_id") === target && col("rnk") === 2L, 1L)
         .otherwise(col("rnk")))
-    val g1c = GraphAnnOps.insertIntoGraph(e, g0c, delta, m = 3, ef = 32,
-      hops = 8)
+    val g1c = GraphAnnOps.insertIntoGraph(e, g0c, delta)
     def rows(df: org.apache.spark.sql.DataFrame, n: Long) =
       df.where(col("node_id") === n).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

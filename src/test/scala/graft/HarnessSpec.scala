@@ -21,4 +21,14 @@ class HarnessSpec extends AnyFunSuite {
       .!(ProcessLogger(out += _))
     assert(exit === 0, out.filter(_.startsWith("FAIL")).mkString("\n", "\n", ""))
   }
+
+  test("op census self-test: every FAIL kind trips on a synthetic tree, " +
+    "and two values, forwards, literals and harness pins do not " +
+    "(tools/test_op_census.py)") {
+    import scala.sys.process._
+    val out = scala.collection.mutable.ListBuffer.empty[String]
+    val exit = Seq("python3", "tools/test_op_census.py")
+      .!(ProcessLogger(out += _, out += _))
+    assert(exit === 0, out.mkString("\n", "\n", ""))
+  }
 }

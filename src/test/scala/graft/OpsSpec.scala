@@ -263,11 +263,12 @@ class OpsSpec extends AnyFunSuite {
       assert(gi === ei); assert(gq.toSeq === eq.toSeq)
     }
     assert(got.forall(_._2.forall(q => q >= -127L && q <= 127L)))
-    // same-direction vectors have cosine exactly 1 before AND after
-    // quantization (one nonzero dim), so recall@2 over 3 queries is 100
-    val rec = SimilarityOps.quantizedRecall(df, numQueries = 3, k = 2)
+    // every cosine here is exactly 1, -1 or 0 before AND after
+    // quantization (one nonzero dim), so both rankings agree and
+    // recall@10 over the 10 queries is 100
+    val rec = SimilarityOps.quantizedRecall(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(rec === Seq((0L, 2L, 100L), (1L, 2L, 100L), (2L, 2L, 100L)))
+    assert(rec === (0L until 10L).map(q => (q, 10L, 100L)))
   }
 
   test("containment pairs: exact dup scores 100 both ways, prefix doc is " +
@@ -277,7 +278,7 @@ class OpsSpec extends AnyFunSuite {
     val ext = base + " " + (100 to 160).map(i => s"extra$i").mkString(" ")
     val other = (1 to 60).map(i => s"other$i").mkString(" ")
     val df = docsDf(1L -> base, 2L -> base, 3L -> ext, 4L -> other)
-    val got = DedupOps.containmentPairs(df, minPct = 50).collect()
+    val got = DedupOps.containmentPairs(df).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(4))).toMap
     assert(got((1L, 2L)) === 100L)
     assert(got((2L, 1L)) === 100L)
@@ -292,12 +293,11 @@ class OpsSpec extends AnyFunSuite {
       sh = (sa intersect sb).size if sh * 100 / sa.size >= 50
     } yield (a, b) -> (sh * 100 / sa.size).toLong).toMap
     assert(got === expected)
-    // the capped + materialized production path (the driver query's
-    // configuration) is output-identical here — every df is far below 64
-    val capped = DedupOps.containmentPairs(df, minPct = 50,
-        maxDf = Some(64), materialize = true).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(4))).toMap
-    assert(capped === got)
+    // every df is far below the cap of 64, so the capped index loses
+    // nothing; the materialized path (the driver query's) is identical
+    val materialized = DedupOps.containmentPairs(df, materialize = true)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(4))).toMap
+    assert(materialized === got)
   }
 
   test("token drift: ppm rates and top-k ordering match the hand-computed " +
@@ -305,7 +305,7 @@ class OpsSpec extends AnyFunSuite {
     val oldS = docsDf(1L -> "alpha beta alpha", 2L -> "beta gamma")
     val newS = docsDf(3L -> "alpha spamtoken spamtoken spamtoken",
       4L -> "beta gamma")
-    val got = graft.ops.CorpusOps.tokenDrift(oldS, newS, k = 10).collect()
+    val got = graft.ops.CorpusOps.tokenDrift(oldS, newS).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
     // totals: old 5 tokens, new 6. ppm = (c * 10^6) div total.
@@ -351,8 +351,10 @@ class OpsSpec extends AnyFunSuite {
       2L -> "apple banana cherry",
       3L -> "unrelated words only here")
     val df = docsDf(docs: _*)
-    val out = graft.ops.CorpusOps.bm25TopK(df, numQueries = 1, k = 3)
+    // every doc is a query (ids < 10); query 0's ranking is checked
+    val out = graft.ops.CorpusOps.bm25TopK(df)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      .filter(_._1 == 0L)
     // driver-side recompute of the exact integer formula
     val toks = docs.map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
     val n = docs.size.toLong
@@ -408,11 +410,12 @@ class OpsSpec extends AnyFunSuite {
       assert(n === 10L, s"bucket $b")
       assert(mn === (b * 10 + 1) * 7L && mx === (b + 1) * 10 * 7L, s"bucket $b")
     }
-    // duplicates equal to a boundary value stay in the lower bucket
+    // duplicates equal to a boundary value stay in the lower bucket: the
+    // 9 boundaries are 1 ×5 and 2 ×4, so every 2 has five boundaries below
     val dup = (Seq.fill(50)(1L) ++ Seq.fill(50)(2L)).toDF("x")
-    val out2 = graft.ops.ProfileOps.equiDepthHistogram(dup, "x", buckets = 2)
+    val out2 = graft.ops.ProfileOps.equiDepthHistogram(dup, "x")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(out2 === Map(0 -> 50L, 1 -> 50L))
+    assert(out2 === Map(0 -> 50L, 5 -> 50L))
   }
 
   test("table profile: one row per column with completeness, exact " +
@@ -515,23 +518,23 @@ class OpsSpec extends AnyFunSuite {
 
   test("bfsHops: distributed frontier rounds equal a driver-side BFS replay; " +
     "seeds sit at hop 0 and every reported hop is the minimum") {
-    val df = docsDf((0L until 12L).map(i => i -> s"doc $i text"): _*)
-    val edges = graft.ops.GraphOps.linkEdges(df, 12L).collect()
+    val df = docsDf((0L until 200L).map(i => i -> s"doc $i text"): _*)
+    val edges = graft.ops.GraphOps.linkEdges(df, 200L).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (s, es) => s -> es.map(_._2).distinct }
-    // brute BFS from seeds {0, 5, 10} (seedMod = 5 over 12 nodes)
-    var dist = Map(0L -> 0L, 5L -> 0L, 10L -> 0L)
-    var frontier = Set(0L, 5L, 10L)
+    // brute BFS from seeds {0, 97, 194} (doc_id % 97 == 0 over 200 nodes)
+    var dist = Map(0L -> 0L, 97L -> 0L, 194L -> 0L)
+    var frontier = Set(0L, 97L, 194L)
     (1 to 3).foreach { h =>
       val next = frontier.flatMap(n => edges.get(n).toSeq.flatten)
         .filterNot(n => dist.contains(n))
       dist = dist ++ next.map(_ -> h.toLong)
       frontier = next
     }
-    val got = graft.ops.GraphOps.bfsHops(df, maxHops = 3, seedMod = 5L)
+    val got = graft.ops.GraphOps.bfsHops(df)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === dist)
-    assert(got(0L) === 0L && got(5L) === 0L)
+    assert(got(0L) === 0L && got(97L) === 0L)
   }
 
   test("hardNegatives: every mined neighbor has a different label and the " +
@@ -543,7 +546,8 @@ class OpsSpec extends AnyFunSuite {
       (3L, Array(0f, 1f, 0f, 0f), 1),
       (4L, Array(0f, 0f, 1f, 0f), 2))
       .toDF("vec_id", "embedding", "label")
-    val got = SimilarityOps.hardNegatives(vecs, numQueries = 1, k = 3)
+    // every vector is a query (ids < 10); the anchor's list is checked
+    val got = SimilarityOps.hardNegatives(vecs).where(col("query_id") === 0L)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id")))
     assert(got.toSeq === Seq((1, 2L), (2, 3L), (3, 4L)))
   }
@@ -587,7 +591,7 @@ class OpsSpec extends AnyFunSuite {
       (2L, Array(0f, 1f, 0f, 0f), 1),
       (3L, Array(0f, 0.9f, 0.1f, 0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val top = SimilarityOps.bruteTopK(vecs, numQueries = 1, k = 3).collect()
+    val top = SimilarityOps.bruteTopK(vecs).collect()
     assert(top.head.getAs[Long]("neighbor_id") === 1L) // rank 1 = closest
   }
 
@@ -658,10 +662,11 @@ class OpsSpec extends AnyFunSuite {
       (2L, Array(0f, 1f, 0f, 0f), 1),
       (3L, Array(0.6f, 0.8f, 0f, 0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val top = SimilarityOps.topPairs(vecs, k = 3).collect()
+    val top = SimilarityOps.topPairs(vecs).collect()
     assert(top.head.getAs[Long]("vec_a") === 0L)
     assert(top.head.getAs[Long]("vec_b") === 1L)
-    assert(top.map(_.getAs[Int]("rank")).toSeq === Seq(1, 2, 3))
+    // all 6 pairs of the 4 vectors fit in the top 100
+    assert(top.map(_.getAs[Int]("rank")).toSeq === (1 to 6))
   }
 
   test("top pairs: identical-vector collapse is bit-identical to the " +
@@ -706,15 +711,11 @@ class OpsSpec extends AnyFunSuite {
     val a = Array(1f, 0f, 0f, 0f); val b = Array(0.6f, 0.8f, 0f, 0f)
     val vecs = Seq((0L, a), (1L, a), (2L, b), (3L, a), (4L, b), (5L, b))
       .toDF("vec_id", "embedding")
-    val docs = Seq((1L, "s1", 10L), (2L, "s1", 20L), (3L, "s2", 5L))
-      .toDF("doc_id", "source", "n_chars")
     val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
-      "bruteTopK" -> (k => SimilarityOps.bruteTopK(vecs, 2, k)),
       "topPairs collapsed" -> (k => SimilarityOps.topPairsWithFloor(vecs, k,
         SimilarityOps.BruteRowLimit, 0)),
       "topPairs brute" -> (k => SimilarityOps.topPairsWithFloor(vecs, k,
-        SimilarityOps.BruteRowLimit, Int.MaxValue)),
-      "domainCap" -> (k => graft.ops.CorpusOps.domainCap(docs, cap = k)))
+        SimilarityOps.BruteRowLimit, Int.MaxValue)))
     for ((name, op) <- ops; k <- Seq(-1, 0)) {
       val one = op(1)
       assert(one.collect().nonEmpty, name)
@@ -729,16 +730,16 @@ class OpsSpec extends AnyFunSuite {
     val vecs = (0L until 8L).map(i => (i, Array(i.toFloat, 1f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val e1 = intercept[IllegalArgumentException](
-      SimilarityOps.topPairs(vecs, k = 3, maxBroadcastRows = 4))
+      SimilarityOps.topPairs(vecs, maxBroadcastRows = 4))
     assert(e1.getMessage.contains("exactness BASELINE"))
     assert(e1.getMessage.contains("embeddingNearDups"))
     val e2 = intercept[IllegalArgumentException](
       SimilarityOps.thresholdPairs(vecs, minCosine = 0.9,
         maxBroadcastRows = 4))
     assert(e2.getMessage.contains("refuses > 4 rows"))
-    // at or below the limit the baseline still runs
-    assert(SimilarityOps.topPairs(vecs.limit(4), k = 1,
-      maxBroadcastRows = 4).count() === 1L)
+    // at or below the limit the baseline still runs: all 6 pairs of 4 rows
+    assert(SimilarityOps.topPairs(vecs.limit(4),
+      maxBroadcastRows = 4).count() === 6L)
   }
 
   test("embedding near-dups: planted near-identical vectors found via LSH") {
@@ -747,7 +748,7 @@ class OpsSpec extends AnyFunSuite {
     val far = Array.tabulate(64)(i => math.cos(3 * i + 2).toFloat)
     val vecs = Seq((0L, base, 0), (1L, near, 0), (2L, far, 1))
       .toDF("vec_id", "embedding", "label")
-    val pairs = SimilarityOps.embeddingNearDups(vecs, minCosine = 0.99)
+    val pairs = SimilarityOps.embeddingNearDups(vecs)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq === Seq((0L, 1L)))
   }
@@ -766,11 +767,10 @@ class OpsSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val direct = pairSet(
-      SimilarityOps.embeddingNearDups(vecs, minCosine = 0.99)
-        .select("vec_a", "vec_b"))
+      SimilarityOps.embeddingNearDups(vecs).select("vec_a", "vec_b"))
     val fromDump = pairSet(
-      SimilarityOps.embeddingNearDupsFrom(vecs, spark.read.parquet(dir),
-        minCosine = 0.99).select("vec_a", "vec_b"))
+      SimilarityOps.embeddingNearDupsFrom(vecs, spark.read.parquet(dir))
+        .select("vec_a", "vec_b"))
     assert(direct.nonEmpty)
     assert(fromDump === direct)
   }
@@ -779,7 +779,7 @@ class OpsSpec extends AnyFunSuite {
     val vecs = (0L until 50L).map(i =>
       (i, Array.tabulate(8)(j => math.sin(i * 8 + j).toFloat), 0))
       .toDF("vec_id", "embedding", "label")
-    val plan = SimilarityOps.bruteTopK(vecs, numQueries = 3, k = 5)
+    val plan = SimilarityOps.bruteTopK(vecs)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window reducer in plan:\n$plan")
     assert(plan.contains("Aggregate"), s"no aggregate in plan:\n$plan")
@@ -860,12 +860,10 @@ class OpsSpec extends AnyFunSuite {
       val plainRows = large.join(small, "k").collect().toSet
       val plainShuffled = shuffleRecords(
         large.join(small, "k").write.format("noop").mode("overwrite").save())
-      val reduced = graft.ops.BloomJoin.bloomReducedJoin(large, small, "k",
-        expectedItems = 100, fpp = 0.01)
+      val reduced = graft.ops.BloomJoin.bloomReducedJoin(large, small, "k")
       assert(reduced.collect().toSet === plainRows)
       val bloomShuffled = shuffleRecords(
-        graft.ops.BloomJoin.bloomReducedJoin(large, small, "k",
-          expectedItems = 100, fpp = 0.01)
+        graft.ops.BloomJoin.bloomReducedJoin(large, small, "k")
           .write.format("noop").mode("overwrite").save())
       assert(plainShuffled >= 20000, s"plain join shuffled $plainShuffled")
       assert(bloomShuffled * 5 < plainShuffled,
@@ -881,28 +879,28 @@ class OpsSpec extends AnyFunSuite {
       (id, center.map(c => (c + rng.nextGaussian() * 0.05).toFloat), 0)
     val c1 = Array.fill(8)(5.0)
     val c2 = Array.fill(8)(-5.0)
-    val vecs = ((0L until 20L).map(around(c1, _)) ++
-      (20L until 40L).map(around(c2, _)))
+    // even ids around c1, odd ids around c2: the 16 seed centroids (the
+    // first 16 ids) cover both clusters, so no cell mixes them
+    val vecs = (0L until 40L)
+      .map(i => around(if (i % 2 == 0) c1 else c2, i))
       .toDF("vec_id", "embedding", "label")
-    val centroids = IvfOps.train(vecs, k = 2, iters = 5)
+    val centroids = IvfOps.train(vecs)
     val cells = IvfOps.assign(vecs, centroids).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert((0L until 20L).map(cells).toSet.size === 1)
-    assert((20L until 40L).map(cells).toSet.size === 1)
-    assert(cells(0L) !== cells(20L))
+    val (evenCells, oddCells) = cells.partition(_._1 % 2 == 0)
+    assert(evenCells.values.toSet.intersect(oddCells.values.toSet).isEmpty)
     // train → assign → probe → rank, as the queries run the steps
     val assigned = IvfOps.assign(vecs, centroids)
     def ivfTopK(nprobe: Int) = IvfOps.topKFrom(vecs, assigned,
-      IvfOps.probes(vecs, centroids, numQueries = 3, nprobe = nprobe),
-      numQueries = 3, topK = 5)
-    // queries 0..2 probe their own cell first; neighbors stay in-cluster
+      IvfOps.probes(vecs, centroids, nprobe))
+    // queries 0..9 probe their own cell first; neighbors stay in-cluster
     val top = ivfTopK(nprobe = 1).collect()
     assert(top.nonEmpty)
-    assert(top.forall(_.getAs[Long]("neighbor_id") < 20L))
+    assert(top.forall(r => r.getLong(0) % 2 == r.getAs[Long]("neighbor_id") % 2))
     // IVF with nprobe=all cells equals brute force
-    val full = ivfTopK(nprobe = 2)
+    val full = ivfTopK(nprobe = 16)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val brute = SimilarityOps.bruteTopK(vecs, numQueries = 3, k = 5)
+    val brute = SimilarityOps.bruteTopK(vecs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(full === brute)
   }
@@ -970,11 +968,13 @@ class OpsSpec extends AnyFunSuite {
     assert(out("c") === (11L, 6L, 0L))
     assert(out("d") === (30L, 6L, 0L))
     assert(out.values.map(_._2).sum === 48L * 2L / 5L)
-    // remainder path: budget=21 with budgetNum=7, budgetDen=16 →
-    // floor(48*7/16)=21 → k=2, pk=7, lev=(21-7)/2=7, rem=0... use a total
-    // that forces rem>0: budgetNum=5, budgetDen=12 → B=20, lev=6 rem=1 →
-    // bump goes to c (first unsaturated in supply-asc order), not d
-    val out2 = CorpusOps.budgetWaterfill(df, budgetNum = 5L, budgetDen = 12L)
+    // remainder path: d with 32 tokens → total 50, B = 50*2/5 = 20,
+    // k=2, pk=7, lev=(20-7)/2=6, rem=1 → bump goes to c (first
+    // unsaturated in supply-asc order), not d
+    val df2 = df.where(col("source") =!= "d").unionByName(
+      Seq((4L, (1 to 32).map("y" + _).mkString(" "), "d"))
+        .toDF("doc_id", "text", "source"))
+    val out2 = CorpusOps.budgetWaterfill(df2)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(out2 === Map("a" -> 2L, "b" -> 5L, "c" -> 7L, "d" -> 6L))
     assert(out2.values.sum === 20L)
@@ -1002,8 +1002,7 @@ class OpsSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 7) "CHANGED" else s"token$i").mkString(" ")
     val df = docsDf(1L -> base, 2L -> nearDup)
-    val out = DedupOps.minhashEstimates(df, minJaccardPct = 60,
-      bbit = true).collect()
+    val out = DedupOps.minhashEstimates(df, bbit = true).collect()
     assert(out.length === 1)
     val r = out.head
     val (estPct, nBit, estB) = (r.getAs[Long]("est_pct"),
@@ -1019,43 +1018,46 @@ class OpsSpec extends AnyFunSuite {
 
   test("PQ: codes compress, ADC ranking recovers exact neighbors on separated clusters") {
     import graft.ops.PqOps
-    // two well-separated clusters in 8 dims (m=2 subspaces of 4): PQ with
-    // k=4 codes per subspace must rank in-cluster vectors above the other
+    // two well-separated clusters in 32 dims (4 subspaces of 8): PQ with
+    // 16 codes per subspace must rank in-cluster vectors above the other
     // cluster for every query
-    val vecs = (0 until 24).map { i =>
-      val base = if (i < 12) 0.5 else -0.5
-      val v = Array.tabulate(8)(d => (base + (i % 12) * 0.001 + d * 0.0001).toFloat)
-      (i.toLong, v)
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val cb = PqOps.train(df, m = 2, k = 4, iters = 3)
-    assert(cb.length === 2 && cb(0).length === 4 && cb(0)(0).length === 4)
+    val df = pqClusters()
+    val cb = PqOps.train(df)
+    assert(cb.length === 4 && cb(0).length === 16 && cb(0)(0).length === 8)
     val codes = PqOps.encode(df, cb)
-    assert(codes.count() === 24L * 2)
-    // in-cluster vectors share codes; cross-cluster vectors differ
+    assert(codes.count() === 24L * 4)
+    // cross-cluster vectors differ in their codes
     val byVec = codes.collect()
       .groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq).toMap
     assert(byVec(0L) !== byVec(23L))
-    val out = PqOps.adcRecallFrom(df, codes,
-      PqOps.codebookDf(spark, cb), numQueries = 4, topK = 5).collect()
-    assert(out.length === 4)
+    val out = PqOps.adcRecallFrom(df, codes, PqOps.codebookDf(spark, cb))
+      .collect()
+    assert(out.length === 10)
     out.foreach { r =>
-      // queries 0..3 live in cluster one; clusters are far apart vs
-      // quantization error, so both rank-1s are in-cluster and the ADC
-      // top-5 recovers ≥4 of the exact top-5 (within-cluster vectors can
-      // collapse onto one code → ADC ties break by id, exact ones don't)
-      assert(r.getLong(1) >= 4L, s"recall@5 for query ${r.getLong(0)}")
-      assert(r.getLong(2) < 12L && r.getLong(3) < 12L)
+      // clusters are far apart vs quantization error, so both rank-1s are
+      // in-cluster and both top-10s are 10 of the query's 11 cluster
+      // mates: they share at least 9
+      val q = r.getLong(0)
+      assert(r.getLong(1) >= 9L, s"recall@10 for query $q")
+      assert(r.getLong(2) % 2 === q % 2 && r.getLong(3) % 2 === q % 2)
     }
   }
+
+  /** Two well-separated clusters of 12 in 32 dims, interleaved by id
+    * parity (so the first 16 ids, the PQ seeds, cover both). */
+  private def pqClusters() = (0 until 24).map { i =>
+    val base = if (i % 2 == 0) 0.5 else -0.5
+    val v = Array.tabulate(32)(d => (base + (i / 2) * 0.001 + d * 0.0001).toFloat)
+    (i.toLong, v)
+  }.toDF("vec_id", "embedding")
 
   test("chunk pooling: integer floor-mean per dim, one row per (group, dim)") {
     import graft.ops.PqOps
     // dyadic coordinates so the grid is exact: q = (250·i, −250·i)
     val vecs = (0 until 10).map(i =>
       (i.toLong, Array(i * 0.25f, -i * 0.25f))).toDF("vec_id", "embedding")
-    val out = PqOps.chunkPooling(vecs, chunksPerDoc = 5, outDims = 2)
+    val out = PqOps.chunkPooling(vecs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // group 0 = ids 0..4: Σ250i = 2500 → 500; negative side floors to −500
     assert(out((0L, 0L)) === 500L)
@@ -1085,32 +1087,28 @@ class OpsSpec extends AnyFunSuite {
 
   test("PQ rerank, prefix and drift audits behave on the separated-cluster fixture") {
     import graft.ops.PqOps
-    val vecs = (0 until 24).map { i =>
-      val base = if (i < 12) 0.5 else -0.5
-      val v = Array.tabulate(8)(d => (base + (i % 12) * 0.001 + d * 0.0001).toFloat)
-      (i.toLong, v)
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val cb = PqOps.train(df, m = 2, k = 4, iters = 3)
+    val df = pqClusters()
+    val cb = PqOps.train(df)
     val codes = PqOps.encode(df, cb)
     val cbDf = PqOps.codebookDf(spark, cb)
-    // two-stage: ADC candidates deep enough to cover the cluster → exact
-    // re-rank recovers the exact top-5 perfectly (ties resolved by stage 2)
-    val rr = PqOps.rerankRecall(df, codes, cbDf, candidates = 12,
-      numQueries = 4, topK = 5).collect()
-    rr.foreach(r => assert(r.getLong(1) === 5L,
+    // two-stage: 50 ADC candidates cover all 23 other vectors → exact
+    // re-rank recovers the exact top-10 perfectly (ties resolved by stage 2)
+    val rr = PqOps.rerankRecall(df, codes, cbDf).collect()
+    assert(rr.length === 10)
+    rr.foreach(r => assert(r.getLong(1) === 10L,
       s"rerank recall for query ${r.getLong(0)}"))
-    // Matryoshka: a 4-dim prefix of this fixture still separates clusters
-    val pr = PqOps.prefixRecall(df, prefixDims = 4, numQueries = 4,
-      topK = 5).collect()
+    // Matryoshka: a 16-dim prefix of this fixture still separates
+    // clusters, so both top-10s are 10 of the 11 cluster mates
+    val pr = PqOps.prefixRecall(df).collect()
     pr.foreach { r =>
-      assert(r.getLong(1) >= 4L)
-      assert(r.getLong(2) < 12L && r.getLong(3) < 12L)
+      val q = r.getLong(0)
+      assert(r.getLong(1) >= 9L)
+      assert(r.getLong(2) % 2 === q % 2 && r.getLong(3) % 2 === q % 2)
     }
     // drift: codebook trained on even ids only still reconstructs both
     // cohorts; two rollup rows, errors non-negative
     val even = df.where(col("vec_id") % 2 === 0)
-    val cbOld = PqOps.train(even, m = 2, k = 4, iters = 3)
+    val cbOld = PqOps.train(even)
     val drift = PqOps.driftAudit(df, PqOps.encode(df, cbOld),
       PqOps.codebookDf(spark, cbOld)).collect()
     assert(drift.map(_.getLong(0)).toSeq === Seq(0L, 1L))
@@ -1173,7 +1171,7 @@ class OpsSpec extends AnyFunSuite {
   test("count-min sketch: point estimates upper-bound true frequencies") {
     import graft.ops.CorpusOps
     val df = docsDf(1L -> "x x x y z", 2L -> "x y y w")
-    val cells = CorpusOps.countMinSketch(df, depth = 4, width = 256).collect()
+    val cells = CorpusOps.countMinSketch(df).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     // every row's total mass equals total token count
     (0 until 4).foreach { r =>
@@ -1235,7 +1233,7 @@ class OpsSpec extends AnyFunSuite {
     "hamming answer (pigeonhole recall 1.0) and is layout-invariant") {
     val docs = graft.io.Synthesizer.docs(spark, 120, 42L)
     val dump = "/tmp/graft_phash_refs_spec"
-    val got = MultimodalOps.phashNearDupsDumped(docs, dump, maxHamming = 3)
+    val got = MultimodalOps.phashNearDupsDumped(docs, dump)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSeq
     val refs = docs.collect()
@@ -1249,8 +1247,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got === brute.sortBy(p => (p._1, p._2)))
     assert(got.nonEmpty) // the corpus must actually exercise the join
     val got2 = MultimodalOps.phashNearDupsDumped(
-      graft.io.Synthesizer.docs(spark, 120, 42L).repartition(7), dump,
-      maxHamming = 3)
+      graft.io.Synthesizer.docs(spark, 120, 42L).repartition(7), dump)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSeq
     assert(got2 === got)
@@ -1260,13 +1257,14 @@ class OpsSpec extends AnyFunSuite {
     "the band-bucket cap trips as a pure recall trade") {
     // the r4 scale fix: the band join runs over distinct-hash reps with
     // exact-dup pairs emitted arithmetically. The brute-equality test
-    // above already pins losslessness at the default cap; here: (1) a
+    // above already pins losslessness at the 4096 cap; here: (1) a
     // CONSTRUCTED hash-identical group (the dHash grid samples byte
     // positions 0..71 only, so distinct refs differing past byte 72
     // share the full 64-bit hash — the exact-dup-cluster shape the
     // collapse exists for) comes out as its 3 hamming-0 pairs, and
-    // (2) maxBandBucket=1 drops every cross-hash candidate (every bucket
-    // with ≥2 reps is pruned) while hash-identical pairs survive
+    // (2) a cap of 1 (the `phashNearDupsCapped` kernel; no test corpus
+    // fills a 4096-rep bucket) drops every cross-hash candidate (every
+    // bucket with ≥2 reps is pruned) while hash-identical pairs survive
     // untouched — the documented p25-style recall trade, never a
     // correctness change on the kept pairs
     import spark.implicits._
@@ -1280,7 +1278,7 @@ class OpsSpec extends AnyFunSuite {
       i <- collide.indices; j <- (i + 1) until collide.length
     } yield (collide(i), collide(j), 0L)
     val dump = "/tmp/graft_phash_refs_spec_cap"
-    val full = MultimodalOps.phashNearDupsDumped(docs, dump, maxHamming = 3)
+    val full = MultimodalOps.phashNearDupsDumped(docs, dump)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSeq
     val exactDups = full.filter(_._3 == 0L)
@@ -1288,8 +1286,8 @@ class OpsSpec extends AnyFunSuite {
     assert(crossDups.nonEmpty) // the banded path is actually exercised
     // the planted collision group surfaces as exactly its 3 zero-pairs
     assert(collidePairs.forall(exactDups.contains), exactDups.take(5))
-    val capped = MultimodalOps.phashNearDupsDumped(docs, dump,
-        maxHamming = 3, maxBandBucket = 1)
+    val capped = MultimodalOps.phashNearDupsCapped(docs, dump,
+        maxBandBucket = 1)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSeq
     assert(capped.filter(_._3 == 0L) === exactDups)
@@ -1472,9 +1470,9 @@ class OpsSpec extends AnyFunSuite {
       ("prefix", d => DedupOps.prefixFilteredJaccardPairs(d),
         d => DedupOps.prefixFilteredJaccardPairsUncollapsed(d, 3, 50, false)),
       ("weighted", d => DedupOps.weightedJaccardPairs(d),
-        d => DedupOps.weightedJaccardPairsUncollapsed(d, 3, 50, None)),
+        d => DedupOps.weightedJaccardPairsUncollapsed(d, 3, 50)),
       ("minhash", d => DedupOps.minhashLsh(d),
-        d => DedupOps.minhashLshUncollapsed(d, 3, 32, 3, 60)),
+        d => DedupOps.minhashLshUncollapsed(d, 32, 3, 60)),
       ("simhash", d => DedupOps.simhashPairs(d),
         d => DedupOps.simhashPairsUncollapsed(d)))
     cases.foreach { case (name, collapsed, uncollapsed) =>
@@ -1541,18 +1539,11 @@ class OpsSpec extends AnyFunSuite {
         assert(rows(DedupOps.exactJaccardPairs(d, maxDf = Some(cap))) ===
           rows(DedupOps.exactJaccardPairsUncollapsed(d, 3, 50, Some(cap))),
           s"exact maxDf=$cap on $corpus")
-        assert(rows(DedupOps.weightedJaccardPairs(d, maxDf = Some(cap))) ===
-          rows(DedupOps.weightedJaccardPairsUncollapsed(d, 3, 50, Some(cap))),
-          s"weighted maxDf=$cap on $corpus")
       }
       val exOn = rows(DedupOps.exactJaccardPairs(docs, maxDf = Some(cap)))
       val exOff = rows(DedupOps.exactJaccardPairsUncollapsed(docs, 3, 50,
         Some(cap)))
       assert(exOn === exOff, s"exact maxDf=$cap collapse changed output")
-      val wOn = rows(DedupOps.weightedJaccardPairs(docs, maxDf = Some(cap)))
-      val wOff = rows(DedupOps.weightedJaccardPairsUncollapsed(docs, 3, 50,
-        Some(cap)))
-      assert(wOn === wOff, s"weighted maxDf=$cap collapse changed output")
       val ids = exOn.map(s => (s(0).asInstanceOf[Long], s(1).asInstanceOf[Long]))
       if (cap < 4) // cluster A larger than the cap: no pair may survive
         assert(!ids.exists(p => p._1 <= 4L || p._2 <= 4L),
@@ -1600,12 +1591,17 @@ class OpsSpec extends AnyFunSuite {
 
   test("missing id ranges: block-local gaps, boundary gaps and a " +
     "fully-missing block recovered exactly") {
-    // blockBits=2 → blocks {0,2,3} {5} {8} — {16,17}; block 3 (12..15)
-    // is entirely absent and must surface inside the 9..15 boundary gap
-    val ids = Seq(0L, 2L, 3L, 5L, 8L, 16L, 17L).toDF("doc_id")
-    val out = graft.ops.ProfileOps.missingIdRanges(ids, "doc_id", blockBits = 2)
+    // 256-id blocks: block 0 holds 0..17 with in-block gaps (18..255
+    // crosses into block 1); 256/260 sit in block 1 (gap 257..259
+    // in-block, 261..511 across the boundary);
+    // block 2 holds 512..767; block 3 (768..1023) is entirely absent and
+    // must surface inside the 768..1023 boundary gap before block 4
+    val ids = (Seq(0L, 2L, 3L, 5L, 8L, 16L, 17L, 256L, 260L) ++
+      (512L to 767L) ++ Seq(1024L)).toDF("doc_id")
+    val out = graft.ops.ProfileOps.missingIdRanges(ids, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(out === Seq((1L, 1L), (4L, 4L), (6L, 7L), (9L, 15L)))
+    assert(out === Seq((1L, 1L), (4L, 4L), (6L, 7L), (9L, 15L),
+      (18L, 255L), (257L, 259L), (261L, 511L), (768L, 1023L)))
   }
 
   test("rendezvous shards: growing 16 to 17 moves keys ONLY into the new " +
@@ -1622,11 +1618,11 @@ class OpsSpec extends AnyFunSuite {
   test("feistel shuffle: each epoch is an injective position assignment, " +
     "epochs are distinct permutations, and the census is repartition-stable") {
     val docs = docsDf((0L until 300L).map(i => i -> s"t$i"): _*)
-    val out = graft.ops.PackingOps.feistelShuffle(docs, epochs = 3).collect()
+    val out = graft.ops.PackingOps.feistelShuffle(docs).collect()
     // injectivity: positions never collide (equal positions would share a
     // shard, so per-shard distinct counts summing to the total proves it)
-    assert(out.map(_.getAs[Long]("n_docs")).sum === 900L)
-    assert(out.map(_.getAs[Long]("n_distinct_pos")).sum === 900L)
+    assert(out.map(_.getAs[Long]("n_docs")).sum === 600L)
+    assert(out.map(_.getAs[Long]("n_distinct_pos")).sum === 600L)
     out.foreach { r =>
       assert(r.getAs[Long]("n_distinct_pos") === r.getAs[Long]("n_docs"))
       assert(r.getAs[Long]("min_pos") >= 0L)
@@ -1636,18 +1632,19 @@ class OpsSpec extends AnyFunSuite {
     val byEpoch = out.groupBy(_.getAs[Long]("epoch")).view
       .mapValues(_.map(r => (r.getAs[Long]("shard"), r.getAs[Long]("n_docs")))
         .toSeq.sorted).toMap
+    assert(byEpoch.keySet === Set(0L, 1L))
     assert(byEpoch(0L) !== byEpoch(1L))
-    assert(byEpoch(1L) !== byEpoch(2L))
     // deterministic under physical layout changes
-    val re = graft.ops.PackingOps.feistelShuffle(docs.repartition(7), 3)
+    val re = graft.ops.PackingOps.feistelShuffle(docs.repartition(7))
       .collect().map(_.toSeq).toSet
     assert(re === out.map(_.toSeq).toSet)
   }
 
   test("dense ranks: block-local numbering + offsets equal the global " +
     "row_number over sparse cross-block keys") {
+    // 32-id blocks: {3, 10, 11} share block 0; 40 and 1000 sit alone
     val ids = Seq(3L, 10L, 11L, 40L, 1000L).toDF("doc_id")
-    val out = graft.ops.ProfileOps.denseRanks(ids, "doc_id", blockBits = 3)
+    val out = graft.ops.ProfileOps.denseRanks(ids, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out === Map(3L -> 0L, 10L -> 1L, 11L -> 2L, 40L -> 3L,
       1000L -> 4L))
@@ -1770,8 +1767,7 @@ class OpsSpec extends AnyFunSuite {
         .toSet
     def both(vecs: org.apache.spark.sql.DataFrame) = {
       val buckets = SimilarityOps.lshBucketsMulti(vecs)
-      (rows(SimilarityOps.embeddingNearDupsFrom(vecs, buckets,
-        minCosine = 0.45)),
+      (rows(SimilarityOps.embeddingNearDupsFrom(vecs, buckets)),
        rows(SimilarityOps.bucketPairsVerify(buckets, vecs, 0.45)))
     }
     // degenerate inputs: zero rows, one row, two identical rows
@@ -2051,13 +2047,15 @@ class OpsSpec extends AnyFunSuite {
       1L -> "the needle beta",
       2L -> "the the the gamma",
       3L -> "unrelated words only")
-    val out = graft.ops.CorpusOps.tfidfTopK(docs, numQueries = 1, k = 3).collect()
+    // every doc is a query (ids < 10); query 0's ranking is checked
+    val out = graft.ops.CorpusOps.tfidfTopK(docs).where(col("query_id") === 0L)
+      .collect()
     assert(out.map(_.getAs[Long]("neighbor_id")).head === 1L)
     // d3 shares no token with q → absent from the ranking entirely
     assert(!out.map(_.getAs[Long]("neighbor_id")).contains(3L))
   }
 
-  test("hash sample: deterministic, stratified, salt-sensitive") {
+  test("hash sample: deterministic and stratified") {
     val docs = (0L until 200L).map(i => (i, if (i % 2 == 0) "en" else "fr"))
       .toDF("doc_id", "lang")
     val a = graft.ops.CorpusOps.hashSample(docs, Map("en" -> 50), 20)
@@ -2067,9 +2065,6 @@ class OpsSpec extends AnyFunSuite {
     assert(a === b) // pure row rule: re-runs select identical rows
     val en = a.count(_ % 2 == 0); val fr = a.count(_ % 2 == 1)
     assert(en > fr) // 50% stratum vs 20% stratum
-    val salted = graft.ops.CorpusOps.hashSample(docs, Map("en" -> 50), 20,
-      salt = "other").collect().map(_.getLong(0)).toSet
-    assert(salted !== a) // salt redraws
   }
 
   test("salted skew join: row-identical to the plain join, heavy key spread") {
@@ -2088,16 +2083,16 @@ class OpsSpec extends AnyFunSuite {
     assert(nSalts > 1)
     // adaptive form: detector finds exactly the planted heavy key (60%
     // share vs ~8% for the rest) and the one-call join stays row-identical
-    val detected = graft.ops.SkewJoin.heavyKeys(probe, "k", minSharePct = 20.0)
+    val detected = graft.ops.SkewJoin.heavyKeys(probe, "k", minSharePct = 10.0)
     assert(detected === Seq(7L))
     val adaptive = graft.ops.SkewJoin.adaptiveSaltedJoin(
-      probe, build, "k", col("row_id"), minSharePct = 20.0)
+      probe, build, "k", col("row_id"))
     assert(adaptive.exceptAll(plain).isEmpty && plain.exceptAll(adaptive).isEmpty)
-    // no-skew input: empty heavy list degrades to the plain join
-    val uniform = (1L to 100L).map(i => (i % 10, i)).toDF("k", "row_id")
-    assert(graft.ops.SkewJoin.heavyKeys(uniform, "k", minSharePct = 50.0).isEmpty)
+    // no-skew input (5 % per key): empty heavy list degrades to the plain join
+    val uniform = (1L to 100L).map(i => (i % 20, i)).toDF("k", "row_id")
+    assert(graft.ops.SkewJoin.heavyKeys(uniform, "k", minSharePct = 10.0).isEmpty)
     val degenerate = graft.ops.SkewJoin.adaptiveSaltedJoin(
-      uniform, build, "k", col("row_id"), minSharePct = 50.0)
+      uniform, build, "k", col("row_id"))
     val uniformPlain = uniform.join(build, "k")
     assert(degenerate.exceptAll(uniformPlain).isEmpty &&
       uniformPlain.exceptAll(degenerate).isEmpty)
@@ -2109,7 +2104,7 @@ class OpsSpec extends AnyFunSuite {
     val near = (1 to 27).map(i => s"tok$i").mkString(" ") + " alt1 alt2 alt3"
     val docs = Seq((1L, base), (2L, base), (3L, near), (4L, "unrelated words only"))
       .toDF("doc_id", "text")
-    val rows = graft.ops.DedupOps.minhashEstimates(docs, minJaccardPct = 50)
+    val rows = graft.ops.DedupOps.minhashEstimates(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7)))
     val ident = rows.find(t => t._1 == 1L && t._2 == 2L).get
@@ -2121,8 +2116,7 @@ class OpsSpec extends AnyFunSuite {
     assert(nearRows.nonEmpty, "planted near-dup pair must pass the exact gate")
     nearRows.foreach(t => assert(t._6 <= 40L,
       s"estimator error ${t._6}pp outside the k=16 envelope"))
-    val rows2 = graft.ops.DedupOps.minhashEstimates(docs.repartition(5),
-        minJaccardPct = 50)
+    val rows2 = graft.ops.DedupOps.minhashEstimates(docs.repartition(5))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7)))
     assert(rows2.toSeq === rows.toSeq)
@@ -2147,15 +2141,15 @@ class OpsSpec extends AnyFunSuite {
       (4L, "d", 40, false),  // insert
       (3L, "", 0, true))     // delete
       .toDF("doc_id", "name", "v", "is_delete")
-    val out = graft.ops.MergeOps.upsert(snapshot, delta, "doc_id",
-        deleteCol = Some("is_delete"))
+    val out = graft.ops.MergeOps.upsert(snapshot, delta, "doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     assert(out === Set((1L, "a", 10), (2L, "b2", 22), (4L, "d", 40)))
   }
 
   test("merge upsert raises on duplicate delta keys (real MERGE semantics)") {
     val snapshot = Seq((1L, "a", 10)).toDF("doc_id", "name", "v")
-    val delta = Seq((1L, "x", 1), (1L, "y", 2)).toDF("doc_id", "name", "v")
+    val delta = Seq((1L, "x", 1, false), (1L, "y", 2, false))
+      .toDF("doc_id", "name", "v", "is_delete")
     val e = intercept[IllegalArgumentException] {
       graft.ops.MergeOps.upsert(snapshot, delta, "doc_id")
     }
@@ -2387,18 +2381,18 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("decontaminate flags docs sharing a w-gram with the benchmark") {
-    // doc 1 embeds a verbatim 5-token benchmark span, doc 2 is clean,
-    // doc 3 shares a 4-token run only (below w=5)
+    // doc 1 embeds a verbatim 5-token benchmark span (two shared 4-grams),
+    // doc 2 is clean, doc 3 shares a 3-token run only (below w=4)
     val benchSpan = "the quick brown fox jumps"
     val corpus = docsDf(
       1L -> s"prefix tokens then $benchSpan and a tail",
       2L -> "completely unrelated content with no overlap at all",
-      3L -> "the quick brown fox sits still today ok")
+      3L -> "the quick brown sits still today ok")
     val bench = docsDf(100L -> s"eval question about $benchSpan over lazy dogs")
-    val out = graft.ops.CorpusOps.decontaminate(corpus, bench, w = 5)
+    val out = graft.ops.CorpusOps.decontaminate(corpus, bench)
       .collect()
     assert(out.map(r => (r.getLong(0), r.getAs[Long]("n_hit_grams"))).toSet
-      === Set((1L, 1L))) // exactly the one shared 5-gram, doc 1 only
+      === Set((1L, 2L))) // exactly the two shared 4-grams, doc 1 only
   }
 
   test("threshold pairs: planted near-identical vectors found, others not; " +
@@ -2437,18 +2431,19 @@ class OpsSpec extends AnyFunSuite {
 
   test("oov stats: rare tokens fall outside the induced vocab; " +
        "tie at the boundary breaks by token text") {
-    // freqs: aa=4, bb=3, cc=2, dd=2, ee=1 → top-3 vocab = aa, bb, cc
-    // (cc beats dd on the tie by token order); OOV = dd, ee
+    // freqs: v01..v19 = 5 each, cc=2, dd=2, ee=1 → top-20 vocab = the
+    // 19 v's and cc (cc beats dd on the tie by token order); OOV = dd, ee
+    val vs = (1 to 19).map(i => f"v$i%02d")
+    def rep(n: Int) = Seq.fill(n)(vs).flatten.mkString(" ")
     val out = graft.ops.CorpusOps.oovStats(docsDf(
-        1L -> "aa aa bb cc dd",
-        2L -> "aa aa bb bb cc dd ee"), vocabSize = 3)
+        1L -> s"${rep(2)} cc dd",
+        2L -> s"${rep(3)} cc dd ee"))
       .collect().map(r => (r.getLong(0),
         r.getAs[Long]("n_oov_tokens"), r.getAs[Long]("n_oov_types"))).toSet
     assert(out === Set((1L, 1L, 1L), (2L, 2L, 2L)))
   }
 
-  test("quota sample: exactly n per stratum, deterministic across runs, " +
-       "salt redraws") {
+  test("quota sample: exactly n per stratum, deterministic across runs") {
     val df = (1L to 50L).map(i => (i, if (i <= 30) "en" else "fr"))
       .toDF("doc_id", "lang")
     val a = graft.ops.CorpusOps.quotaSample(df, Map("en" -> 7), 4).collect()
@@ -2457,9 +2452,6 @@ class OpsSpec extends AnyFunSuite {
     val b = graft.ops.CorpusOps.quotaSample(df, Map("en" -> 7), 4).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(a.toSet === b.toSet) // re-run stable
-    val c = graft.ops.CorpusOps.quotaSample(df, Map("en" -> 7), 4,
-      salt = "other").collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(c.length === 11 && c.toSet != a.toSet) // salt redraws the sample
     // quota larger than the stratum returns the whole stratum
     val d = graft.ops.CorpusOps.quotaSample(df, Map("en" -> 100), 100).collect()
     assert(d.length === 50)

@@ -31,8 +31,8 @@ class OversizeSpec extends AnyFunSuite {
   test("salted path: oversize heavy doc rejected without the span shuffle") {
     val heavyBig = Doc("bigH", Vector.tabulate(10)(i =>
       Span("text", if (i == 0) bigText else s"line $i", null, i)))
-    val out = SaltedPipeline.run(Seq(normal("ok2"), heavyBig).toDS(),
-      heavyThreshold = 8).collect().map(r => r.doc_id -> r).toMap
+    val out = SaltedPipeline.run(Seq(normal("ok2"), heavyBig).toDS())
+      .collect().map(r => r.doc_id -> r).toMap
     assert(out("bigH").document_type === "Rejected")
     assert(out("ok2").document_type === "Aadhaar Card")
     // the salted Rejected row is the fused path's row, field for field

@@ -183,7 +183,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("p23 tfidf top-k: idf and query sides broadcast; no cartesian") {
     val df = graft.ops.CorpusOps.tfidfTopK(
-      spark.read.parquet(s"$dir/documents.parquet"), numQueries = 3, k = 5)
+      spark.read.parquet(s"$dir/documents.parquet"))
     val plan = staticPlan(df).toString
     assert(plan.contains("BroadcastHashJoin"), s"plan:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
@@ -208,8 +208,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     val d = spark.read.parquet(s"$dir/documents.parquet")
     val plan = staticPlan(graft.ops.CorpusOps.decontaminate(
-      d.where(col("doc_id") % 20 =!= 0), d.where(col("doc_id") % 20 === 0),
-      w = 3))
+      d.where(col("doc_id") % 20 =!= 0), d.where(col("doc_id") % 20 === 0)))
     // exchanges: ONE on the (tiny) bench side for its distinct, ONE on the
     // (already joined-down) matched grams for the per-doc count — the
     // corpus gram stream itself reaches the overlap join without shuffling

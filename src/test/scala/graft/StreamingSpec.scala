@@ -66,41 +66,6 @@ class StreamingSpec extends AnyFunSuite {
       s"got $pairs")
   }
 
-  test("stream-stream LEFT OUTER interval join: an unmatched purchase " +
-    "emits its null-click row only after the watermark closes it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val pStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val cStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val ts = (h: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:00:00")
-    val out = StreamingExtraction.intervalJoinStream(
-      pStream.toDS().toDF("p_user", "p_ts", "p_id"),
-      cStream.toDS().toDF("c_user", "c_ts", "c_id"),
-      joinType = "leftOuter")
-    val q = out.writeStream.format("memory").queryName("ssj_outer")
-      .outputMode("append").start()
-    // a purchase with NO click for its user
-    pStream.addData(Seq((7L, ts(10), 701L)))
-    cStream.addData(Seq((8L, ts(10), 801L)))
-    q.processAllAvailable()
-    // not yet closable: the watermark hasn't passed 10:00 + window
-    assert(!spark.table("ssj_outer").collect()
-      .exists(_.getLong(0) == 701L), "outer row leaked before the horizon")
-    // advance BOTH watermarks well past the horizon, then run the extra
-    // batch that flushes watermark-closed outer state
-    pStream.addData(Seq((9L, ts(20), 901L)))
-    cStream.addData(Seq((9L, ts(20), 902L)))
-    q.processAllAvailable()
-    pStream.addData(Seq((9L, ts(21), 903L)))
-    cStream.addData(Seq((9L, ts(21), 904L)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssj_outer").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)))).toMap
-    assert(rows(701L) === None, s"expected null click for 701: $rows")
-    assert(rows(901L) === Some(902L)) // same-ts click joins (c_ts <= p_ts)
-  }
-
   test("transformWithState running count: ValueState persists across " +
     "micro-batches in the RocksDB state store") {
     import spark.implicits._
@@ -129,69 +94,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("stream-stream LEFT SEMI interval join: a purchase with matching " +
-    "clicks emits exactly once however many match; one with none never " +
-    "emits — the existence probe without the fan-out") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val pStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val cStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val ts = (m: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
-    val out = StreamingExtraction.intervalJoinStream(
-      pStream.toDS().toDF("p_user", "p_ts", "p_id"),
-      cStream.toDS().toDF("c_user", "c_ts", "c_id"),
-      joinType = "leftSemi")
-    val q = out.writeStream.format("memory").queryName("ssj_semi")
-      .outputMode("append").start()
-    // user 1: TWO in-window clicks for one purchase → one output row;
-    // user 2: no clicks at all → no row, ever
-    cStream.addData(Seq((1L, ts(5), 101L), (1L, ts(10), 102L)))
-    pStream.addData(Seq((1L, ts(30), 201L), (2L, ts(30), 202L)))
-    q.processAllAvailable()
-    // a click arriving in a LATER batch still semi-qualifies its purchase
-    pStream.addData(Seq((3L, ts(40), 203L)))
-    cStream.addData(Seq((3L, ts(35), 103L)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssj_semi").collect().map(_.getLong(0)).toSeq
-    assert(rows.sorted === Seq(201L, 203L), s"got $rows")
-  }
-
-  test("stream-stream FULL OUTER interval join: both unmatched sides emit " +
-    "null-padded rows once the watermark closes their state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val pStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val cStream = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val ts = (h: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:00:00")
-    val out = StreamingExtraction.intervalJoinStream(
-      pStream.toDS().toDF("p_user", "p_ts", "p_id"),
-      cStream.toDS().toDF("c_user", "c_ts", "c_id"),
-      joinType = "fullOuter")
-    val q = out.writeStream.format("memory").queryName("ssj_full")
-      .outputMode("append").start()
-    // a purchase with no click (user 7) AND a click with no purchase
-    // (user 8) — full outer must eventually emit BOTH null-padded rows
-    pStream.addData(Seq((7L, ts(10), 701L)))
-    cStream.addData(Seq((8L, ts(10), 801L)))
-    q.processAllAvailable()
-    // advance both watermarks past the horizon + a flush batch
-    pStream.addData(Seq((9L, ts(20), 901L)))
-    cStream.addData(Seq((9L, ts(20), 902L)))
-    q.processAllAvailable()
-    pStream.addData(Seq((9L, ts(21), 903L)))
-    cStream.addData(Seq((9L, ts(21), 904L)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssj_full").collect()
-      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
-    assert(rows.contains((Some(701L), None)),
-      s"purchase-side outer row missing: $rows")
-    assert(rows.contains((None, Some(801L))),
-      s"click-side outer row missing: $rows")
-    assert(rows.contains((Some(901L), Some(902L)))) // matched pair intact
-  }
-
   test("session windows merge events within the gap, close on watermark, " +
     "emit once in append mode") {
     import spark.implicits._
@@ -203,16 +105,16 @@ class StreamingSpec extends AnyFunSuite {
       .sessionMetrics(stream.toDS().toDF("ts", "user_id"))
       .writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
-    // u1: two events 2 min apart (one session), then one 30 min later
-    // (a second session)
+    // u1: two events 2 min apart (one session), then one 58 min later,
+    // past the 30-minute gap (a second session)
     stream.addData(Seq((ts(10, 0), "u1"), (ts(10, 2), "u1"),
-      (ts(10, 30), "u1")))
+      (ts(11, 0), "u1")))
     q.processAllAvailable()
-    // the batch's own watermark (10:30 - 10m = 10:20) already closes the
-    // FIRST session (ends 10:07); the 10:30 session is still open
+    // the batch's own watermark (11:00 - 10m = 10:50) already closes the
+    // FIRST session (ends 10:32); the 11:00 session is still open
     assert(spark.table("sess_out").count() === 1)
-    // sentinel event pushes the watermark to 10:50 — the second closes too
-    stream.addData(Seq((ts(11, 0), "u2")))
+    // sentinel event pushes the watermark to 11:50 — the second closes too
+    stream.addData(Seq((ts(12, 0), "u2")))
     q.processAllAvailable()
     q.processAllAvailable() // second no-data batch finalizes the emit
     q.stop()
@@ -223,8 +125,8 @@ class StreamingSpec extends AnyFunSuite {
         r.getTimestamp(2), r.getLong(3))).toSet
     // session end = last event + gap; u2's session is still open
     assert(got === Set(
-      ("u1", ts(10, 0), ts(10, 7), 2L),
-      ("u1", ts(10, 30), ts(10, 35), 1L)))
+      ("u1", ts(10, 0), ts(10, 32), 2L),
+      ("u1", ts(11, 0), ts(11, 30), 1L)))
   }
 
   test("streaming dedup drops duplicates within and across micro-batches") {
@@ -307,7 +209,7 @@ class StreamingSpec extends AnyFunSuite {
       3L -> s"another doc also containing $benchSpan")  // hit (batch 2)
     val stream = MemoryStream[(Long, String)]
     stream.addData(corpus.take(2))
-    val q = StreamingExtraction.decontaminateStream(stream.toDS(), bench, w = 5)
+    val q = StreamingExtraction.decontaminateStream(stream.toDS(), bench)
       .toDF("doc_id", "n_hit_grams")
       .writeStream.format("memory").queryName("decon_out")
       .outputMode("append").start()
@@ -318,7 +220,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.table("decon_out").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
     val batch = graft.ops.CorpusOps.decontaminate(
-        corpus.toDF("doc_id", "text"), bench, w = 5).collect()
+        corpus.toDF("doc_id", "text"), bench).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n_hit_grams")).toSet
     assert(got === batch)
     assert(got.map(_._1) === Set(1L, 3L))

@@ -92,30 +92,29 @@ class SuffixOpsSpec extends AnyFunSuite {
 
   test("lcp census matches the brute-force adjacent-suffix scan, " +
       "window caps long repeats, planted verbatim repeat is visible") {
-    // doc 2 repeats doc 1's 30-char phrase verbatim → some adjacent pair
-    // must share ≥ 30 chars; the window cap (16) truncates it to 16
-    val phrase = "the exact thirty char phrase x"
+    // doc 2 repeats doc 1's 70-char phrase verbatim → some adjacent pair
+    // must share ≥ 70 chars; the 64-char window cap truncates it to 64
+    val phrase = "the exact seventy char phrase that doc one and doc two share verbatim!"
     val docs = Seq(
       (1L, s"alpha $phrase beta ${"na" * 5}"),
       (2L, s"gamma $phrase delta"),
       (3L, "unrelated content entirely zz"))
     val got = graft.ops.SuffixOps
-      .lcpCensus(docs.toDF("doc_id", "text"), maxLen = 96, window = 16)
+      .lcpCensus(docs.toDF("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
-    assert(got === bruteLcp(docs, maxLen = 96, window = 16))
-    // the planted repeat saturates the window: an LCP = 16 pair exists
-    assert(got.contains(16L))
+    assert(got === bruteLcp(docs, maxLen = 128, window = 64))
+    // the planted repeat saturates the window: an LCP = 64 pair exists
+    assert(got.contains(64L))
   }
 
   test("lcp census is partition-count invariant") {
     val docs = (0L until 24L).map(i =>
       (i, s"shared header text ${"ab" * (i % 5 + 1).toInt} tail $i"))
     val df = docs.toDF("doc_id", "text")
-    val a = graft.ops.SuffixOps.lcpCensus(df, maxLen = 64, window = 24)
+    val a = graft.ops.SuffixOps.lcpCensus(df)
       .collect().map(_.toSeq)
-    val b = graft.ops.SuffixOps
-      .lcpCensus(df.repartition(7), maxLen = 64, window = 24)
+    val b = graft.ops.SuffixOps.lcpCensus(df.repartition(7))
       .collect().map(_.toSeq)
     assert(a.nonEmpty && a.toSeq === b.toSeq)
   }
@@ -169,13 +168,12 @@ class SuffixOpsSpec extends AnyFunSuite {
       (3L, "entirely unique content with no repeats at all qqq"),
       (4L, "na" * 40)) // internal repeats → overlapping spans merge
     val got = graft.ops.SuffixOps
-      .repeatSpans(docs.toDF("doc_id", "text"),
-        maxLen = 96, window = 32, minLen = 20)
+      .repeatSpans(docs.toDF("doc_id", "text"))
       .collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
-    val want = bruteSpans(docs, maxLen = 96, window = 32, minLen = 20)
+    val want = bruteSpans(docs, maxLen = 128, window = 64, minLen = 20)
     assert(got === want)
     assert(got.contains(1L) && got.contains(2L) && got.contains(4L))
     assert(!got.contains(3L))
@@ -187,23 +185,22 @@ class SuffixOpsSpec extends AnyFunSuite {
     val docs = (0L until 20L).map(i =>
       (i, s"common shared prefix block ${"xy" * (i % 4 + 1).toInt} t$i"))
     val df = docs.toDF("doc_id", "text")
-    val a = graft.ops.SuffixOps
-      .repeatSpans(df, maxLen = 64, window = 32, minLen = 12)
+    val a = graft.ops.SuffixOps.repeatSpans(df)
       .collect().map(_.toSeq)
-    val b = graft.ops.SuffixOps
-      .repeatSpans(df.repartition(7), maxLen = 64, window = 32, minLen = 12)
+    val b = graft.ops.SuffixOps.repeatSpans(df.repartition(7))
       .collect().map(_.toSeq)
     assert(a.nonEmpty && a.toSeq === b.toSeq)
   }
 
   /** Planted dup-cluster corpus for the exact-dup collapse equality pins:
     * a size-4 identical cluster, a size-2 cluster identical ONLY within
-    * the maxLen cap (diverging tails), a cross-doc repeated phrase whose
+    * the 128-char cap (diverging tails), a cross-doc repeated phrase whose
     * docs are NOT identical, self-repetitive and unique docs. Non-dense
     * doc_ids so rep selection (min id) is exercised off the identity
     * layout. */
   private val dupCorpus: Seq[(Long, String)] = {
     val phrase = "the shared verbatim phrase that repeats across docs!"
+    val head = "capped head identical part " * 5 // 135 chars: past the cap
     Seq(
       (3L, s"alpha $phrase tail one ${"na" * 6}"),
       (17L, s"cluster body text ${"xy" * 8} end"),
@@ -211,70 +208,68 @@ class SuffixOpsSpec extends AnyFunSuite {
       (41L, s"cluster body text ${"xy" * 8} end"),  // = 17
       (55L, s"cluster body text ${"xy" * 8} end"),  // = 17
       (8L, s"beta $phrase other tail entirely AAAA"),
-      (30L, "capped head identical part then DIVERGENT-A suffix material"),
-      (22L, "capped head identical part then DIVERGENT-B suffix material"),
+      (30L, head + "then DIVERGENT-A suffix material"),
+      (22L, head + "then DIVERGENT-B suffix material"),
       (11L, "wholly unique content with no repeats qqq zz"),
       (6L, "na" * 30))
   }
 
   test("exact-dup collapse: all four ops are bit-identical to the " +
       "per-doc path on a planted dup-cluster corpus") {
-    // maxLen=30 makes docs 30/22 identical within the cap (their full
-    // texts differ) — the collapse must group on the CAPPED text
+    // docs 30/22 are identical within the 128-char cap (their full texts
+    // differ) — the collapse must group on the CAPPED text
     import graft.ops.SuffixOps
+    import SuffixOps.{CensusShardShift, LcpWindow, RepeatMinLen, SuffixMaxLen}
     def rows(df: org.apache.spark.sql.DataFrame, sorted: Boolean = false) = {
       val r = df.collect().map(_.toSeq).toSeq
       if (sorted) r.sortBy(_.toString) else r
     }
     // (ranks, census, lcp, spans), each collapsed and per-doc
-    def both(df: org.apache.spark.sql.DataFrame, maxLen: Int)
+    def both(df: org.apache.spark.sql.DataFrame)
       : Seq[(String, Seq[Seq[Any]], Seq[Seq[Any]])] = Seq(
-      ("ranks", rows(SuffixOps.suffixRanks(df, maxLen), sorted = true),
-        rows(SuffixOps.ranksCore(df, maxLen), sorted = true)),
-      ("census", rows(SuffixOps.suffixCensus(df, maxLen, shardShift = 4)),
-        rows(SuffixOps.suffixCensusUncollapsed(df, maxLen, shardShift = 4))),
-      ("lcp", rows(SuffixOps.lcpCensus(df, maxLen, window = 16)),
-        rows(SuffixOps.lcpCensusOf(df, df, maxLen, window = 16))),
-      ("spans", rows(SuffixOps.repeatSpans(df, maxLen, window = 24,
-          minLen = 10)),
-        rows(SuffixOps.repeatSpansKernel(df, maxLen, window = 24,
-          minLen = 10, collapseExact = false))))
+      ("ranks", rows(SuffixOps.suffixRanks(df, SuffixMaxLen), sorted = true),
+        rows(SuffixOps.ranksCore(df, SuffixMaxLen), sorted = true)),
+      ("census", rows(SuffixOps.suffixCensus(df)),
+        rows(SuffixOps.suffixCensusUncollapsed(df, SuffixMaxLen,
+          CensusShardShift))),
+      ("lcp", rows(SuffixOps.lcpCensus(df)),
+        rows(SuffixOps.lcpCensusOf(df, df, SuffixMaxLen, LcpWindow))),
+      ("spans", rows(SuffixOps.repeatSpans(df)),
+        rows(SuffixOps.repeatSpansKernel(df, SuffixMaxLen, LcpWindow,
+          RepeatMinLen, collapseExact = false))))
     // degenerate inputs: zero rows, one row, two identical rows (the
-    // identical pair flags its whole 12-char text as a verbatim repeat)
-    val deg = "repeat me ok"
+    // identical pair flags its whole 24-char text as a verbatim repeat)
+    val deg = "repeat me ok, twice over"
     for ((name, n) <- Seq(("zero rows", 0), ("one row", 1),
         ("two identical rows", 2))) {
       val df = Seq(5L -> deg, 9L -> deg).take(n).toDF("doc_id", "text")
-      both(df, 96).foreach { case (op, c, u) =>
+      both(df).foreach { case (op, c, u) =>
         assert(c === u, s"$op on $name")
         assert(c.isEmpty === (n == 0 || op == "spans" && n == 1),
           s"$op on $name")
       }
     }
-    val df = dupCorpus.toDF("doc_id", "text")
-    for (maxLen <- Seq(30, 96)) {
-      val ops = both(df, maxLen)
-      ops.foreach { case (op, c, u) =>
-        assert(c.nonEmpty && c === u, s"$op maxLen=$maxLen")
-      }
-      val sc = ops.last._2
-      // every member of the size-4 cluster got its (identical) span row:
-      // duplicate-class suffixes of a 4-cluster all reach the threshold
-      val spanIds = sc.map(_.head.asInstanceOf[Long]).toSet
-      assert(Set(17L, 9L, 41L, 55L).subsetOf(spanIds))
+    val ops = both(dupCorpus.toDF("doc_id", "text"))
+    ops.foreach { case (op, c, u) =>
+      assert(c.nonEmpty && c === u, op)
     }
+    val sc = ops.last._2
+    // every member of the size-4 cluster got its (identical) span row:
+    // duplicate-class suffixes of a 4-cluster all reach the threshold
+    val spanIds = sc.map(_.head.asInstanceOf[Long]).toSet
+    assert(Set(17L, 9L, 41L, 55L).subsetOf(spanIds))
   }
 
   test("census: shard counts, distincts and checksums are partition-count" +
       " invariant") {
-    val docs = (0L until 30L).map(i => (i, ("xy" * (i % 11 + 1).toInt) +
+    // ~1,700 suffixes: several 512-rank shards
+    val docs = (0L until 120L).map(i => (i, ("xy" * (i % 11 + 1).toInt) +
       i.toString))
     val df = docs.toDF("doc_id", "text")
-    val a = graft.ops.SuffixOps.suffixCensus(df, maxLen = 64, shardShift = 4)
+    val a = graft.ops.SuffixOps.suffixCensus(df)
       .collect().map(_.toSeq)
-    val b = graft.ops.SuffixOps
-      .suffixCensus(df.repartition(7), maxLen = 64, shardShift = 4)
+    val b = graft.ops.SuffixOps.suffixCensus(df.repartition(7))
       .collect().map(_.toSeq)
-    assert(a.nonEmpty && a.toSeq === b.toSeq)
+    assert(a.length > 1 && a.toSeq === b.toSeq)
   }
 }

@@ -92,10 +92,9 @@ class TableIOSpec extends AnyFunSuite {
     val df = (0 until n).map { i =>
       (i.toLong, s"type${i % 4}", (i * 2654435761L) % 1000000L)
     }.toDF("id", "event_type", "k")
-    // 16 range buckets over (event_type, k): each of the 4 dirs gets ~4
-    // files, each covering ~a quarter of the k range
-    TableIO.writePartitionedClustered(df, s"$dir/clustered", "event_type", "k",
-      numRangeBuckets = 16)
+    // 8 range buckets over (event_type, k): each of the 4 dirs gets ~2
+    // files, each covering ~half of the k range
+    TableIO.writePartitionedClustered(df, s"$dir/clustered", "event_type", "k")
     // control: same partition dirs, random row order within
     df.repartition(16).write.mode("overwrite")
       .partitionBy("event_type").parquet(s"$dir/random")
@@ -126,9 +125,10 @@ class TableIOSpec extends AnyFunSuite {
     assert(filesC < filesAll, s"no dir pruning: $filesC of $filesAll files")
     assert(filesR < filesAll * 2) // control reads only its dir too
     // row-group skipping: the clustered scan surfaces only the row groups
-    // whose [min,max] overlaps the 5% k band; the random layout's row
-    // groups all span ~the full k range, so none are skipped
-    assert(rowsC <= n / 8, s"clustered scan surfaced $rowsC rows")
+    // whose [min,max] overlaps the 5% k band (about half of type1's rows);
+    // the random layout's row groups all span ~the full k range, so none
+    // are skipped
+    assert(rowsC <= n / 4 * 6 / 10, s"clustered scan surfaced $rowsC rows")
     assert(rowsR >= n / 4 * 9 / 10, s"control unexpectedly pruned: $rowsR")
     // same answer either way
     assert(spark.read.parquet(s"$dir/clustered").where(pred).count() ===
@@ -139,16 +139,18 @@ class TableIOSpec extends AnyFunSuite {
     "row groups; the x-clustered control skips only on x") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    // full 256×256 grid so tile geometry is exact, n = 65536
-    val n = 256 * 256
+    // full 64×64 grid (the 6-bit Morton domain) so tile geometry is
+    // exact, n = 4096
+    val n = 64 * 64
     val df = (0 until n).map { i =>
-      (i.toLong, (i % 256).toLong, (i / 256).toLong)
+      (i.toLong, (i % 64).toLong, (i / 64).toLong)
     }.toDF("id", "x", "y")
-    // 64 range buckets over the 16-bit Morton code ≈ 32×32 tiles per file
-    TableIO.writeZOrdered(df, s"$dir/zorder", "x", "y", files = 64, bits = 8)
+    // 8 range buckets over the 12-bit Morton code: each file is one 3-bit
+    // prefix (y5, x5, y4), a 32×16 tile of 512 rows
+    TableIO.writeZOrdered(df, s"$dir/zorder", "x", "y")
     // control: classic single-column clustering — perfect stats on x,
     // every file spans the FULL y range
-    df.repartitionByRange(64, col("x")).sortWithinPartitions("x", "y")
+    df.repartitionByRange(8, col("x")).sortWithinPartitions("x", "y")
       .write.mode("overwrite").parquet(s"$dir/linear")
 
     def rowsRead(path: String, filter: org.apache.spark.sql.Column): Long = {
@@ -164,25 +166,26 @@ class TableIOSpec extends AnyFunSuite {
     }
 
     // y-only band (1/8 of the range): the second clustering dimension —
-    // the case single-column layouts cannot skip on at all
-    val yOnly = col("y").between(96L, 127L)
+    // the case single-column layouts cannot skip on at all. It lies in
+    // two tiles (n/4); repartitionByRange samples its bucket boundaries,
+    // so each tile can straddle two files (measured: 4 of the 8 files)
+    // and the bound is 5 of 8 files
+    val yOnly = col("y").between(16L, 23L)
     val zY = rowsRead(s"$dir/zorder", yOnly)
     val linY = rowsRead(s"$dir/linear", yOnly)
-    assert(zY <= n / 4, s"z layout surfaced $zY rows on a y-only band")
+    assert(zY <= n * 5 / 8, s"z layout surfaced $zY rows on a y-only band")
     assert(linY >= n * 9L / 10, s"x-clustered control unexpectedly pruned: $linY")
-    // 2-D box deliberately crossing tile boundaries — ideally ≤4 tiles of
-    // 1024 rows; repartitionByRange samples its bucket boundaries, so tiles
-    // straddle files and the realized read is a few buckets more (n/4 bound)
-    val box = col("x").between(56L, 71L) && col("y").between(120L, 135L)
+    // 2-D box deliberately crossing a tile boundary (y = 16): two tiles
+    val box = col("x").between(8L, 23L) && col("y").between(12L, 19L)
     val zBox = rowsRead(s"$dir/zorder", box)
-    assert(zBox <= n / 4, s"z layout surfaced $zBox rows on a 16×16 box")
+    assert(zBox <= n * 5 / 8, s"z layout surfaced $zBox rows on a 16×8 box")
     // content-lossless: both layouts answer identically
     assert(spark.read.parquet(s"$dir/zorder").where(box).count() ===
       spark.read.parquet(s"$dir/linear").where(box).count())
     assert(spark.read.parquet(s"$dir/zorder").where(yOnly).count() === n / 8)
     // interleave math pinned: x=3 (011), y=5 (101) → 100111b = 39
     val z35 = spark.range(1).select(
-      TableIO.zValue(lit(3), lit(5), bits = 3).as("z")).head.getLong(0)
+      TableIO.zValue(lit(3), lit(5)).as("z")).head.getLong(0)
     assert(z35 === 39L)
   }
 
@@ -194,7 +197,7 @@ class TableIOSpec extends AnyFunSuite {
       (i.toLong, s"type${i % 4}", i * 3L)
     }.toDF("id", "event_type", "v")
     graft.io.TableIO.writePartitionedClustered(fact, s"$dir/fact",
-      "event_type", "id", numRangeBuckets = 16)
+      "event_type", "id")
     // dim must be a real table (a LocalRelation's filter constant-folds
     // away before the PartitionPruning rule can see it)
     Seq(("type1", "keep"), ("type2", "drop"), ("type3", "drop"),
@@ -236,9 +239,8 @@ class TableIOSpec extends AnyFunSuite {
     def nFiles(p: String): Int = new java.io.File(p).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(nFiles(s"$dir/small") === 32)
-    val n = TableIO.compact(spark, s"$dir/small", s"$dir/out",
-      targetFileBytes = 64L * 1024 * 1024)
-    assert(n === 1) // 500 tiny docs fit one 64 MB target file
+    val n = TableIO.compact(spark, s"$dir/small", s"$dir/out")
+    assert(n === 1) // 500 tiny docs fit one 4 MB target file
     assert(nFiles(s"$dir/out") === n)
     // compaction must not pay a shuffle: the rewrite plan is exchange-free
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")

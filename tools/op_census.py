@@ -4,8 +4,10 @@
 Run from the repo root:
 
     python3 tools/op_census.py            # full report
-    python3 tools/op_census.py --check    # exit 1 on an unset option, an uncalled
+    python3 tools/op_census.py --check    # exit 1 on an unset option, an option
+                                          # with one main value, an uncalled
                                           # public def or an unreached def
+    python3 tools/test_op_census.py       # self-test on a synthetic tree
 
 It reads every member `def` of the objects in the library packages under
 src/main/scala/graft/ (PACKAGES) and every call of them in src/main,
@@ -14,7 +16,8 @@ perfbench/src and src/test, then prints
   * for each public def, its callers outside its own object, split into
     main (src/main and perfbench/src) and specs (src/test);
   * for each defaulted parameter, one class: `main` (set by main code),
-    `specs` (set only by specs) or `nobody` (set by no call);
+    `specs` (set only by specs) or `nobody` (set by no call); for a public
+    one, also its main values, or `pinned` (below);
   * totals per package.
 
 The harness and query files are callers, not surface: `Bench`, `Verify`,
@@ -44,15 +47,29 @@ no member def (an object's initialiser, a class body, a top-level class)
 counts as reached: the census does not parse classes, so check those by
 hand. `override def`s implement a supertype and are never unreached.
 
+The main values of a public defaulted parameter are collected over the
+calls in reached main code (a call from a member def counts only when that
+def is reached, so calls from specs and SPEC_HOOKS kernels never count):
+the argument's text where a call passes it, the default's text where a call
+leaves it out, and "many values" where a call forwards an enclosing def's
+parameter. Argument text is read from the source with only comments
+blanked, so string literals keep their content (`"e1"` and `"qta"` differ).
+The comparison is lexical: an alias (`ShingleW` for `3`) is a second value,
+so aliases are checked by hand.
+
 `--check` fails when a defaulted parameter of a covered def is set by
-nobody, when a public covered def has no caller outside its own object in
-main code, or when a member def is not reached. The guards in GUARDS are
-exempt from the first rule: they are safety switches, so a default nobody
-overrides is their normal state. The defs in SPEC_HOOKS are exempt from the
-third: they are reference implementations and branch kernels that specs
-compare a reached op against, and each entry names the op it pins. An entry
-that names a missing def, a def that is now reached, or a pinned op that is
-not reached fails the check too, so the list cannot go stale.
+nobody, when a public defaulted parameter has exactly one main value (an
+option main code only ever uses one way is a constant), when a public
+covered def has no caller outside its own object in main code, or when a
+member def is not reached. The guards in GUARDS are exempt from the first
+two rules: they are safety switches, so a default nobody overrides is their
+normal state. So are *pinned* options, the ones HARNESS files set: those
+files do not change, so the option stays whatever its values. The defs in
+SPEC_HOOKS are exempt from the reach rule: they are reference
+implementations and branch kernels that specs compare a reached op
+against, and each entry names the op it pins. An entry that names a
+missing def, a def that is now reached, or a pinned op that is not reached
+fails the check too, so the list cannot go stale.
 
 The parser is lexical: it blanks comments and string literals (not the code
 inside their interpolations), then matches `def`s and calls by brace depth
@@ -70,6 +87,11 @@ LIB_DIRS = ["src/main/scala/graft/" + p for p in PACKAGES]
 EXCLUDED_FILES = {"src/main/scala/graft/classify/ClassifyQuery.scala"}
 MAIN_DIRS = ["src/main/scala", "perfbench/src"]
 SPEC_DIRS = ["src/test/scala"]
+
+# The measurement and correctness harness: an option it sets is *pinned*
+# (kept whatever its number of values), since these files do not change.
+HARNESS = ("src/main/scala/graft/Bench.scala", "src/main/scala/graft/Verify.scala",
+           "src/main/scala/graft/SparkEntry.scala", "perfbench/src/")
 
 # Safety switches kept on purpose (ROADMAP direction 9).
 GUARDS = {"maxBroadcastRows", "requireUniqueDeltaKeys", "materialize",
@@ -89,15 +111,18 @@ SPEC_HOOKS = {
 }
 
 NOBODY, SPECS, MAIN = 0, 1, 2
+MANY = "<forwarded>"                  # the value of a forwarded parameter
 CLASS_NAME = {NOBODY: "nobody", SPECS: "specs", MAIN: "main"}
 
 IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 
-def blank(src):
+def blank(src, literals=True):
     """Replace comments and string/char literal bodies with spaces, keeping
     every newline so offsets and line numbers are unchanged, and keeping the
-    code inside `s"${...}"` interpolations (a call there is a call)."""
+    code inside `s"${...}"` interpolations (a call there is a call). With
+    `literals=False` only comments are blanked: option values are read from
+    that text at the same offsets, so `"e1"` and `"qta"` stay different."""
     out = list(src)
     i, n = 0, len(src)
 
@@ -109,6 +134,8 @@ def blank(src):
     def wipe_literal(q, a, b):
         """Blank a literal's body, but keep the `${expr}` and `$name` parts of
         an interpolated one (`s"..."`): they are code."""
+        if not literals:
+            return
         if q == 0 or not re.match(r"[A-Za-z0-9_]", src[q - 1]):
             wipe(a, b)
             return
@@ -163,7 +190,8 @@ def blank(src):
             i = j + 1
         elif c == "'" and i + 2 < n and (src[i + 2] == "'" or src[i + 1] == "\\"):
             j = src.find("'", i + 2)
-            wipe(i + 1, j)
+            if literals:
+                wipe(i + 1, j)
             i = j + 1
         else:
             i += 1
@@ -185,21 +213,30 @@ def match_close(text, i):
     return j
 
 
-def split_top(s):
-    """Split an argument or parameter list on its top-level commas."""
-    parts, depth, cur = [], 0, []
-    for c in s:
+class Arg(str):
+    """An argument's or parameter's blanked text; `.lit` is the same slice of
+    the source with only comments blanked (its literals kept)."""
+    def __new__(cls, text, lit):
+        a = str.__new__(cls, text)
+        a.lit = lit
+        return a
+
+
+def split_top(text, lit, a, b):
+    """Split the argument or parameter list text[a:b] on its top-level
+    commas, into Args."""
+    parts, depth, start = [], 0, a
+    for k in range(a, b):
+        c = text[k]
         if c in "([{":
             depth += 1
         elif c in ")]}":
             depth -= 1
         if c == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    if "".join(cur).strip():
-        parts.append("".join(cur))
+            parts.append(Arg(text[start:k], lit[start:k]))
+            start = k + 1
+    if text[start:b].strip():
+        parts.append(Arg(text[start:b], lit[start:b]))
     return parts
 
 
@@ -222,12 +259,15 @@ def indent_at(text, i):
 
 
 class Param:
-    def __init__(self, name, default):
+    def __init__(self, name, default, default_lit):
         self.name = name
         self.default = default        # default expression, or None
+        self.default_lit = default_lit
         self.cls = NOBODY
         self.by_main = []             # "file:line" of each direct setting
         self.by_specs = []
+        self.values = []              # (caller def or None, value) per main call
+        self.pinned = []              # "file:line" of each harness setting
 
 
 class Def:
@@ -262,7 +302,7 @@ OBJ_RE = re.compile(r"(?<![A-Za-z0-9_])object\s+(" + IDENT + r")")
 CLASS_RE = re.compile(r"(?<![A-Za-z0-9_])class\s+" + IDENT)
 
 
-def parse_params(text, i):
+def parse_params(text, lit, i):
     """Parse `[tparams](p: T = d, ...)(...)` from text[i] into [[Param]]."""
     i = skip_ws(text, i)
     if i < len(text) and text[i] == "[":
@@ -270,19 +310,17 @@ def parse_params(text, i):
     lists = []
     while i < len(text) and text[i] == "(":
         j = match_close(text, i)
-        body = text[i + 1:j - 1]
         pl = []
-        for raw in split_top(body):
-            raw = raw.strip()
-            raw = re.sub(r"^(implicit|val|var|final)\s+", "", raw)
-            m = re.match(r"(" + IDENT + r")\s*:", raw)
+        for raw in split_top(text, lit, i + 1, j - 1):
+            m = re.match(r"\s*(?:(?:implicit|val|var|final)\s+)?(" + IDENT + r")\s*:", raw)
             if not m:
                 continue
-            d = None
+            d = dl = None
             eq = re.search(r"(?<![=<>!])=(?![=>])", raw[m.end():])
             if eq:
                 d = raw[m.end() + eq.end():].strip()
-            pl.append(Param(m.group(1), d))
+                dl = raw.lit[m.end() + eq.end():].strip()
+            pl.append(Param(m.group(1), d, dl))
         lists.append(pl)
         i = skip_ws(text, j)
     return lists
@@ -359,7 +397,7 @@ def scala_files(dirs):
                     yield os.path.join(root, f)
 
 
-def collect_defs(files):
+def collect_defs(files, lits):
     """All defs inside covered objects: members and local ones."""
     defs, by_obj = [], {}
     for path, text in files.items():
@@ -376,7 +414,7 @@ def collect_defs(files):
                 if any(ob < m.start() < oe for ob, oe in nested):
                     continue      # a def of a nested object or class
                 ind = indent_at(text, m.start())
-                lists = parse_params(text, m.end())
+                lists = parse_params(text, lits[path], m.end())
                 member = ind == member_indent
                 d = Def(obj, m.group(1), visibility_of(text, m.start()), member,
                         m.start(), body_end(text, m.start()), lists, path,
@@ -431,9 +469,11 @@ def block_end(text, pos):
 
 def main(argv):
     check = "--check" in argv
+    lits = {p: blank(read(p), literals=False)
+            for p in scala_files(LIB_DIRS + MAIN_DIRS + SPEC_DIRS)}
     lib_files = {p: blank(read(p)) for p in scala_files(LIB_DIRS)
                  if p not in EXCLUDED_FILES}
-    defs, by_obj = collect_defs(lib_files)
+    defs, by_obj = collect_defs(lib_files, lits)
     fq_of = {}                        # object -> fully qualified name
     for path, text in lib_files.items():
         for (obj, _, _) in objects_in(text):
@@ -450,8 +490,9 @@ def main(argv):
 
     def record(callee_defs, arg_lists, where, path, pos, caller_obj):
         encl = enclosing_def(path, pos) if path in lib_files else []
+        caller = next((e for e in encl if e.member), None)
+        site = f"{path}:{line_of(text_of[path], pos)}"
         if where == MAIN:
-            caller = next((e for e in encl if e.member), None)
             if caller is None:
                 roots.update(callee_defs)
             else:
@@ -462,17 +503,19 @@ def main(argv):
                     caller_obj or os.path.basename(path))
             else:
                 d.inside_calls += 1
+            passed = set()
             for li, args in enumerate(arg_lists[:len(d.lists)]):
                 pl = d.lists[li]
                 for ai, a in enumerate(args):
                     nm = re.match(r"\s*(" + IDENT + r")\s*=(?![=>])\s*(.*)$", a, re.S)
                     if nm and any(p.name == nm.group(1) for p in pl):
                         target = next(p for p in pl if p.name == nm.group(1))
-                        expr = nm.group(2).strip()
+                        expr, value = nm.group(2).strip(), a.lit[nm.start(2):]
                     elif ai < len(pl):
-                        target, expr = pl[ai], a.strip()
+                        target, expr, value = pl[ai], a.strip(), a.lit
                     else:
                         continue
+                    passed.add(target)
                     src = None
                     if re.fullmatch(IDENT, expr):
                         for e in encl:
@@ -480,16 +523,25 @@ def main(argv):
                             if hit:
                                 src = hit[0]
                                 break
-                    site = f"{path}:{line_of(text_of[path], pos)}"
                     if src is not None and src.default is not None:
                         forwards.append((src, target))
                     elif where == MAIN:
                         target.by_main.append(site)
                     else:
                         target.by_specs.append(site)
+                    if where == MAIN:
+                        target.values.append(
+                            (caller, MANY if src is not None else " ".join(value.split())))
+                        if path.startswith(HARNESS):
+                            target.pinned.append(site)
+            if where == MAIN:
+                for p in d.params():
+                    if p.default is not None and p not in passed:
+                        p.values.append((caller, " ".join(p.default_lit.split())))
 
     def scan(path, text, where):
         text_of[path] = text
+        lit = lits[path]
         objs = objects_in(text)
 
         def obj_at(pos):
@@ -503,8 +555,8 @@ def main(argv):
             lists = []
             while i < len(text) and text[i] in "({":
                 j = match_close(text, i)
-                inner = text[i + 1:j - 1]
-                lists.append(split_top(inner) if text[i] == "(" else [inner])
+                lists.append(split_top(text, lit, i + 1, j - 1) if text[i] == "(" else
+                             [Arg(text[i + 1:j - 1], lit[i + 1:j - 1])])
                 i = j
             return lists, i
 
@@ -586,7 +638,8 @@ def main(argv):
                 if text.startswith("=", j) and not text.startswith("==", j) \
                         and not text.startswith("=>", j) and "update" in by_obj[obj]:
                     name = "update"
-                    rhs = text[j + 1:text.find("\n", j) if "\n" in text[j:] else len(text)]
+                    e = text.find("\n", j) if "\n" in text[j:] else len(text)
+                    rhs = Arg(text[j + 1:e], lit[j + 1:e])
                     al = [al[0] + [rhs]] if al else [[rhs]]
                 else:
                     name = "apply"
@@ -650,6 +703,10 @@ def main(argv):
             stale.append(f"SPEC_HOOKS entry {hook} pins {pinned}, which is "
                          f"not a reached def")
 
+    def main_values(p):
+        """The distinct values reached main calls give p."""
+        return sorted({v for caller, v in p.values if caller is None or caller in reached})
+
     public = [d for d in members if d.public]
     print("== public library defs: outside callers (main | specs) ==")
     for d in sorted(public, key=lambda d: (d.package, d.obj, d.line)):
@@ -658,7 +715,8 @@ def main(argv):
         print(f"{d.label():45s} main: {','.join(sorted(d.main_callers)) or '-'}"
               f" | specs: {','.join(sorted(d.spec_callers)) or '-'}{note}")
     print()
-    print("== defaulted parameters of library defs ==")
+    print("== defaulted parameters of library defs: class, then the values reached "
+          "main calls give a public one ==")
     opts = [(d, p) for d in members if not d.override
             for p in d.params() if p.default is not None]
     for d, p in sorted(opts, key=lambda t: (t[0].package, t[0].obj, t[0].line)):
@@ -666,11 +724,18 @@ def main(argv):
         sites = p.by_main if p.cls == MAIN else p.by_specs
         site = (f"  e.g. {sites[0]}" if sites else
                 "  via a forward" if p.cls != NOBODY else "")
+        vals = ""
+        if d.public and not tag:
+            vals = (f"  pinned at {p.pinned[0]}" if p.pinned else
+                    "  values: " + " | ".join(v[:30] for v in main_values(p)))
         print(f"{d.label() + '.' + p.name:55s} {CLASS_NAME[p.cls]:7s} "
-              f"{d.visibility}{tag}{site}")
+              f"{d.visibility}{tag}{site}{vals}")
     print()
 
     nobody = [(d, p) for d, p in opts if p.cls == NOBODY and p.name not in GUARDS]
+    one_value = [(d, p) for d, p in opts if d.public and p.name not in GUARDS
+                 and not p.pinned and len(main_values(p)) == 1
+                 and main_values(p) != [MANY]]
     uncalled = [d for d in public if not d.main_callers]
 
     def totals(pkg):
@@ -679,6 +744,8 @@ def main(argv):
         return [len(pub), sum(len(d.params()) for d in pub), len(pub_opts)] + \
             [sum(1 for p in pub_opts if p.cls == c) for c in (MAIN, SPECS, NOBODY)] + \
             [sum(1 for p in pub_opts if p.name in GUARDS),
+             sum(1 for p in pub_opts if p.pinned and p.name not in GUARDS),
+             sum(1 for d, p in one_value if pkg in (None, d.package)),
              sum(1 for d, p in nobody if pkg in (None, d.package)),
              sum(1 for d in uncalled if pkg in (None, d.package)),
              sum(1 for d in members if pkg in (None, d.package)),
@@ -692,19 +759,23 @@ def main(argv):
 
     print("== totals per package ==")
     print("columns: public defs | public parameters | settable options (defaulted "
-          "public parameters): set by main, by specs, by nobody, guards | "
+          "public parameters): set by main, by specs, by nobody, guards, pinned by "
+          "the harness, with one main value (guards and pinned exempt) | "
           "parameters set by nobody (any visibility, guards exempt) | public defs "
           "without an outside caller in main code | member defs (any visibility): "
           "unreached, spec hooks")
     for pkg in PACKAGES + [None]:
         t = totals(pkg)
         print(f"{pkg or 'all':10s} defs {t[0]:4d}  params {t[1]:4d}  options {t[2]:4d}"
-              f" (main {t[3]:3d}, specs {t[4]:3d}, nobody {t[5]:3d}, guards {t[6]})"
-              f"  nobody {t[7]:3d}  uncalled {t[8]:3d}"
-              f"  members {t[9]:4d} (unreached {t[10]:3d}, hooks {t[11]:2d})")
+              f" (main {t[3]:3d}, specs {t[4]:3d}, nobody {t[5]:3d}, guards {t[6]},"
+              f" pinned {t[7]}, one-value {t[8]:3d})  nobody {t[9]:3d}  uncalled {t[10]:3d}"
+              f"  members {t[11]:4d} (unreached {t[12]:3d}, hooks {t[13]:2d})")
     if check:
         for d, p in nobody:
             print(f"FAIL: {d.label()}.{p.name} ({d.path}:{d.line}) is set by nobody")
+        for d, p in one_value:
+            print(f"FAIL: {d.label()}.{p.name} ({d.path}:{d.line}) has one main value: "
+                  f"{main_values(p)[0]}")
         for d in uncalled:
             print(f"FAIL: public {d.label()} ({d.path}:{d.line}) has no caller outside "
                   f"{d.obj} in main code")
@@ -713,7 +784,7 @@ def main(argv):
                   f"code and is not in SPEC_HOOKS")
         for msg in stale:
             print(f"FAIL: {msg}")
-        return 1 if nobody or uncalled or unreached or stale else 0
+        return 1 if nobody or one_value or uncalled or unreached or stale else 0
     return 0
 
 

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Iteration-aid bench (guide §1.4): time an explicit SUBSET of the
   * declared queries with the noop sink, min-of-reps, in a session
-  * configured exactly like `Bench.newSession`. Optionally dumps
-  * `.explain("formatted")` per query for the plans/r06 evidence files.
+  * configured exactly like `Bench.newSession` (`graft.Session`).
+  * Optionally dumps `.explain("formatted")` per query for the plans/r06
+  * evidence files.
   *
   * This main is ADDITIVE — `Bench.scala` / `Verify.scala` are frozen for
   * measurement; numbers cited from here are labelled as BenchExtra runs
@@ -21,21 +20,6 @@ object BenchExtra {
     val t0 = System.nanoTime()
     f
     (System.nanoTime() - t0) / 1e9
-  }
-
-  def newSession(threads: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "131072")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** Optional per-job profile (SPARK_GRAFT_JOB_PROFILE=1): logs every
@@ -74,7 +58,7 @@ object BenchExtra {
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = newSession(cpus)
+    val spark = Session.local(cpus)
     if (sys.env.get("SPARK_GRAFT_JOB_PROFILE").contains("1"))
       spark.sparkContext.addSparkListener(new JobProfiler)
     // same warm as Bench: compile the extraction chain before timing

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipe.ExtractionPipeline
 
 /** One benchmark phase in its own JVM (spawned by Bench under `taskset`):
@@ -13,15 +12,7 @@ object BenchPhase {
     val threads = args(0).toInt
     val path = args(1)
     val reps = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "131072")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(threads)
     import spark.implicits._
     def run(): Double = {
       val t0 = System.nanoTime()

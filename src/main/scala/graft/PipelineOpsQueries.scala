@@ -552,7 +552,7 @@ object PipelineOpsQueries {
     // (df-capped index + materialized fingerprint table); the oracle
     // replicates the cap, so the hash stays exact
     "p65_containment" -> ((s, dir) =>
-      DedupOps.containmentPairs(docs(s, dir), materialize = true)
+      DedupOps.containmentPairs(docs(s, dir))
         .orderBy("doc_id", "container_id")),
 
     // corpus drift monitor: the even/odd doc_id slices stand in as two
@@ -869,7 +869,7 @@ object PipelineOpsQueries {
     // never generate candidates — yet the oracle computes the FULL
     // inverted-index join independently, so losslessness is checked
     "p113_jaccard_prefix" -> ((s, dir) =>
-      DedupOps.prefixFilteredJaccardPairs(docs(s, dir), materialize = true)),
+      DedupOps.prefixFilteredJaccardPairs(docs(s, dir))),
 
     // rendezvous-hash reshard plan: grow 16 → 17 shards; HRW moves ONLY
     // the ~1/17 of keys the new shard wins, all INTO shard 16 — the

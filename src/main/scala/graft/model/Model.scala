@@ -130,7 +130,6 @@ final class PyDict {
   def apply(k: String): Any = m(k)
   def get(k: String): Option[Any] = m.get(k)
   def contains(k: String): Boolean = m.contains(k)
-  def keys: Iterable[String] = m.keys
   def isEmpty: Boolean = m.isEmpty
   /** Python `d.get(k)` truthiness test helper. */
   def truthy(k: String): Boolean = m.get(k).exists(v => !PyDict.isFalsy(v))

@@ -788,20 +788,15 @@ object CorpusOps {
     * carries only (source, 8-byte hash) — raw text never moves. The
     * distinct postings table feeds the df count AND both self-join sides;
     * exchange reuse does not fire across object-operator subtrees
-    * (measured: four scans without `materialize`). Recompute is the small-
-    * SF default; at 10^12 rows pass `materialize = true` — one lazy
-    * localCheckpoint of the postings (the table a production pipeline
-    * would persist to the lake anyway) replaces the extra corpus scans.
-    * Output is identical either way (spec-pinned). */
-  def sourceOverlap(df: DataFrame, materialize: Boolean = false): DataFrame = {
+    * (measured: four scans), and the postings are recomputed for each. */
+  def sourceOverlap(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val gramsRaw = df.select(col("source"), col("text")).as[(String, String)]
+    val grams = df.select(col("source"), col("text")).as[(String, String)]
       .flatMap { case (src, text) =>
         graft.ops.DedupOps.gramHashes(text, OverlapW).iterator.map(h => (src, h))
       }
       .toDF("source", "h").distinct()
-    val grams = if (materialize) gramsRaw.localCheckpoint(false) else gramsRaw
     val kept = grams.join(
       grams.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .where(col("df") <= OverlapMaxDf).select(col("h")), "h")

@@ -515,9 +515,9 @@ object DedupOps {
     * enter the self-join, and verification gathers full shingle sets only
     * for docs that appear in some candidate (left-semi reduce first), so
     * wide set rows never cross an exchange for the non-candidate bulk.
-    * `materialize` localCheckpoints the postings — they feed the df
-    * count, the prefix join and the verify sets, and exchange reuse does
-    * not fire across the typed flatMap subtree.
+    * The postings are localCheckpointed: they feed the df count, the
+    * prefix join and the verify sets, and exchange reuse does not fire
+    * across the typed flatMap subtree.
     *
     * Exact-dup collapse (r5): without it, every member of a
     * byte-identical cluster shares its full prefix with every other — the
@@ -525,11 +525,10 @@ object DedupOps {
     * disk on exactly this join; the reps-only prefix join
     * ([[prefixFilteredJaccardPairsUncollapsed]]) + arithmetic expansion is
     * output-identical (spec-pinned). */
-  def prefixFilteredJaccardPairs(df: DataFrame,
-                                 materialize: Boolean = false): DataFrame = {
+  def prefixFilteredJaccardPairs(df: DataFrame): DataFrame = {
     val (repDocs, members) = textGroups(df)
     val repPairs = prefixFilteredJaccardPairsUncollapsed(repDocs, ShingleW,
-      PairMinPct, materialize)
+      PairMinPct)
     val withinVals = shingleHashTable(repDocs, ShingleW)
       .groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
       .select(col("doc_id").as("rep_id"),
@@ -542,10 +541,8 @@ object DedupOps {
   /** The per-doc prefix-filter kernel [[prefixFilteredJaccardPairs]] runs
     * over its representatives (and the spec reference for the collapse). */
   private[graft] def prefixFilteredJaccardPairsUncollapsed(
-      df: DataFrame, w: Int, minJaccardPct: Int,
-      materialize: Boolean): DataFrame = {
-    val hashedRaw = shingleHashTable(df, w)
-    val hashed = if (materialize) hashedRaw.localCheckpoint(false) else hashedRaw
+      df: DataFrame, w: Int, minJaccardPct: Int): DataFrame = {
+    val hashed = shingleHashTable(df, w).localCheckpoint(false)
     val cands = prefixJaccardCandidates(hashed, minJaccardPct)
     val needed = cands.select(col("doc_a").as("doc_id"))
       .union(cands.select(col("doc_b").as("doc_id"))).distinct()
@@ -666,13 +663,13 @@ object DedupOps {
     * UNCAPPED set, so the cap can only undercount n_shared — the same
     * documented recall trade as the capped Jaccard path. Pairs below
     * `ContainMinPct` are dropped. */
-  def containmentPairs(df: DataFrame, materialize: Boolean = false): DataFrame = {
+  def containmentPairs(df: DataFrame): DataFrame = {
     // the fingerprint table feeds sizes AND both self-join sides; exchange
-    // reuse does not fire across the typed flatMap, so without
-    // `materialize` the corpus re-fingerprints three times (measured
+    // reuse does not fire across the typed flatMap, so without the
+    // checkpoint the corpus re-fingerprints three times (measured
     // 13.4 s → 3.5 s at sf0.1 with the checkpoint + df cap)
-    val fpsRaw = TextOps.fingerprints(df, 12, 8) // distinct (doc_id, fp)
-    val fps = if (materialize) fpsRaw.localCheckpoint(false) else fpsRaw
+    val fps = TextOps.fingerprints(df, 12, 8) // distinct (doc_id, fp)
+      .localCheckpoint(false)
     val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") <= ContainMaxDf).select(col("fp"))
@@ -1158,16 +1155,11 @@ object DedupOps {
     * (doc_id, 32-char hash) rows ever shuffle. The distinct (doc_id, bh)
     * count table feeds BOTH downstream consumers (corpus-wide occurrence
     * count, and the count-back join); exchange reuse does NOT fire across
-    * object-operator subtrees (measured: two scans without
-    * `materialize`). At small SF the narrow re-tokenize is cheaper than
-    * materializing, so recompute is the default; at 10^12 rows pass
-    * `materialize = true` — one lazy localCheckpoint of the (doc_id, bh,
-    * cnt) table (the postings table a production pipeline would write to
-    * the lake anyway, p08/p13/p40's dump pattern) replaces the second
-    * corpus scan. Output is identical either way (spec-pinned). Raw text
+    * object-operator subtrees (measured: two scans). At small SF the
+    * narrow re-tokenize is cheaper than materializing the table. Raw text
     * never crosses an exchange. Heavy boilerplate hashes skew the join
     * key — AQE skew-join splits those partitions at scale. */
-  def lineDedupStats(df: DataFrame, materialize: Boolean = false): DataFrame = {
+  def lineDedupStats(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val blockLen = 8 // tokens per block
@@ -1184,9 +1176,8 @@ object DedupOps {
       }
       .toDF("doc_id", "block")
       .select(col("doc_id"), md5(col("block").cast("binary")).as("bh"))
-    val perDocRaw = blocks.groupBy(col("doc_id"), col("bh"))
+    val perDoc = blocks.groupBy(col("doc_id"), col("bh"))
       .agg(count(lit(1)).as("cnt"))
-    val perDoc = if (materialize) perDocRaw.localCheckpoint(false) else perDocRaw
     val occ = perDoc.groupBy(col("bh")).agg(sum(col("cnt")).as("occ"))
     perDoc.join(occ, "bh")
       .groupBy(col("doc_id"))

@@ -95,7 +95,7 @@ object GraphAnnOps {
   private val DescentDim = 64
   private val DescentBits = 6
   private val DescentTables = 4
-  private val DescentRounds = 3
+  private[graft] val DescentRounds = 3
   private val DescentMaxBucket = 1024
 
   /** PRODUCTION-SCALE k-NN-graph construction — sign-LSH candidate
@@ -127,11 +127,11 @@ object GraphAnnOps {
     *   3. Repeat `DescentRounds` times (fixed — deterministic work, no
     *      data-dependent convergence test), truncating lineage per round
     *      with localCheckpoint of the BOUNDED adjacency (≤ N·m rows) —
-    *      the CC/Lloyd/BPE driver-loop pattern. With
-    *      `lineageTruncate = false` the whole build is one lazy Catalyst
-    *      plan: constructing it launches ZERO jobs (spec-pinned — the
-    *      structural proof nothing in the algorithm materializes the
-    *      vector table driver-side).
+    *      the CC/Lloyd/BPE driver-loop pattern. Without the truncation
+    *      ([[descentRounds]]) the whole build is one lazy Catalyst plan:
+    *      constructing it launches ZERO jobs (spec-pinned — the structural
+    *      proof nothing in the algorithm materializes the vector table
+    *      driver-side).
     *
     * Determinism: buckets, candidate sets, scores and tie-breaks are all
     * pure functions of the table — the output is partition-invariant
@@ -141,13 +141,13 @@ object GraphAnnOps {
     * the exact graph is MEASURED, not asserted, by the p145 driver row
     * (beam recall over this graph vs p139's brute graph, the p141 sweep
     * pattern). */
-  def buildKnnGraphDescent(emb: DataFrame,
-                           lineageTruncate: Boolean = true): DataFrame =
-    descentRounds(emb, DescentRounds, lineageTruncate)
+  def buildKnnGraphDescent(emb: DataFrame): DataFrame =
+    descentRounds(emb, DescentRounds, lineageTruncate = true)
 
-  /** [[buildKnnGraphDescent]] at an explicit round count — the spec entry
-    * for the fully lazy build, whose plan triples per round (each round
-    * reads the previous adjacency three times), so it is executed at 2. */
+  /** [[buildKnnGraphDescent]] at an explicit round count, with or without
+    * the per-round lineage truncation — the spec entry for the fully lazy
+    * build, whose plan triples per round (each round reads the previous
+    * adjacency three times), so it is executed at 2. */
   private[graft] def descentRounds(emb: DataFrame, rounds: Int,
                                    lineageTruncate: Boolean): DataFrame = {
     val nodes = emb.select(col("vec_id").cast("long").as("node_id"),

@@ -23,8 +23,7 @@ import graft.model.{Doc, DocResult}
   * 10^12 docs a group is still millions of docs, so job-submit overhead
   * amortizes to noise.
   */
-final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
-                             useDonut: Boolean = false) {
+final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4) {
   require(buckets % groups == 0, "groups must divide buckets")
   private val manifestPath = Paths.get(outDir, "_graft_manifest.txt")
   private val lineagePath = s"$outDir/lineage"
@@ -52,7 +51,7 @@ final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
     val perGroup = buckets / groups
     var executed = 0
     runLog.info("run started", "buckets" -> buckets, "groups" -> groups,
-      "resumed_groups" -> done.size, "use_donut" -> useDonut)
+      "resumed_groups" -> done.size)
 
     (0 until groups).foreach { g =>
       if (!done.contains(g)) {
@@ -68,7 +67,7 @@ final class CheckpointRunner(outDir: String, buckets: Int = 32, groups: Int = 4,
           val b = math.floorMod(graft.io.Corpus.hash(d.doc_id).toInt, nBuckets)
           b >= lo && b < hi
         })
-        val results = ExtractionPipeline.run(slice, useDonut)
+        val results = ExtractionPipeline.run(slice)
         results.write.mode(SaveMode.Overwrite).parquet(s"$resultPath/group=$g")
 
         // lineage row per bucket group (north_star metrics contract)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.DedupOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SizeEstimator
@@ -14,8 +14,8 @@ import org.apache.spark.util.SizeEstimator
   *
   * Shapes: `clusters` — components of 5 docs joined by a 4-edge path (the
   * near-dup shape); `random` — E uniform random edges over E docs (a giant
-  * component, the loop's slow case). The session is the benchmark's:
-  * local[cores], shuffle partitions = cores, AQE on.
+  * component, the loop's slow case). The session is the benchmark's
+  * (`graft.Session`): local[cores], shuffle partitions = cores, AQE on.
   *
   *   sbt "runMain graft.tools.CcCrossover 4 1000,10000,100000 3"
   *
@@ -29,12 +29,7 @@ object CcCrossover {
     val sizes = args.lift(1).map(_.split(",").map(_.toLong).toSeq)
       .getOrElse(Seq(1000L, 10000L, 100000L))
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val s = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Session.local(cores)
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
     def sink(df: DataFrame): Unit =

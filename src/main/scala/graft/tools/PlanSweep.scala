@@ -1,10 +1,7 @@
 package graft.tools
 object PlanSweep {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     // p07 brute-force ANN deliberately streams the corpus against a tiny
     // broadcast query set with no equi-key — its BroadcastNestedLoopJoin is
@@ -56,6 +53,12 @@ object PlanSweep {
       // p89 embeds p07's documented broadcast-query-set brute ranking as
       // its recall ground truth — the same keyless plan class as p07
       "p89_ivf_recall_sweep" -> Set("BroadcastNestedLoop"),
+      // p141/p145/p151 share graphRecallTable, whose ground truth is
+      // bruteTopK: their one BroadcastNestedLoopJoin is its Cross join of
+      // the table against the broadcast 10-row query set — p07's plan
+      "p141_graph_recall_sweep" -> Set("BroadcastNestedLoop"),
+      "p145_graph_descent_recall" -> Set("BroadcastNestedLoop"),
+      "p151_graph_insert_recall" -> Set("BroadcastNestedLoop"),
       // p92 crosses the 1-row exact-pair total into the 4-row levels
       // table — the p47/p50 1-row-aggregate class
       "p92_band_sweep" -> Set("BroadcastNestedLoop"),

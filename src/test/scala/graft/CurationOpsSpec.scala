@@ -474,22 +474,6 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(open.filter(_._3 == 2L) === Seq(("s00", "s01", 2L)))
   }
 
-  test("lineDedupStats / sourceOverlap: materialize=true (the 10^12 " +
-    "single-scan path) is output-identical to the recompute default") {
-    val docs = docsDf(200)
-    val a = graft.ops.DedupOps.lineDedupStats(docs)
-      .orderBy("doc_id").collect().toSeq
-    val b = graft.ops.DedupOps.lineDedupStats(docs, materialize = true)
-      .orderBy("doc_id").collect().toSeq
-    assert(a === b)
-    val c = CorpusOps.sourceOverlap(docs)
-      .orderBy("src_a", "src_b").collect().toSeq
-    val d = CorpusOps.sourceOverlap(docs, materialize = true)
-      .orderBy("src_a", "src_b").collect().toSeq
-    assert(c === d)
-    assert(c.nonEmpty)
-  }
-
   test("bpePairCounts matches the brute-force pair tally, " +
     "layout-invariant") {
     import spark.implicits._

@@ -137,7 +137,8 @@ class GraphAnnSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      GraphAnnOps.buildKnnGraphDescent(e, lineageTruncate = false)
+      GraphAnnOps.descentRounds(e, GraphAnnOps.DescentRounds,
+        lineageTruncate = false)
       Thread.sleep(1000) // listener bus is async — let any event land
       assert(jobs === 0,
         s"plan construction launched $jobs job(s) — something collects")

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The query contract's two maps must name the same queries, and the
-  * library surface keeps only what something sets or calls. */
+/** The query contract's two maps must name the same queries, the library
+  * surface keeps only what something sets or calls, and every session
+  * outside the frozen harness is `graft.Session`. */
 class HarnessSpec extends AnyFunSuite {
   test("every query has an oracle and every oracle a query") {
     val queries = SparkEntry.queries.keySet
@@ -30,5 +31,35 @@ class HarnessSpec extends AnyFunSuite {
     val exit = Seq("python3", "tools/test_op_census.py")
       .!(ProcessLogger(out += _, out += _))
     assert(exit === 0, out.mkString("\n", "\n", ""))
+  }
+
+  test("Session.settings are Bench.newSession's .config pairs, read from " +
+    "Bench.scala") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")), "UTF-8")
+    val body = src.substring(src.indexOf("def newSession(threads: Int)"))
+    val builder = body.substring(0, body.indexOf(".getOrCreate()"))
+    val threads = 7
+    val pairs = """\.config\("([^"]+)",\s*([^)]+)\)""".r
+      .findAllMatchIn(builder).map { m =>
+        val v = m.group(2).trim
+        m.group(1) -> (if (v == "threads") threads.toString
+                       else v.stripPrefix("\"").stripSuffix("\""))
+      }.toSeq
+    assert(pairs.size === 7)
+    assert(Session.settings(threads) === pairs)
+  }
+
+  test("only Bench, Verify and Session build a SparkSession under src/") {
+    import scala.jdk.CollectionConverters._
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val sites = Seq("src/main", "src/test").flatMap { d =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => builder.findFirstIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.getFileName.toString).toSeq
+    }
+    assert(sites.sorted === Seq("Bench.scala", "Session.scala", "Verify.scala"))
   }
 }

@@ -6,7 +6,8 @@ Run from the repo root:
     python3 tools/op_census.py            # full report
     python3 tools/op_census.py --check    # exit 1 on an unset option, an option
                                           # with one main value, an uncalled
-                                          # public def or an unreached def
+                                          # public def, an unreached def or a
+                                          # stale GUARDS/SPEC_HOOKS entry
     python3 tools/test_op_census.py       # self-test on a synthetic tree
 
 It reads every member `def` of the objects in the library packages under
@@ -62,9 +63,11 @@ nobody, when a public defaulted parameter has exactly one main value (an
 option main code only ever uses one way is a constant), when a public
 covered def has no caller outside its own object in main code, or when a
 member def is not reached. The guards in GUARDS are exempt from the first
-two rules: they are safety switches, so a default nobody overrides is their
-normal state. So are *pinned* options, the ones HARNESS files set: those
-files do not change, so the option stays whatever its values. The defs in
+two rules: they refuse input past a limit, so a default nobody overrides is
+their normal state. So are *pinned* options, the ones HARNESS files set: those
+files do not change, so the option stays whatever its values. A GUARDS entry
+that names no defaulted parameter of a covered def fails, so a later option
+of that name cannot inherit the exemption unnoticed. The defs in
 SPEC_HOOKS are exempt from the reach rule: they are reference
 implementations and branch kernels that specs compare a reached op
 against, and each entry names the op it pins. An entry that names a
@@ -93,9 +96,9 @@ SPEC_DIRS = ["src/test/scala"]
 HARNESS = ("src/main/scala/graft/Bench.scala", "src/main/scala/graft/Verify.scala",
            "src/main/scala/graft/SparkEntry.scala", "perfbench/src/")
 
-# Safety switches kept on purpose (ROADMAP direction 9).
-GUARDS = {"maxBroadcastRows", "requireUniqueDeltaKeys", "materialize",
-          "lineageTruncate"}
+# Safety switches kept on purpose (ROADMAP direction 9): each refuses input
+# past a limit, so a default nobody overrides is its normal state.
+GUARDS = {"maxBroadcastRows", "requireUniqueDeltaKeys"}
 
 # Unreached defs kept on purpose: the reference implementation or branch
 # kernel a spec compares against -> the reached op it pins.
@@ -732,6 +735,9 @@ def main(argv):
               f"{d.visibility}{tag}{site}{vals}")
     print()
 
+    option_names = {p.name for d, p in opts}
+    stale += [f"GUARDS entry {g} names no defaulted parameter of a covered def"
+              for g in sorted(GUARDS - option_names)]
     nobody = [(d, p) for d, p in opts if p.cls == NOBODY and p.name not in GUARDS]
     one_value = [(d, p) for d, p in opts if d.public and p.name not in GUARDS
                  and not p.pinned and len(main_values(p)) == 1

@@ -30,7 +30,7 @@ object Lib {
   def helper(x: Int, k: Int = 2): Int = x * k
   def tagged(x: Int, tag: String = "zz"): Int = x + tag.length
   def pinned(x: Int, seed: Long = 1L): Long = x + seed
-  def guarded(x: Int, materialize: Boolean = false): Int = x
+  def guarded(x: Int, maxBroadcastRows: Long = 1L): Long = x
   def uncalled(x: Int): Int = x
   private def unreached(x: Int): Int = x
   private[graft] def hook(x: Int): Int = x
@@ -77,7 +77,7 @@ class LibSpec {
 """
 
 
-def run_check(spec_hooks):
+def run_check(spec_hooks, guards=None):
     """FAIL lines and exit code of `--check` over the synthetic tree."""
     files = {
         "src/main/scala/graft/ops/Lib.scala": LIB,
@@ -85,7 +85,7 @@ def run_check(spec_hooks):
         "src/main/scala/graft/Bench.scala": BENCH,
         "src/test/scala/graft/LibSpec.scala": SPEC,
     }
-    old_cwd, old_hooks = os.getcwd(), op_census.SPEC_HOOKS
+    old_cwd, old_hooks, old_guards = os.getcwd(), op_census.SPEC_HOOKS, op_census.GUARDS
     with tempfile.TemporaryDirectory() as root:
         for rel, text in files.items():
             path = os.path.join(root, rel)
@@ -96,11 +96,13 @@ def run_check(spec_hooks):
         try:
             os.chdir(root)
             op_census.SPEC_HOOKS = spec_hooks
+            op_census.GUARDS = old_guards if guards is None else guards
             with contextlib.redirect_stdout(out):
                 code = op_census.main(["--check"])
         finally:
             os.chdir(old_cwd)
             op_census.SPEC_HOOKS = old_hooks
+            op_census.GUARDS = old_guards
     return code, [l for l in out.getvalue().splitlines() if l.startswith("FAIL")]
 
 
@@ -150,6 +152,13 @@ class CensusCheck(unittest.TestCase):
         self.assertEqual(code, 1)
         self.assertTrue(any("SPEC_HOOKS entry Lib.twoValued is reached" in l
                             for l in fails), fails)
+
+    def test_stale_guard_fails(self):
+        code, fails = run_check({}, guards={"maxBroadcastRows", "materialize"})
+        self.assertEqual(code, 1)
+        self.assertTrue(any("GUARDS entry materialize names no defaulted parameter"
+                            in l for l in fails), fails)
+        self.assertFalse(any("GUARDS entry maxBroadcastRows" in l for l in fails), fails)
 
 
 if __name__ == "__main__":

@@ -1758,9 +1758,9 @@ object CorpusOps {
         .withColumn("fertility_millis",
           expr("n_tokens * 1000 div n_words"))
         .orderBy(col("source"))
-      out.persist()
-      out.count() // materialize the tiny census before the vocab unpersists
-      out
+      // materialise the tiny census before the vocab unpersists; a local
+      // checkpoint, unlike persist(), is freed once the result is dropped
+      out.localCheckpoint()
     }
   }
 }

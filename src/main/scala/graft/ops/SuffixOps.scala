@@ -213,7 +213,12 @@ object SuffixOps {
       prevNd = nd
       prefix = k * math.max(mWidth, 2)
     }
-    cur.toDF()
+    // the ranks read the last round's cache lazily: materialise them as a
+    // local checkpoint, which the ContextCleaner frees once the result is
+    // dropped, then release the cache (a CacheManager entry never is)
+    val ranks = cur.toDF().localCheckpoint()
+    curCache.foreach(_.unpersist())
+    ranks
   }
 
   private def pow(b: Long, e: Int): Long = {

@@ -90,15 +90,19 @@ object PlanSweep {
       // too — DP requirement, not a join mistake); both sides are
       // label-cardinality-bounded — q78's keyless small-build-side class
       "p130_dp_histogram" -> Set("BroadcastNestedLoop"))
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    // exit 1 when any query printed SMELL or ERROR
+    val flagged = graft.SparkEntry.queries.toSeq.sortBy(_._1).count { case (name, fn) =>
       try {
         val plan = fn(spark, dir).queryExecution.executedPlan.toString
         val smells = Seq("CartesianProduct", "BroadcastNestedLoop")
           .filter(plan.contains)
           .filterNot(allowed.getOrElse(name, Set.empty).contains)
         println(s"PLAN $name ${if (smells.isEmpty) "ok" else "SMELL:" + smells.mkString(",")}")
-      } catch { case e: Throwable => println(s"PLAN $name ERROR ${e.getMessage.take(80)}") }
+        smells.nonEmpty
+      } catch { case e: Throwable =>
+        println(s"PLAN $name ERROR ${String.valueOf(e.getMessage).take(80)}"); true }
     }
     spark.stop()
+    if (flagged > 0) sys.exit(1)
   }
 }

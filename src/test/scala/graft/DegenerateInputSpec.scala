@@ -349,6 +349,29 @@ class DegenerateInputSpec extends AnyFunSuite {
       }
     } yield s"$name on $n rows: $problem"
 
+  // CacheManager.numCachedEntries is private[spark] in Scala, public in
+  // bytecode
+  private def cachedEntries: Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  test("no op leaves a cached Dataset behind: each doc, event and " +
+    "embedding op, collected on its 200-row input, ends with as many " +
+    "CacheManager entries as it began with") {
+    val leaks = Seq((docOps, docs200), (eventOps, events200), (embOps, emb200))
+      .flatMap { case (ops, full) =>
+        ops.flatMap { case (name, op) =>
+          val before = cachedEntries
+          op(full).collect()
+          val after = cachedEntries
+          if (after > before) Some(s"$name: $before -> $after") else None
+        }
+      }
+    assert(leaks.isEmpty, leaks.mkString("\n", "\n", ""))
+  }
+
   test("hllValidate on zero rows returns the oracle's one row: m 64, " +
     "n_exact 0, est_int 45, err_permille null") {
     val rows = CorpusOps.hllValidate(docs200.limit(0)).collect()

@@ -33,6 +33,32 @@ class HarnessSpec extends AnyFunSuite {
     assert(exit === 0, out.mkString("\n", "\n", ""))
   }
 
+  test("pairs summary self-test: warm-ups and failed runs skipped, seeds " +
+    "paired for any two sides, inclusive-quartile spread " +
+    "(tools/test_pairs_summary.py)") {
+    import scala.sys.process._
+    val out = scala.collection.mutable.ListBuffer.empty[String]
+    val exit = Seq("python3", "tools/test_pairs_summary.py")
+      .!(ProcessLogger(out += _, out += _))
+    assert(exit === 0, out.mkString("\n", "\n", ""))
+  }
+
+  test("the forked JVM's old generation can hold at least its young " +
+    "generation (build.sbt's javaOptions fix no -Xmn)") {
+    import java.lang.management.{ManagementFactory, MemoryType}
+    import scala.jdk.CollectionConverters._
+    val heap = ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
+      .filter(_.getType == MemoryType.HEAP)
+      .map(p => p.getName -> p.getUsage.getMax)
+    def maxOf(suffix: String) = heap.collect {
+      case (n, m) if n.endsWith(suffix) => m
+    }
+    val old = maxOf("Old Gen")
+    val young = maxOf("Eden Space") ++ maxOf("Survivor Space")
+    assert(old.size === 1 && young.nonEmpty, s"heap pools $heap")
+    assert(old.head >= young.sum, s"heap pools $heap")
+  }
+
   test("Session.settings are Bench.newSession's .config pairs, read from " +
     "Bench.scala") {
     val src = new String(java.nio.file.Files.readAllBytes(

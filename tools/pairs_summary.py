@@ -14,9 +14,9 @@ stdout line). Warm-up runs are skipped, and so is any run that exited
 non-zero, was not correct or failed an op; each is counted in the report.
 For every workload and end-to-end metric it prints both sides' medians, the
 change B against A in percent, A's quartile spread ((Q3 - Q1) / median,
-inclusive quartiles) and how many pairs B won, pairing runs by seed. The
-verdict is `better` or `worse` when the medians differ by more than A's
-spread, else `same`.
+inclusive quartiles) and how many pairs B won, pairing runs by seed. It
+gives no verdict: whether a change is a gain takes both the spread and the
+pairs won into account, and the reader weighs them.
 """
 import json
 import os
@@ -28,11 +28,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def directions(path=os.path.join(ROOT, "BENCHMARK.json")):
     """End-to-end metric -> "lower" or "higher", in BENCHMARK.json's order."""
-    try:
-        with open(path) as f:
-            return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-    except (OSError, ValueError, KeyError):
-        return {}
+    with open(path) as f:
+        return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
 
 
 def load(path):
@@ -66,9 +63,8 @@ def fmt(x):
     return f"{x:.{max(0, 4 - digits)}f}"
 
 
-def summarise(runs, a, b, better=None):
-    """One dict per (workload, metric) that both sides measured."""
-    better = better or {}
+def summarise(runs, a, b, better):
+    """One dict per (workload, metric) of `better` that both sides measured."""
     out = []
     for w in sorted({r["workload"] for r in runs}):
         timed = [r for r in runs if r["workload"] == w and not r.get("warmup")]
@@ -78,30 +74,25 @@ def summarise(runs, a, b, better=None):
                    for s in (a, b)}
         if not kept[a] or not kept[b]:
             continue
-        names = list(better) or sorted(next(iter(kept[a].values())))
-        for m in names:
+        for m in better:
             va = [v[m]["value"] for v in kept[a].values() if m in v]
             vb = [v[m]["value"] for v in kept[b].values() if m in v]
             if not va or not vb:
                 continue
             seeds = sorted(s for s in kept[a] if s in kept[b]
                            and m in kept[a][s] and m in kept[b][s])
-            lower = better.get(m, "lower") == "lower"
+            lower = better[m] == "lower"
             won = sum(1 for s in seeds
                       if (kept[b][s][m]["value"] < kept[a][s][m]["value"])
                       == lower and kept[b][s][m]["value"]
                       != kept[a][s][m]["value"])
             ma, mb = statistics.median(va), statistics.median(vb)
             delta = (mb - ma) / ma if ma else 0.0
-            sp = spread(va)
-            verdict = "same"
-            if abs(delta) > sp:
-                verdict = "better" if (delta < 0) == lower else "worse"
             out.append({"workload": w, "metric": m, "median_a": ma,
-                        "median_b": mb, "delta": delta, "spread_a": sp,
+                        "median_b": mb, "delta": delta, "spread_a": spread(va),
                         "won": won, "pairs": len(seeds), "n_a": len(va),
                         "n_b": len(vb), "dropped_a": dropped[a],
-                        "dropped_b": dropped[b], "verdict": verdict})
+                        "dropped_b": dropped[b]})
     return out
 
 
@@ -120,7 +111,7 @@ def main(argv):
         print(f"{r['workload']} {r['metric']}: {fmt(r['median_a'])} -> "
               f"{fmt(r['median_b'])} ({r['delta'] * 100:+.1f} %, spread "
               f"{r['spread_a'] * 100:.1f} %), {b} won {r['won']}/{r['pairs']}"
-              f" pairs, {r['verdict']} [runs {r['n_a']}/{r['n_b']}, dropped "
+              f" pairs [runs {r['n_a']}/{r['n_b']}, dropped "
               f"{r['dropped_a']}/{r['dropped_b']}]")
     return 0
 

@@ -63,13 +63,11 @@ class PairsSummaryTest(unittest.TestCase):
         r = rows("parent", "change")
         self.assertAlmostEqual(r["sweep_s"]["spread_a"], 2.0 / 12.0)
 
-    def test_pairs_by_seed_and_verdicts(self):
+    def test_pairs_by_seed(self):
         r = rows("parent", "change")
         self.assertEqual((r["sweep_s"]["won"], r["sweep_s"]["pairs"]), (3, 4))
-        self.assertEqual(r["sweep_s"]["verdict"], "same")  # -8.3 % < 16.7 %
         self.assertEqual((r["peak_rss_mb"]["won"], r["peak_rss_mb"]["pairs"]),
                          (4, 4))
-        self.assertEqual(r["peak_rss_mb"]["verdict"], "better")
         self.assertEqual({x["workload"] for x in pairs_summary.summarise(
             RUNS, "parent", "change", BETTER)}, {"w1"})
 
@@ -77,13 +75,11 @@ class PairsSummaryTest(unittest.TestCase):
         r = rows("parent", "parent2")
         self.assertEqual((r["sweep_s"]["won"], r["sweep_s"]["pairs"]), (0, 2))
         self.assertEqual(r["sweep_s"]["median_b"], 13.5)
-        self.assertEqual(r["sweep_s"]["verdict"], "same")
 
-    def test_higher_is_better_flips_the_verdict(self):
+    def test_higher_is_better_flips_the_pairs_won(self):
         r = {x["metric"]: x for x in pairs_summary.summarise(
             RUNS, "parent", "change", {"peak_rss_mb": "higher"})}
         self.assertEqual(list(r), ["peak_rss_mb"])
-        self.assertEqual(r["peak_rss_mb"]["verdict"], "worse")
         self.assertEqual(r["peak_rss_mb"]["won"], 0)
 
     def test_main_prints_one_line_per_workload_and_metric(self):
@@ -100,9 +96,10 @@ class PairsSummaryTest(unittest.TestCase):
             lines = out.getvalue().splitlines()
             self.assertTrue(lines[0].startswith("# "))
             self.assertIn("w1 sweep_s: 12.00 -> 11.00 (-8.3 %, spread 16.7 %)"
-                          ", change won 3/4 pairs, same [runs 5/4, dropped "
+                          ", change won 3/4 pairs [runs 5/4, dropped "
                           "0/1]", lines)
-            self.assertEqual(len(lines), 1 + 2)  # the two metrics the runs hold
+            # BENCHMARK.json's four end-to-end metrics; the runs hold two
+            self.assertEqual(len(lines), 1 + 2)
 
     def test_header_is_required(self):
         with tempfile.TemporaryDirectory() as d:

@@ -1,6 +1,7 @@
 package graft.html
 
 import java.util.regex.Pattern
+import graft.text.PyText
 
 /** Main-content extraction for `text`-kind spans (HTML boilerplate strip +
   * DOM heuristics) — the north_rule addition on top of the reference's
@@ -196,7 +197,7 @@ object BoilerplateStrip {
     // fused chrome-strip + block-boundary pass (one scan; hand scanner)
     val s = chromeAndBoundaries(html)
 
-    val blocks = s.split(BlockSep)
+    val blocks = PyText.splitLit(s, BlockSep)
     val out = Vector.newBuilder[String]
     for (block <- blocks) {
       val linkCount = {

@@ -165,7 +165,8 @@ object ExtractionPipeline {
 
     // metadata — extractor.py:113-114
     extracted("face_image") = o.face_b64 // null when absent (Python None)
-    extracted("ocr_accuracy_score") = PyText.round2(o.avg_conf * 100)
+    val score = PyText.round2(o.avg_conf * 100)
+    extracted("ocr_accuracy_score") = score
 
     val (isValid, record, errorMsg) = Validator.validateDocument(extracted.toJ)
 
@@ -173,7 +174,6 @@ object ExtractionPipeline {
       case Some(JStr(s)) => s
       case _             => "Unknown"
     }
-    val score = PyText.round2(o.avg_conf * 100)
 
     // Output span contract (SURVEY.md §7.2): one field span per record key
     // in dict order, then the face media span, then the trailing metric span.
